@@ -108,9 +108,14 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     a WARM application (workers already spawned): measured 6.1s → 1.3s
     on the minhash signature stage at sf0.1. On a cold application the
     concurrent Python-worker spin-up (pandas/numpy import per worker)
-    costs more than the parallelism saves (3.2s → 5.1s), so the engine's
-    built-in paths don't force it; callers running repeated jobs should.
-    At scale inputs already carry ≥ cores partitions and this is a no-op.
+    costs more than the parallelism saves (3.2s → 5.1s), so the dedup
+    operators don't force it; callers running repeated jobs should. Two
+    registered queries do force it before their expensive per-row stage:
+    ``text_ngram_df`` (plans/llm_ops.py, before the shingle explode) and
+    ``json_extract`` (plans/relational.py, after the single-row-group
+    scan). The trigger is the partition count, not the input size, so a
+    few-partition input of many GB is shuffled whole. At scale inputs
+    already carry ≥ cores partitions and this is a no-op.
     """
     sc = df.sparkSession.sparkContext
     target = min_parts or sc.defaultParallelism

@@ -1175,6 +1175,13 @@ def assign_to_centroids(
         )
     if scorer != "expr":
         raise ValueError(f"unknown scorer: {scorer!r}")
+    if centroids is None:
+        # the expr scorer broadcasts the centroid DataFrame; collected
+        # ``_rows`` feed only the Arrow closure
+        raise ValueError(
+            "scorer='expr' needs the centroids DataFrame; "
+            "centroids=None is only valid with scorer='arrow'"
+        )
     cen_arr = F.broadcast(
         centroids.select(
             F.struct(
@@ -1792,7 +1799,7 @@ def semantic_dedup(
         id_col,
         vec_col,
         keep_all=True,
-        _rows=sorted(cb_rows, key=lambda r: r[0]) if cb_rows is not None else None,
+        _rows=cb_rows,
     ).select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "centroid_id")
 
     out_schema = T.StructType(

@@ -30,6 +30,15 @@ def get_spark(
       number); it is a config, not baked into any operator.
     - Session timezone is pinned to UTC so timestamp semantics are
       identical across engines (parquet ↔ Spark ↔ DuckDB oracle).
+    - ``local[...]`` masters list input files on the driver. A read of
+      more than ``parallelPartitionDiscovery.threshold`` (32) paths
+      otherwise runs the listing as a Spark job, and every LogTable
+      read passes one path per live bucket unit (64+). In local mode
+      that job's tasks are threads of the same JVM statting the same
+      disk, so it adds a job and its scheduling to every read and
+      lists nothing faster. On a cluster the parallel listing spreads
+      real remote-store calls over executors, so other masters (and
+      ``cluster_conf``) keep Spark's default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if master is None:
@@ -58,6 +67,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
+    if master.startswith("local"):
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(1 << 30),
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

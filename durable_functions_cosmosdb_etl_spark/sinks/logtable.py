@@ -12,7 +12,11 @@ operators/lease.py):
 
 - Data files are IMMUTABLE. Every commit writes fresh parquet under its
   own ``data/c{version}/`` directory, hash-bucketed by key
-  (``__bucket=k`` subdirs); nothing is ever modified in place.
+  (``__bucket=k`` subdirs); nothing is ever modified in place. Each
+  bucket unit is ONE parquet file (the write repartitions on the
+  bucket), so a commit's write parallelism is bounded by the buckets it
+  touches — size ``n_buckets`` for the parallelism a full rewrite
+  (``compact``) needs.
 - ``_log/{version:020d}.json`` records, per commit, the (dir, bucket)
   units added and the units logically removed. The LIVE file set at
   version V is replay(log ≤ V) — so a MERGE never reads what it is
@@ -39,6 +43,11 @@ operators/lease.py):
   buckets (duplicate rows per key, no error), so open validates and
   raises on mismatch — the same reason Delta/Iceberg persist layout
   metadata in the table, not the caller.
+
+Reads are planned from the log alone: the live units come from log
+replay, the read schema from one parquet footer per live commit, and
+(on local masters, see session.get_spark) the unit dirs are listed on
+the driver — building a snapshot or feed launches no Spark job.
 
 Upsert cost model is unchanged from compact_upsert: an upsert touches
 only the buckets its keys hash into — it reads those units from the
@@ -71,12 +80,21 @@ from typing import Iterator, NamedTuple
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StructField,
+    StructType,
+)
 
 _LOG = logging.getLogger(__name__)
 
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
 _CHANGES_DIR = "_changes"
+# footer key under which Spark's parquet writer stores the row schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class _LogListing(NamedTuple):
@@ -117,6 +135,73 @@ def _footer_rows(unit_dir: str) -> int:
         for name in sorted(os.listdir(unit_dir))
         if name.endswith(".parquet")
     )
+
+
+def _footer_schema(unit_dir: str) -> StructType:
+    """Spark row schema of one engine-written dir, from the footer of
+    one of its parquet files — every file of one write carries the
+    same schema. A driver-side metadata read, no Spark job."""
+    name = min(n for n in os.listdir(unit_dir) if n.endswith(".parquet"))
+    meta = pq.read_metadata(os.path.join(unit_dir, name)).metadata
+    return StructType.fromJson(json.loads(meta[_SPARK_SCHEMA_KEY]))
+
+
+def _merge_type(a: DataType, b: DataType, col: str) -> DataType:
+    """Parquet schema merging's rule: structs union their fields (also
+    inside arrays and maps), any other pair must be the same type."""
+    if isinstance(a, StructType) and isinstance(b, StructType):
+        return _merge_struct(a, b, f"{col}.")
+    if isinstance(a, ArrayType) and isinstance(b, ArrayType):
+        return ArrayType(
+            _merge_type(a.elementType, b.elementType, col),
+            a.containsNull or b.containsNull,
+        )
+    if isinstance(a, MapType) and isinstance(b, MapType):
+        return MapType(
+            _merge_type(a.keyType, b.keyType, col),
+            _merge_type(a.valueType, b.valueType, col),
+            a.valueContainsNull or b.valueContainsNull,
+        )
+    if a != b:
+        raise ValueError(
+            f"column {col!r} is {a.simpleString()} in one live commit and "
+            f"{b.simpleString()} in another; rewrite one side to a single "
+            "type before reading"
+        )
+    return a
+
+
+def _merge_struct(
+    a: StructType, b: StructType, prefix: str = ""
+) -> StructType:
+    """``a``'s fields in order, each merged with ``b``'s same-named field,
+    then ``b``'s new fields appended."""
+    fields = {f.name: f for f in a.fields}
+    for f in b.fields:
+        old = fields.get(f.name)
+        if old is not None:
+            f = StructField(
+                f.name,
+                _merge_type(old.dataType, f.dataType, prefix + f.name),
+                old.nullable or f.nullable,
+                old.metadata,
+            )
+        fields[f.name] = f
+    return StructType(list(fields.values()))
+
+
+def _union_schema(dirs: list[str]) -> StructType:
+    """Read schema of several engine-written dirs: their footer schemas
+    merged in the given (ascending commit) order."""
+    out = StructType()
+    for d in dirs:
+        out = _merge_struct(out, _footer_schema(d))
+    return out
+
+
+def _commit_of(unit: str) -> str:
+    """Commit data dir of a relative unit path (``data/c{v}``)."""
+    return unit.split("/__bucket=")[0]
 
 
 def _bucket_rollup(
@@ -964,10 +1049,18 @@ class LogTable:
         """Write one commit's data dir; return its ``added`` log entries,
         one per bucket unit, each carrying the footer-harvested row count
         and per-column min/max/null stats (see _collect_unit_stats) that
-        snapshot's data-skipping prunes on."""
+        snapshot's data-skipping prunes on.
+
+        The repartition on ``__bucket`` sends each bucket to one write
+        task, so every unit is ONE parquet file. Without it each write
+        task puts a file into every bucket it holds rows for (tasks ×
+        buckets files per commit), and every later read of the unit
+        pays a file open and footer read per file."""
         rel = f"{_DATA_DIR}/c{v}"
         out = os.path.join(self.path, rel)
-        bucketed.write.mode("overwrite").partitionBy("__bucket").parquet(out)
+        bucketed.repartition(F.col("__bucket")).write.mode(
+            "overwrite"
+        ).partitionBy("__bucket").parquet(out)
         added = []
         for d in sorted(os.listdir(out)):
             if not d.startswith("__bucket="):
@@ -978,18 +1071,45 @@ class LogTable:
             added.append(entry)
         return added
 
-    def _read_units(self, units: dict[str, dict], buckets: set[int] | None):
-        paths = [
-            os.path.join(self.path, u)
+    def _read_units(
+        self,
+        units: dict[str, dict],
+        buckets: set[int] | None,
+        schema: StructType | None = None,
+    ):
+        """Lazy scan of the live units in ``buckets`` (all when None),
+        planned from the log alone: the read schema (unless given) comes
+        from the footers of one unit per commit (:meth:`_reps_schema`),
+        so building the frame launches no Spark job. Units written
+        before a schema evolution lack the newer columns and read NULL
+        there."""
+        sel = {
+            u: e
             for u, e in units.items()
             if buckets is None or e["bucket"] in buckets
-        ]
-        if not paths:
+        }
+        if not sel:
             return None
-        # mergeSchema: units written before a schema evolution lack the
-        # newer columns; without the merge, whichever file Spark samples
-        # first would dictate (and silently truncate) the read schema.
-        return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        if schema is None:
+            schema = self._reps_schema(self._schema_reps(sel)[0])
+        return self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.path, u) for u in sel]
+        )
+
+    def _reps_schema(self, reps: dict[str, dict]) -> StructType:
+        """Union read schema of a live set from its per-commit
+        representatives (:meth:`_schema_reps`), merged in ascending
+        commit order so older columns keep their positions. Raises
+        ``ValueError`` naming the column when two commits disagree on
+        a type."""
+        return _union_schema(
+            [
+                os.path.join(self.path, rel)
+                for rel in sorted(
+                    reps, key=lambda r: int(_commit_of(r).rsplit("/c", 1)[1])
+                )
+            ]
+        )
 
     def _resolve(self, df, units: dict[str, dict], buckets: set[int] | None):
         """Merge-on-read resolution: collapse base + delta rows to the
@@ -997,10 +1117,11 @@ class LogTable:
 
         Delta units (written by :meth:`upsert_deferred`) carry their
         commit version in a ``__gen`` data column; base units lack it
-        (mergeSchema → NULL). The window keeps the highest generation —
-        NULLs (base) last — which is exactly "latest deferred upsert
-        wins, else the stored base row". No-op (and no extra shuffle)
-        when the read set contains no delta unit. The shuffle it does
+        and read NULL under the union schema. The window keeps the
+        highest generation — NULLs (base) last — which is exactly
+        "latest deferred upsert wins, else the stored base row". No-op
+        (and no extra shuffle) when the read set contains no delta
+        unit. The shuffle it does
         add on dirty reads is keyed on the table key — the read-time
         half of the merge-on-read trade; ``compact`` folds deltas back
         into base units to reclaim it.
@@ -1580,15 +1701,22 @@ class LogTable:
                 for u, e in live.items()
                 if e["bucket"] in dirty or not _stats_refute(e, where)
             }
-        df = self._resolve(self._read_units(pruned, None), pruned, None)
+        # With ``where``, the schema is the whole live set's: pruning
+        # must not drop a column that only pruned units carry, since
+        # the result equals snapshot().filter(...).
+        full = self._schema_frame(live) if where else None
+        df = self._resolve(
+            self._read_units(
+                pruned, None, None if full is None else full.schema
+            ),
+            pruned,
+            None,
+        )
         if df is None:
-            if live and where:
+            if full is not None:
                 # everything was pruned: the correct result is an empty
-                # relation WITH the table schema — a single-unit
-                # limit(0) read supplies it without scanning rows or
-                # merging every unit's footer (same rationale as the
-                # feed's _empty_feed)
-                df = self._schema_frame(live)
+                # relation WITH the table schema
+                df = full
             else:
                 raise ValueError(
                     f"no data at version "
@@ -1610,21 +1738,19 @@ class LogTable:
         return df.drop("__b", "__gen")
 
     def _schema_frame(self, units: dict[str, dict]) -> DataFrame | None:
-        """``limit(0)`` frame carrying the EXACT union schema of a live
-        set, read from ONE unit per distinct commit (ADVICE r7: a
-        provably-empty feed needs the schema, not a mergeSchema pass
-        over every unit footer). Exactness argument: every unit of one
-        commit is written from a single DataFrame
-        (``_write_commit_dir`` partitions one frame by bucket), so all
-        units of a commit share that commit's write schema — the
-        mergeSchema union over one representative per commit equals
-        the union over all units. A single newest unit would NOT be
-        enough: upsert/delete rewrite only touched buckets, so the
-        newest commit can carry a NARROWER schema than an older one
+        """Empty frame carrying the EXACT union schema of a live set,
+        built on the driver from ONE unit's footer per distinct commit
+        (:meth:`_reps_schema`) — no file scan, no Spark job. Exactness
+        argument: every unit of one commit is written from a single
+        DataFrame (``_write_commit_dir`` partitions one frame by
+        bucket), so all units of a commit share that commit's write
+        schema, and the union over one representative per commit
+        equals the union over all units. A single newest unit would
+        NOT be enough: upsert/delete rewrite only touched buckets, so
+        the newest commit can carry a NARROWER schema than an older one
         (e.g. a delete rewriting a pre-evolution bucket). Driver I/O is
         O(distinct live commits) footers — bounded by the compact
-        cadence (1 after a compact), vs O(live units) before. None
-        when no unit is live."""
+        cadence (1 after a compact). None when no unit is live."""
         if not units:
             return None
         # rep selection shared with the feed's _empty_feed (one rule,
@@ -1637,7 +1763,7 @@ class LogTable:
         reps, _ = self._schema_reps(units)
         if not reps:
             return None
-        return self._read_units(reps, None).limit(0)
+        return self.spark.createDataFrame([], self._reps_schema(reps))
 
     def _schema_reps(
         self, units: dict[str, dict]
@@ -1653,7 +1779,7 @@ class LogTable:
         :meth:`missing_units`."""
         by_commit: dict[str, str | None] = {}
         for rel in units:
-            commit = rel.split("/__bucket=")[0]
+            commit = _commit_of(rel)
             if by_commit.get(commit) is not None:
                 continue
             by_commit[commit] = (
@@ -1669,7 +1795,7 @@ class LogTable:
         missing = sorted(
             u
             for u in units
-            if by_commit[u.split("/__bucket=")[0]] is None
+            if by_commit[_commit_of(u)] is None
         )
         return reps, missing
 
@@ -1678,7 +1804,8 @@ class LogTable:
     ) -> DataFrame:
         """Empty change feed with the table schema, sourced from the
         first ``(version, live-unit-map)`` side able to supply it
-        (single-rep-per-commit schema read, see :meth:`_schema_frame`).
+        (one footer per commit, see :meth:`_schema_frame`; no file scan
+        and no Spark job).
 
         The schema read is NOT covered by the feed's touched-bucket
         retention guards (a provably change-free captured interval
@@ -1716,8 +1843,9 @@ class LogTable:
                 if truncated is None:
                     truncated = (version, missing)
                 continue
-            empty = self._read_units(reps, None).limit(0)
-            empty = empty.drop("__b", "__gen")
+            empty = self.spark.createDataFrame(
+                [], self._reps_schema(reps)
+            ).drop("__b", "__gen")
             return empty.select(
                 F.lit("insert").alias("change"), *empty.columns
             )
@@ -2255,10 +2383,12 @@ class LogTable:
         # (round 9): the old per-commit loop built a separate parquet
         # relation per change unit — a driver-side footer/schema pass
         # each, measured ~0.2 s/unit — so a consumer waking N commits
-        # behind paid O(N) driver latency before any executor ran. A
-        # single mergeSchema read prices the same files as one parallel
-        # footer job. The per-commit version stamp moves from a literal
-        # to a path parse: unit paths are ENGINE-WRITTEN
+        # behind paid O(N) driver latency before any executor ran. Each
+        # scan's schema is the union of its units' footer schemas, read
+        # on the driver in commit order (one footer per change unit,
+        # one per commit for insert units), so building the feed
+        # launches no Spark job. The per-commit version stamp moves
+        # from a literal to a path parse: unit paths are ENGINE-WRITTEN
         # (``_changes/c{v}-{hex8}`` / ``data/c{v}/__bucket=``, see
         # _capture_upsert_changes/_write_commit_dir), so the greedy
         # ``.*`` prefix pins the match to the engine's own trailing
@@ -2320,7 +2450,7 @@ class LogTable:
                 )
         if cap_paths:
             parts.append(
-                self.spark.read.option("mergeSchema", "true")
+                self.spark.read.schema(_union_schema(cap_paths))
                 .parquet(*cap_paths)
                 .withColumn(
                     "__v", _v_from_path(r".*/_changes/c(\d+)-")
@@ -2329,8 +2459,8 @@ class LogTable:
         if not parts:
             # captured and provably change-free: empty feed with the
             # table schema (same contract as the diff path's empty
-            # case), read from ONE live unit — not a mergeSchema pass
-            # over every unit footer (ADVICE r7)
+            # case), built from one footer per live commit with no
+            # file scan (ADVICE r7)
             return self._empty_feed(
                 (to_version, self._live_units(as_of=to_version)),
                 (from_version, self._live_units(as_of=from_version)),

@@ -232,8 +232,9 @@ def test_changes_default_to_latest(spark, tmp_path):
 def test_schema_evolution_on_upsert(spark, tmp_path):
     """Upserts may add columns (stored rows read NULL there) or omit
     columns (the replaced row version gets NULL — whole-row-replace
-    semantics); reads mergeSchema across pre/post-evolution units, and
-    the change feed spans the boundary."""
+    semantics); reads take the union of the pre/post-evolution units'
+    footer schemas (older units read NULL in the new column), and the
+    change feed spans the boundary."""
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=4)
     t.create(_mk(spark, [(1, "a"), (2, "b")]))  # schema: id, val
     t.upsert(
@@ -2020,3 +2021,134 @@ def test_diff_empty_feed_truncation_is_typed(spark, tmp_path):
     with pytest.raises(FeedTruncatedError) as ei:
         t.changes(0, 2)
     assert ei.value.missing == missing
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_reads_are_planned_from_the_log_without_jobs(
+    spark, tmp_path, monkeypatch
+):
+    """Building a read launches no Spark job: the schema comes from one
+    parquet footer per live commit (no schema-merge job) and local
+    masters list the unit dirs on the driver (no parallel listing job).
+    Sized past Spark's 32-path parallel-listing threshold: 64 buckets,
+    more than 32 live units, three live commits with a schema
+    evolution between them. Covers snapshot (latest, time travel, all
+    pruned), both feed tiers, the empty feed, and the read side of the
+    eager mutators (upsert, delete_keys, compact)."""
+    t = LogTable(
+        spark, str(tmp_path / "t"), key="id", n_buckets=64,
+        change_capture=True,
+    )
+    t.create(
+        spark.range(400, numPartitions=4).selectExpr(
+            "id", "concat('v', id) as val"
+        )
+    )  # v0
+    t.upsert(
+        spark.createDataFrame(
+            [(1, "x", "en"), (500, "y", "de")],
+            "id long, val string, lang string",
+        )
+    )  # v1: adds `lang` in two buckets
+    t.upsert_deferred(_mk(spark, [(2, "d")]))  # v2: a delta unit
+    live = t._live_units()
+    assert len(live) > 32
+    assert len({u.split("/__bucket=")[0] for u in live}) == 3
+
+    def jobs(build) -> int:
+        j0 = _next_job(spark)
+        build()
+        return _next_job(spark) - j0
+
+    assert jobs(lambda: t.snapshot()) == 0
+    assert jobs(lambda: t.snapshot(0)) == 0
+    pruned = []
+    assert jobs(
+        lambda: pruned.append(t.snapshot(where=[("id", "<", -1)]))
+    ) == 0
+    assert set(pruned[0].columns) == {"id", "val", "lang"}
+    assert jobs(lambda: t.changes(0, 1, use_capture=False)) == 0
+    assert jobs(lambda: t.changes(0, 1, use_capture=True)) == 0
+
+    # the read side of every eager mutator goes through _read_resolved
+    counts: list[int] = []
+    read = t._read_resolved
+
+    def counted(units, buckets):
+        j0 = _next_job(spark)
+        df = read(units, buckets)
+        counts.append(_next_job(spark) - j0)
+        return df
+
+    monkeypatch.setattr(t, "_read_resolved", counted)
+    t.upsert(_mk(spark, [(3, "u")]))  # v3
+    t.delete_keys(spark.createDataFrame([(4,)], "id long"))  # v4
+    t.compact()  # v5: captured, no logical change
+    assert counts == [0, 0, 0]
+    empty = []
+    assert jobs(lambda: empty.append(t.changes(4, 5))) == 0
+    assert t.last_feed_info["tier"] == "capture"
+    assert empty[0].columns == ["change", "id", "val", "lang"]
+    assert empty[0].count() == 0
+    snap = {r["id"]: (r["val"], r["lang"]) for r in t.snapshot().collect()}
+    assert len(snap) == 400 and 4 not in snap
+    assert snap[1] == ("x", "en") and snap[2] == ("d", None)
+    assert snap[3] == ("u", None) and snap[500] == ("y", "de")
+
+
+def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
+    """Each logged bucket unit is exactly one parquet file, whatever
+    the commit kind, even when the input arrives in several partitions
+    whose rows spread over every bucket."""
+    from pyspark.sql import functions as F
+
+    root = tmp_path / "t"
+    t = LogTable(spark, str(root), key="id", n_buckets=8)
+
+    def src(lo: int, hi: int):
+        return spark.range(lo, hi, numPartitions=4).selectExpr(
+            "id", "concat('v', id) as val"
+        )
+
+    ops = [
+        ("create", lambda: t.create(src(0, 200))),
+        ("upsert", lambda: t.upsert(src(100, 300))),
+        ("upsert_delta", lambda: t.upsert_deferred(src(250, 350))),
+        (
+            "merge",
+            lambda: t.merge(src(0, 60).withColumn("val", F.lit("m"))),
+        ),
+        ("delete", lambda: t.delete_keys(src(0, 20).select("id"))),
+        ("compact", t.compact),
+        ("append", lambda: t.append(src(1000, 1100))),
+        ("certify", t.certify_unique),
+    ]
+    for op, run in ops:
+        run()
+        entry = t.history()[-1]
+        assert entry["op"] == op
+        assert entry["added"], op
+        for u in entry["added"]:
+            files = [
+                f
+                for f in os.listdir(root / u["unit"])
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (op, u["unit"], files)
+    assert t.snapshot().count() == 430
+
+
+def test_type_conflict_between_live_commits_raises(spark, tmp_path):
+    """A column whose type differs between two live commits fails the
+    read with a ValueError naming it, rather than one commit's type
+    silently winning. One bucket, so the feed's read holds both."""
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=1)
+    t.create(_mk(spark, [(1, "a")]))
+    t.append(spark.createDataFrame([(2, 5)], "id long, val int"))
+    with pytest.raises(ValueError, match="column 'val'"):
+        t.snapshot()
+    with pytest.raises(ValueError, match="column 'val'"):
+        t.changes(0, 1, use_capture=False)

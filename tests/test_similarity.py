@@ -951,3 +951,20 @@ def test_assign_rows_fast_path_matches_collect_path(spark):
     }
     assert via_rows == via_df
     assert assign_to_centroids(corpus, None, _rows=[]).count() == 0
+
+
+def test_assign_expr_scorer_rejects_missing_centroids(spark):
+    """``centroids=None`` is the Arrow scorer's pre-collected-rows
+    contract; the expr scorer needs the DataFrame and says so instead
+    of failing with an AttributeError."""
+    from durable_functions_cosmosdb_etl_spark.operators.similarity import (
+        assign_to_centroids,
+    )
+
+    corpus = spark.createDataFrame(
+        [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
+    )
+    with pytest.raises(ValueError, match="scorer='expr'"):
+        assign_to_centroids(
+            corpus, None, scorer="expr", _rows=[(1, [1.0, 0.0])]
+        )

@@ -48,17 +48,26 @@ WORK = "/tmp/logtable_probe"
 
 def _measure_open(t: LogTable, version=None, n: int = 5) -> dict:
     """Median driver-side replay time and full snapshot-construction
-    time (plan build only — no job) at a version."""
-    replay, build = [], []
+    time (plan build only) at a version, plus the Spark jobs one
+    snapshot construction launched (median over the opens; 0 when the
+    read is planned from the log alone)."""
+    dag = t.spark.sparkContext._jsc.sc().dagScheduler()
+    replay, build, jobs = [], [], []
     for _ in range(n):
         t0 = time.perf_counter()
         t._live_units(as_of=version)
         replay.append(time.perf_counter() - t0)
+        j0 = dag.nextJobId()
         t0 = time.perf_counter()
         t.snapshot(version)
         build.append(time.perf_counter() - t0)
-    med = lambda xs: round(sorted(xs)[len(xs) // 2] * 1000, 2)  # noqa: E731
-    return {"replay_ms": med(replay), "snapshot_build_ms": med(build)}
+        jobs.append(dag.nextJobId() - j0)
+    med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
+    return {
+        "replay_ms": round(med(replay) * 1000, 2),
+        "snapshot_build_ms": round(med(build) * 1000, 2),
+        "snapshot_jobs": med(jobs),
+    }
 
 
 def main() -> None:
