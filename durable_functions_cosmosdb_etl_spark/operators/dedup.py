@@ -23,7 +23,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .text import shingles_from_words, words
 
 # MinHash parameters: 64 permutations = 16 bands × 4 rows.
 MINHASH_K = 64
@@ -127,15 +126,16 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 def _shingle_vec_udf(n: int):
     """Arrow-vectorized shingler: text → distinct word n-grams.
 
-    Byte-exact replica of the JVM path (``words`` + ``shingles_from_words``):
+    Byte-exact replica of the JVM expression ``text.shingles_from_words(
+    text.words(col), n)`` (pytest-gated against it):
     ``re.split('[ \\t\\n\\x0b\\f\\r]+')`` is Java's ASCII ``\\s+`` with
     limit=-1 semantics (leading separator → leading "", trailing empties
     kept, "" → [""]), ``str.strip(' ')`` is ``F.trim`` (spaces only), and
     ``dict.fromkeys`` preserves first-occurrence order like
-    ``array_distinct``. Exists because HOF lambdas evaluate interpreted
-    per element: the expression path costs 7.7s for 5k docs / 260k
-    shingles at sf0.1 vs 0.76s here (10×) — shingling was the dominant
-    cost of every shingle-based dedup query, not the joins.
+    ``array_distinct``. It replaces that expression because HOF lambdas
+    evaluate interpreted per element: the expression costs 7.7s for 5k
+    docs / 260k shingles at sf0.1 vs 0.76s here (10×) — shingling was
+    the dominant cost of every shingle-based dedup query, not the joins.
     """
     import re
 
@@ -164,27 +164,13 @@ def _shingle_vec_udf(n: int):
     return sh
 
 
-def _shingled(
-    df: DataFrame, id_col: str, text_col: str, n: int, vectorized: bool = True
-) -> DataFrame:
-    """doc → (doc, sh, n_sh). Default path is the Arrow-batched shingler
-    (10× over the interpreted HOF expression — see ``_shingle_vec_udf``);
-    ``vectorized=False`` keeps the pure-JVM expression path (used by the
-    equivalence test, and callers that must avoid Python workers)."""
-    if vectorized:
-        return df.select(
-            F.col(id_col).alias("doc"),
-            _shingle_vec_udf(n)(F.col(text_col)).alias("sh"),
-        ).withColumn("n_sh", F.size("sh"))
-    # Two-step select: materialize the word array BEFORE shingling so the
-    # higher-order-function lambda reads an attribute, not an inline
-    # split() re-evaluated per element (17× at 5k docs — see
-    # text.shingles_from_words).
-    return (
-        df.select(F.col(id_col).alias("doc"), words(F.col(text_col)).alias("w"))
-        .select("doc", shingles_from_words(F.col("w"), n).alias("sh"))
-        .withColumn("n_sh", F.size("sh"))
-    )
+def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
+    """doc → (doc, sh, n_sh) through the Arrow-batched shingler (10×
+    over the interpreted HOF expression — see ``_shingle_vec_udf``)."""
+    return df.select(
+        F.col(id_col).alias("doc"),
+        _shingle_vec_udf(n)(F.col(text_col)).alias("sh"),
+    ).withColumn("n_sh", F.size("sh"))
 
 
 # "auto" collapse engages at or above this exact-copy fraction.
@@ -452,7 +438,6 @@ def jaccard_components(
     max_shingle_df: int | None = None,
     node_col: str = "doc",
     max_iters: int = 50,
-    algorithm: str = "star",
     collapse_identical="auto",
 ) -> DataFrame:
     """Connected components of the :func:`jaccard_pairs` graph WITHOUT
@@ -503,14 +488,13 @@ def jaccard_components(
             ),
             node_col=node_col,
             max_iters=max_iters,
-            algorithm=algorithm,
         )
     memb, ex, surv = _collapsed_rep_index(
         df, id_col, text_col, n, max_shingle_df
     )
     rep_pairs = _pairs_from_index(ex, threshold)
     comp_rep = connected_components(
-        rep_pairs, node_col="rep", max_iters=max_iters, algorithm=algorithm
+        rep_pairs, node_col="rep", max_iters=max_iters
     )
     within = (
         memb.groupBy("rep")
@@ -890,7 +874,6 @@ def connected_components(
     b_col: str = "doc_b",
     node_col: str = "doc",
     max_iters: int = 50,
-    algorithm: str = "star",
     stats: dict | None = None,
     local_threshold: int = 200_000,
 ) -> DataFrame:
@@ -900,19 +883,16 @@ def connected_components(
     rows to drop — duplicates form chains (A~B, B~C ⇒ {A,B,C}); the
     component's min id is the canonical keeper.
 
-    Default ``algorithm="star"`` is alternating large-star / small-star
+    The distributed rounds are alternating large-star / small-star
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", public paper): each round rewires every node's edges toward
     the minimum of its neighborhood, which contracts ANY topology —
     including an n-hop duplicate *chain* — in O(log² n) rounds
     worst-case, ~log₂ n observed (scale-probe chain test asserts
-    ≤ ⌈log₂ n⌉ + 3 rounds). ``algorithm="minlabel"`` keeps the previous
-    min-label propagation, whose round count is O(graph diameter): fine
-    for the dense near-dup cliques that dominate real corpora, but a
-    pathological chain costs one full Spark job per hop — that is the
-    round-3 verdict watch-item this default closes.
+    ≤ ⌈log₂ n⌉ + 3 rounds). Min-label propagation would need
+    O(graph diameter) rounds: one full Spark job per hop of a chain.
 
-    Scale shape (both algorithms): every round is groupBy/join keyed on
+    Scale shape: every round is groupBy/join keyed on
     node id — hash-partitioned, linear shuffle, no all-pairs stage; the
     driver only sees a scalar change-count per round. Star rounds emit
     ≤ |E| + |V| edges (large-star keeps one edge per input edge;
@@ -943,10 +923,6 @@ def connected_components(
 
     Returns (node_col, component) — component = min node id reachable.
     """
-    # Validate up front so the small-graph fast path can't silently
-    # accept an algorithm name the distributed branch would reject.
-    if algorithm not in ("star", "minlabel"):
-        raise ValueError(f"unknown algorithm: {algorithm!r}")
     if nodes is None and local_threshold > 0:
         # Raw pairs, no distinct/canonicalize pass: union-find absorbs
         # duplicate and reversed edges for free, and the count threshold
@@ -1021,80 +997,7 @@ def connected_components(
         # rounds take their own checkpoint copies eagerly; e0's blocks
         # are released when this invocation's RDD goes out of scope.
         pairs = e0.select(F.col("u").alias(a_col), F.col("v").alias(b_col))
-        if algorithm == "star":
-            return _cc_star(
-                pairs, nodes, a_col, b_col, node_col, max_iters, stats
-            )
-        return _cc_minlabel(
-            pairs, nodes, a_col, b_col, node_col, max_iters, stats
-        )
-    if algorithm == "star":
-        return _cc_star(pairs, nodes, a_col, b_col, node_col, max_iters, stats)
-    return _cc_minlabel(pairs, nodes, a_col, b_col, node_col, max_iters, stats)
-
-
-def _cc_minlabel(
-    pairs: DataFrame,
-    nodes: DataFrame | None,
-    a_col: str,
-    b_col: str,
-    node_col: str,
-    max_iters: int,
-    stats: dict | None,
-) -> DataFrame:
-    # Symmetric edge list; labels start as self. localCheckpoint, not
-    # .cache(): each round's plan references ``labels`` TWICE (directly
-    # and via neighbor_min), so un-severed lineage doubles per round —
-    # fine for the ≤5 rounds dense near-dup graphs take, fatal on a
-    # long-chain topology (driver OOM building the plan tree). The
-    # checkpoint also severs the expensive upstream pair generator from
-    # every round (measured 31s → 12s at sf0.01 over the jaccard pair
-    # generator vs uncached lineage).
-    e = (
-        pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-        .union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
-        .localCheckpoint()
-    )
-    if nodes is None:
-        # every pair endpoint, read off the checkpoint — not the pairs plan
-        node_src = e.select(F.col("src").alias(node_col)).distinct()
-    else:
-        node_src = nodes
-    labels = node_src.select(
-        F.col(node_col).alias("node"), F.col(node_col).alias("component")
-    )
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        neighbor_min = (
-            e.join(labels, e.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        # The convergence flag rides along in the update itself
-        # (``moved`` ⇔ a strictly smaller neighbor label exists): the
-        # eager checkpoint materializes the round, and the ``moved``
-        # probe is a cheap scan of the checkpointed blocks — no second
-        # pass over the join.
-        upd = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("nbr_min", F.col("component"))
-                ).alias("component"),
-                (F.col("nbr_min") < F.col("component")).alias("moved"),
-            )
-            .localCheckpoint()
-        )
-        changed = upd.filter("moved").limit(1).count()
-        labels = upd.drop("moved")
-        if changed == 0:
-            break
-    if stats is not None:
-        stats["algorithm"] = "minlabel"
-        stats["rounds"] = rounds
-    return labels.select(F.col("node").alias(node_col), "component")
+    return _cc_star(pairs, nodes, a_col, b_col, node_col, max_iters, stats)
 
 
 def _cc_star(
@@ -1209,11 +1112,11 @@ def _cc_star(
         sig = new_sig
         e = ss
     if stats is not None:
-        stats["algorithm"] = "star"
         stats["rounds"] = rounds
     # Fixpoint edge set is a star forest: (component_min, member). The
-    # min is safe (and exact) even if stopped at max_iters short of the
-    # true fixpoint — matching minlabel's best-effort contract there.
+    # min is safe even if stopped at max_iters short of the true
+    # fixpoint: every label is a node of the member's own component,
+    # so a truncated run may split a component but never merges two.
     star_labels = e.groupBy(F.col("v").alias("node")).agg(
         F.min("u").alias("component")
     )

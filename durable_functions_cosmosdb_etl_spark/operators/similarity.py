@@ -2,14 +2,14 @@
 
 North-star addition (no vector ops exist in the reference). Two paths:
 
-- brute-force exact cosine top-k: broadcast the (small) query set
-  against the corpus scan; dot/norm via native array expressions
-  (zip_with + aggregate — JVM codegen, no Python). This is the
+- brute-force exact cosine top-k: the (small) query set is scored
+  against each corpus Arrow batch in one ``mapInPandas`` pass whose
+  sims are bit-identical to the :func:`cosine` expression. This is the
   correctness baseline AND the right plan whenever |queries| is small:
   at 100 TB it is one pass over the corpus, no shuffle except the
   per-query top-k (tiny).
 - IVF (inverted-file) approximate path: assign every vector to its
-  nearest centroid (one broadcast join), search only vectors whose
+  nearest centroid (map-side, no exchange), search only vectors whose
   centroid is among the query's nprobe closest. Cuts the scanned
   fraction to ~nprobe/k at the cost of recall. Centroid fitting here is
   deterministic k-points initialization + one Lloyd step (pure
@@ -71,8 +71,10 @@ def l2_norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity with NULL (not an error, not NaN) for a
     zero-norm operand: ``try_divide`` makes the zero-denominator case
-    NULL — the reference semantics every scorer in this module aligns
-    to — and keeps the expression ANSI-safe (plain division raises
+    NULL — the reference semantics the Arrow paths in this module
+    (:func:`_broadcast_score_topk`, :func:`_assign_arrow_udf`)
+    reproduce bit for bit, test-gated against this expression — and
+    keeps the expression ANSI-safe (plain division raises
     DIVIDE_BY_ZERO under Spark 4's ANSI default, the same failure
     class fixed in minhash/text ratios/assignment). NULL sims sort
     BELOW every real double under ``sim DESC`` and fail ``sim >=
@@ -82,51 +84,20 @@ def cosine(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
-def _topk_prereduce(k: int, schema):
-    """Per-Arrow-batch local top-k (exact reduction before the window).
-
-    The global per-query top-k is a subset of the union of per-batch
-    top-ks (each batch sits inside one partition), so reducing every
-    batch to its own top-k per query is lossless. Ordering replicates
-    the downstream window exactly: sim desc, neighbor_id asc.
-    """
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            # na_position="first" + stable sort replicate the downstream
-            # Spark window's ordering exactly: under ORDER BY sim DESC
-            # Spark treats NaN as the LARGEST double (rank 1), while
-            # pandas' default puts NaN last — which would silently drop
-            # NaN-sim rows the window would keep.
-            pdf = pdf.sort_values(
-                ["query_id", "sim", "neighbor_id"],
-                ascending=[True, False, True],
-                na_position="first",
-                kind="stable",
-            )
-            yield pdf.groupby("query_id", sort=False).head(k)
-
-    return run
-
-
-def _broadcast_score_topk(q_rows, k, sim_floor, probe_sets=None):
+def _broadcast_score_topk(q_rows, k, probe_sets=None):
     """mapInPandas factory: score EVERY (collected, bounded) query
     against each corpus Arrow batch and reduce to the batch-local
     top-k per query, in one Python pass.
 
-    Replaces the JVM pair enumeration (crossJoin/probe join +
-    interpreted-HOF cosine + separate prereduce) with: corpus crosses
-    the Arrow boundary ONCE (no |queries|× row amplification), sims are
-    sequential-fold cumsum dots — bit-identical to the ``cosine()``
-    expression (same IEEE add order; BLAS GEMM would reorder) — and
-    each batch emits at most |queries|·k rows. Ordering/filter
-    semantics replicate the expression plan exactly: pairs whose
-    cosine is not a real number (zero denominator → try_divide NULL,
-    or NaN operands) emit no row at all (the undefined-similarity
-    contract, mirrored by an ``isNotNull & ~isnan`` filter in the expr
-    paths); ties break on ascending neighbor id.
+    The corpus crosses the Arrow boundary ONCE (no |queries|× row
+    amplification), sims are sequential-fold cumsum dots — bit-identical
+    to the :func:`cosine` expression (same IEEE add order; BLAS GEMM
+    would reorder) — and each batch emits at most |queries|·k rows. The
+    batch-local top-k is lossless: the global per-query top-k is a
+    subset of the union of per-batch top-ks. Pairs whose cosine is not
+    a real number (zero denominator → ``cosine()`` NULL, or NaN
+    operands) emit no row at all (the undefined-similarity contract);
+    ties break on ascending neighbor id, as in the rank window.
 
     ``probe_sets``: optional {query_id: set(centroid_id)} — rows of a
     batch outside a query's probed cells are masked out before scoring
@@ -178,21 +149,14 @@ def _broadcast_score_topk(q_rows, k, sim_floor, probe_sets=None):
                 denom = qn[qi] * sub_cn
                 with np.errstate(divide="ignore", invalid="ignore"):
                     sims = dots / denom
-                # Undefined-similarity contract (uniform across every
-                # scorer and prereduce mode): a pair whose cosine is
-                # not a real number — zero denominator (try_divide →
-                # NULL in the expression form) OR NaN operands — emits
-                # NO neighbor row. Previously 0/0 = NaN took sort key
-                # +inf and rank 1 for EVERY query; and component-NaN
-                # sims became NULL crossing the Arrow boundary
-                # (pyarrow nan_as_null), ranking last here but first
-                # in the pure-JVM no-prereduce plan — a hybrid
-                # ordering. Dropping both tiers makes all paths agree.
+                # Undefined-similarity contract: a pair whose cosine is
+                # not a real number — zero denominator (NULL under
+                # cosine()'s try_divide) OR NaN operands — emits NO
+                # neighbor row. Kept, 0/0 = NaN would take sort key +inf
+                # and rank 1 for EVERY query, and a NaN sim turns NULL
+                # crossing the Arrow boundary (pyarrow nan_as_null).
                 valid = (denom != 0.0) & ~np.isnan(sims)
                 sims, sub_n = sims[valid], sub_n[valid]
-                if sim_floor is not None:
-                    keep = sims >= sim_floor
-                    sims, sub_n = sims[keep], sub_n[keep]
                 order = np.lexsort((sub_n, -sims))[:k]
                 out_q.extend([qid] * len(order))
                 out_n.extend(sub_n[order])
@@ -210,31 +174,22 @@ def brute_force_topk(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    sim_floor: float | None = None,
-    prereduce: bool = True,
-    scorer: str = "arrow",
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast queries × corpus scan × local top-k
-    pre-reduce × window top-k.
+    """Exact cosine top-k: collected queries × corpus scan, scored and
+    reduced to a batch-local top-k in one Arrow pass, then a window
+    top-k.
 
     Output: query_id, neighbor_id, sim, rank. The corpus is never
-    shuffled for scoring. Without the pre-reduce, the rank window's
-    exchange carries |queries| × |corpus| rows — the 100× scale killer.
-    ``sim_floor`` additionally drops scored rows below a caller-known
-    bound (e.g. a dedup threshold) before the reduction — changes
-    results only if the floor exceeds a true k-th similarity, so it is
-    opt-in.
-
-    ``scorer="arrow"`` (default, requires ``prereduce``): the bounded
-    query set (the broadcast assumption, now a driver collect of the
-    same size) is scored against each corpus Arrow batch inside ONE
-    ``mapInPandas`` pass that also does the local top-k
-    (:func:`_broadcast_score_topk`) — the corpus crosses the Python
-    boundary once instead of the JVM enumerating |queries|×|corpus|
-    pair rows through an interpreted-HOF cosine and Arrow-shipping
-    them all into the prereduce; sims are bit-identical (sequential
-    cumsum fold). ``scorer="expr"`` keeps the pure-JVM pair plan;
-    ``prereduce=False`` implies it.
+    shuffled for scoring. The bounded query set (the broadcast
+    assumption, as a driver collect of the same size) is scored against
+    each corpus Arrow batch inside ONE ``mapInPandas`` pass that also
+    does the local top-k (:func:`_broadcast_score_topk`), so the rank
+    window's exchange carries O(batches × |queries| × k) rows instead
+    of |queries| × |corpus| — the 100× scale killer. Sims are
+    bit-identical to :func:`cosine` (sequential cumsum fold); pairs
+    with an undefined cosine emit no row. To keep only neighbors above
+    a similarity floor, filter the output: the surviving rows and
+    ranks are the same as filtering before the top-k.
     """
     qdf = queries.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
@@ -242,48 +197,20 @@ def brute_force_topk(
     c = corpus.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    if scorer not in ("arrow", "expr"):
-        raise ValueError(f"unknown scorer: {scorer!r}")
-    if scorer == "arrow" and prereduce:
-        q_rows = [
-            (r["query_id"], r["q_vec"]) for r in qdf.collect()
+    q_rows = [(r["query_id"], r["q_vec"]) for r in qdf.collect()]
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", qdf.schema["query_id"].dataType),
+            T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
+            T.StructField("sim", T.DoubleType()),
         ]
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", qdf.schema["query_id"].dataType),
-                T.StructField("neighbor_id", c.schema["neighbor_id"].dataType),
-                T.StructField("sim", T.DoubleType()),
-            ]
-        )
-        if not q_rows:
-            scored = corpus.sparkSession.createDataFrame([], out_schema)
-        else:
-            scored = c.mapInPandas(
-                _broadcast_score_topk(q_rows, k, sim_floor),
-                schema=out_schema,
-            )
+    )
+    if not q_rows:
+        scored = corpus.sparkSession.createDataFrame([], out_schema)
     else:
-        scored = F.broadcast(qdf).crossJoin(c).select(
-            "query_id",
-            "neighbor_id",
-            cosine(F.col("q_vec"), F.col("c_vec")).alias("sim"),
+        scored = c.mapInPandas(
+            _broadcast_score_topk(q_rows, k), schema=out_schema
         )
-        # Undefined-similarity contract: NULL sims (try_divide,
-        # zero-norm operand) AND NaN sims (NaN operands) are dropped
-        # before the pre-reduce — pandas float64 cannot distinguish
-        # NULL from NaN, Spark sorts them at OPPOSITE ends of sim
-        # DESC, and NaN flips to NULL crossing the Arrow boundary
-        # (pyarrow nan_as_null); only real-valued sims rank, in every
-        # scorer and prereduce mode alike.
-        scored = scored.filter(
-            F.col("sim").isNotNull() & ~F.isnan("sim")
-        )
-        if sim_floor is not None:
-            scored = scored.filter(F.col("sim") >= sim_floor)
-        if prereduce:
-            scored = scored.mapInPandas(
-                _topk_prereduce(k, scored.schema), schema=scored.schema
-            )
     w = Window.partitionBy("query_id").orderBy(
         F.col("sim").desc(), F.col("neighbor_id")
     )
@@ -331,12 +258,12 @@ def _kcenter_seed_loop(
         return []
     seeds = [first[0]]
     for _ in range(n_centroids - 1):
-        # Arrow-batched max-sim-to-seeds (same sequential cumsum fold
-        # as the assignment scorer — bit-identical sims to the previous
-        # interpreted array_max expression, which cost ~0.4 s PER SEED
-        # STEP at sf0.1 because HOF lambdas never enter codegen; k-1
-        # sequential steps made kcenter fitting the dominant cost of
-        # the production IVF point).
+        # Arrow-batched max-sim-to-seeds, with the same sequential
+        # cumsum fold as the centroid assignment, so every sim equals
+        # cosine()'s bit for bit. An array_max over cosine() would
+        # run interpreted (HOF lambdas never enter codegen) and cost
+        # ~0.4 s PER SEED STEP at sf0.1; over k-1 sequential steps
+        # kcenter fitting would dominate the production IVF point.
         seed_mat = np.stack(
             [np.asarray(r[vec_col], dtype=np.float64) for r in seeds]
         )
@@ -1013,20 +940,20 @@ def _fit_codebook(
 
 
 def _assign_arrow_udf(cen_ids, cen_mat):
-    """Arrow-batched nearest-centroid argmax, BIT-IDENTICAL to the
-    expression scorer.
+    """Arrow-batched nearest-centroid argmax, BIT-IDENTICAL to an argmax
+    over the :func:`cosine` fold (test-gated against a window argmax
+    over ``cosine()``).
 
-    Bit-identity argument (this is what lets the vectorized path be the
-    default without touching any oracle): the expression path computes
-    ``dot`` as a sequential left-to-right fold of float64 products and
-    ``l2_norm`` as sqrt of the same fold over squares. ``np.cumsum`` is
-    the same sequential accumulation (prefix sums cannot be pairwise),
-    over the same float64 products, so every dot/norm/sim is the same
-    IEEE value — GEMM (BLAS) would NOT be: it reorders the adds and can
-    flip an argmax on near-ties. The comparison semantics are
-    replicated tier-wise: NULL sim (zero denominator under try_divide)
-    < every real double < NaN, ties → lowest centroid id, all exactly
-    Spark's struct ordering over (sim, -centroid_id).
+    Bit-identity argument: ``cosine()`` computes ``dot`` as a
+    sequential left-to-right fold of float64 products and ``l2_norm``
+    as sqrt of the same fold over squares. ``np.cumsum`` is the same
+    sequential accumulation (prefix sums cannot be pairwise), over the
+    same float64 products, so every dot/norm/sim is the same IEEE
+    value — GEMM (BLAS) would NOT be: it reorders the adds and can flip
+    an argmax on near-ties. The comparison is tier-wise: NULL sim (zero
+    denominator under try_divide) < every real double < NaN, ties →
+    lowest centroid id — Spark's ``sim DESC NULLS LAST, centroid_id``
+    ordering.
 
     Memory: products materialize as (chunk × k × d) float64; the chunk
     size is bounded so that stays ~16 MB regardless of batch size or
@@ -1088,7 +1015,6 @@ def assign_to_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_all: bool = False,
-    scorer: str = "arrow",
     _rows: list | None = None,
 ) -> DataFrame:
     """vector → nearest centroid id, computed MAP-SIDE.
@@ -1101,125 +1027,65 @@ def assign_to_centroids(
     columns the assignment scan already had in hand; at 100 TB it was
     the single largest avoidable shuffle in the IVF/SemDeDup plans.
 
-    ``scorer``: "arrow" (default) evaluates the per-row argmax in an
-    Arrow-batched pandas UDF (:func:`_assign_arrow_udf`) that is
-    BIT-IDENTICAL to the expression form — sequential-fold dots via
-    ``np.cumsum`` (never BLAS GEMM, which reorders adds and can flip
-    near-tie argmaxes) and the exact NULL/NaN/tie ordering; equivalence
-    is pytest-gated including zero-norm vectors and ties. It exists
-    because higher-order-function lambdas evaluate INTERPRETED (no
-    codegen): the expr scorer measured 0.67 s for 2000 rows × 10
+    The centroid table (tiny by construction) is collected once and the
+    per-row argmax runs in an Arrow-batched pandas UDF
+    (:func:`_assign_arrow_udf`). The plan has no exchange at all:
+    assignment is embarrassingly parallel and the output stays in the
+    corpus's own partitioning (which downstream joins on id_col
+    immediately reuse). Scoring is not an expression because
+    higher-order-function lambdas evaluate INTERPRETED (no codegen): an
+    array_max over ``cosine()`` measured 0.67 s for 2000 rows × 10
     centroids at sf0.1 — ~10× the Arrow pass, and the gap scales with
-    corpus × centroids, which is the dominant IVF cost at 100 TB (the
-    same measured trade as dedup's vectorized shingler). "expr" keeps
-    the pure-JVM plan for callers that must avoid Python workers.
+    corpus × centroids, the dominant IVF cost at 100 TB.
 
-    The centroid table (tiny by construction) collapses to a single
-    array-of-structs row, broadcast into the corpus scan; the argmax is
-    a per-row array reduction. The previous shape — crossJoin to
-    |corpus|×|centroids| rows + row_number window partitioned by id —
-    materialized and SHUFFLED N×k rows just to pick each row's max; at
-    100 TB that exchange dwarfs the scoring itself. This plan has no
-    exchange at all: assignment cost is embarrassingly parallel and the
-    output stays in the corpus's own partitioning (which downstream
-    joins on id_col immediately reuse).
+    Contract (pytest-gated against a window argmax over ``cosine()``):
 
-    Semantics are bit-identical to the window version, including edge
-    cases: ``array_max`` over ``struct(sim, -centroid_id)`` uses Spark's
-    total ordering, where NaN sorts above every double (matching the
-    window's NaN-first rank under ``sim DESC``) and exact sim ties fall
-    through to ``max(-centroid_id)`` = lowest centroid id (matching the
-    window's ``centroid_id ASC`` tie-break). Centroid norms are computed
-    once before the collect; the row's own norm once per row — HOF
-    lambdas get no CSE, so neither may be inlined into the per-centroid
-    lambda. Null vectors have no nearest centroid and are dropped.
+    - sims are bit-identical to :func:`cosine` — sequential-fold dots
+      via ``np.cumsum``, never BLAS GEMM, which reorders adds and can
+      flip near-tie argmaxes;
+    - a NULL sim (zero-norm vector or centroid) ranks below every real
+      sim, so a zero-norm vector still resolves, to the lowest
+      centroid id;
+    - a NaN sim ranks above every double (Spark's NaN ordering);
+    - exact sim ties go to the lowest centroid id;
+    - an empty codebook yields zero rows, not NULL centroid ids;
+    - null vectors have no nearest centroid and are dropped.
+
+    ``_rows``: a caller that already holds the collected codebook as
+    (centroid_id, centroid) tuples (ivf_topk / semantic_dedup — the
+    serving paths) passes them here with ``centroids=None``, skipping
+    one tiny collect job per serve.
     """
+    import numpy as np
+
+    if centroids is None and _rows is None:
+        raise ValueError(
+            "assign_to_centroids: pass centroids or _rows (got neither)"
+        )
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     out_cols = (
         [F.col(c) for c in corpus.columns] if keep_all else [F.col(id_col)]
     )
-    if scorer == "arrow":
-        import numpy as np
-
-        # The codebook is tiny by construction (same boundedness claim
-        # as the broadcast in the expr path); collecting it here feeds
-        # the per-batch numpy scorer. Sorting by centroid_id keeps the
-        # tie-break deterministic regardless of collect order. ``_rows``
-        # (r14): a caller that already holds the collected codebook
-        # (ivf_topk / semantic_dedup — the serving paths) passes the
-        # (centroid_id, centroid) tuples directly, skipping one tiny
-        # collect job per serve; values are the identical memo/collect
-        # rows, so the scorer closure is bit-identical either way.
-        if _rows is not None:
-            rows = sorted(_rows, key=lambda r: r[0])
-        else:
-            rows = [
-                (r["centroid_id"], r["centroid"])
-                for r in sorted(
-                    centroids.select("centroid_id", "centroid").collect(),
-                    key=lambda r: r["centroid_id"],
-                )
-            ]
-        if not rows:
-            # Degenerate codebook contract: zero centroids → zero
-            # assignments (matches the expr path's NULL-argmax filter).
-            return corpus.filter(F.lit(False)).select(
-                *out_cols, F.lit(0).cast("int").alias("centroid_id")
+    # Sorting by centroid_id keeps the tie-break deterministic
+    # regardless of collect order; memo rows and collected rows are the
+    # same values, so the UDF closure is bit-identical either way.
+    if _rows is not None:
+        rows = sorted(_rows, key=lambda r: r[0])
+    else:
+        rows = [
+            (r["centroid_id"], r["centroid"])
+            for r in sorted(
+                centroids.select("centroid_id", "centroid").collect(),
+                key=lambda r: r["centroid_id"],
             )
-        cen_mat = np.stack(
-            [np.asarray(r[1], dtype=np.float64) for r in rows]
+        ]
+    if not rows:
+        return corpus.filter(F.lit(False)).select(
+            *out_cols, F.lit(0).cast("int").alias("centroid_id")
         )
-        udf = _assign_arrow_udf([r[0] for r in rows], cen_mat)
-        return corpus.select(
-            *out_cols, udf(F.col(vec_col)).alias("centroid_id")
-        )
-    if scorer != "expr":
-        raise ValueError(f"unknown scorer: {scorer!r}")
-    if centroids is None:
-        # the expr scorer broadcasts the centroid DataFrame; collected
-        # ``_rows`` feed only the Arrow closure
-        raise ValueError(
-            "scorer='expr' needs the centroids DataFrame; "
-            "centroids=None is only valid with scorer='arrow'"
-        )
-    cen_arr = F.broadcast(
-        centroids.select(
-            F.struct(
-                F.col("centroid_id"),
-                F.col("centroid"),
-                l2_norm(F.col("centroid")).alias("cnorm"),
-            ).alias("c")
-        ).agg(F.collect_list("c").alias("_cens"))
-    )
-    vec = F.col(vec_col)
-    best = F.array_max(
-        F.transform(
-            F.col("_cens"),
-            lambda c: F.struct(
-                # try_divide: a zero-norm vector (or centroid) has no
-                # defined cosine — NULL sim sorts below every real sim in
-                # the struct ordering, and an all-NULL row still resolves
-                # via the ncid tie-break to the lowest centroid id instead
-                # of raising DIVIDE_BY_ZERO under ANSI mode.
-                F.try_divide(
-                    dot(vec, c["centroid"]),
-                    F.col("_vnorm") * c["cnorm"],
-                ).alias("sim"),
-                (-c["centroid_id"]).alias("ncid"),
-            ),
-        )
-    )
-    return (
-        corpus.withColumn("_vnorm", l2_norm(vec))
-        .crossJoin(cen_arr)
-        .select(*out_cols, (-best["ncid"]).alias("centroid_id"))
-        # Degenerate codebook contract: with ZERO centroids the argmax
-        # over an empty array is NULL for every row — filter those so an
-        # empty codebook yields zero assignments (the behavior of the
-        # previous crossJoin+window shape), not a corpus-sized table of
-        # NULL centroid ids.
-        .filter(F.col("centroid_id").isNotNull())
-    )
+    cen_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in rows])
+    udf = _assign_arrow_udf([r[0] for r in rows], cen_mat)
+    return corpus.select(*out_cols, udf(F.col(vec_col)).alias("centroid_id"))
 
 
 def ivf_topk(
@@ -1232,29 +1098,26 @@ def ivf_topk(
     vec_col: str = "embedding",
     init: str = "lowest_id",
     n_iters: int = 1,
-    scorer: str = "arrow",
 ) -> DataFrame:
     """Approximate top-k: probe only the nprobe nearest centroid cells.
 
-    Serving plan: corpus pre-assigned (in production: written bucketed
-    by centroid_id so the probe join prunes files), queries expand to
-    nprobe cells, equi-join on centroid_id, exact rescoring within.
+    Serving plan: corpus assigned map-side (in production: written
+    bucketed by centroid_id so the probe prunes files), each query
+    probes its nprobe nearest cells, exact rescoring within.
     ``init``/``n_iters`` pass through to the codebook fit — the
     registered oracle query keeps the defaults; production serving wants
     ``init="kcenter"`` and more Lloyd steps.
 
-    ``scorer="arrow"`` (default): probe selection runs on the
-    driver-collected codebook (tiny) with the same sequential-fold
-    cosine and (csim desc, centroid_id) ordering as the expression
-    window, and rescoring+local-top-k fuse into ONE ``mapInPandas``
-    over the assigned corpus (:func:`_broadcast_score_topk`, with each
-    query masked to its probed cells) — no per-candidate interpreted
-    cosine, no probe broadcast join, no pair rows over the Arrow
-    boundary. Bit-identical output (same fold, same orderings);
-    ``scorer="expr"`` keeps the pure-JVM probe-join plan.
+    Probe selection runs on the driver-collected codebook (tiny) with
+    the same sequential-fold cosine as :func:`cosine` and the order
+    ``csim DESC NULLS LAST, centroid_id``; rescoring + local top-k fuse
+    into ONE ``mapInPandas`` over the assigned corpus
+    (:func:`_broadcast_score_topk`, with each query masked to its
+    probed cells) — no per-candidate interpreted cosine, no probe join,
+    no pair rows over the Arrow boundary.
     """
-    if scorer not in ("arrow", "expr"):
-        raise ValueError(f"unknown scorer: {scorer!r}")
+    import numpy as np
+
     # r14 serving-job-count cut (VERDICT r13 #1): the codebook comes
     # back as DRIVER ROWS whenever the fit is memoizable (every
     # file-backed corpus — one collect at first fit, zero jobs on every
@@ -1269,136 +1132,71 @@ def ivf_topk(
         corpus, n_centroids, id_col, vec_col, init=init, n_iters=n_iters
     )
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-    if scorer == "arrow":
-        import numpy as np
-
-        if rows is None:
-            # non-memoizable plan (in-memory frame): one collect of the
-            # fitted codebook — same single execution the cached
-            # DataFrame form paid.
-            rows = [
-                (r["centroid_id"], list(r["centroid"]))
-                for r in cb.collect()
-            ]
-        cen_rows = sorted(rows, key=lambda r: r[0])
-        # keep_all: assignment + payload in one map-side pass — the
-        # previous corpus.join(assignments, id) re-shuffled the whole
-        # corpus just to re-attach the vector column.
-        corpus_cells = assign_to_centroids(
-            corpus, None, id_col, vec_col, keep_all=True, _rows=cen_rows
-        )
-        q_rows = [
-            (r["query_id"], r["q_vec"])
-            for r in q.filter(F.col("q_vec").isNotNull()).collect()
+    if rows is None:
+        # non-memoizable plan (in-memory frame): one collect of the
+        # fitted codebook — same single execution the cached
+        # DataFrame form paid.
+        rows = [(r["centroid_id"], list(r["centroid"])) for r in cb.collect()]
+    cen_rows = sorted(rows, key=lambda r: r[0])
+    # keep_all: assignment + payload in one map-side pass — joining
+    # the assignments back to the corpus on id would re-shuffle the
+    # whole corpus just to re-attach the vector column.
+    corpus_cells = assign_to_centroids(
+        corpus, None, id_col, vec_col, keep_all=True, _rows=cen_rows
+    )
+    q_rows = [
+        (r["query_id"], r["q_vec"])
+        for r in q.filter(F.col("q_vec").isNotNull()).collect()
+    ]
+    out_schema = T.StructType(
+        [
+            T.StructField("query_id", q.schema["query_id"].dataType),
+            T.StructField("neighbor_id", corpus.schema[id_col].dataType),
+            T.StructField("sim", T.DoubleType()),
         ]
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", q.schema["query_id"].dataType),
-                T.StructField(
-                    "neighbor_id", corpus.schema[id_col].dataType
-                ),
-                T.StructField("sim", T.DoubleType()),
-            ]
+    )
+    if not q_rows or not cen_rows:
+        scored = corpus.sparkSession.createDataFrame([], out_schema)
+    else:
+        cen_mat = np.stack(
+            [np.asarray(r[1], dtype=np.float64) for r in cen_rows]
         )
-        if not q_rows or not cen_rows:
-            scored = corpus.sparkSession.createDataFrame([], out_schema)
-        else:
-            cen_mat = np.stack(
-                [np.asarray(r[1], dtype=np.float64) for r in cen_rows]
-            )
-            cids = np.asarray(
-                [r[0] for r in cen_rows], dtype=np.int64
-            )
-            d = cen_mat.shape[1]
-            cnorm = (
-                np.sqrt(np.cumsum(cen_mat * cen_mat, axis=1)[:, -1])
+        cids = np.asarray([r[0] for r in cen_rows], dtype=np.int64)
+        d = cen_mat.shape[1]
+        cnorm = (
+            np.sqrt(np.cumsum(cen_mat * cen_mat, axis=1)[:, -1])
+            if d
+            else np.zeros(len(cids))
+        )
+        probe_sets = {}
+        for qid, qv in q_rows:
+            qv64 = np.asarray(qv, dtype=np.float64)
+            dots = (
+                np.cumsum(qv64 * cen_mat, axis=1)[:, -1]
                 if d
                 else np.zeros(len(cids))
             )
-            probe_sets = {}
-            for qid, qv in q_rows:
-                qv64 = np.asarray(qv, dtype=np.float64)
-                dots = (
-                    np.cumsum(qv64 * cen_mat, axis=1)[:, -1]
-                    if d
-                    else np.zeros(len(cids))
-                )
-                qn = (
-                    np.sqrt(np.cumsum(qv64 * qv64)[-1]) if d else 0.0
-                )
-                denom = qn * cnorm
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    csim = dots / denom
-                # try_divide tiers, replicating the expression window's
-                # (csim DESC NULLS LAST, centroid_id ASC): NULL csim
-                # (zero-norm query or centroid) sorts AFTER every real
-                # value — previously 0/0 = NaN took sort key +inf and a
-                # zero-norm centroid was probed FIRST; NaN from vector
-                # components (nonzero denom) stays the largest double.
-                null = denom == 0.0
-                key = np.where(
-                    null, 0.0, np.where(np.isnan(csim), np.inf, csim)
-                )
-                order = np.lexsort((cids, -key, null))[:nprobe]
-                probe_sets[qid] = set(int(c) for c in cids[order])
-            scored = corpus_cells.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("c_vec"),
-                "centroid_id",
-            ).mapInPandas(
-                _broadcast_score_topk(q_rows, k, None, probe_sets),
-                schema=out_schema,
-            )
-    else:
-        # Expression form keeps the codebook as a DataFrame: memo rows
-        # rebuild the Arrow local relation (LocalTableScan, no cache
-        # needed); a non-memoizable fit is lazily checkpointed so the
-        # two consumers below (assign's collect_list broadcast, the
-        # probe crossJoin broadcast) execute the fit once —
-        # localCheckpoint, not .cache(), so no blocks persist across
-        # invocations (the r14 honesty rule, VERDICT r13 #4).
-        centroids = (
-            _codebook_df(corpus.sparkSession, rows)
-            if rows is not None
-            else cb.localCheckpoint(eager=False)
-        )
-        corpus_cells = assign_to_centroids(
-            corpus, centroids, id_col, vec_col, keep_all=True
-        )
-        # top-nprobe cells per query, expression form
-        cen = F.broadcast(centroids)
-        qc = q.crossJoin(cen).select(
-            "query_id",
-            "q_vec",
+            qn = np.sqrt(np.cumsum(qv64 * qv64)[-1]) if d else 0.0
+            denom = qn * cnorm
+            with np.errstate(divide="ignore", invalid="ignore"):
+                csim = dots / denom
+            # try_divide tiers, in the order (csim DESC NULLS LAST,
+            # centroid_id ASC): NULL csim (zero-norm query or centroid)
+            # sorts AFTER every real value — kept as 0/0 = NaN it would
+            # take sort key +inf and a zero-norm centroid would be
+            # probed FIRST; NaN from vector components (nonzero denom)
+            # stays the largest double.
+            null = denom == 0.0
+            key = np.where(null, 0.0, np.where(np.isnan(csim), np.inf, csim))
+            order = np.lexsort((cids, -key, null))[:nprobe]
+            probe_sets[qid] = set(int(c) for c in cids[order])
+        scored = corpus_cells.select(
+            F.col(id_col).alias("neighbor_id"),
+            F.col(vec_col).alias("c_vec"),
             "centroid_id",
-            cosine(F.col("q_vec"), F.col("centroid")).alias("csim"),
-        )
-        wq = Window.partitionBy("query_id").orderBy(
-            F.col("csim").desc(), F.col("centroid_id")
-        )
-        probes = (
-            qc.withColumn("rn", F.row_number().over(wq))
-            .filter(F.col("rn") <= nprobe)
-            .select("query_id", "q_vec", "centroid_id")
-        )
-        scored = (
-            F.broadcast(probes)
-            .join(corpus_cells, "centroid_id")
-            .select(
-                "query_id",
-                F.col(id_col).alias("neighbor_id"),
-                cosine(F.col("q_vec"), F.col(vec_col)).alias("sim"),
-            )
-            # Undefined-similarity contract — same argument as
-            # brute_force_topk: NULL and NaN sims both emit no
-            # neighbor row, matching the arrow scorer's mask.
-            .filter(F.col("sim").isNotNull() & ~F.isnan("sim"))
-        )
-        # Same exact local top-k pre-reduce as brute_force_topk: the rank
-        # window's exchange then carries O(partitions × |Q| × k) rows
-        # instead of every (query, probed-cell candidate) pair.
-        scored = scored.mapInPandas(
-            _topk_prereduce(k, scored.schema), schema=scored.schema
+        ).mapInPandas(
+            _broadcast_score_topk(q_rows, k, probe_sets),
+            schema=out_schema,
         )
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)

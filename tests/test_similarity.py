@@ -5,10 +5,96 @@ from __future__ import annotations
 import math
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from durable_functions_cosmosdb_etl_spark.operators import similarity as sim
 from durable_functions_cosmosdb_etl_spark.sources.tables import load_table
+
+
+# Expression references built from the public ``sim.cosine()`` fold. The
+# operators score in Arrow with the same sequential add order, so they
+# must match these row for row, raw sim doubles included.
+
+
+def _ref_topk(scored, k, floor=None):
+    """Per-query top-k over (query_id, neighbor_id, sim) rows whose sim
+    is a real number (not NULL, not NaN) and at least ``floor``."""
+    real = F.col("sim").isNotNull() & ~F.isnan("sim")
+    if floor is not None:
+        real = real & (F.col("sim") >= floor)
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), "neighbor_id"
+    )
+    return (
+        scored.filter(real)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def _ref_brute_force_topk(corpus, queries, k, floor=None):
+    q = queries.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    scored = q.crossJoin(corpus.filter(F.col("embedding").isNotNull())).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        sim.cosine(F.col("q_vec"), F.col("embedding")).alias("sim"),
+    )
+    return _ref_topk(scored, k, floor)
+
+
+def _ref_nearest(left, key, vec, centroids, n=1):
+    """The n nearest centroids per ``key`` row: crossJoin + window
+    ordered ``sim DESC NULLS LAST, centroid_id``."""
+    w = Window.partitionBy(key).orderBy(
+        F.col("_sim").desc_nulls_last(), "centroid_id"
+    )
+    return (
+        left.crossJoin(centroids)
+        .withColumn("_sim", sim.cosine(F.col(vec), F.col("centroid")))
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= n)
+        .drop("_sim", "_rn", "centroid")
+    )
+
+
+def _ref_assign(corpus, centroids):
+    cells = _ref_nearest(
+        corpus.filter(F.col("embedding").isNotNull()),
+        "vec_id",
+        "embedding",
+        centroids,
+    )
+    return {r["vec_id"]: r["centroid_id"] for r in cells.collect()}
+
+
+def _ref_ivf_topk(corpus, queries, k, n_centroids, nprobe):
+    cb = sim.fit_ivf_centroids(corpus, n_centroids=n_centroids)
+    cells = _ref_nearest(
+        corpus.filter(F.col("embedding").isNotNull()),
+        "vec_id",
+        "embedding",
+        cb,
+    )
+    q = queries.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_vec")
+    )
+    probes = _ref_nearest(q, "query_id", "q_vec", cb, n=nprobe)
+    scored = probes.join(cells, "centroid_id").select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        sim.cosine(F.col("q_vec"), F.col("embedding")).alias("sim"),
+    )
+    return _ref_topk(scored, k)
+
+
+def _rows(df):
+    return sorted(
+        (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
+        for r in df.collect()
+    )
 
 
 def test_cosine_expression_matches_python(spark):
@@ -32,10 +118,10 @@ def test_brute_force_topk_shape(spark, sf_dir):
 
 
 def test_brute_force_prereduce_in_plan_and_exact(spark, sf_dir):
-    """The local top-k pre-reduce must (a) appear in the physical plan
-    BEFORE the rank window's exchange — it is what caps the window input
-    at O(partitions × |Q| × k) instead of |Q| × |corpus| — and (b) not
-    change results vs the reduction-free form."""
+    """The fused score + local top-k pass must (a) appear in the
+    physical plan BEFORE the rank window's exchange — it is what caps
+    the window input at O(batches × |Q| × k) instead of |Q| × |corpus|
+    — and (b) not change results vs a reduction-free crossJoin top-k."""
     em = load_table(spark, sf_dir, "embeddings")
     corpus, queries = em.filter("vec_id >= 5"), em.filter("vec_id < 5")
     reduced = sim.brute_force_topk(corpus, queries, k=10)
@@ -50,17 +136,7 @@ def test_brute_force_prereduce_in_plan_and_exact(spark, sf_dir):
     assert "Exchange hashpartitioning" not in plan[ipd:], (
         "a hash exchange runs before the pre-reduce"
     )
-    plain = sim.brute_force_topk(corpus, queries, k=10, prereduce=False)
-    assert sorted(map(tuple, reduced.collect())) == sorted(
-        map(tuple, plain.collect())
-    )
-
-
-def test_brute_force_sim_floor_filters(spark, sf_dir):
-    em = load_table(spark, sf_dir, "embeddings")
-    corpus, queries = em.filter("vec_id >= 5"), em.filter("vec_id < 5")
-    out = sim.brute_force_topk(corpus, queries, k=10, sim_floor=0.99).collect()
-    assert all(r.sim >= 0.99 for r in out)
+    assert _rows(reduced) == _rows(_ref_brute_force_topk(corpus, queries, 10))
 
 
 def test_ivf_fit_sample_deterministic(spark, sf_dir):
@@ -279,11 +355,11 @@ def test_null_embeddings_dropped_not_crashed(spark):
 
 
 def test_assign_scorer_arrow_bit_identical_to_expr(spark, sf_dir):
-    """The Arrow scorer must agree with the interpreted expression
-    scorer row for row — including zero-norm vectors (NULL-sim tier),
-    exact ties (lowest centroid id), and a NaN-producing row. The dots
-    use the same sequential fold (cumsum, not GEMM), so this holds
-    bitwise, not just approximately."""
+    """The Arrow scorer must agree row for row with a window argmax over
+    the ``cosine()`` expression — including zero-norm vectors (NULL-sim
+    tier), exact ties (lowest centroid id), and a NaN-producing row.
+    The dots use the same sequential fold (cumsum, not GEMM), so this
+    holds bitwise, not just approximately."""
     from durable_functions_cosmosdb_etl_spark.operators.similarity import (
         assign_to_centroids,
     )
@@ -319,56 +395,28 @@ def test_assign_scorer_arrow_bit_identical_to_expr(spark, sf_dir):
     for corpus, cb in [(edge, cen), (emb, emb_cen)]:
         a = {
             r["vec_id"]: r["centroid_id"]
-            for r in assign_to_centroids(corpus, cb, scorer="arrow").collect()
+            for r in assign_to_centroids(corpus, cb).collect()
         }
-        e = {
-            r["vec_id"]: r["centroid_id"]
-            for r in assign_to_centroids(corpus, cb, scorer="expr").collect()
-        }
-        assert a == e
-    with pytest.raises(ValueError, match="unknown scorer"):
-        assign_to_centroids(edge, cen, scorer="gemm")
+        assert a == _ref_assign(corpus, cb)
 
 
 def test_topk_arrow_scorer_bit_identical_to_expr(spark, sf_dir):
     """brute_force_topk and ivf_topk with the fused Arrow scorer must
-    return exactly the expression plan's rows — ids, ranks AND raw sim
-    doubles (sequential-fold bit-identity), including the sim_floor
-    path."""
+    return exactly the ``cosine()`` expression references' rows — ids,
+    ranks AND raw sim doubles (sequential-fold bit-identity). A
+    similarity floor applied to the output keeps exactly the rows and
+    ranks of a floor applied before the top-k."""
     em = load_table(spark, sf_dir, "embeddings")
     corpus, queries = em.filter("vec_id >= 5"), em.filter("vec_id < 5")
 
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-            for r in df.collect()
-        )
-
-    assert rows(
-        sim.brute_force_topk(corpus, queries, k=10, scorer="arrow")
-    ) == rows(sim.brute_force_topk(corpus, queries, k=10, scorer="expr"))
-    assert rows(
-        sim.brute_force_topk(
-            corpus, queries, k=10, sim_floor=0.8, scorer="arrow"
-        )
-    ) == rows(
-        sim.brute_force_topk(
-            corpus, queries, k=10, sim_floor=0.8, scorer="expr"
-        )
+    topk = sim.brute_force_topk(corpus, queries, k=10)
+    assert _rows(topk) == _rows(_ref_brute_force_topk(corpus, queries, 10))
+    assert _rows(topk.filter("sim >= 0.8")) == _rows(
+        _ref_brute_force_topk(corpus, queries, 10, floor=0.8)
     )
-    assert rows(
-        sim.ivf_topk(
-            corpus, queries, k=10, n_centroids=10, nprobe=3, scorer="arrow"
-        )
-    ) == rows(
-        sim.ivf_topk(
-            corpus, queries, k=10, n_centroids=10, nprobe=3, scorer="expr"
-        )
-    )
-    with pytest.raises(ValueError, match="unknown scorer"):
-        sim.brute_force_topk(corpus, queries, scorer="gemm")
-    with pytest.raises(ValueError, match="unknown scorer"):
-        sim.ivf_topk(corpus, queries, scorer="gemm")
+    assert _rows(
+        sim.ivf_topk(corpus, queries, k=10, n_centroids=10, nprobe=3)
+    ) == _rows(_ref_ivf_topk(corpus, queries, 10, 10, 3))
     # degenerate: empty query set yields an empty, well-typed result
     assert (
         sim.brute_force_topk(
@@ -381,12 +429,11 @@ def test_topk_arrow_scorer_bit_identical_to_expr(spark, sf_dir):
 def test_topk_undefined_sim_contract(spark):
     """Undefined-similarity contract: a pair whose cosine is not a real
     number — zero-norm operand (try_divide NULL) or NaN operands —
-    emits NO neighbor row, identically in both scorers, both prereduce
-    modes, and IVF. Previously 0/0 = NaN in the arrow scorer took sort
-    key +inf, so a degenerate corpus vector ranked #1 for EVERY query
-    and passed sim_floor; and component-NaN sims flipped to NULL
-    crossing the Arrow boundary, ranking last in pandas-backed plans
-    but first in the pure-JVM one."""
+    emits NO neighbor row, in brute force and IVF alike, exactly as in
+    the expression references that filter to real sims. Without the
+    mask 0/0 = NaN takes sort key +inf, so a degenerate corpus vector
+    ranks #1 for EVERY query; and component-NaN sims flip to NULL
+    crossing the Arrow boundary."""
     corpus = spark.createDataFrame(
         [
             (10, [0.0, 0.0, 0.0]),           # zero norm → NULL sim
@@ -402,45 +449,22 @@ def test_topk_undefined_sim_contract(spark):
         "vec_id long, embedding array<float>",
     )
 
-    def rows(df):
-        return sorted(
-            (r["query_id"], r["rank"], r["neighbor_id"], r["sim"])
-            for r in df.collect()
-        )
-
-    variants = [
-        dict(scorer="arrow"),
-        dict(scorer="expr"),
-        dict(scorer="expr", prereduce=False),
-    ]
+    topk = sim.brute_force_topk(corpus, queries, k=3)
     for floor in (None, 0.5):
-        results = [
-            rows(
-                sim.brute_force_topk(
-                    corpus, queries, k=3, sim_floor=floor, **kw
-                )
-            )
-            for kw in variants
-        ]
-        assert results[0] == results[1] == results[2], f"sim_floor={floor}"
-        a = results[0]
+        a = _rows(topk if floor is None else topk.filter(f"sim >= {floor}"))
+        assert a == _rows(
+            _ref_brute_force_topk(corpus, queries, 3, floor)
+        ), f"floor={floor}"
         # neither degenerate corpus vector ever appears; the zero-norm
         # query gets no rows at all
         assert all(r[2] not in (10, 14) for r in a)
         assert all(r[0] != 1 for r in a)
         expect = [11, 12, 13] if floor is None else [11, 12]
         assert [r[2] for r in a if r[0] == 0] == expect
-    # ivf: a zero-norm CENTROID must not be probed first, and the two
-    # scorers' probe selection + rescore must agree under the contract
-    ia = rows(
-        sim.ivf_topk(corpus, queries, k=3, n_centroids=3, nprobe=2,
-                     scorer="arrow")
-    )
-    ie = rows(
-        sim.ivf_topk(corpus, queries, k=3, n_centroids=3, nprobe=2,
-                     scorer="expr")
-    )
-    assert ia == ie
+    # ivf: a zero-norm CENTROID must not be probed first, and probe
+    # selection + rescore must match the reference under the contract
+    ia = _rows(sim.ivf_topk(corpus, queries, k=3, n_centroids=3, nprobe=2))
+    assert ia == _rows(_ref_ivf_topk(corpus, queries, 3, 3, 2))
     assert all(r[2] not in (10, 14) and r[0] != 1 for r in ia)
 
 
@@ -457,7 +481,6 @@ def test_assign_to_centroids_empty_codebook_yields_zero_rows(spark):
     )
     empty = spark.createDataFrame([], "centroid_id int, centroid array<float>")
     assert assign_to_centroids(corpus, empty).count() == 0
-    assert assign_to_centroids(corpus, empty, scorer="expr").count() == 0
 
 
 def test_semantic_dedup_collapse_identical_equivalence(spark):
@@ -953,10 +976,10 @@ def test_assign_rows_fast_path_matches_collect_path(spark):
     assert assign_to_centroids(corpus, None, _rows=[]).count() == 0
 
 
-def test_assign_expr_scorer_rejects_missing_centroids(spark):
-    """``centroids=None`` is the Arrow scorer's pre-collected-rows
-    contract; the expr scorer needs the DataFrame and says so instead
-    of failing with an AttributeError."""
+def test_assign_rejects_missing_centroids(spark):
+    """``centroids=None`` is valid only with pre-collected ``_rows``;
+    with neither, the call says so instead of failing with an
+    AttributeError."""
     from durable_functions_cosmosdb_etl_spark.operators.similarity import (
         assign_to_centroids,
     )
@@ -964,7 +987,5 @@ def test_assign_expr_scorer_rejects_missing_centroids(spark):
     corpus = spark.createDataFrame(
         [(1, [1.0, 0.0])], "vec_id long, embedding array<float>"
     )
-    with pytest.raises(ValueError, match="scorer='expr'"):
-        assign_to_centroids(
-            corpus, None, scorer="expr", _rows=[(1, [1.0, 0.0])]
-        )
+    with pytest.raises(ValueError, match="pass centroids or _rows"):
+        assign_to_centroids(corpus, None)
