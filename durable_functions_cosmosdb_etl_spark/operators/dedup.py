@@ -19,9 +19,13 @@ aggregations*, never pairwise driver loops:
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
+
+from .text import words
 
 
 # MinHash parameters: 64 permutations = 16 bands × 4 rows.
@@ -123,54 +127,40 @@ def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     return df
 
 
-def _shingle_vec_udf(n: int):
-    """Arrow-vectorized shingler: text → distinct word n-grams.
-
-    Byte-exact replica of the JVM expression ``text.shingles_from_words(
-    text.words(col), n)`` (pytest-gated against it):
-    ``re.split('[ \\t\\n\\x0b\\f\\r]+')`` is Java's ASCII ``\\s+`` with
-    limit=-1 semantics (leading separator → leading "", trailing empties
-    kept, "" → [""]), ``str.strip(' ')`` is ``F.trim`` (spaces only), and
-    ``dict.fromkeys`` preserves first-occurrence order like
-    ``array_distinct``. It replaces that expression because HOF lambdas
-    evaluate interpreted per element: the expression costs 7.7s for 5k
-    docs / 260k shingles at sf0.1 vs 0.76s here (10×) — shingling was
-    the dominant cost of every shingle-based dedup query, not the joins.
-    """
-    import re
-
-    ws = re.compile(r"[ \t\n\x0b\f\r]+")
-
-    @F.pandas_udf(T.ArrayType(T.StringType()))
-    def sh(texts: pd.Series) -> pd.Series:
-        out: list[list[str]] = []
-        for t in texts:
-            if t is None:
-                out.append([])
-                continue
-            w = ws.split(t.strip(" "))
-            if len(w) < n:
-                out.append([])
-                continue
-            out.append(
-                list(
-                    dict.fromkeys(
-                        " ".join(w[i : i + n]) for i in range(len(w) - n + 1)
-                    )
-                )
-            )
-        return pd.Series(out)
-
-    return sh
-
-
 def _shingled(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
-    """doc → (doc, sh, n_sh) through the Arrow-batched shingler (10×
-    over the interpreted HOF expression — see ``_shingle_vec_udf``)."""
-    return df.select(
+    """doc → (doc, sh, n_sh): distinct word n-grams, built in the JVM.
+
+    ``text.words`` (trim spaces, split on Java's ASCII ``\\s+``), with
+    NULL text as an empty array → ``pyspark.ml.feature.NGram`` →
+    ``array_distinct``. NGram is a compiled Scala function over the word
+    array, so no stage runs a higher-order-function lambda (interpreted
+    per element, 10× slower at sf0.1) or a Python worker. Same shingles as
+    ``text.shingles_from_words(text.words(col), n)`` (test-pinned),
+    first-occurrence order kept; NULL text gives ``[]`` where that
+    expression gives ``[NULL]``.
+
+    Not an Arrow pandas UDF: every Python-worker task pays a fixed
+    ~0.2 s even in a warm session (``tools/pyworker_floor.py``), and
+    shingling itself is cheap. Shingling alone, one task, warm
+    ``local[4]`` on a 4-vCPU VM, pandas UDF → JVM: 500 docs
+    0.41 → 0.30 s, 5,000 docs 0.74 → 0.54 s, where the JVM path spends
+    0.32 s of CPU against 0.63 s of Python-task run time, so it wins at
+    both sizes.
+    """
+    from pyspark.ml.feature import NGram
+
+    w = df.select(
         F.col(id_col).alias("doc"),
-        _shingle_vec_udf(n)(F.col(text_col)).alias("sh"),
-    ).withColumn("n_sh", F.size("sh"))
+        F.coalesce(
+            words(F.col(text_col)), F.array().cast("array<string>")
+        ).alias("__w"),
+    )
+    return (
+        NGram(n=n, inputCol="__w", outputCol="__g")
+        .transform(w)
+        .select("doc", F.array_distinct("__g").alias("sh"))
+        .withColumn("n_sh", F.size("sh"))
+    )
 
 
 # "auto" collapse engages at or above this exact-copy fraction.
@@ -335,8 +325,8 @@ def _text_collapsed(
     """Level-0 collapse: byte-identical TEXTS to their min-id doc.
 
     One shuffle keyed on the raw text value, run BEFORE any shingling —
-    so the (dominant) vectorized shingle UDF and the set-keyed window
-    downstream touch only DISTINCT content, not every copy. On the 64×
+    so the (dominant) shingler and the set-keyed window downstream
+    touch only DISTINCT content, not every copy. On the 64×
     replication probe that is 5k rows through the expensive stages
     instead of 320k. Returns ``(memb0 (doc, rep0), reps0 (doc, __text))``
     with ``memb0`` cached (read again for the final membership join).
@@ -746,7 +736,7 @@ def minhash_lsh_pairs(
         sigs = hashed.withColumn("sig", _minhash_sig_udf()(F.col("hs")))
         return _minhash_pairs_core(sigs, n_bands, n_rows, threshold)
     # Two-level collapse (see _collapsed_rep_index): identical texts
-    # fold BEFORE the shingle/signature UDFs, identical shingle sets
+    # fold BEFORE the shingler and signature UDF, identical shingle sets
     # fold before banding; membership composes back to original docs.
     memb0, reps0 = _text_collapsed(df, id_col, text_col)
     hashed = _shingle_hashes(reps0, "doc", "__text", n)
@@ -755,7 +745,7 @@ def minhash_lsh_pairs(
         .withColumn("rep", F.min("doc").over(Window.partitionBy(F.array_sort("sh"))))
         # lazy localCheckpoint, not .cache() — r14 honesty rule
         # (VERDICT r13 #4): memb/reps share one per-invocation
-        # materialization; warm bench runs recompute the shingle UDF.
+        # materialization; warm bench runs recompute the shingles.
         .localCheckpoint(eager=False)
     )
     memb = (
@@ -907,19 +897,24 @@ def connected_components(
 
     ``local_threshold``: adaptive small-graph fast path. When the node
     set derives from the edges (``nodes=None``), the edge projection is
-    lazily checkpointed and counted once (one materialization per
-    invocation; since r14 no blocks are shared across invocations — see
-    the in-body comment) — if the count
-    is ≤ the threshold (default 200k edges ≈ 3 MB of
-    longs), iterative Spark rounds are pure scheduler overhead
-    (measured ~3 s for a few hundred edges at sf0.1: 4-6 stages ×
-    rounds for a graph union-find solves in microseconds). The fast
-    path collects the BOUNDED edge list, runs union-find with min-root
-    labels on the driver, and parallelizes the labels back — the same
-    adaptive-threshold discipline as broadcast joins, with the
-    distributed rounds untouched above the threshold (and for callers
-    that pass ``nodes`` or ``local_threshold=0``). Output identical by
-    construction; equivalence pytest-gated.
+    lazily checkpointed and probed with ONE bounded action,
+    ``limit(local_threshold + 1).collect()``, whose result both decides
+    the path and carries the edges. Spark runs the take incrementally
+    (one partition, then up to 4× more per job, each partition scanned
+    once), so a single-partition edge list costs one job and p
+    partitions up to ~⌈log₄ p⌉ + 1. At or under the threshold (default
+    200k edges ≈ 3 MB of longs) iterative Spark rounds are pure
+    scheduler overhead (measured ~3 s for a few hundred edges at sf0.1:
+    4-6 stages × rounds for a graph union-find solves in microseconds),
+    so the driver runs union-find with min-root labels and returns them
+    as a ``pyarrow.Table`` — an Arrow local relation (``LocalTableScan``,
+    pure JVM), not a list-backed ``createDataFrame``, whose pickled-row
+    scan runs a Python-worker stage on every execution (624 ms against
+    2 ms of executor time at sf0.1). Above the threshold, and for
+    callers that pass ``nodes`` or ``local_threshold=0``, the
+    distributed rounds run unchanged. The same adaptive-threshold
+    discipline as broadcast joins; output identical by construction,
+    equivalence pytest-gated.
 
     Returns (node_col, component) — component = min node id reachable.
     """
@@ -944,18 +939,18 @@ def connected_components(
         # registered query (bench warm runs) skip the expensive
         # candidate-join generator entirely — the round-3 behavior this
         # round retires as dishonest measurement. The checkpoint keeps
-        # the INTRA-invocation sharing that is load-bearing (count()
-        # materializes once; the fast-path collect and the distributed
-        # rounds both read the same blocks, never the generator plan
-        # twice) while each new invocation recomputes its own edges.
-        # Blocks are freed when the invocation's RDD is GC'd (the
-        # ContextCleaner), which replaces the explicit big-graph
-        # unpersist the cache needed.
+        # the INTRA-invocation sharing that is load-bearing (the probe
+        # materializes once; a big graph's distributed rounds read the
+        # same blocks, never the generator plan twice) while each new
+        # invocation recomputes its own edges. Blocks are freed when the
+        # invocation's RDD is GC'd (the ContextCleaner), which replaces
+        # the explicit big-graph unpersist the cache needed.
         e0 = pairs.select(
             F.col(a_col).cast(common_t).alias("u"),
             F.col(b_col).cast(common_t).alias("v"),
         ).localCheckpoint(eager=False)
-        if e0.count() <= local_threshold:
+        edges = e0.limit(local_threshold + 1).collect()
+        if len(edges) <= local_threshold:
             if stats is not None:
                 stats["rounds"] = 0
                 stats["local"] = True
@@ -969,8 +964,7 @@ def connected_components(
                     parent[x], x = r, parent[x]
                 return r
 
-            for r in e0.collect():
-                u, v = r["u"], r["v"]
+            for u, v in edges:
                 if u == v:
                     continue  # self-loops carry no membership, as in the
                     # distributed canonicalization
@@ -982,15 +976,17 @@ def connected_components(
                     if rv < ru:
                         ru, rv = rv, ru
                     parent[rv] = ru
-            out = [(x, find(x)) for x in parent]
-            spark = pairs.sparkSession
-            schema = T.StructType(
-                [
-                    T.StructField(node_col, e0.schema["u"].dataType),
-                    T.StructField("component", e0.schema["u"].dataType),
-                ]
+            at = to_arrow_type(e0.schema["u"].dataType)
+            return pairs.sparkSession.createDataFrame(
+                pa.table(
+                    {
+                        node_col: pa.array(list(parent), type=at),
+                        "component": pa.array(
+                            [find(x) for x in parent], type=at
+                        ),
+                    }
+                )
             )
-            return spark.createDataFrame(out, schema)
         # big graph: hand the checkpointed edges to the distributed
         # rounds (their canonicalize/symmetrize localCheckpoint reads
         # the materialized blocks, not the upstream generator). The

@@ -929,7 +929,7 @@ def contamination_check(d: DataFrame, collapse_identical="auto") -> DataFrame:
     if dd._should_collapse(d, "text", collapse_identical):
         # Two-level collapse, applied PER SIDE (a text present in both
         # splits must keep both roles): byte-identical texts fold to
-        # their min-id doc BEFORE the shingle UDF — the 1024×
+        # their min-id doc BEFORE the shingler — the 1024×
         # replication probe OOMed an 8 GB heap shingling all 5.12M
         # copies and windowing their (wide) shingle arrays; after the
         # fold both stages see only distinct content — then identical

@@ -229,10 +229,12 @@ def test_incremental_dedup_partition_pruning_and_replay(spark, tmp_path):
     assert shingles.count() == 2
 
 
-def test_vectorized_shingler_matches_jvm_expression(spark, sf_dir):
-    """The Arrow shingler must be byte-exact vs the HOF expression
-    ``shingles_from_words(words(text))``, including whitespace edge
-    cases Java's \\s+ split produces."""
+def test_shingler_matches_hof_expression(spark, sf_dir):
+    """The NGram shingler must be byte-exact vs the HOF expression
+    ``shingles_from_words(words(text))`` for n in {1, 3, 5}, including
+    the whitespace edge cases Java's ASCII \\s+ split produces: U+00A0
+    and U+3000 are not whitespace to it, so they never split. NULL text
+    gives no shingles (the HOF form would give [NULL])."""
     docs = load_table(spark, sf_dir, "documents").limit(200)
     edge = spark.createDataFrame(
         [
@@ -244,19 +246,42 @@ def test_vectorized_shingler_matches_jvm_expression(spark, sf_dir):
             (9006, "only two"),
             (9007, ""),
             (9008, "a a a a a"),
+            (9009, "\tx y z\n"),
+            (9010, "no\u00a0break space here now"),
+            (9011, "ideographic\u3000space here and there"),
         ],
         "doc_id long, text string",
     )
-    for df in (docs.select("doc_id", "text"), edge):
-        fast = dd._shingled(df, "doc_id", "text", 3)
-        # word array materialized first: the HOF lambda must read an
-        # attribute, not an inline split() (see shingles_from_words)
-        slow = df.select("doc_id", tx.words(F.col("text")).alias("w")).select(
-            "doc_id", tx.shingles_from_words(F.col("w"), 3).alias("sh")
-        )
-        got = {r.doc: r.sh for r in fast.collect()}
-        want = {r.doc_id: r.sh for r in slow.collect()}
-        assert got == want
+    null_row = spark.createDataFrame([(9100, None)], "doc_id long, text string")
+    for n in (1, 3, 5):
+        for df in (docs.select("doc_id", "text"), edge):
+            fast = dd._shingled(df, "doc_id", "text", n)
+            # word array materialized first: the HOF lambda must read an
+            # attribute, not an inline split() (see shingles_from_words)
+            slow = df.select(
+                "doc_id", tx.words(F.col("text")).alias("w")
+            ).select("doc_id", tx.shingles_from_words(F.col("w"), n).alias("sh"))
+            got = {r.doc: r.sh for r in fast.collect()}
+            want = {r.doc_id: r.sh for r in slow.collect()}
+            assert got == want, f"n={n}"
+        assert [
+            (r.doc, r.sh, r.n_sh)
+            for r in dd._shingled(null_row, "doc_id", "text", n).collect()
+        ] == [(9100, [], 0)]
+    nbsp = {r.doc: r.sh for r in dd._shingled(edge, "doc_id", "text", 1).collect()}
+    assert "no\u00a0break" in nbsp[9010]
+    assert "ideographic\u3000space" in nbsp[9011]
+
+
+def test_shingler_plan_has_no_python_stage(spark, sf_dir):
+    """Shingling runs in the JVM: no Python-worker node in the executed
+    plan (each such task pays a fixed ~0.2 s even on warm workers)."""
+    docs = load_table(spark, sf_dir, "documents")
+    out = dd._shingled(docs, "doc_id", "text", 3)
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, plan
 
 
 def test_substring_pairs_position_independent(spark):
@@ -539,6 +564,75 @@ def test_cc_local_fast_path_matches_distributed(spark):
     assert got == want
     # self-loop-only node 7 is dropped by canonicalization in BOTH paths
     assert 7 not in {d for d, _ in got}
+
+
+def _labels(df):
+    return {(r.doc, r.component) for r in df.collect()}
+
+
+def test_cc_local_fast_path_plans_as_local_table_scan(spark):
+    """The fast path returns its labels as an Arrow local relation
+    (pure JVM), not a list-backed RDD scan that runs a Python-worker
+    stage on every execution."""
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "doc_a long, doc_b long")
+    st = {}
+    out = dd.connected_components(pairs, stats=st)
+    assert st.get("local") is True
+    assert _labels(out) == {(1, 1), (2, 1), (3, 1), (5, 5), (6, 5)}
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+
+
+def test_cc_local_threshold_boundary(spark):
+    """local_threshold counts raw edges (duplicates and self-loops
+    included): exactly n_edges takes the local path, n_edges - 1 the
+    distributed rounds, with identical labels."""
+    edges = [(1, 2), (2, 3), (3, 1), (2, 1), (8, 9), (9, 9), (4, 8)]
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
+    st_local, st_dist = {}, {}
+    local = dd.connected_components(
+        pairs, stats=st_local, local_threshold=len(edges)
+    )
+    assert st_local.get("local") is True
+    dist = dd.connected_components(
+        pairs, stats=st_dist, local_threshold=len(edges) - 1
+    )
+    assert "local" not in st_dist and st_dist["rounds"] >= 1
+    assert _labels(local) == _labels(dist)
+    assert _labels(local) == {(1, 1), (2, 1), (3, 1), (4, 4), (8, 4), (9, 4)}
+
+
+def test_cc_local_empty_edges_keep_schema(spark):
+    """No edges → zero rows, still typed (node_col, component) after
+    the edge type."""
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    out = dd.connected_components(pairs, node_col="rep")
+    assert out.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema.fields] == [
+        ("rep", "bigint"),
+        ("component", "bigint"),
+    ]
+
+
+def test_cc_local_mixed_int_long_and_string_ids(spark):
+    """Mixed int/long endpoints give one long label column (no
+    truncation of long ids); string node ids label by their minimum."""
+    big = 1 << 40
+    mixed = spark.createDataFrame([(1, big), (2, big + 1)], "doc_a int, doc_b long")
+    out = dd.connected_components(mixed)
+    assert [f.dataType.simpleString() for f in out.schema.fields] == [
+        "bigint",
+        "bigint",
+    ]
+    assert _labels(out) == {(1, 1), (big, 1), (2, 2), (big + 1, 2)}
+    words = spark.createDataFrame(
+        [("b", "c"), ("c", "a"), ("y", "x"), ("z", "z")], "doc_a string, doc_b string"
+    )
+    st = {}
+    got = _labels(dd.connected_components(words, stats=st))
+    assert st.get("local") is True
+    assert got == {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x")}
+    assert got == _labels(dd.connected_components(words, local_threshold=0))
 
 
 def test_should_collapse_probe_decision(spark):
