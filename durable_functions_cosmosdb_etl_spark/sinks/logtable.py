@@ -535,57 +535,38 @@ class LogTable:
         # discipline as the mutating ops.
         self.last_feed_info: dict | None = None
         self._capture_bail_reason: str | None = None
-        # feed_interval_stats memo, keyed (from, to, cutoff) — sound
-        # because committed versions are immutable (the log is
-        # append-only) AND this handle's vacuum() clears it: the
-        # estimate consults capture-unit existence on disk (the
-        # vacuum-holed pricing), so reclaiming units can change what
-        # an interval costs to serve. A vacuum run by ANOTHER process
-        # can therefore stale an entry for an interval this handle
-        # already priced — accepted: the serve itself re-checks
-        # existence at read time, drains re-key every loop head as
-        # (cursor, latest) moves, so the worst case is one mis-gated
-        # drain over one already-priced interval, the same external-
-        # maintenance exposure as vacuum's single-writer contract.
-        # Bounded FIFO so a long-lived handle can't grow it.
-        self._feed_stats_memo: dict[
-            tuple[int, int, float | None], dict
-        ] = {}
         # Per-version live-unit maps (code-review r11, third pass): a
         # diff-tier serve replays lo/hi for its own read AFTER its
         # telemetry estimate already replayed them, and the gated
         # drain's truncation mirror replays them again — a committed
         # version's live map is IMMUTABLE (the log is append-only and
         # never vacuumed; data-file deletion doesn't change the map),
-        # so one replay per version per handle suffices. Values are
-        # returned as shallow copies of the outer map; the shared inner
-        # unit dicts are read-only MappingProxyType views (round 12 —
-        # callers tag only freshly-written commit lists, never a
+        # so one replay per version per handle suffices. Measured with
+        # the memo off (tools/feed_depth_probe.py loop_head_sec, full
+        # churn, 32 buckets, checkpoint every 500, 4 vCPUs): a drain
+        # loop head over the last 1 or 50 commits costs 0.16-0.21 s
+        # more at 1k-10k commits (0.07-0.13 s → 0.28-0.30 s). Values
+        # are returned as shallow copies of the outer map; the shared
+        # inner unit dicts are read-only MappingProxyType views (round
+        # 12 — callers tag only freshly-written commit lists, never a
         # replayed map, and the proxy makes a violation raise instead
         # of corrupting the memo). as_of=None resolves to the version
         # observed at entry and the replay is PINNED there, so "latest"
         # reads are memoizable too without a racing commit leaking into
-        # the keyed map. Bounded FIFO like the stats memo.
+        # the keyed map. Bounded FIFO so a long-lived handle can't grow
+        # it.
         self._live_units_memo: dict[int, dict[str, dict]] = {}
         # Log-dir listing memo (round 12, VERDICT r11 #5): every
         # _log_entries/version()/_latest_checkpoint call os.listdir's
         # the whole log dir — parsing is checkpoint-bounded, but the
         # LISTING is O(total history files) and a drain loop head pays
         # it 3+ times back-to-back (measured 69-102 ms/call at 100k
-        # commits — tools/feed_depth_probe.py --light). Keyed on the
-        # dir's mtime_ns with a quiescence margin; see _list_log for
-        # why a hit is provably current, not best-effort.
-        self._log_listing_memo: tuple[int, _LogListing] | None = None
+        # commits — tools/feed_depth_probe.py --light). Checked against
+        # the log's next file names; see _list_log for why a hit is
+        # current.
+        self._log_listing_memo: _LogListing | None = None
         os.makedirs(os.path.join(path, _LOG_DIR), exist_ok=True)
         os.makedirs(os.path.join(path, _DATA_DIR), exist_ok=True)
-        # Listing-memo precondition (round 13, VERDICT r12 #4 / ADVICE
-        # r12): the memo's quiescence argument is only sound when the
-        # filesystem STORES mtimes at finer granularity than the 50 ms
-        # margin. Probe it once per handle (3 syscalls, sleep-free) and
-        # run memo-less — one extra listdir per call, never a stale
-        # serve — when the mount is coarse. See
-        # _probe_mtime_granularity.
-        self._listing_memo_enabled = self._probe_mtime_granularity()
         self._check_meta()
 
     # --------------------------------------------------------------- meta
@@ -633,90 +614,10 @@ class LogTable:
 
     # ---------------------------------------------------------------- log
 
-    # Quiescence margin for the listing memo: must exceed the coarse
-    # filesystem timestamp granularity (1-10 ms on Linux) so "mtime is
-    # MARGIN old" proves no write can still land in the same tick.
-    # That precondition is PROBED at open, not assumed — see
-    # _probe_mtime_granularity (VERDICT r12 #4).
-    _LISTING_QUIESCENT_NS = 50_000_000  # 50 ms
-
-    # Crafted sub-second component for the granularity probe: one value
-    # whose round-trip error discriminates every plausible stored
-    # granularity (ns -> 0, us -> 789, ms -> 456_789 truncated,
-    # 10 ms -> 3_456_789, 100 ms -> 23_456_789, 1 s -> 123_456_789).
-    _MTIME_PROBE_NS = 123_456_789
-
-    @classmethod
-    def _granularity_ok(cls, err_ns: int) -> bool:
-        """Decision rule for the probe: the observed utime round-trip
-        error must sit comfortably inside the quiescence margin. A
-        store at granularity g truncates by up to g (rounds by up to
-        g/2), so requiring 4*err < margin admits the documented
-        1-10 ms local-fs granularities and rejects 100 ms and coarser
-        — including exactly-50 ms stores, where "mtime is margin old"
-        no longer proves the tick is over."""
-        return 4 * err_ns < cls._LISTING_QUIESCENT_NS
-
-    def _probe_mtime_granularity(self) -> bool:
-        """One-shot open-time probe: can the log dir's filesystem store
-        mtimes finely enough for the listing memo (ADVICE r12)?
-
-        The memo's "provably current" rule (_list_log) assumes stored
-        mtime granularity < the 50 ms quiescence margin; on a coarse
-        mount (1 s: FAT, HFS+, some NFS servers) a write can land in
-        the same stored tick as a memoized listing and be masked,
-        serving a stale version()/replay. Deterministic, sleep-free
-        check: os.utime a probe file to a crafted nanosecond value and
-        stat it back — the filesystem echoes what it can store, so the
-        round-trip error IS the granularity. On failure (or an OSError
-        from an exotic mount) the memo is disabled with a logged note:
-        every _list_log call then pays one listdir, never serving
-        stale. The write-side atomic claim is unaffected either way.
-        """
-        probe = os.path.join(
-            self.path,
-            _LOG_DIR,
-            f".mtime_probe.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp",
-        )
-        try:
-            with open(probe, "w"):
-                pass
-            t = (
-                time.time_ns() // 1_000_000_000
-            ) * 1_000_000_000 + self._MTIME_PROBE_NS
-            os.utime(probe, ns=(t, t))
-            err_ns = abs(os.stat(probe).st_mtime_ns - t)
-        except OSError as e:
-            _LOG.warning(
-                "logtable %s: mtime granularity probe failed (%s); "
-                "disabling the log-listing memo (correctness over "
-                "loop-head speed)",
-                self.path,
-                e,
-            )
-            return False
-        finally:
-            try:
-                os.unlink(probe)
-            except OSError:
-                pass
-        if not self._granularity_ok(err_ns):
-            _LOG.warning(
-                "logtable %s: filesystem stores mtimes at ~%d ns "
-                "granularity, too coarse for the %d ns listing-memo "
-                "quiescence margin; disabling the memo (every listing "
-                "call pays one listdir instead)",
-                self.path,
-                err_ns,
-                self._LISTING_QUIESCENT_NS,
-            )
-            return False
-        return True
-
     def _list_log(self) -> "_LogListing":
         """The log-dir listing, PARSED (commit/checkpoint versions in
-        numeric order + the latest version) and memoized per directory
-        mtime.
+        numeric order + the latest version) and memoized until the
+        log's next commit or a checkpoint at its latest version lands.
 
         Two costs used to be paid per call, O(total history files)
         each, by every version()/_latest_checkpoint/_log_entries call
@@ -724,50 +625,42 @@ class LogTable:
         the raw listdir, and the name filter/int-parse pass over it —
         measured 69-102 ms per call at 100k commits, 3+ calls per drain
         loop head (SCALE.md §2b), i.e. the LISTING dominated deep logs.
-        Both are now paid once per directory CHANGE, not per call: the
-        parsed listing is memoized, the three listers bisect into it,
-        and a loop head's calls collapse to one stat apiece on the hit
-        path.
+        Both are now paid once per log CHANGE, not per call: the parsed
+        listing is memoized, the three listers bisect into it, and a
+        loop head's calls collapse to two stats apiece on the hit path.
 
-        The memo hit is provably current, not best-effort: a listing is
-        memoized ONLY when the dir had been quiescent for at least
-        `_LISTING_QUIESCENT_NS` at capture (mtime strictly older than
-        the capture clock by more than the filesystem's coarse
-        timestamp granularity, re-stat-verified after the listdir), and
-        served ONLY on an exact mtime_ns match. Any later write — ours
-        or a concurrent writer's — lands a strictly NEWER mtime tick
-        (the tick containing the memoized mtime is over by
-        construction) and misses the memo. A dir modified within the
-        margin is simply not memoized: the cost is one extra listdir,
-        never a stale serve. Both clocks are the same kernel clock, so
-        there is no cross-clock skew to account for on the local
-        filesystems the POSIX protocol targets. The atomic commit claim
-        stays the write-side arbiter either way — a writer acting on a
-        stale version() loses the claim, exactly as it would having
-        listed a moment earlier.
+        The memo is checked against the log's own names, not a clock.
+        It is served only while ``{latest + 1}.json`` does not exist
+        and ``_checkpoint.{latest}.json`` exists exactly when the memo's
+        newest checkpoint is ``latest``. That is exact for every writer
+        of this format: _commit publishes only base + 1 through the
+        protocol's atomic claim (versions are contiguous and a name that
+        exists is a complete entry), and checkpoint_log writes only
+        ``_checkpoint.{version()}``. The one write not seen at once is a
+        checkpoint for an OLDER version landing after the listing (a
+        racing checkpoint_log whose version() went stale); the next
+        commit picks it up, and results cannot differ meanwhile because
+        checkpoints only shorten the replay. A hand-placed unpadded
+        numeric name is parsed on every relist but does not itself
+        invalidate the memo. The atomic commit claim stays the
+        write-side arbiter either way — a writer acting on a stale
+        version() loses the claim.
 
-        Foreign non-numeric names degrade to "ignored" in one place
-        now, so the three listers can never disagree on what a commit
-        file IS (ADVICE r11).
-
-        Preconditions are probed, not assumed (round 13): stored mtime
-        granularity finer than the margin is verified at open
-        (_probe_mtime_granularity) and the memo is DISABLED on coarse
-        mounts. The remaining environmental assumption is a
-        non-retreating wall clock during the margin window (a backward
-        NTP step > the margin between capture and a subsequent write
-        could mask that write in an already-elapsed tick); stepping
-        clocks are outside the POSIX protocol's stated single-host
-        scope — slewed (chronyd/ntpd default) adjustments are fine —
-        and a deployment that cannot rule steps out should open tables
-        with the memo disabled (monkeypatch seam:
-        _listing_memo_enabled).
+        Foreign non-numeric names degrade to "ignored" in one place, so
+        the three listers can never disagree on what a commit file IS
+        (ADVICE r11).
         """
         log_dir = os.path.join(self.path, _LOG_DIR)
-        m0 = os.stat(log_dir).st_mtime_ns
         memo = self._log_listing_memo
-        if memo is not None and memo[0] == m0:
-            return memo[1]
+        if memo is not None:
+            latest = memo.latest
+            cp_at_latest = memo.cp_versions[-1:] == [latest]
+            if not os.path.exists(
+                os.path.join(log_dir, f"{latest + 1:020d}.json")
+            ) and cp_at_latest == os.path.exists(
+                os.path.join(log_dir, f"_checkpoint.{latest:020d}.json")
+            ):
+                return memo
         names = os.listdir(log_dir)
         commits = []
         cps = []
@@ -799,17 +692,7 @@ class LogTable:
             cp_names=[n for _v, n in cps],
             latest=commits[-1][0] if commits else -1,
         )
-        # re-stat AFTER the listing: a write racing the listdir bumps
-        # the mtime we'd key on, so requiring stat-before == stat-after
-        # AND quiescence makes the memoized (mtime, listing) pair exact
-        if (
-            self._listing_memo_enabled
-            and os.stat(log_dir).st_mtime_ns == m0
-            and time.time_ns() - m0 > self._LISTING_QUIESCENT_NS
-        ):
-            self._log_listing_memo = (m0, listing)
-        else:
-            self._log_listing_memo = None
+        self._log_listing_memo = listing
         return listing
 
     def _log_entries(
@@ -1909,8 +1792,7 @@ class LogTable:
           uncaptured, or a capture unit was vacuumed — the estimator
           mirrors ``_changes_from_capture``'s existence bails, so a
           capture-complete-LOOKING interval with a hole prices as the
-          diff it will actually pay; ``vacuum()`` clears the memo so a
-          pre-hole estimate can't linger) and contains a compact is
+          diff it will actually pay) and contains a compact is
           forced to a FULL table diff — compact rewrites every live
           unit, so every bucket is "touched" — and is priced as such
           here: all live buckets enter the diff-cost term below and
@@ -1966,13 +1848,17 @@ class LogTable:
         checkpoint-bounded (``checkpoint_log``, which the drain's
         maintenance cadence writes).
 
-        Committed versions are immutable, so results are memoized per
-        ``(from, to, cutoff)`` — a gated drain loop re-pricing the same
-        backlog every loop head pays the log replay once — and a
-        cutoff walk that ran to completion stores under the uncut key
-        too (it IS the unbounded estimate), so the gate's estimate and
-        the serve's own telemetry share one walk per interval.
-        ``vacuum()`` clears the memo (see the capture-hole bullet).
+        Results are not memoized: the live-set replays are (per
+        version, in ``_live_units``), the interval walk is not. So when
+        a cutoff walk runs to completion, ``changes()``'s own uncut
+        telemetry call walks the same interval again. That happens only
+        while the interval stays below θ × live rows — past it the
+        cutoff walk truncates. Measured on a fresh handle over a
+        1k-commit unsaturated interval (32 buckets, one key updated per
+        commit, 4 vCPUs): the cutoff + uncut pair costs 0.094 s, ~20 ms
+        over a single walk's 0.074 s (medians of 8); the same log at
+        10k commits saturates, the cutoff walk truncates, and the pair
+        costs what one uncut walk does (~0.5 s).
         """
         latest = self.version()
         to_version = latest if to_version is None else to_version
@@ -1989,10 +1875,6 @@ class LogTable:
             )
         if saturation_cutoff is not None and saturation_cutoff <= 0:
             raise ValueError("saturation_cutoff must be > 0")
-        memo_key = (from_version, to_version, saturation_cutoff)
-        cached = self._feed_stats_memo.get(memo_key)
-        if cached is not None:
-            return dict(cached)
         live = self._live_units(as_of=to_version)
         live_rows = sum(u.get("rows") or 0 for u in live.values())
         hi_units, hi_rows = _bucket_rollup(live)
@@ -2096,8 +1978,7 @@ class LogTable:
                     # capture-complete-LOOKING interval with a hole
                     # must not price as capture-served (code-review
                     # r11 closed this vacuum-holed variant of the
-                    # compact blind spot; vacuum() clears the memo
-                    # so a cached pre-hole estimate can't linger).
+                    # compact blind spot).
                     capture_complete = False
                 interval_units += 1
                 rows = ch.get("rows")
@@ -2184,7 +2065,7 @@ class LogTable:
             for b in diff_buckets:
                 interval_units += lo_units.get(b, 0) + hi_units.get(b, 0)
                 interval_rows += lo_rows.get(b, 0) + hi_rows.get(b, 0)
-        result = {
+        return {
             "interval_units": interval_units,
             "interval_rows": interval_rows,
             "live_units": len(live),
@@ -2193,29 +2074,6 @@ class LogTable:
             "forced_full_diff": forced_full_diff,
             "estimate_truncated": estimate_truncated,
         }
-        store_keys = [memo_key]
-        if saturation_cutoff is not None and not estimate_truncated:
-            # The walk ran to completion, so this IS the unbounded
-            # estimate — share it under the uncut key too. Without
-            # this, a gated drain's unsaturated loop head (cutoff call)
-            # and the serve's own telemetry (uncut call) each pay the
-            # full log walk for the same immutable interval
-            # (code-review r11). Never the reverse: a truncated result
-            # is a lower bound, not the exact estimate.
-            store_keys.append((from_version, to_version, None))
-        for k in store_keys:
-            if (
-                k not in self._feed_stats_memo
-                and len(self._feed_stats_memo) >= 128
-            ):
-                # FIFO-evict only when the write actually grows the
-                # dict — overwriting a present key must not shrink the
-                # cache (code-review r11, third pass)
-                self._feed_stats_memo.pop(
-                    next(iter(self._feed_stats_memo))
-                )
-            self._feed_stats_memo[k] = dict(result)
-        return result
 
     def feed_truncation_missing(
         self, from_version: int, to_version: int
@@ -2880,10 +2738,4 @@ class LogTable:
             except OSError:
                 continue
             deleted.append(f"{_LOG_DIR}/{n}")
-        if deleted:
-            # Reclaimed units can change what an interval costs to
-            # serve (a vacuumed capture unit degrades capture-complete
-            # pricing to the diff tier), so memoized estimates are no
-            # longer trustworthy on this handle.
-            self._feed_stats_memo.clear()
         return deleted

@@ -501,7 +501,7 @@ def _drain(
                 # ADVICE r10: a no-op final iteration must not leave a
                 # PREVIOUS batch's telemetry posing as this interval's
                 # in the audit row — stamp the empty serve explicitly.
-                # The cost fields come from the (memoized) estimator,
+                # The cost fields come from the log-only estimator,
                 # not hardcoded zeros: an interval that churned K rows
                 # and then emptied the table also lands here, and the
                 # audit row must not claim it was change-free

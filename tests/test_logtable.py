@@ -401,78 +401,83 @@ def test_log_dir_ignores_foreign_files(spark, tmp_path):
     assert _rows(t.snapshot()) == [(1, "a"), (2, "b"), (3, "c")]
 
 
-def test_log_listing_memo_never_stale(spark, tmp_path):
-    """The parsed log-dir listing is memoized per directory mtime
-    (round 12 — at 100k commits the LISTING, not the replay, dominated
-    every drain-loop-head read). The memo must never hide a write: any
-    commit — through this handle or a second one — must be visible to
-    version()/history() immediately afterwards, and hits require the
-    quiescence margin so a same-tick write can't be masked."""
-    import time as _time
-
+def test_log_listing_memo_never_stale(spark, tmp_path, monkeypatch):
+    """The parsed log-dir listing is memoized until the log's next file
+    name appears (at 100k commits the LISTING, not the replay, dominated
+    every drain-loop-head read). The memo must never hide a commit or a
+    checkpoint at the latest version, must hit right after a write with
+    no waiting, and must ignore foreign files."""
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=4)
     t.create(_mk(spark, [(1, "a")]))             # v0
-    # let the dir go quiescent past the margin, then prime the memo
-    _time.sleep(0.06)
     assert t.version() == 0
-    assert t._log_listing_memo is not None
-    # a SECOND handle (its own memo) commits — the first handle's
-    # memo is keyed on dir mtime and must miss, not serve v0
+    # a SECOND handle (its own memo) commits: the first handle sees
+    # {latest + 1}.json and relists at once
     t2 = LogTable(spark, str(t.path), key="id", n_buckets=4)
     t2.upsert(_mk(spark, [(2, "b")]))            # v1
     assert t.version() == 1
     assert [e["version"] for e in t.history()] == [0, 1]
-    # a dir modified within the margin is not memoized at all
-    t2.upsert(_mk(spark, [(3, "c")]))            # v2
-    t._log_listing_memo = None
-    assert t.version() == 2  # listed < margin after the write
-    assert t._log_listing_memo is None or (
-        # only memoized if the write aged past the margin by the time
-        # version() re-stated the dir (timing-dependent, both valid)
-        t._log_listing_memo[1].latest == 2
-    )
+    # a checkpoint at latest written by the second handle is selected
+    assert t._latest_checkpoint() is None
+    assert t2.checkpoint_log() == 1
+    assert t._latest_checkpoint()["version"] == 1
 
+    # nothing landed: repeat reads are served without a listdir, right
+    # after the write, foreign files included
+    log_dir = os.path.join(str(t.path), "_log")
+    for foreign in ("zz.json", "_checkpoint.bak.json", "x.json.1.tmp"):
+        with open(os.path.join(log_dir, foreign), "w") as f:
+            f.write("{}")
+    listdirs = []
+    real_listdir = os.listdir
 
-def test_listing_memo_granularity_probe(spark, tmp_path):
-    """The listing memo's precondition — stored mtime granularity finer
-    than the quiescence margin — is PROBED at open, not assumed
-    (VERDICT r12 #4 / ADVICE r12). On this sandbox's local fs the probe
-    must enable the memo; the decision rule must reject coarse stores;
-    and a disabled memo must bypass memoization entirely while staying
-    correct."""
-    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=4)
-    # local ext4/tmpfs store nanoseconds: probe enables the memo
-    assert t._listing_memo_enabled is True
-    assert t._probe_mtime_granularity() is True
+    def counting_listdir(path):
+        listdirs.append(path)
+        return real_listdir(path)
 
-    # decision rule against each plausible stored granularity's
-    # round-trip error for the crafted probe value (truncation):
-    # ns/us/ms/10ms pass (all < 50 ms margin with 4x headroom);
-    # 50ms/100ms/1s must disable
-    err = LogTable._MTIME_PROBE_NS
-    assert LogTable._granularity_ok(0)                       # ns
-    assert LogTable._granularity_ok(err % 1_000)             # us
-    assert LogTable._granularity_ok(err % 1_000_000)         # ms
-    assert LogTable._granularity_ok(err % 10_000_000)        # 10 ms
-    assert not LogTable._granularity_ok(err % 50_000_000)    # 50 ms
-    assert not LogTable._granularity_ok(err % 100_000_000)   # 100 ms
-    assert not LogTable._granularity_ok(err)                 # 1 s
-
-    # disabled memo (what a coarse mount gets): never memoizes, reads
-    # stay correct — one listdir per call instead of a stale risk
-    import time as _time
-
-    t._listing_memo_enabled = False
-    t._log_listing_memo = None
-    t.create(_mk(spark, [(1, "a")]))             # v0
-    _time.sleep(0.06)                            # past the margin
-    assert t.version() == 0
-    assert t._log_listing_memo is None           # bypassed, not primed
-    t.upsert(_mk(spark, [(2, "b")]))             # v1
+    monkeypatch.setattr(os, "listdir", counting_listdir)
     assert t.version() == 1
-    assert [e["version"] for e in t.history()] == [0, 1]
-    assert t._log_listing_memo is None
-    assert _rows(t.snapshot()) == [(1, "a"), (2, "b")]
+    assert t.version() == 1
+    assert t._latest_checkpoint()["version"] == 1
+    assert listdirs == []
+    monkeypatch.setattr(os, "listdir", real_listdir)
+
+    # a checkpoint for an OLDER version landing after the listing (a
+    # racing checkpoint_log whose version() went stale) is not seen at
+    # once, and cannot change a result: checkpoints only shorten replay
+    t2.upsert(_mk(spark, [(3, "c")]))            # v2
+    assert t.version() == 2
+    t3 = LogTable(spark, str(t.path), key="id", n_buckets=4)
+    monkeypatch.setattr(t3, "version", lambda: 0)
+    assert t3.checkpoint_log() == 0
+    fresh = LogTable(spark, str(t.path), key="id", n_buckets=4)
+    assert _rows(t.snapshot()) == _rows(fresh.snapshot())
+    assert t.history() == fresh.history()
+    assert _rows(t.snapshot(version=0)) == _rows(fresh.snapshot(version=0))
+    # the next commit picks it up
+    t2.upsert(_mk(spark, [(4, "d")]))            # v3
+    assert t._list_log().cp_versions == [0, 1]
+    assert _rows(t.snapshot()) == [(1, "a"), (2, "b"), (3, "c"), (4, "d")]
+
+
+def test_open_leaves_log_dir_untouched(spark, tmp_path):
+    """Opening a handle on an existing table reads the log only: no file
+    under _log/ is created, touched or deleted."""
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=4)
+    t.create(_mk(spark, [(1, "a")]))
+    log_dir = os.path.join(str(t.path), "_log")
+    before = {
+        n: os.stat(os.path.join(log_dir, n)).st_mtime_ns
+        for n in os.listdir(log_dir)
+    }
+    dir_mtime = os.stat(log_dir).st_mtime_ns
+    t2 = LogTable(spark, str(t.path), key="id", n_buckets=4)
+    assert t2.version() == 0
+    after = {
+        n: os.stat(os.path.join(log_dir, n)).st_mtime_ns
+        for n in os.listdir(log_dir)
+    }
+    assert after == before
+    assert os.stat(log_dir).st_mtime_ns == dir_mtime
 
 
 def test_history_ops(spark, tmp_path):
@@ -1619,12 +1624,10 @@ def test_feed_interval_stats_estimates_saturation(spark, tmp_path):
     t.changes(0, 2, use_capture=True).collect()
     info = t.last_feed_info
     assert info["interval_units"] == 2 and info["net_change_ratio"] == 4.0
-    # memo: committed intervals are immutable — repeat call is a copy
-    # of the cached result, not a second log replay
+    # committed intervals are immutable: a repeat call prices the same
     est1 = t.feed_interval_stats(0, 2)
     est2 = t.feed_interval_stats(0, 2)
-    assert est1 == est2 and est1 is not est2
-    assert (0, 2, None) in t._feed_stats_memo
+    assert est1 == est2
 
     # inverted interval: the (from, to] contract is enforced, not an
     # all-zero estimate that would wave a backlog through the gate
@@ -1866,12 +1869,10 @@ def test_mixed_interval_prices_captured_buckets_into_diff(
     assert tc.feed_interval_stats(0, 1)["interval_rows"] == 40
 
 
-def test_cutoff_estimate_shares_memo_with_uncut_call(spark, tmp_path):
-    """Code-review r11: a cutoff walk that ran to completion IS the
-    unbounded estimate and is memo-shared under the uncut key — so a
-    gated drain's unsaturated loop head (cutoff call) and the serve's
-    own telemetry (uncut call) pay ONE log walk per immutable
-    interval, the sharing the cutoff argument silently broke."""
+def test_complete_cutoff_walk_equals_uncut_estimate(spark, tmp_path):
+    """A cutoff walk that ran to completion IS the unbounded estimate;
+    a truncated one is a lower bound on it that already proves the
+    cutoff."""
     rows = [(i, f"v{i}") for i in range(20)]
     t = LogTable(
         spark, str(tmp_path / "t"), key="id", n_buckets=2,
@@ -1881,14 +1882,18 @@ def test_cutoff_estimate_shares_memo_with_uncut_call(spark, tmp_path):
     t.upsert(_mk(spark, [(0, "z0")]))                            # v1
     est = t.feed_interval_stats(0, 1, saturation_cutoff=1000.0)
     assert est["estimate_truncated"] is False
-    assert (0, 1, None) in t._feed_stats_memo, "shared to uncut key"
     assert t.feed_interval_stats(0, 1) == est
-    # a TRUNCATED estimate is a lower bound, never shared to the
-    # uncut key
+    # a TRUNCATED estimate is a lower bound, not the exact estimate
     t.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))      # v2
     t2_bounded = t.feed_interval_stats(1, 2, saturation_cutoff=0.5)
     assert t2_bounded["estimate_truncated"] is True
-    assert (1, 2, None) not in t._feed_stats_memo
+    t2_exact = t.feed_interval_stats(1, 2)
+    assert t2_exact["estimate_truncated"] is False
+    assert (
+        0.5
+        <= t2_bounded["net_change_ratio"]
+        <= t2_exact["net_change_ratio"]
+    )
 
 
 def test_feed_truncation_missing_rejects_inverted_interval(

@@ -20,12 +20,19 @@ maintenance cadence writes, then times at each requested depth:
   the cost on a table whose producer never checkpoints).
 - ``listdir_sec`` / ``version_{miss,hit}_sec`` /
   ``latest_cp_{miss,hit}_sec`` (round 12, VERDICT r11 #5; miss/hit
-  split ADVICE r12): the log-dir LISTING cost in isolation. Since the
-  round-12 memo the listing build is paid once per directory CHANGE
-  (the ``*_miss_sec`` numbers — first call on a fresh handle) while
-  subsequent loop-head calls hit the memoized parsed listing
-  (``*_hit_sec``). Splitting them keeps the once-per-change build
-  priced at depth instead of hidden behind a median of memo hits.
+  split ADVICE r12): the log-dir LISTING cost in isolation. The
+  listing build is paid once per log change (the ``*_miss_sec``
+  numbers — first call on a fresh handle) while subsequent loop-head
+  calls hit the memoized parsed listing (``*_hit_sec``). Splitting
+  them keeps the once-per-change build priced at depth instead of
+  hidden behind a median of memo hits.
+- ``loop_head_sec``: one drain loop head's LogTable reads on a fresh
+  handle — ``version()``, the gate's cutoff estimate, the serve's
+  uncut estimate, ``feed_truncation_missing`` and three
+  ``_live_units`` calls (lo, hi, latest) — for the last commit
+  (``interval_1``), the last 50 (``interval_50``) and the mid-log
+  cursor to the head (``mid_log``). This is the sequence the
+  listing and live-unit memos exist for.
 
 Timings are driver-side wall clock over synthetic JSON; run on a
 quiet machine for stable numbers. Usage:
@@ -187,15 +194,11 @@ def main() -> None:
         # exists to price. The *_miss_sec keys time the FIRST call on a
         # fresh handle (the listing build the drain pays once per dir
         # change); *_hit_sec is the median of the next 5 calls on the
-        # same handle (the memoized loop-head cost). The dir is given
-        # the memo's quiescence margin first, or the miss call would
-        # refuse to memoize and the "hit" numbers would re-pay the
-        # build.
+        # same handle (the memoized loop-head cost).
         log_dir = os.path.join(base, "_log")
         out["listdir_sec"] = round(
             _median_of(lambda: sorted(os.listdir(log_dir)), 5), 4
         )
-        time.sleep(0.06)  # > LogTable._LISTING_QUIESCENT_NS
 
         def _miss_and_hit(call) -> tuple[float, float]:
             t = handle(base)
@@ -212,6 +215,27 @@ def main() -> None:
         )
         out["latest_cp_miss_sec"] = round(miss, 4)
         out["latest_cp_hit_sec"] = round(hit, 4)
+
+        if not light:
+
+            def _loop_head(lo: int) -> None:
+                t = handle(base)
+                t.version()
+                t.feed_interval_stats(lo, hi, saturation_cutoff=THETA)
+                t.feed_interval_stats(lo, hi)
+                t.feed_truncation_missing(lo, hi)
+                t._live_units(as_of=lo)
+                t._live_units(as_of=hi)
+                t._live_units()
+
+            out["loop_head_sec"] = {
+                name: round(_median_of(lambda: _loop_head(lo), 3), 4)
+                for name, lo in (
+                    ("interval_1", hi - 1),
+                    ("interval_50", max(hi - 50, 0)),
+                    ("mid_log", cursor),
+                )
+            }
 
         t = handle(base)
         t0 = time.perf_counter()

@@ -65,14 +65,11 @@ def _price_feed_reads(src_cap, lo: int, hi: int, docs: int) -> None:
             ts.append(time.perf_counter() - t)
         return sorted(ts[1:])[1]
 
-    # Price the saturation gate's per-loop-head estimate FIRST (round
-    # 10, VERDICT r9 #1): in a gated drain the estimate is the first
-    # touch of the interval, so measure it COLD — changes() below
-    # would otherwise warm the (from, to) memo and this would time a
-    # dict hit. The log-only arithmetic the consumer pays BEFORE
+    # Price the saturation gate's per-loop-head estimate (round 10,
+    # VERDICT r9 #1): the log-only arithmetic the consumer pays BEFORE
     # choosing incremental-vs-rebootstrap must be noise next to either
-    # serving tier, or the gate would cost what it saves.
-    src_cap._feed_stats_memo.clear()
+    # serving tier, or the gate would cost what it saves. Estimates
+    # are not memoized, so every call is cold.
     t = time.perf_counter()
     est = src_cap.feed_interval_stats(lo, hi)
     est_sec = time.perf_counter() - t
