@@ -69,11 +69,9 @@ from __future__ import annotations
 import bisect
 import datetime
 import json
-import logging
 import os
 import shutil
 import time
-import uuid
 from types import MappingProxyType
 from typing import Iterator, NamedTuple
 
@@ -88,11 +86,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
-_LOG = logging.getLogger(__name__)
-
 _LOG_DIR = "_log"
 _DATA_DIR = "data"
-_CHANGES_DIR = "_changes"
 # footer key under which Spark's parquet writer stores the row schema
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
@@ -123,18 +118,6 @@ def _json_stat(v):
     if isinstance(v, (datetime.datetime, datetime.date)):
         return v.isoformat()
     return None
-
-
-def _footer_rows(unit_dir: str) -> int:
-    """Row count of one unit dir from its parquet footers — the cheap
-    driver-side metadata read (no Spark job, no data pages). Shared by
-    the change-unit log stamp and the interval estimator so the file
-    filtering can never diverge between them."""
-    return sum(
-        pq.ParquetFile(os.path.join(unit_dir, name)).metadata.num_rows
-        for name in sorted(os.listdir(unit_dir))
-        if name.endswith(".parquet")
-    )
 
 
 def _footer_schema(unit_dir: str) -> StructType:
@@ -208,7 +191,7 @@ def _bucket_rollup(
     units: dict[str, dict],
 ) -> tuple[dict[int, int], dict[int, int]]:
     """Per-bucket (unit count, row count) rollup of a live-unit map.
-    The diff tier prices each touched bucket at BOTH interval ends, so
+    The diff prices each touched bucket at BOTH interval ends, so
     both sides need the identical aggregation — one helper keeps the
     lo/hi pricing from silently drifting apart."""
     n: dict[int, int] = {}
@@ -513,28 +496,17 @@ class LogTable:
         key: str = "id",
         n_buckets: int = 64,
         protocol: CommitProtocol | None = None,
-        change_capture: bool = False,
     ) -> None:
         self.spark = spark
         self.path = path
         self.key = key
         self.n_buckets = n_buckets
         self.protocol = protocol or PosixCommitProtocol()
-        # Writer-side CDC switch (Delta CDF analog): when on, eager
-        # mutations ALSO record their logical change rows at commit
-        # time, and changes() serves intervals from those records in
-        # O(changed rows) instead of the O(touched buckets)
-        # snapshot-diff. Per-commit — mixed histories (flag flipped
-        # mid-life, deferred/merge/append commits) simply make the
-        # affected intervals fall back to the diff path; readers never
-        # need the flag.
-        self.change_capture = change_capture
-        # Feed-serving observability: which tier served the last
-        # changes() call and why it fell back (None until a feed is
-        # read). Driver-side per-table state, same single-threaded
-        # discipline as the mutating ops.
+        # Feed-serving observability: the last successful changes()
+        # call's interval and price (None until a feed is read).
+        # Driver-side per-table state, same single-threaded discipline
+        # as the mutating ops.
         self.last_feed_info: dict | None = None
-        self._capture_bail_reason: str | None = None
         # Per-version live-unit maps (code-review r11, third pass): a
         # diff-tier serve replays lo/hi for its own read AFTER its
         # telemetry estimate already replayed them, and the gated
@@ -733,7 +705,7 @@ class LogTable:
         old version (a lagging feed cursor's lo-side rollup, time
         travel) can still start from the newest checkpoint at or before
         it. Consulting only the newest checkpoint overall made exactly
-        the deep-backlog case the saturation cutoff targets — cursor
+        the deep-backlog case the saturation gate targets — cursor
         far behind a producer whose maintenance kept checkpointing —
         degrade to a full O(history) replay (code-review r11, third
         pass). The version is parsed from the zero-padded filename, so
@@ -847,7 +819,6 @@ class LogTable:
         added: list[dict],
         removed: list[dict],
         v: int,
-        changes_info: dict | None = None,
     ) -> int:
         """Claim EXACTLY version ``v`` (= base snapshot version + 1).
 
@@ -875,13 +846,6 @@ class LogTable:
             "added": added,
             "removed": [dict(u) for u in removed],
         }
-        if changes_info is not None:
-            # CDC record for this commit: {"mode": "none"} (no logical
-            # change), {"mode": "added_units"} (every added unit row is
-            # an insert), or {"mode": "unit", "unit": "_changes/cN"}
-            # (stored change rows). Absent = uncaptured; feeds spanning
-            # this version use the snapshot-diff path.
-            entry["changes"] = changes_info
         final = os.path.join(self.path, _LOG_DIR, f"{v:020d}.json")
         # Writer-private tmp (pid-suffixed: two racing writers must not
         # scribble over each other's payload), fsynced so the linked
@@ -1104,12 +1068,7 @@ class LogTable:
             e for e in live.values() if e["bucket"] in affected
         ]
         current = self._read_resolved(live, affected)
-        changes_info = None
         if current is not None:
-            if self.change_capture:
-                # the merge AND the CDC diff both read "current" —
-                # cache it once across the two consumers
-                current = current.cache()
             keep = current.join(
                 up.select(F.col(self.key)), self.key, "left_anti"
             )
@@ -1123,100 +1082,9 @@ class LogTable:
             ).withColumn("__bucket", F.col("__b"))
         else:
             merged = up
-            if self.change_capture:
-                # first data ever in these buckets: every added unit
-                # row IS an insert — no separate change unit needed
-                changes_info = {"mode": "added_units"}
         added = self._write_commit_dir(merged, v)
-        if self.change_capture and current is not None:
-            try:
-                changes_info = self._write_change_unit(
-                    self._capture_upsert_changes(current, up), v
-                )
-            finally:
-                current.unpersist()
         _propagate_taint(added, replaced)
-        return self._commit(op, added, replaced, v, changes_info)
-
-    def _capture_upsert_changes(
-        self, current: DataFrame, up: DataFrame
-    ) -> DataFrame:
-        """Logical change rows for one upsert batch, computed from data
-        the merge already has in hand (Delta-CDF's capture-at-write
-        idea): per upserted key — no stored row → ``insert``; stored
-        row with any differing value → ``update_pre`` (old values) +
-        ``update_post`` (new values); identical values → no change row
-        (a same-value rewrite is not a logical change, matching the
-        snapshot-diff's ``~same`` filter). O(batch ⋈ affected-bucket
-        rows), never O(table). The pre/post PAIR is what lets the feed
-        reduce an interval's event stream to the exact NET diff — a
-        value updated away and back again must cancel out, which
-        post-only rows cannot express.
-        """
-        key = self.key
-        n_df = up.drop("__bucket", "__b")
-        o_df = current.drop("__b").join(n_df.select(key), key, "semi")
-        n_cols, o_cols = set(n_df.columns), set(o_df.columns)
-        data_cols = [
-            c
-            for c in list(n_df.columns)
-            + [c for c in o_df.columns if c not in n_cols]
-            if c != key
-        ]
-        nn, oo = n_df.alias("n"), o_df.alias("o")
-        ncol = lambda c: (  # noqa: E731
-            F.col(f"n.{c}") if c in n_cols else F.lit(None)
-        )
-        ocol = lambda c: (  # noqa: E731
-            F.col(f"o.{c}") if c in o_cols else F.lit(None)
-        )
-        j = nn.join(oo, F.col(f"n.{key}") == F.col(f"o.{key}"), "left")
-        same = F.lit(True)
-        for c in data_cols:
-            same = same & ncol(c).eqNullSafe(ocol(c))
-        kcol = F.col(f"n.{key}").alias(key)
-        inserts = j.filter(F.col(f"o.{key}").isNull()).select(
-            F.lit("insert").alias("change"),
-            kcol,
-            *[ncol(c).alias(c) for c in data_cols],
-        )
-        upd = j.filter(F.col(f"o.{key}").isNotNull() & ~same)
-        pre = upd.select(
-            F.lit("update_pre").alias("change"),
-            kcol,
-            *[ocol(c).alias(c) for c in data_cols],
-        )
-        post = upd.select(
-            F.lit("update_post").alias("change"),
-            kcol,
-            *[ncol(c).alias(c) for c in data_cols],
-        )
-        return inserts.unionByName(pre).unionByName(post)
-
-    def _write_change_unit(self, df: DataFrame, v: int) -> dict:
-        """Persist one commit's logical change rows (O(batch) — tiny
-        beside the bucket rewrite). Written BEFORE the commit claims
-        the version: a crash in between leaves an unreferenced dir
-        that vacuum reclaims, same as orphan commit dirs.
-
-        The path is WRITER-UNIQUE (ADVICE r7): two unserialized racing
-        writers computing the same v must never scribble over each
-        other's change rows — with a shared deterministic ``c{v}`` path
-        the _commit winner's log entry could silently reference the
-        LOSER's unit (CDC corruption no existence check can see). The
-        uuid suffix makes each writer's unit private; the winner's
-        ``changes_info`` records its own path, the loser's dir is an
-        orphan vacuum reclaims."""
-        rel = f"{_CHANGES_DIR}/c{v}-{uuid.uuid4().hex[:8]}"
-        full = os.path.join(self.path, rel)
-        df.write.mode("overwrite").parquet(full)
-        # Footer-harvested event-row count in the log entry (round 10):
-        # the same cheap driver-side metadata read as
-        # _collect_unit_stats, no second scan — it makes the interval's
-        # change volume computable from the LOG alone, which is what
-        # feed_interval_stats' saturation estimate (SCALE.md §2b's
-        # re-bootstrap rule) prices a backlog with.
-        return {"mode": "unit", "unit": rel, "rows": _footer_rows(full)}
+        return self._commit(op, added, replaced, v)
 
     def upsert_deferred(
         self, updates: DataFrame, order_col: str | None = None
@@ -1398,33 +1266,13 @@ class LogTable:
         ]
         current = self._read_resolved(live, affected)
         added: list[dict] = []
-        changes_info = {"mode": "none"} if self.change_capture else None
         if current is not None:
-            if self.change_capture:
-                current = current.cache()
             remaining = current.join(
                 k.select(F.col(self.key)), self.key, "left_anti"
             ).withColumn("__bucket", F.col("__b"))
             added = self._write_commit_dir(remaining, v)
-            if self.change_capture:
-                try:
-                    # delete rows carry the deleted (old) values — the
-                    # semi join also drops requested keys that never
-                    # existed (not a logical change, matching the diff)
-                    deleted = current.drop("__b").join(
-                        k.select(F.col(self.key)), self.key, "semi"
-                    )
-                    changes_info = self._write_change_unit(
-                        deleted.select(
-                            F.lit("delete").alias("change"),
-                            *deleted.columns,
-                        ),
-                        v,
-                    )
-                finally:
-                    current.unpersist()
         _propagate_taint(added, replaced)
-        return self._commit("delete", added, replaced, v, changes_info)
+        return self._commit("delete", added, replaced, v)
 
     def delta_fraction(self) -> float:
         """Fraction of live rows sitting in DELTA units — the standing
@@ -1486,10 +1334,7 @@ class LogTable:
         added = self._write_commit_dir(
             cur.withColumn("__bucket", F.col("__b")), v
         )
-        return self._commit(
-            "certify", added, replaced, v,
-            {"mode": "none"} if self.change_capture else None,
-        )
+        return self._commit("certify", added, replaced, v)
 
     def compact(self) -> int:
         """Rewrite the whole live set into one commit dir (defragments
@@ -1506,12 +1351,7 @@ class LogTable:
         # Compaction changes layout, never content: append-duplicate
         # rows survive it, so the taint does too.
         _propagate_taint(added, list(live.values()))
-        return self._commit(
-            "compact", added, list(live.values()), v,
-            # CDC: layout-only — with capture on, a feed spanning this
-            # commit no longer degrades to the full snapshot diff
-            {"mode": "none"} if self.change_capture else None,
-        )
+        return self._commit("compact", added, list(live.values()), v)
 
     # -------------------------------------------------------------- reads
 
@@ -1690,32 +1530,19 @@ class LogTable:
         (one footer per commit, see :meth:`_schema_frame`; no file scan
         and no Spark job).
 
-        The schema read is NOT covered by the feed's touched-bucket
-        retention guards (a provably change-free captured interval
-        checks no data units at all; the diff guard checks only touched
-        buckets), and an OLD interval end's units may have been
-        vacuumed — so reps are picked among units that still EXIST
-        (:meth:`_schema_reps`), a side whose schema is unrecoverable
-        falls to the next, and when no side can serve it the failure is
-        the typed :class:`FeedTruncatedError`, not a raw missing-file
-        planning error (code-review r11, third pass;
+        The schema read is NOT covered by the diff's retention guard
+        (it checks only touched buckets), and an OLD interval end's
+        units may have been vacuumed — so reps are picked among units
+        that still EXIST (:meth:`_schema_reps`), a side whose schema is
+        unrecoverable falls to the next, and when no side can serve it
+        the failure is the typed :class:`FeedTruncatedError`, not a raw
+        missing-file planning error (code-review r11, third pass;
         :meth:`feed_truncation_missing` mirrors this rule so the gated
         consumer's retention-lag alert agrees with the serve). Raises
         the documented "both versions are empty" ``ValueError`` when
         every side is empty — the one case with no schema to serve,
         which feed consumers treat as an empty feed, never as
         truncation.
-
-        A capture-tier caller deliberately does NOT catch this and
-        bail to the diff tier: under horizon-based vacuum no interval
-        exists where this raises but the diff serves — a change-free
-        captured interval's touched buckets always contain a unit
-        removed in-interval (compact/certify fold their inputs), and
-        any vacuum that reclaimed an interval-end schema rep (removed
-        strictly LATER) must already have reclaimed those
-        earlier-dead units, so the diff's own retention guard raises
-        on the same interval. Bailing would re-derive the identical
-        error at higher cost (code-review r11, fifth pass analysis).
         """
         truncated: tuple[int, list[str]] | None = None
         for version, units in sides:
@@ -1756,342 +1583,100 @@ class LogTable:
                 truncated = missing
         return truncated or []
 
-    def feed_interval_stats(
-        self,
-        from_version: int,
-        to_version: int | None = None,
-        saturation_cutoff: float | None = None,
-    ) -> dict:
-        """Driver-side cost estimate for a feed over ``(from, to]`` —
-        the quantity SCALE.md §2b's operational rule gates on ("serve
-        any backlog from capture; re-bootstrap once the interval's
-        changed rows approach the live table size"), computed entirely
-        from the commit log's footer-harvested row counts: no Spark
-        job, no data read, O(interval commits) JSON plus one live-set
-        replay.
-
-        Returns ``{interval_units, interval_rows, live_units,
-        live_rows, net_change_ratio, forced_full_diff}`` where
-        ``net_change_ratio = interval_rows / max(live_rows, 1)``:
-
-        - A CAPTURED upsert commit contributes its change unit's event
-          rows (insert / update_pre / update_post / delete) — an
-          update pair is two events per churned key, so a fully
-          update-churned table reads ratio ≈ 2.0, which is exactly the
-          measured capture-vs-snapshot crossover (SCALE.md §2b:
-          width-100 × 1%-slice backlog at 1M docs = every key churned
-          = ratio 2.0 = capture 2.74 s vs snapshot ~2.4 s). Past
-          saturation the ratio keeps growing linearly with backlog
-          depth while the snapshot stays flat — the re-bootstrap
-          signal. Capture's ``added_units`` insert mode contributes
-          its added data units' rows (every row IS an insert event).
-        - ``compact``/``certify`` commits contribute zero on a fully
-          CAPTURED interval: both are layout-only by definition, and
-          the capture tier records them as "no logical change". But an
-          interval that will fall to the DIFF tier (any commit in it is
-          uncaptured, or a capture unit was vacuumed — the estimator
-          mirrors ``_changes_from_capture``'s existence bails, so a
-          capture-complete-LOOKING interval with a hole prices as the
-          diff it will actually pay) and contains a compact is
-          forced to a FULL table diff — compact rewrites every live
-          unit, so every bucket is "touched" — and is priced as such
-          here: all live buckets enter the diff-cost term below and
-          ``forced_full_diff`` is set in the result (VERDICT r10 #2
-          closed the round-10 blind spot where the most expensive
-          serve class priced at ~0 and the saturation gate could never
-          fire on it). A certify on a diff-tier interval likewise has
-          its rewritten (tainted) buckets priced into the diff term —
-          the serve's touched set replays added+removed of EVERY
-          entry, maintenance included (code-review r11) — without
-          forcing the full table the way compact does.
-        - Other UNCAPTURED commits (deferred upserts, a capture-off
-          co-writer) are priced by the DIFF tier's cost model: the
-          union of their touched buckets, counted ONCE regardless of
-          how many commits touched a bucket (N small commits into the
-          same bucket cost the diff one bucket read, not N — the
-          code-review r10 overcount fix), at the SUM of the bucket's
-          live rows at BOTH interval ends — the diff genuinely reads
-          each touched bucket at ``from_version`` and at
-          ``to_version``, so a delete-heavy backlog that empties its
-          buckets still prices its from-side read instead of ~0
-          (ADVICE r10), and a fully-touched uncaptured backlog prices
-          at ratio ≈ 2.0 — the same measured serve-vs-snapshot
-          crossover the capture calibration found (SCALE.md §2b),
-          which is exactly "the serve reads ~2× the live table". The
-          price of this model is missing multi-churn within a bucket
-          (the captured path sees it).
-        - A change unit from a pre-round-10 log entry (no ``rows``
-          recorded) is footer-counted here instead; one already
-          vacuumed falls back to its commit's rewritten-unit rows (an
-          overcount, but zero would let a fully-churned legacy backlog
-          dodge the gate and then hit the truncation error).
-
-        ``saturation_cutoff`` bounds the walk at depth (VERDICT r10
-        #5): the saturation gate only needs "is the ratio ≥ threshold",
-        not the exact ratio, and every cost term only GROWS as the
-        walk proceeds — so with a cutoff set, the walk stops the moment
-        the accumulated rows, plus the larger of the both-ends
-        live-table term a detected forced-full-diff is guaranteed to
-        add and the lo+hi rows of buckets already proven into the diff
-        term (the bound that lets a purely-uncaptured no-compact
-        backlog bail too — code-review r11; its lo side loads lazily,
-        checkpoint-bounded, on the first check where a diff bucket
-        exists, because the hi side alone tops out at 1.0 × live and
-        could never prove the calibrated 2.0), prove the comparison,
-        returning a partial estimate with ``estimate_truncated: True``
-        whose ``net_change_ratio`` is a LOWER BOUND ≥ cutoff. A
-        10k-commit × 32-bucket backlog prices in O(commits-to-prove)
-        instead of O(backlog) driver JSON (measured: the unbounded walk
-        costs ~0.13 ms/commit at that entry width — ~1.3 s at depth
-        10k — while one full-churn commit proves a 2.0 cutoff). The
-        other depth term, the live-set replay, is already
-        checkpoint-bounded (``checkpoint_log``, which the drain's
-        maintenance cadence writes).
-
-        Results are not memoized: the live-set replays are (per
-        version, in ``_live_units``), the interval walk is not. So when
-        a cutoff walk runs to completion, ``changes()``'s own uncut
-        telemetry call walks the same interval again. That happens only
-        while the interval stays below θ × live rows — past it the
-        cutoff walk truncates. Measured on a fresh handle over a
-        1k-commit unsaturated interval (32 buckets, one key updated per
-        commit, 4 vCPUs): the cutoff + uncut pair costs 0.094 s, ~20 ms
-        over a single walk's 0.074 s (medians of 8); the same log at
-        10k commits saturates, the cutoff walk truncates, and the pair
-        costs what one uncut walk does (~0.5 s).
-        """
+    def _interval(self, from_version: int, to_version: int | None) -> int:
+        """``to_version`` resolved (None = latest) after checking that
+        ``(from, to]`` names committed versions in order. An inverted
+        interval would otherwise price as all-zero (waving a backlog
+        through the saturation gate) or read as serveable."""
         latest = self.version()
         to_version = latest if to_version is None else to_version
         for v in (from_version, to_version):
             if v < 0 or v > latest:
                 raise ValueError(f"version {v} does not exist")
         if from_version > to_version:
-            # the docstring's (from, to] contract — an inverted interval
-            # would silently price as all-zero (ratio 0.0) and wave a
-            # saturated backlog through the gate (ADVICE r10)
             raise ValueError(
                 f"inverted interval: from_version {from_version} > "
                 f"to_version {to_version}"
             )
-        if saturation_cutoff is not None and saturation_cutoff <= 0:
-            raise ValueError("saturation_cutoff must be > 0")
-        live = self._live_units(as_of=to_version)
-        live_rows = sum(u.get("rows") or 0 for u in live.values())
-        hi_units, hi_rows = _bucket_rollup(live)
-        bail_rows = (
-            saturation_cutoff * max(live_rows, 1)
-            if saturation_cutoff is not None
-            else None
-        )
-        interval_units = 0
-        interval_rows = 0
-        diff_buckets: set[int] = set()
-        # Touched buckets of CAPTURED entries (data commits and
-        # maintenance alike) — held apart from diff_buckets because
-        # they cost nothing while the interval stays capture-served,
-        # but the diff tier's touched set includes them (changes()
-        # replays added+removed of EVERY entry), so once capture
-        # breaks they are genuinely read at both ends and fold into
-        # the diff term (code-review r11, both passes: certify first,
-        # then intact captured commits on mixed intervals — the same
-        # ~0-priced blind-spot class VERDICT r10 #2 closed for
-        # compact).
-        captured_buckets: set[int] = set()
-        capture_complete = True
-        has_compact = False
-        estimate_truncated = False
-        # Early-exit bookkeeping: lo+hi rows of buckets PROVEN to enter
-        # the final diff term. Without it the cutoff never fires on a
-        # purely-uncaptured no-compact backlog (interval_rows stays 0
-        # there while the diff term does all the pricing) and the
-        # promised O(commits-to-prove) walk stays O(backlog) for
-        # exactly the capture-off deep-backlog case (code-review r11).
-        # The hi side comes from the already-materialized rollup; the
-        # lo side is loaded LAZILY on the first check where a diff
-        # bucket exists (a fully-captured walk never pays it) —
-        # without the lo term the bound tops out at 1.0 × live and the
-        # calibrated θ=2.0 gate could never bail early on the
-        # capture-off case at all. That one historical replay is
-        # checkpoint-bounded like every _live_units call, is paid at
-        # most once per estimate, and prices exactly what the final
-        # diff term would have read anyway. Sound: priced ⊆ the final
-        # diff set (diff buckets imply an uncaptured interval;
-        # maintenance buckets are priced only once capture is already
-        # incomplete), each bucket once, at ≤ its final lo+hi price.
-        proven = 0
-        priced: set[int] = set()
-        prove_latched = False
-        lo_rollup: tuple[dict[int, int], dict[int, int]] | None = None
-        lo_total = 0
+        return to_version
 
-        def _load_lo() -> None:
-            nonlocal lo_rollup, lo_total, proven
-            if lo_rollup is None:
-                lo_rollup = _bucket_rollup(
-                    self._live_units(as_of=from_version)
-                )
-                lo_total = sum(lo_rollup[1].values())
-                proven += sum(
-                    lo_rollup[1].get(b, 0) for b in priced
-                )
-
-        def _prove(b: int) -> None:
-            nonlocal proven
-            if b not in priced:
-                priced.add(b)
-                proven += hi_rows.get(b, 0)
-                if lo_rollup is not None:
-                    proven += lo_rollup[1].get(b, 0)
-
+    def _touched_buckets(self, from_version: int, to_version: int) -> set[int]:
+        """Buckets that commits in ``(from, to]`` added or removed units
+        in — every mutation, maintenance included, logs the units it
+        rewrote, so a key outside these buckets cannot have changed and
+        this is the diff's read set. The walk stops once all
+        ``n_buckets`` are touched: the set cannot grow past that point,
+        so neither can the diff's read or its price, and a deep backlog
+        costs O(commits until every bucket is touched) of log JSON
+        instead of O(backlog)."""
+        touched: set[int] = set()
         for e in self._log_entries(after=from_version, upto=to_version):
-            if "changes" not in e:
-                capture_complete = False
-            if e.get("op") in ("compact", "certify"):
-                has_compact = has_compact or e.get("op") == "compact"
-            ch = e.get("changes")
-            # Route the entry's touched buckets: an UNCAPTURED entry's
-            # buckets are certain diff reads; a CAPTURED entry's are
-            # held aside and fold into the diff set only if capture
-            # breaks — on a diff-tier interval the serve's touched set
-            # replays added+removed of EVERY entry, captured,
-            # maintenance, and holed alike (code-review r11, second
-            # pass: the certify fix's rationale applies to intact
-            # captured commits on a mixed interval too).
-            sink_set = captured_buckets if ch is not None else diff_buckets
             for u in e.get("added", []) + e.get("removed", []):
-                sink_set.add(u["bucket"])
-                if ch is None or not capture_complete:
-                    # uncaptured buckets are certain diff reads; once
-                    # capture is broken, captured entries' buckets are
-                    # too — prove them at routing time so the steady
-                    # state after the latch below is O(entry buckets),
-                    # not O(all buckets) per entry (code-review r11,
-                    # fifth pass)
-                    _prove(u["bucket"])
-            if ch is not None and ch["mode"] == "unit":
-                full = os.path.join(self.path, ch["unit"])
-                unit_exists = os.path.exists(full)
-                if not unit_exists:
-                    # vacuumed capture unit: the serve bails to the
-                    # diff tier exactly like an uncaptured commit
-                    # (_changes_from_capture's existence check) — a
-                    # capture-complete-LOOKING interval with a hole
-                    # must not price as capture-served (code-review
-                    # r11 closed this vacuum-holed variant of the
-                    # compact blind spot).
-                    capture_complete = False
-                interval_units += 1
-                rows = ch.get("rows")
-                if rows is None:
-                    rows = (
-                        _footer_rows(full)
-                        if unit_exists and os.path.isdir(full)
-                        else sum(
-                            u.get("rows") or 0
-                            for u in e.get("added", [])
-                        )
-                    )
-                interval_rows += rows
-            elif ch is not None and ch["mode"] == "added_units":
-                added = e.get("added", [])
-                if self.missing_units(
-                    units={u["unit"]: u for u in added}
-                ):
-                    # vacuumed insert units: same serve bail as
-                    # above ("insert units vacuumed")
-                    capture_complete = False
-                interval_units += len(added)
-                interval_rows += sum(
-                    u.get("rows") or 0 for u in added
-                )
-            # ch mode "none": captured no-logical-change, zero event
-            # rows (its buckets were still routed above)
-            if not capture_complete and not prove_latched:
-                # one-time transition: capture incompleteness is
-                # latched, so every held-aside bucket seen BEFORE the
-                # break is now guaranteed into the diff tier's touched
-                # set; buckets after it are proven at routing time
-                # above, so this set difference runs once per walk
-                prove_latched = True
-                for b in captured_buckets - priced:
-                    _prove(b)
-            if bail_rows is not None:
-                ffd_now = has_compact and not capture_complete
-                # A detected forced-full-diff is GUARANTEED to add the
-                # whole table at both ends in the diff term below; the
-                # proven per-bucket lo+hi rows bound the same term
-                # from the touched side. max(), not sum: the final
-                # diff prices each bucket once. The lo side loads only
-                # if the terms already in hand don't prove the bound
-                # (a captured backlog whose event rows alone cross θ
-                # must not pay the historical replay — code-review r11
-                # second pass).
-                guaranteed = interval_rows + max(
-                    (live_rows + lo_total) if ffd_now else 0, proven
-                )
-                if guaranteed < bail_rows and (
-                    (priced or ffd_now) and lo_rollup is None
-                ):
-                    _load_lo()  # updates lo_total and proven
-                    guaranteed = interval_rows + max(
-                        (live_rows + lo_total) if ffd_now else 0,
-                        proven,
-                    )
-                if guaranteed >= bail_rows:
-                    estimate_truncated = True
-                    interval_rows = guaranteed
-                    diff_buckets = set()  # already counted enough
-                    break
-        # An uncaptured-servable interval containing a compact forces
-        # the diff tier to read EVERY live bucket on both sides: price
-        # it so instead of ~0 (see docstring). Certify rewrites only
-        # its tainted buckets — priced per-bucket like any other
-        # touched bucket.
-        forced_full_diff = has_compact and not capture_complete
-        if not capture_complete:
-            diff_buckets |= captured_buckets
-        if not estimate_truncated and (diff_buckets or forced_full_diff):
-            # Diff-cost term: each touched bucket is read at BOTH
-            # interval ends, so price per-bucket lo + hi live rows
-            # (counted once per bucket, however many commits touched
-            # it). The lo-side replay is paid only when the interval
-            # has uncaptured commits at all — the common all-captured
-            # drain never reaches here — and at most once per
-            # estimate (the cutoff path may have loaded it already).
-            _load_lo()
-            lo_units, lo_rows = lo_rollup
-            if forced_full_diff:
-                diff_buckets = set(lo_units) | set(hi_units)
-            for b in diff_buckets:
-                interval_units += lo_units.get(b, 0) + hi_units.get(b, 0)
-                interval_rows += lo_rows.get(b, 0) + hi_rows.get(b, 0)
+                touched.add(u["bucket"])
+            if len(touched) >= self.n_buckets:
+                break
+        return touched
+
+    def feed_interval_stats(
+        self, from_version: int, to_version: int | None = None
+    ) -> dict:
+        """Driver-side price of ``changes(from, to)``: what the snapshot
+        diff reads, from the commit log's footer-harvested row counts
+        alone — no Spark job, no data read.
+
+        Returns ``{interval_units, interval_rows, live_units, live_rows,
+        net_change_ratio}``. The diff reads each touched bucket
+        (:meth:`_touched_buckets`) at BOTH interval ends, so
+        ``interval_units``/``interval_rows`` add the bucket's live units
+        and rows at ``from_version`` to those at ``to_version``, once
+        per bucket however many commits touched it; a delete-heavy
+        backlog that emptied its buckets still prices its from-side
+        read. ``net_change_ratio = interval_rows / max(live_rows, 1)``
+        with ``live_rows`` the table at ``to_version``. A diff that
+        reads the whole table — an interval holding a ``compact``
+        (which rewrites every live unit), or one whose commits touched
+        every bucket — prices at (lo + hi) / hi rows, which is 2.0 when
+        the table did not grow.
+
+        The estimate is exact: it is the diff's own read set and cost
+        model, and the walk stops only where the set stops growing.
+        Beside the walk it costs two live-set replays, checkpoint-
+        bounded and memoized per version (``_live_units``), so the
+        serve that follows reuses them.
+        """
+        to_version = self._interval(from_version, to_version)
+        hi_units, hi_rows = _bucket_rollup(
+            self._live_units(as_of=to_version)
+        )
+        lo_units, lo_rows = _bucket_rollup(
+            self._live_units(as_of=from_version)
+        )
+        touched = self._touched_buckets(from_version, to_version)
+        live_rows = sum(hi_rows.values())
+        interval_rows = sum(
+            lo_rows.get(b, 0) + hi_rows.get(b, 0) for b in touched
+        )
         return {
-            "interval_units": interval_units,
+            "interval_units": sum(
+                lo_units.get(b, 0) + hi_units.get(b, 0) for b in touched
+            ),
             "interval_rows": interval_rows,
-            "live_units": len(live),
+            "live_units": sum(hi_units.values()),
             "live_rows": live_rows,
             "net_change_ratio": interval_rows / max(live_rows, 1),
-            "forced_full_diff": forced_full_diff,
-            "estimate_truncated": estimate_truncated,
         }
 
     def feed_truncation_missing(
         self, from_version: int, to_version: int
     ) -> list[str]:
         """Vacuumed units a ``changes(from, to)`` call would trip over —
-        empty when the interval is serveable on some tier. Mirrors the
-        serve's own guards WITHOUT planning the feed: a capture-complete
-        interval checks its change/insert units (the capture tier needs
-        nothing else — unless the interval is provably change-free, in
-        which case the serve's EMPTY feed still reads one live unit per
-        commit for the schema and the mirror checks those reps via
-        :meth:`_empty_feed_missing`); an interval with uncaptured
-        commits — or one whose capture units are holed — checks the
-        diff tier's retention guard (touched-bucket data units at both
-        interval ends), plus the same empty-feed schema reps when no
-        touched bucket holds units at either end (the serve's
-        old-None/new-None exit — code-review r11, third pass).
-        Driver ``stat`` calls only, no Spark job.
+        empty when the interval is serveable. Mirrors the serve's own
+        guards WITHOUT planning the feed: the diff's retention guard
+        (touched-bucket data units at both interval ends), plus the
+        empty feed's schema reps (:meth:`_empty_feed_missing`) when no
+        touched bucket holds units at either end — the serve's
+        old-None/new-None exit. Driver ``stat`` calls only, no Spark
+        job.
 
         Used by the saturation-gated changefeed consumer (ADVICE r10):
         a snapshot reconcile reads only the CURRENT version, so it
@@ -2100,62 +1685,8 @@ class LogTable:
         ``on_truncated="error"`` exists to raise. This check keeps the
         lag observable without giving up the cheaper recovery.
         """
-        latest = self.version()
-        for v in (from_version, to_version):
-            if v < 0 or v > latest:
-                raise ValueError(f"version {v} does not exist")
-        if from_version > to_version:
-            # same (from, to] contract guard as feed_interval_stats:
-            # an inverted interval would silently read "serveable"
-            raise ValueError(
-                f"inverted interval: from_version {from_version} > "
-                f"to_version {to_version}"
-            )
-        entries = list(
-            self._log_entries(after=from_version, upto=to_version)
-        )
-        if entries and all("changes" in e for e in entries):
-            missing: list[str] = []
-            any_change = False
-            for e in entries:
-                ch = e["changes"]
-                if ch["mode"] == "none":
-                    continue
-                if ch["mode"] == "added_units":
-                    added = {u["unit"]: u for u in e.get("added", [])}
-                    missing += self.missing_units(units=added)
-                    # keyed on actual event parts, not the mode tag: a
-                    # zero-row added_units commit (empty-batch upsert)
-                    # contributes NO parts, so the serve still builds
-                    # an _empty_feed — the mode alone must not flip
-                    # this interval to "capture serves data AND
-                    # schema" (code-review r11, fifth pass: the mirror
-                    # reported [] while the serve raised)
-                    any_change = any_change or bool(added)
-                else:
-                    any_change = True
-                    if not os.path.exists(
-                        os.path.join(self.path, ch["unit"])
-                    ):
-                        missing.append(ch["unit"])
-            if not missing:
-                if any_change:
-                    # the capture tier serves data AND schema from the
-                    # interval's own (verified-present) change units
-                    return []
-                # provably change-free: the serve still builds an EMPTY
-                # feed whose schema read touches live units the checks
-                # above never stat — mirror _empty_feed's side walk
-                return self._empty_feed_missing(
-                    (to_version, self._live_units(as_of=to_version)),
-                    (from_version, self._live_units(as_of=from_version)),
-                )
-            # capture is holed → the serve falls to the diff tier,
-            # whose own guard below decides truncation
-        touched: set[int] = set()
-        for e in entries:
-            for u in e.get("added", []) + e.get("removed", []):
-                touched.add(u["bucket"])
+        to_version = self._interval(from_version, to_version)
+        touched = self._touched_buckets(from_version, to_version)
         lo = self._live_units(as_of=from_version)
         hi = self._live_units(as_of=to_version)
         gone = sorted(
@@ -2167,210 +1698,13 @@ class LogTable:
         if not any(
             e["bucket"] in touched for e in lo.values()
         ) and not any(e["bucket"] in touched for e in hi.values()):
-            # the serve's old-None/new-None exit: no touched bucket
-            # holds units on either side, so the diff is an _empty_feed
-            # whose schema read the touched-bucket guard above does not
-            # cover (code-review r11, third pass)
             return self._empty_feed_missing(
                 (to_version, hi), (from_version, lo)
             )
         return []
 
-    def _changes_from_capture(
-        self, from_version: int, to_version: int, required: bool = False
-    ) -> DataFrame | None:
-        """Serve a feed interval from stored change capture, or None
-        when the interval isn't fully captured / a capture unit was
-        vacuumed (the caller falls back to the snapshot diff, which
-        runs its own truncation check — maximally available).
-
-        Net reduction: concatenate the interval's per-commit change
-        rows (insert / update_pre / update_post / delete, stamped with
-        their commit version), then ONE groupBy(key) keeping the first
-        and last event per key in (version, pre<post) order. The first
-        event proves existence at ``from_version`` (insert → absent;
-        update_pre/delete → present, carrying the from-values); the
-        last proves the to-state. Net: absent→present = insert,
-        present→absent = delete (with the FIRST event's values — the
-        diff contract), present→present = update unless every value
-        matches (a revert), absent→absent = nothing. O(changed rows)
-        end to end, one shuffle.
-        """
-        entries = list(
-            self._log_entries(after=from_version, upto=to_version)
-        )
-
-        def bail(msg: str):
-            # Observable degradation (VERDICT r7 #1b): record WHY this
-            # interval couldn't be capture-served so changes() can
-            # surface the fallback instead of silently paying the diff.
-            self._capture_bail_reason = msg
-            if required:
-                raise ValueError(
-                    f"change capture unavailable for "
-                    f"({from_version}, {to_version}]: {msg}"
-                )
-            return None
-
-        if not entries:
-            return bail("empty interval")
-        n_uncaptured = sum(1 for e in entries if "changes" not in e)
-        if n_uncaptured:
-            if n_uncaptured == len(entries) and not self.change_capture:
-                # NO commit in the interval captured and this handle
-                # doesn't capture either: the snapshot diff IS this
-                # table's serving tier, not a degradation — record no
-                # fallback reason (a capture-OFF source would otherwise
-                # flood logs/stats with per-feed "fallbacks" for
-                # perfectly healthy behavior). A capture-ON handle
-                # seeing uncaptured commits (deferred upserts, a
-                # capture-off co-writer) IS a real hole in its capture
-                # stream and keeps the reason.
-                if required:
-                    raise ValueError(
-                        f"change capture unavailable for "
-                        f"({from_version}, {to_version}]: no captured "
-                        f"commit in interval"
-                    )
-                self._capture_bail_reason = None
-                return None
-            return bail("uncaptured commit in interval")
-        key = self.key
-        # Gather the interval's units FIRST (driver-side existence
-        # checks unchanged), then read each kind in ONE multi-path scan
-        # (round 9): the old per-commit loop built a separate parquet
-        # relation per change unit — a driver-side footer/schema pass
-        # each, measured ~0.2 s/unit — so a consumer waking N commits
-        # behind paid O(N) driver latency before any executor ran. Each
-        # scan's schema is the union of its units' footer schemas, read
-        # on the driver in commit order (one footer per change unit,
-        # one per commit for insert units), so building the feed
-        # launches no Spark job. The per-commit version stamp moves
-        # from a literal to a path parse: unit paths are ENGINE-WRITTEN
-        # (``_changes/c{v}-{hex8}`` / ``data/c{v}/__bucket=``, see
-        # _capture_upsert_changes/_write_commit_dir), so the greedy
-        # ``.*`` prefix pins the match to the engine's own trailing
-        # segment no matter what the user's table path contains; the
-        # capture-vs-diff equivalence property over random op sequences
-        # (test_properties) gates the parse.
-        ins_units: dict[str, dict] = {}
-        cap_paths: list[str] = []
-        for e in entries:
-            ch = e["changes"]
-            if ch["mode"] == "none":
-                continue
-            if ch["mode"] == "added_units":
-                units = {u["unit"]: u for u in e.get("added", [])}
-                missing = self.missing_units(units=units)
-                if missing:
-                    return bail(f"insert units vacuumed: {missing[0]}")
-                ins_units.update(units)
-            else:
-                full = os.path.join(self.path, ch["unit"])
-                if not os.path.exists(full):
-                    return bail(f"change unit vacuumed: {ch['unit']}")
-                cap_paths.append(full)
-
-        def _v_from_path(pattern: str):
-            # Fail fast on a parse miss (VERDICT r9 #1): regexp_extract
-            # returns "" on no match, and "" cast to long is a silent
-            # NULL __v that would scramble the min_by/max_by event
-            # ordering below instead of erroring. The paths are
-            # engine-written so a miss can only mean the unit-path
-            # scheme drifted out from under this parse — raise with
-            # the offending file name the moment any scanned row hits
-            # it (executor-side, zero extra jobs), rather than
-            # netting a wrong diff.
-            raw = F.regexp_extract(F.input_file_name(), pattern, 1)
-            return F.when(raw != "", raw.cast("long")).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "capture unit path does not match the "
-                            "engine version pattern "
-                        ),
-                        F.lit(pattern),
-                        F.lit(": "),
-                        F.input_file_name(),
-                    )
-                ).cast("long")
-            )
-
-        parts = []
-        if ins_units:
-            df = self._read_units(ins_units, None)
-            if df is not None:
-                df = df.drop("__b", "__gen")
-                parts.append(
-                    df.select(
-                        F.lit("insert").alias("change"), *df.columns
-                    ).withColumn("__v", _v_from_path(r".*/data/c(\d+)/"))
-                )
-        if cap_paths:
-            parts.append(
-                self.spark.read.schema(_union_schema(cap_paths))
-                .parquet(*cap_paths)
-                .withColumn(
-                    "__v", _v_from_path(r".*/_changes/c(\d+)-")
-                )
-            )
-        if not parts:
-            # captured and provably change-free: empty feed with the
-            # table schema (same contract as the diff path's empty
-            # case), built from one footer per live commit with no
-            # file scan (ADVICE r7)
-            return self._empty_feed(
-                (to_version, self._live_units(as_of=to_version)),
-                (from_version, self._live_units(as_of=from_version)),
-            )
-        ev = parts[0]
-        for p2 in parts[1:]:
-            ev = ev.unionByName(p2, allowMissingColumns=True)
-        ev = ev.withColumn(
-            "__seq",
-            F.when(F.col("change") == "update_post", F.lit(1)).otherwise(
-                F.lit(0)
-            ),
-        )
-        data_cols = [
-            c
-            for c in ev.columns
-            if c not in ("change", "__v", "__seq", key)
-        ]
-        ordk = F.struct(F.col("__v"), F.col("__seq"))
-        payload = F.struct(F.col("change"), *[F.col(c) for c in data_cols])
-        agg = ev.groupBy(key).agg(
-            F.min_by(payload, ordk).alias("first"),
-            F.max_by(payload, ordk).alias("last"),
-        )
-        from_absent = F.col("first.change") == F.lit("insert")
-        to_absent = F.col("last.change") == F.lit("delete")
-        same = F.lit(True)
-        for c in data_cols:
-            same = same & F.col(f"first.{c}").eqNullSafe(F.col(f"last.{c}"))
-        change = (
-            F.when(from_absent & to_absent, F.lit(None))
-            .when(from_absent, F.lit("insert"))
-            .when(to_absent, F.lit("delete"))
-            .when(~same, F.lit("update"))
-        )
-        out_cols = [
-            F.when(to_absent, F.col(f"first.{c}"))
-            .otherwise(F.col(f"last.{c}"))
-            .alias(c)
-            for c in data_cols
-        ]
-        return (
-            agg.withColumn("change", change)
-            .filter(F.col("change").isNotNull())
-            .select("change", key, *out_cols)
-        )
-
     def changes(
-        self,
-        from_version: int,
-        to_version: int | None = None,
-        use_capture: bool | None = None,
+        self, from_version: int, to_version: int | None = None
     ) -> DataFrame:
         """Change feed between two committed versions: what happened to
         each key, as ``(change, …row…)`` with change ∈ insert / update /
@@ -2382,114 +1716,41 @@ class LogTable:
         reference CONSUMES from Cosmos (/root/reference/EtlProcess.cs:
         183-187): a downstream incremental pipeline can read
         ``changes(last_seen, latest)`` instead of rescanning the table —
-        the log makes the diff well-defined. Two serving tiers, same
-        result (equivalence property-tested on random op sequences):
+        the log makes the diff well-defined. It is served as a snapshot
+        diff: full outer join of the two snapshots on the key
+        RESTRICTED TO THE BUCKETS the intervening commits touched
+        (:meth:`_touched_buckets`) — every mutation rewrites whole
+        bucket units and logs them, so a key whose bucket appears in no
+        commit between the two versions cannot have changed. Cost
+        O(touched buckets × 2); both sides hash-bucket identically, so
+        the join co-locates. ``compact`` rewrites every live unit, so
+        an interval containing one reads the whole table at both ends —
+        run feeds and compaction on separate cadences.
 
-        1. **Stored change capture** (``change_capture=True`` writers,
-           the Delta-CDF idea): every eager mutation recorded its
-           logical change rows at commit time, so the feed reads ONLY
-           those — O(changed rows) — and reduces the interval's event
-           stream to the net diff with one key-partitioned aggregate
-           (update_pre/update_post pairs make value-reverts cancel
-           exactly). Used automatically when every commit in the
-           interval carries capture; an interval spanning one
-           compaction stays O(changed rows), since compact records
-           "no logical change".
-        2. **Snapshot diff** (always available): full outer join of
-           the two snapshots on the key RESTRICTED TO THE BUCKETS the
-           intervening commits touched — every mutation rewrites whole
-           bucket units and logs them, so a key whose bucket appears
-           in no commit between the two versions cannot have changed.
-           Cost O(touched buckets × 2); both sides hash-bucket
-           identically, so the join co-locates. ``compact`` rewrites
-           every live unit, so an interval containing one degrades
-           (correctly) to the full diff on this tier — run feeds and
-           compaction on separate cadences, or enable capture.
-
-        ``use_capture``: None = auto (capture when complete, else
-        diff); False = force the diff path (the equivalence tests'
-        lever); True = require capture (raises if unavailable).
-
-        Observability (VERDICT r7 #1b): every successful call records
-        which tier served it in ``self.last_feed_info`` —
-        ``{"tier": "capture"|"diff", "from", "to", "fallback_reason",
-        "interval_units", "net_change_ratio"}`` (the last two are the
-        saturation signal from :meth:`feed_interval_stats`, VERDICT r9
-        #5) — and a capture→diff DEGRADATION (auto mode wanted capture but
-        an interval unit was vacuumed / a commit was uncaptured) also
-        logs it: WARNING when a vacuumed unit silently downgraded the
-        cost class, INFO for the expected uncaptured-commit case. A
-        monitoring hook can watch either; previously the fallback was
-        correct but invisible.
+        Observability: every successful call records ``{"tier":
+        "diff", "from", "to", "fallback_reason": None}`` plus the
+        interval's price from :meth:`feed_interval_stats` in
+        ``self.last_feed_info``, so an operator can see how close a
+        feed runs to the re-bootstrap threshold without a second
+        estimate call.
         """
-        latest = self.version()
-        to_version = latest if to_version is None else to_version
-        for v in (from_version, to_version):
-            if v < 0 or v > latest:
-                raise ValueError(f"version {v} does not exist")
-        # Saturation telemetry (VERDICT r9 #5): every successful serve
-        # also reports how much of the live table this interval churned
-        # (log-only arithmetic, see feed_interval_stats) so an operator
-        # — or the changefeed consumer's rebootstrap_saturation gate —
-        # can see how close a feed is to SCALE.md §2b's re-bootstrap
-        # threshold without a second estimate call.
+        to_version = self._interval(from_version, to_version)
         est = self.feed_interval_stats(from_version, to_version)
-        interval_stats = {
-            "interval_units": est["interval_units"],
-            "net_change_ratio": est["net_change_ratio"],
-            "forced_full_diff": est["forced_full_diff"],
-            # always False here (the serve's own estimate is uncut) —
-            # stamped anyway so last_feed_info carries ONE schema
-            # across every tier/branch and audit consumers never
-            # KeyError on it (code-review r11, third pass)
-            "estimate_truncated": est["estimate_truncated"],
-        }
-        fallback_reason = None
-        if use_capture is not False:
-            self._capture_bail_reason = None
-            served = self._changes_from_capture(
-                from_version, to_version, required=use_capture is True
-            )
-            if served is not None:
-                self.last_feed_info = {
-                    "tier": "capture",
-                    "from": from_version,
-                    "to": to_version,
-                    "fallback_reason": None,
-                    **interval_stats,
-                }
-                return served
-            fallback_reason = self._capture_bail_reason
-            if fallback_reason is not None:
-                log = (
-                    _LOG.warning
-                    if "vacuumed" in fallback_reason
-                    else _LOG.info
-                )
-                log(
-                    "change feed (%s, %s] at %s fell back to the "
-                    "snapshot diff: %s",
-                    from_version, to_version, self.path, fallback_reason,
-                )
-        # Recorded only on the SUCCESSFUL diff exits below (ADVICE r8):
+        # Recorded only on the SUCCESSFUL exits below (ADVICE r8):
         # assigning before the retention guard / empty-table ValueError
-        # would leave last_feed_info claiming a diff serve of an
-        # interval that actually raised — a monitoring hook reading it
-        # after a FeedTruncatedError would see a phantom serve. The
-        # capture branch already records only on success; mirror it.
+        # would leave last_feed_info claiming a serve of an interval
+        # that actually raised — a monitoring hook reading it after a
+        # FeedTruncatedError would see a phantom serve.
         diff_info = {
             "tier": "diff",
             "from": from_version,
             "to": to_version,
-            "fallback_reason": fallback_reason,
-            **interval_stats,
+            "fallback_reason": None,
+            **est,
         }
         lo = self._live_units(as_of=from_version)
         hi = self._live_units(as_of=to_version)
-        touched: set[int] | None = set()
-        for e in self._log_entries(after=from_version, upto=to_version):
-            for u in e.get("added", []) + e.get("removed", []):
-                touched.add(u["bucket"])
+        touched = self._touched_buckets(from_version, to_version)
         # Retention guard (VERDICT r6 #1): verify UP FRONT that every
         # unit this feed will read still physically exists — a cursor
         # lagging behind vacuum's retention window must surface as a
@@ -2571,9 +1832,10 @@ class LogTable:
         """Physically delete data no snapshot within ``retain_versions``
         of latest can reference: units removed at or before the horizon,
         plus orphan commit dirs (losers of a commit race / crashes
-        between data write and log commit). Must not run concurrently
-        with a writer (an in-flight commit's data dir looks like an
-        orphan until its log entry lands) — same single-writer
+        between data write and log commit) and leftover ``_changes/``
+        dirs. Must not run concurrently with a writer (an in-flight
+        commit's data dir looks like an orphan until its log entry
+        lands) — same single-writer
         discipline as the mutating ops, enforced by the caller's lease;
         a nonzero ``min_age_seconds`` also protects in-flight commits
         mechanically (a freshly-written dir is younger than the grace).
@@ -2587,8 +1849,8 @@ class LogTable:
         DELETABLE for at least ``min_age_seconds``: a dead data unit's
         clock starts when version ``r + retain_versions`` committed
         (``r`` = the commit that removed it — the moment the retention
-        horizon passed it, measured as that log file's mtime); a CDC
-        change unit's likewise; an orphan dir's at its own mtime.
+        horizon passed it, measured as that log file's mtime); an orphan
+        dir's at its own mtime.
         Any reader's plan references only units that were live-or-
         retained when the read STARTED, so setting the grace above the
         longest concurrent read (plus clock skew between hosts) makes
@@ -2613,8 +1875,6 @@ class LogTable:
         since checkpoint), and time travel to pre-checkpoint versions
         falls back to full log replay.
         """
-        import time
-
         latest = self.version()
         horizon = latest - retain_versions
         now = time.time()
@@ -2671,51 +1931,19 @@ class LogTable:
                     continue
                 shutil.rmtree(full)
                 deleted.append(unit)
-        # Orphan commit dirs: written but never logged. Grace clock =
-        # the dir's own mtime (also shields an IN-FLIGHT commit whose
-        # log entry hasn't landed yet).
-        data_dir = os.path.join(self.path, _DATA_DIR)
-        for d in sorted(os.listdir(data_dir)):
-            rel = f"{_DATA_DIR}/{d}"
-            full = os.path.join(data_dir, d)
-            if rel in logged_dirs or too_young(os.path.getmtime(full)):
+        # Orphan dirs: commit dirs written but never logged, and every
+        # _changes/ dir — change units of the stored-capture tier older
+        # versions of this module wrote, which nothing reads any more.
+        # Grace clock = the dir's own mtime (also shields an IN-FLIGHT
+        # commit whose log entry hasn't landed yet).
+        for sub in (_DATA_DIR, "_changes"):
+            root = os.path.join(self.path, sub)
+            if not os.path.isdir(root):
                 continue
-            shutil.rmtree(full)
-            deleted.append(rel)
-        # CDC change units: a feed may start at any cursor within the
-        # retention window (cursor >= horizon reads entries with
-        # version > horizon), so capture for versions ABOVE the horizon
-        # must survive; everything else — plus orphans written by a
-        # crashed commit and units of commits past retention — is
-        # reclaimed once past the grace. A reclaimed unit never
-        # corrupts a feed: the serving path checks existence and falls
-        # back to the snapshot diff, whose own truncation check
-        # governs (and the fallback is recorded + logged).
-        ch_dir = os.path.join(self.path, _CHANGES_DIR)
-        if os.path.isdir(ch_dir):
-            ch_referenced = {
-                e["changes"]["unit"]
-                for e in entries
-                if e.get("changes", {}).get("mode") == "unit"
-                and e["version"] > horizon
-            }
-            ch_version = {
-                e["changes"]["unit"]: e["version"]
-                for e in entries
-                if e.get("changes", {}).get("mode") == "unit"
-            }
-            for d in sorted(os.listdir(ch_dir)):
-                rel = f"{_CHANGES_DIR}/{d}"
-                full = os.path.join(ch_dir, d)
-                if rel in ch_referenced:
-                    continue
-                v = ch_version.get(rel)
-                eligible_at = (
-                    log_mtime(min(latest, v + retain_versions))
-                    if v is not None
-                    else os.path.getmtime(full)
-                )
-                if too_young(eligible_at):
+            for d in sorted(os.listdir(root)):
+                rel = f"{sub}/{d}"
+                full = os.path.join(root, d)
+                if rel in logged_dirs or too_young(os.path.getmtime(full)):
                     continue
                 shutil.rmtree(full)
                 deleted.append(rel)

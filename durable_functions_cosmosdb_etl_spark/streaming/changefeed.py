@@ -257,20 +257,29 @@ def run_changefeed_transform(
       wired in (VERDICT r9 #1). When set, each drain loop head prices
       the WHOLE remaining backlog ``(cursor, latest]`` with the
       source's log-only :meth:`~..sinks.logtable.LogTable.
-      feed_interval_stats` estimate; a ``net_change_ratio`` at or
-      above this threshold means the interval churned (roughly) the
-      whole live table, where serving and applying the feed costs
-      more than re-deriving the target from the CURRENT snapshot — so
-      the drain takes the snapshot-reconcile path (the same
-      final-state-identical routine as truncation recovery, jumping
-      ``upto`` to latest past any batch cap) instead of paying the
-      saturated capture/diff backlog. ``2.0`` is the measured
-      crossover for update-churn capture feeds (an update is a
-      pre+post event PAIR, so full churn ≈ ratio 2.0 — the exact
-      width-100 point where SCALE.md §2b measured capture 2.74 s vs
-      snapshot ~2.4 s); the estimate is one log replay per loop head,
-      no Spark job. ``None`` (default) disables the gate — incremental
-      drains of any depth keep their frozen round-9 behavior. The
+      feed_interval_stats` estimate of what the snapshot diff reads;
+      a ``net_change_ratio`` at or above this threshold means serving
+      the feed reads about as much as re-deriving the target from the
+      CURRENT snapshot, so the drain takes the snapshot-reconcile path
+      (the same final-state-identical routine as truncation recovery,
+      jumping ``upto`` to latest past any batch cap) instead.
+      Calibration: a full diff reads every bucket at both ends and
+      prices at (lo + hi) / hi rows, so ``2.0`` fires only when the
+      whole table is read and did not grow over the backlog. The
+      ``etl_changefeed`` benchmark's cycles insert rows, so the gate
+      would not fire there even if it were turned on. Measured with
+      ``tools/stream_probe.py --gate-only`` (``changefeed_gate_vs_diff``:
+      a 64-bucket source whose backlog is one ``upsert_deferred`` plus
+      a ``compact``, so the diff reads the whole table; eager target;
+      local[4] on 4 vCPUs; 5 alternating pairs per round, equal final
+      states), the gate does not beat that diff: 5,000 docs with 60
+      changed drain in 2.73 s gated vs 2.74 s through the diff
+      (medians, gate won 3 of 5), and 50,000 docs with 500 changed in
+      3.46 s vs 3.20 s and 3.19 s vs 2.94 s over two rounds (won 0 and
+      1 of 5). Both paths rewrite the whole target; the gate trades
+      the diff's two-snapshot join for one snapshot read plus an
+      anti-join for stale keys. The estimate is one log walk per loop
+      head, no Spark job. ``None`` (default) disables the gate. The
       choice is recorded: ``stats["saturation_rebootstraps"]`` counts
       gated batches and ``stats["last_feed_info"]`` records tier
       ``"snapshot_rebootstrap"`` with the triggering estimate. The
@@ -278,22 +287,17 @@ def run_changefeed_transform(
       estimate flags as saturated reconciles without the feed ever
       being requested, even if it is also vacuum-truncated — setting
       the threshold is itself an explicit opt-in to snapshot
-      reconciliation. A truncated backlog the estimate does NOT flag
-      (uncaptured intervals price at the diff tier's bucket-read
-      cost, which caps near ratio 1.0, below a 2.0 threshold) still
-      surfaces per ``on_truncated``.
+      reconciliation (the truncation is still reported, see
+      ``fallback_reason``). A truncated backlog the estimate does NOT
+      flag still surfaces per ``on_truncated``.
 
     Returns ``{"batches", "rows_upserted", "rows_deleted",
     "from_version", "to_version", "lease_skipped", "rebootstrapped",
-    "capture_fallbacks", "saturation_rebootstraps", "last_feed_info"}``
-    — ``capture_fallbacks`` counts batches a capture-enabled
-    source served via the snapshot diff (vacuumed capture unit or
-    uncaptured commit in the interval; always 0 for capture-off
-    sources), mirrored into the audit row; ``last_feed_info`` is the
-    source's telemetry for the drain's final batch (tier, interval
-    units, net-change ratio — VERDICT r9 #5), so the saturation
-    signal is visible in the drain stats and audit row even when the
-    gate is off.
+    "saturation_rebootstraps", "last_feed_info"}`` —
+    ``last_feed_info`` is the drain's telemetry for its final batch
+    (tier, interval and the source's ``feed_interval_stats`` price —
+    VERDICT r9 #5), so the saturation signal is visible in the drain
+    stats and audit row even when the gate is off.
     """
     if sink not in ("upsert", "deferred"):
         raise ValueError(f"unknown sink mode: {sink!r}")
@@ -318,7 +322,6 @@ def run_changefeed_transform(
         "to_version": read_cursor(cursor_path),
         "lease_skipped": False,
         "rebootstrapped": False,
-        "capture_fallbacks": 0,
         "saturation_rebootstraps": 0,
         "last_feed_info": None,
     }
@@ -427,20 +430,13 @@ def _drain(
         # Saturation gate (VERDICT r9 #1 / SCALE.md §2b): price the
         # WHOLE remaining backlog — not just this batch's capped slice,
         # since the decision is "catch up incrementally vs re-derive
-        # once" — from the log alone; a backlog that churned ~the whole
-        # live table is served cheaper by the current snapshot than by
-        # replaying its own event stream. Bootstrap (cur < 0) is
-        # already a snapshot read and skips the estimate.
+        # once" — from the log alone; a backlog whose diff would read
+        # ~the whole table at both ends is reconciled from one read of
+        # the current snapshot instead. Bootstrap (cur < 0) is already
+        # a snapshot read and skips the estimate.
         saturated = None
         if rebootstrap_saturation is not None and cur >= 0:
-            # saturation_cutoff bounds the log walk at depth (VERDICT
-            # r10 #5): the gate needs "ratio >= threshold", not the
-            # exact ratio, so the estimate stops as soon as the
-            # comparison is proven — a 10k-commit backlog no longer
-            # costs seconds of driver JSON before the drain chooses.
-            est = source.feed_interval_stats(
-                cur, latest, saturation_cutoff=rebootstrap_saturation
-            )
+            est = source.feed_interval_stats(cur, latest)
             if est["net_change_ratio"] >= rebootstrap_saturation:
                 saturated = est
         feed = None
@@ -473,23 +469,14 @@ def _drain(
         else:
             try:
                 feed = source.changes(cur, upto)
-                # Observability passthrough: a capture-enabled source
-                # that fell back to the snapshot diff recorded why —
-                # count it into the drain stats (and thus the audit
-                # row), so a silently-degraded cost class shows up in
-                # the consumer's own telemetry, not just the producer's
-                # log line.
+                # Saturation telemetry passthrough (VERDICT r9 #5): the
+                # drain's stats/audit row carry the source's interval
+                # price for the final batch, so an operator sees how
+                # close the feed runs to the re-bootstrap threshold
+                # without querying the source handle.
                 info = getattr(source, "last_feed_info", None)
                 if info:
-                    # Saturation telemetry passthrough (VERDICT r9 #5):
-                    # the drain's stats/audit row carry the source's
-                    # tier + net-change ratio for the final batch, so
-                    # an operator sees how close the feed runs to the
-                    # re-bootstrap threshold without querying the
-                    # source handle.
                     stats["last_feed_info"] = dict(info)
-                if info and info.get("fallback_reason"):
-                    stats["capture_fallbacks"] += 1
             except FeedTruncatedError as e:
                 truncated = e
             except ValueError as e:
@@ -500,23 +487,12 @@ def _drain(
                     raise
                 # ADVICE r10: a no-op final iteration must not leave a
                 # PREVIOUS batch's telemetry posing as this interval's
-                # in the audit row — stamp the empty serve explicitly.
-                # The cost fields come from the log-only estimator,
-                # not hardcoded zeros: an interval that churned K rows
-                # and then emptied the table also lands here, and the
-                # audit row must not claim it was change-free
-                # (code-review r11).
-                est_empty = source.feed_interval_stats(cur, upto)
-                stats["last_feed_info"] = {
-                    "tier": "empty",
-                    "from": cur,
-                    "to": upto,
-                    "fallback_reason": None,
-                    "interval_units": est_empty["interval_units"],
-                    "net_change_ratio": est_empty["net_change_ratio"],
-                    "forced_full_diff": est_empty["forced_full_diff"],
-                    "estimate_truncated": est_empty["estimate_truncated"],
-                }
+                # in the audit row — stamp the empty serve explicitly,
+                # with the estimator's price of the interval.
+                stats["last_feed_info"] = _feed_info(
+                    "empty", cur, upto, None,
+                    source.feed_interval_stats(cur, upto),
+                )
         if saturated is not None:
             # Same final-state-identical routine as truncation
             # recovery: target := transform(snapshot(latest)) including
@@ -551,18 +527,9 @@ def _drain(
             stats["rows_deleted"] += n_dels
             stats["rebootstrapped"] = True
             stats["saturation_rebootstraps"] += 1
-            stats["last_feed_info"] = {
-                "tier": "snapshot_rebootstrap",
-                "from": cur,
-                "to": latest,
-                "fallback_reason": sat_reason,
-                "interval_units": saturated["interval_units"],
-                # a cutoff-bounded estimate is a LOWER bound — the
-                # walk stopped once the gate comparison was proven
-                "net_change_ratio": saturated["net_change_ratio"],
-                "estimate_truncated": saturated["estimate_truncated"],
-                "forced_full_diff": saturated["forced_full_diff"],
-            }
+            stats["last_feed_info"] = _feed_info(
+                "snapshot_rebootstrap", cur, latest, sat_reason, saturated
+            )
             n_batches += 1
             stats["batches"] = n_batches
         elif truncated is not None:
@@ -582,26 +549,15 @@ def _drain(
             # Same telemetry shape as the saturation branch — including
             # the interval estimate keys every other path carries (the
             # estimate is log-only, so it works on the truncated
-            # interval the feed itself could not serve).
-            # cur < 0 = a truncated capped BOOTSTRAP: there is no
-            # interval to price (version -1 does not exist).
-            est = source.feed_interval_stats(cur, latest) if cur >= 0 else None
-            stats["last_feed_info"] = {
-                "tier": "snapshot_rebootstrap",
-                "from": cur,
-                "to": latest,
-                "fallback_reason": str(truncated),
-                "interval_units": est["interval_units"] if est else None,
-                "net_change_ratio": (
-                    est["net_change_ratio"] if est else None
-                ),
-                "forced_full_diff": (
-                    est["forced_full_diff"] if est else None
-                ),
-                "estimate_truncated": (
-                    est["estimate_truncated"] if est else None
-                ),
-            }
+            # interval the feed itself could not serve). cur < 0 = a
+            # truncated capped BOOTSTRAP: there is no interval to price
+            # (version -1 does not exist), so the keys read None.
+            est = source.feed_interval_stats(max(cur, 0), latest)
+            if cur < 0:
+                est = dict.fromkeys(est)
+            stats["last_feed_info"] = _feed_info(
+                "snapshot_rebootstrap", cur, latest, str(truncated), est
+            )
             n_batches += 1
             stats["batches"] = n_batches
         elif feed is not None:
@@ -675,6 +631,16 @@ def _drain(
         )
         stats["to_version"] = upto
     return stats
+
+
+def _feed_info(tier: str, cur: int, upto: int, reason, est: dict) -> dict:
+    """One ``last_feed_info`` schema for every drain path: the same
+    keys ``LogTable.changes`` records for a diff serve, with the
+    interval's ``feed_interval_stats`` price spread in."""
+    return {
+        "tier": tier, "from": cur, "to": upto, "fallback_reason": reason,
+        **est,
+    }
 
 
 def _renew_or_die(renew) -> None:

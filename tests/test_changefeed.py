@@ -50,6 +50,14 @@ def test_changefeed_replicates_and_transforms(spark, tmp_path):
     stats = run_changefeed_transform(spark, a, b, cur, transform=upcase)
     assert stats["rows_upserted"] == 1 and stats["rows_deleted"] == 1
     assert _rows(b.snapshot(), "id", "val") == [(1, "Q"), (2, "Z")]
+    # the source's serve telemetry (tier, interval and its price, VERDICT
+    # r9 #5) is mirrored into the drain stats and so the audit row
+    info = a.last_feed_info
+    assert {k: info[k] for k in ("tier", "from", "to", "fallback_reason")} == {
+        "tier": "diff", "from": 1, "to": 3, "fallback_reason": None,
+    }
+    assert info["interval_units"] >= 1 and info["net_change_ratio"] > 0
+    assert stats["last_feed_info"] == info
 
     # drained: a third run is a no-op (no new target versions)
     bv = b.version()
@@ -556,51 +564,6 @@ def test_changefeed_lease_heartbeat_and_loss(spark, tmp_path):
     assert (5, "v") in _rows(b.snapshot(), "id", "val")
 
 
-def test_changefeed_counts_capture_fallbacks(spark, tmp_path):
-    """The drain mirrors the producer's capture→diff degradation into
-    its own stats (and thus the audit row): a batch whose interval
-    contains an uncaptured commit (or a vacuumed capture unit) bumps
-    capture_fallbacks; fully-captured batches and capture-off sources
-    report 0."""
-    a = LogTable(
-        spark, str(tmp_path / "a"), key="id", n_buckets=4,
-        change_capture=True,
-    )
-    b = _mk(spark, tmp_path, "b")
-    cur = str(tmp_path / "cursor.json")
-    a.create(spark.createDataFrame([(1, "x")], "id long, val string"))
-    stats = run_changefeed_transform(spark, a, b, cur)
-    assert stats["capture_fallbacks"] == 0  # bootstrap reads a snapshot
-    # uncaptured commit (deferred upsert) in the interval → fallback
-    a.upsert_deferred(spark.createDataFrame([(2, "y")], "id long, val string"))
-    stats = run_changefeed_transform(spark, a, b, cur)
-    assert stats["batches"] == 1 and stats["capture_fallbacks"] == 1
-    # fully-captured interval → served from capture, no fallback
-    a.upsert(spark.createDataFrame([(3, "z")], "id long, val string"))
-    stats = run_changefeed_transform(spark, a, b, cur)
-    assert stats["batches"] == 1 and stats["capture_fallbacks"] == 0
-    # capture-OFF source: the diff IS its tier — zero fallbacks, no
-    # recorded reason, per-feed logs stay quiet (code-review r8: a
-    # plain source previously counted every batch as a "fallback")
-    c = _mk(spark, tmp_path, "c")
-    d = _mk(spark, tmp_path, "d")
-    cur2 = str(tmp_path / "cursor2.json")
-    c.create(spark.createDataFrame([(1, "x")], "id long, val string"))
-    c.upsert(spark.createDataFrame([(2, "y")], "id long, val string"))
-    stats = run_changefeed_transform(spark, c, d, cur2)
-    c.upsert(spark.createDataFrame([(3, "z")], "id long, val string"))
-    stats = run_changefeed_transform(spark, c, d, cur2)
-    assert stats["batches"] == 1 and stats["capture_fallbacks"] == 0
-    info = c.last_feed_info
-    assert {k: info[k] for k in ("tier", "from", "to", "fallback_reason")} == {
-        "tier": "diff", "from": 1, "to": 2, "fallback_reason": None,
-    }
-    # saturation telemetry (VERDICT r9 #5) rides along on every serve
-    # and is mirrored into the drain stats
-    assert info["interval_units"] >= 1 and info["net_change_ratio"] > 0
-    assert stats["last_feed_info"] == info
-
-
 def test_changefeed_audit_rows(spark, tmp_path):
     """Per-drain run audit (VERDICT r7 #2): every drain that ran
     appends one OrchestrationRun row (EtlProcess.cs:120-130,
@@ -691,89 +654,18 @@ def test_changefeed_audit_rows(spark, tmp_path):
     assert info["batches"] == 1 and info["rows_upserted"] == 1
 
 
-def test_changefeed_drain_over_capture_source(spark, tmp_path):
-    """The consumer is tier-agnostic: a capture-enabled source serves
-    its feed from stored change units (O(changed rows), proven by
-    use_capture=True succeeding over the whole drained interval), and
-    the drained target converges identically — including deletes and
-    an interval spanning a compaction."""
-    a = LogTable(
-        spark, str(tmp_path / "a"), key="id", n_buckets=4,
-        change_capture=True,
-    )
-    b = _mk(spark, tmp_path, "b")
-    cur = str(tmp_path / "cursor.json")
-    a.create(
-        spark.createDataFrame(
-            [(i, f"v{i}") for i in range(6)], "id long, val string"
-        )
-    )
-    run_changefeed_transform(spark, a, b, cur, transform=upcase)
-    a.upsert(spark.createDataFrame([(2, "w2"), (7, "v7")], "id long, val string"))
-    a.delete_keys(spark.createDataFrame([(0,)], "id long"))
-    a.compact()
-    # the whole pending interval is capture-complete
-    assert a.changes(read_cursor(cur), a.version(), use_capture=True) is not None
-    stats = run_changefeed_transform(spark, a, b, cur, transform=upcase)
-    assert stats["rows_upserted"] == 2 and stats["rows_deleted"] == 1
-    assert _rows(b.snapshot(), "id", "val") == sorted(
-        [(i, f"V{i}") for i in range(1, 6) if i != 2]
-        + [(2, "W2"), (7, "V7")]
-    )
-
-
-def test_changefeed_capture_source_across_schema_evolution(spark, tmp_path):
-    """The CAPTURE serving path survives the source gaining a column
-    mid-stream (VERDICT r7 #1a — the snapshot-diff path had this test;
-    the capture path did not): change units written before the
-    evolution lack the new column, units after it carry it, and the
-    net-reduction union treats the missing side as NULL. The drained
-    interval is proven capture-served (use_capture=True succeeds and
-    last_feed_info records the tier), and the consumer propagates the
-    widened rows into the target."""
-    a = LogTable(
-        spark, str(tmp_path / "a"), key="id", n_buckets=4,
-        change_capture=True,
-    )
-    b = _mk(spark, tmp_path, "b")
-    cur = str(tmp_path / "cursor.json")
-    a.create(spark.createDataFrame([(1, "x"), (2, "y")], "id long, val string"))
-    run_changefeed_transform(spark, a, b, cur)
-    # pre-evolution commit (old schema), then the widened commit, then a
-    # delete whose captured rows carry the widened schema
-    a.upsert(spark.createDataFrame([(4, "p")], "id long, val string"))
-    a.upsert(
-        spark.createDataFrame(
-            [(2, "z", 7), (3, "w", 9)], "id long, val string, score long"
-        )
-    )
-    a.delete_keys(spark.createDataFrame([(1,)], "id long"))
-    # the whole pending interval is capture-complete across the boundary
-    lo = read_cursor(cur)
-    cap = a.changes(lo, a.version(), use_capture=True)
-    assert sorted(cap.columns) == ["change", "id", "score", "val"]
-    stats = run_changefeed_transform(spark, a, b, cur)
-    assert a.last_feed_info["tier"] == "capture"
-    assert stats["rows_upserted"] == 3 and stats["rows_deleted"] == 1
-    got = {
-        r["id"]: (r["val"], r["score"]) for r in b.snapshot().collect()
-    }
-    assert got == {2: ("z", 7), 3: ("w", 9), 4: ("p", None)}
-
-
 def test_saturation_gate_rebootstraps_instead_of_draining_backlog(
     spark, tmp_path
 ):
     """VERDICT r9 #1 / SCALE.md §2b wired in: a consumer waking behind
-    a backlog that churned ~the whole live table re-derives the target
-    from the CURRENT snapshot instead of replaying the saturated
-    capture stream — gated by the log-only feed_interval_stats
-    estimate, recorded in the drain stats, and FINAL-STATE-IDENTICAL
-    to the ungated incremental drain."""
-    src = LogTable(
-        spark, str(tmp_path / "src"), key="id", n_buckets=4,
-        change_capture=True,
-    )
+    a backlog whose diff reads the whole source table at both ends — a
+    deferred upsert plus a compact, the shape stream_probe.py's
+    changefeed_gate_vs_diff row measures — re-derives the target from
+    the CURRENT snapshot
+    instead, gated by the log-only feed_interval_stats estimate,
+    recorded in the drain stats, and FINAL-STATE-IDENTICAL to the
+    ungated incremental drain."""
+    src = _mk(spark, tmp_path, "src")
     rows = [(i, f"v{i}") for i in range(40)]
     src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
     gated = _mk(spark, tmp_path, "gated")
@@ -787,15 +679,16 @@ def test_saturation_gate_rebootstraps_instead_of_draining_backlog(
     )
     run_changefeed_transform(spark, src, control, cur_c, transform=upcase)
     assert s0["saturation_rebootstraps"] == 0
-    # saturated backlog: 3 full-update-churn commits (ratio = 6.0)
-    for gen in ("w", "x", "y"):
-        src.upsert(
-            spark.createDataFrame(
-                [(i, f"{gen}{i}") for i in range(40)], "id long, val string"
-            )
+    # saturated backlog: a deferred upsert, a delete the reconcile must
+    # propagate, then a compact — the diff reads the whole table at
+    # both ends, priced (40 + 39) / 39 rows
+    src.upsert_deferred(
+        spark.createDataFrame(
+            [(i, f"w{i}") for i in range(5)], "id long, val string"
         )
-    # plus a delete the reconcile must propagate
-    src.delete_keys(spark.createDataFrame([(0,)], "id long"))
+    )                                                                # v1
+    src.delete_keys(spark.createDataFrame([(0,)], "id long"))        # v2
+    src.compact()                                                    # v3
     stats = run_changefeed_transform(
         spark, src, gated, cur_g, transform=upcase,
         rebootstrap_saturation=2.0,
@@ -804,9 +697,11 @@ def test_saturation_gate_rebootstraps_instead_of_draining_backlog(
     assert stats["saturation_rebootstraps"] == 1
     assert stats["rebootstrapped"] is True
     assert stats["batches"] == 1, "one reconcile, not N capped batches"
-    info = stats["last_feed_info"]
-    assert info["tier"] == "snapshot_rebootstrap"
-    assert info["net_change_ratio"] >= 2.0
+    assert stats["last_feed_info"] == {
+        "tier": "snapshot_rebootstrap", "from": 0, "to": 3,
+        "fallback_reason": None, **src.feed_interval_stats(0, 3),
+    }
+    assert stats["last_feed_info"]["net_change_ratio"] >= 2.0
     assert read_cursor(cur_g) == src.version()
     # identical final state to the ungated incremental control drain
     sc = run_changefeed_transform(
@@ -824,21 +719,20 @@ def test_saturation_gate_rebootstraps_instead_of_draining_backlog(
         rebootstrap_saturation=2.0,
     )
     assert stats["saturation_rebootstraps"] == 0
-    assert stats["last_feed_info"]["tier"] == "capture"
+    assert stats["last_feed_info"]["tier"] == "diff"
     assert stats["rows_upserted"] == 1
 
 
 def test_saturation_gate_fires_on_uncaptured_compact_backlog(
     spark, tmp_path
 ):
-    """VERDICT r10 #2: an uncaptured compact in the backlog forces the
-    diff tier to a FULL table diff — the one serve class where the
-    snapshot reconcile wins by the most — and round 10's estimator
-    priced it at ~0, so the gate could never fire on it. Now the
-    interval prices at both sides of the whole table
-    (``forced_full_diff``), the gated drain reconciles, and the final
-    state matches the ungated incremental control."""
-    src = _mk(spark, tmp_path, "src")  # capture OFF: diff tier only
+    """VERDICT r10 #2: a compact in the backlog forces the diff to a
+    FULL table diff — the one serve class where the snapshot reconcile
+    wins by the most — and round 10's estimator priced it at ~0, so the
+    gate could never fire on it. Now the interval prices at both sides
+    of the whole table, the gated drain reconciles, and the final state
+    matches the ungated incremental control."""
+    src = _mk(spark, tmp_path, "src")
     rows = [(i, f"v{i}") for i in range(40)]
     src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
     gated = _mk(spark, tmp_path, "gated")
@@ -847,8 +741,8 @@ def test_saturation_gate_fires_on_uncaptured_compact_backlog(
     cur_c = str(tmp_path / "cur_c.json")
     for c, t in ((cur_g, gated), (cur_c, control)):
         run_changefeed_transform(spark, src, t, c, transform=upcase)
-    # backlog: a partial update, a delete, then a compact — all
-    # uncaptured. lo = 40 rows, hi = 39 → priced 79/39 ≈ 2.03 ≥ 2.0.
+    # backlog: a partial update, a delete, then a compact.
+    # lo = 40 rows, hi = 39 → priced 79/39 ≈ 2.03 ≥ 2.0.
     src.upsert(
         spark.createDataFrame(
             [(i, f"w{i}") for i in range(5)], "id long, val string"
@@ -857,7 +751,7 @@ def test_saturation_gate_fires_on_uncaptured_compact_backlog(
     src.delete_keys(spark.createDataFrame([(0,)], "id long"))        # v2
     src.compact()                                                    # v3
     est = src.feed_interval_stats(0, 3)
-    assert est["forced_full_diff"] is True
+    assert est["interval_rows"] == 40 + 39
     assert est["net_change_ratio"] >= 2.0
     stats = run_changefeed_transform(
         spark, src, gated, cur_g, transform=upcase,
@@ -866,17 +760,7 @@ def test_saturation_gate_fires_on_uncaptured_compact_backlog(
     assert stats["saturation_rebootstraps"] == 1
     info = stats["last_feed_info"]
     assert info["tier"] == "snapshot_rebootstrap"
-    # The gate's cutoff walk may prove saturation from the touched
-    # buckets' lo+hi bound BEFORE reaching the compact (the round-11
-    # lazy-lo early exit: this backlog's 5-key churn alone touches
-    # every bucket, a de-facto full diff) — the audit then records a
-    # truncated estimate instead of the forced-full-diff
-    # classification. Either telemetry is honest; the UNCUT estimate
-    # above already pinned the classification itself.
-    assert (
-        info["forced_full_diff"] is True
-        or info["estimate_truncated"] is True
-    )
+    assert info["net_change_ratio"] == est["net_change_ratio"]
     assert info["fallback_reason"] is None  # nothing vacuumed here
     # ungated control pays the full diff but lands on the same state
     run_changefeed_transform(spark, src, control, cur_c, transform=upcase)
@@ -896,23 +780,21 @@ def test_saturated_reconcile_surfaces_truncation(spark, tmp_path, caplog):
     fallback_reason in the stats/audit row."""
     import logging as _logging
 
-    src = LogTable(
-        spark, str(tmp_path / "src"), key="id", n_buckets=4,
-        change_capture=True,
-    )
+    src = _mk(spark, tmp_path, "src")
     rows = [(i, f"v{i}") for i in range(40)]
     src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
     gated = _mk(spark, tmp_path, "gated")
     cur_g = str(tmp_path / "cur_g.json")
     run_changefeed_transform(spark, src, gated, cur_g, transform=upcase)
-    # saturated backlog (3 full churns, ratio 6.0)…
+    # saturated backlog (3 full churns: the diff reads the whole table
+    # at both ends, ratio 2.0)…
     for gen in ("w", "x", "y"):
         src.upsert(
             spark.createDataFrame(
                 [(i, f"{gen}{i}") for i in range(40)], "id long, val string"
             )
         )                                                            # v1-v3
-    # …whose capture units and pre-churn data units vacuum reclaims
+    # …whose pre-churn data units vacuum reclaims
     src.vacuum(retain_versions=0)
     assert src.feed_truncation_missing(0, 3)
     # the ungated feed would RAISE (error mode) — the alert exists
@@ -964,17 +846,14 @@ def test_empty_final_interval_stamps_feed_info(spark, tmp_path):
 
 
 def test_empty_final_interval_stamps_real_churn(spark, tmp_path):
-    """Code-review r11: the empty-serve stamp reports the (memoized)
-    estimator's cost fields, not hardcoded zeros — an interval that
-    churned rows and then emptied the table also raises "both versions
-    are empty", and the audit row must not claim it was change-free.
-    Staged: captured churn + delete-all + compact, then vacuum holes
-    the capture so the serve falls to the diff tier, which finds both
-    interval ends empty."""
-    src = LogTable(
-        spark, str(tmp_path / "src"), key="id", n_buckets=2,
-        change_capture=True,
-    )
+    """Code-review r11: the empty-serve stamp carries the estimator's
+    price of the interval, not hardcoded values. Staged: churn +
+    delete-all + compact past the consumer's cursor, so both interval
+    ends are empty and the serve raises "both versions are empty". The
+    stamp is exactly what feed_interval_stats returned for that
+    interval — zero rows here, since the diff reads nothing at either
+    end however much the interval churned."""
+    src = _mk(spark, tmp_path, "src", n_buckets=2)
     tgt = _mk(spark, tmp_path, "tgt")
     cur = str(tmp_path / "cursor.json")
     src.create(
@@ -988,17 +867,20 @@ def test_empty_final_interval_stamps_real_churn(spark, tmp_path):
     )                                                            # v2
     src.delete_keys(spark.createDataFrame([(2,), (3,)], "id long"))  # v3
     src.compact()                                                # v4
-    deleted = src.vacuum(retain_versions=0)
-    assert any("_changes/" in d for d in deleted), (
-        "test setup: vacuum must hole the capture tier"
-    )
+    priced = []
+    real = src.feed_interval_stats
+
+    def spy(from_version, to_version=None):
+        est = real(from_version, to_version)
+        priced.append(((from_version, to_version), est))
+        return est
+
+    src.feed_interval_stats = spy
     stats = run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
-    info = stats["last_feed_info"]
-    assert info["tier"] == "empty"
-    assert (info["from"], info["to"]) == (1, 4)
-    # v2's 2 inserts + v3's 2 deletes priced against an empty live
-    # table — decisively non-zero, the churn the old hardcoded stamp
-    # erased
-    assert info["net_change_ratio"] > 0.0
-    assert info["interval_units"] >= 2
+    interval, est = priced[-1]
+    assert interval == (1, 4)
+    assert stats["last_feed_info"] == {
+        "tier": "empty", "from": 1, "to": 4, "fallback_reason": None, **est,
+    }
+    assert est["interval_rows"] == 0 and est["net_change_ratio"] == 0.0
     assert read_cursor(cur) == src.version()

@@ -219,6 +219,18 @@ def test_changes_classifies_insert_update_delete(spark, tmp_path):
     # unchanged keys are absent; adjacent-version feeds compose
     assert {r["id"] for r in t.changes(0, 1).collect()} == {2, 4}
     assert {r["id"] for r in t.changes(2, 3).collect()} == {1}
+    # the feed is NET: a value updated away and back cancels, a
+    # same-value rewrite and a delete of a key that never existed are
+    # no change, and an interval spanning a compact nets the same
+    t.upsert(_mk(spark, [(2, "x")]))                              # v4
+    t.upsert(_mk(spark, [(2, "B2"), (4, "d")]))                   # v5
+    t.delete_keys(spark.createDataFrame([(9,)], "id long"))       # v6
+    t.compact()                                                   # v7
+    assert t.changes(3, 7).count() == 0
+    assert {
+        r["id"]: (r["change"], r["val"])
+        for r in t.changes(0, 7).collect()
+    } == got
 
 
 def test_changes_default_to_latest(spark, tmp_path):
@@ -311,7 +323,7 @@ def test_old_checkpoint_bounds_replay_at_old_versions(spark, tmp_path):
     checkpoint exists (code-review r11: superseded checkpoints survive
     on disk, and without consulting them a lagging feed cursor's
     lo-side rollup — exactly the deep-backlog case the saturation
-    cutoff bounds — silently degraded to an O(full history) replay).
+    gate prices — silently degraded to an O(full history) replay).
     Proven the same way as the never-opens test above: corrupt a
     pre-checkpoint entry; a read BETWEEN the two checkpoints must not
     open it."""
@@ -1195,7 +1207,7 @@ def test_snapshot_time_travel_to_vacuumed_version_typed_error(spark, tmp_path):
     assert _rows(t.snapshot(version=1)) == [(1, "a2"), (2, "b2"), (3, "c2")]
 
 
-# ------------------------------------------------------------ CDC (round 7)
+# ------------------------------------------------------ change feed (round 7)
 
 
 def _feed_rows(df):
@@ -1203,117 +1215,6 @@ def _feed_rows(df):
         tuple(None if c == "__ignore" else r[c] for c in sorted(df.columns))
         for r in df.collect()
     )
-
-
-def test_change_capture_equivalence_and_modes(spark, tmp_path):
-    """Stored change capture (Delta-CDF analog): every interval served
-    from capture must equal the snapshot-diff byte for byte — including
-    a value-revert (must cancel), a same-value rewrite (no change), a
-    delete of a nonexistent key (no change), schema evolution, and an
-    interval SPANNING a compaction (the case the diff path degrades on
-    and capture does not)."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b"), (3, "c")]))           # v0
-    t.upsert(_mk(spark, [(2, "b2"), (4, "d")]))                    # v1
-    t.upsert(_mk(spark, [(2, "b")]))                               # v2 revert
-    t.delete_keys(spark.createDataFrame([(1,), (9,)], "id long"))  # v3
-    t.compact()                                                    # v4
-    t.upsert(_mk(spark, [(3, "c")]))                               # v5 no-op
-    # v6: schema evolution — new column arrives
-    t.upsert(
-        spark.createDataFrame(
-            [(5, "e", 7)], "id long, val string, score long"
-        )
-    )
-    latest = t.version()
-    assert latest == 6
-    for a in range(latest):
-        for b in range(a + 1, latest + 1):
-            cap = t.changes(a, b, use_capture=True)
-            diff = t.changes(a, b, use_capture=False)
-            assert _feed_rows(cap) == _feed_rows(diff), (a, b)
-    # recorded modes match the op semantics
-    modes = {
-        e["version"]: e.get("changes", {}).get("mode")
-        for e in t.history()
-    }
-    assert modes[0] == "added_units"      # create
-    assert modes[1] == "unit" and modes[2] == "unit"
-    assert modes[3] == "unit"             # delete
-    assert modes[4] == "none"             # compact: layout only
-    assert modes[5] == "unit"             # no-op upsert still captured
-    # the no-op upsert's net feed is empty
-    assert t.changes(4, 5, use_capture=True).count() == 0
-    # interval containing ONLY the compact: empty feed, table schema
-    empty = t.changes(3, 4, use_capture=True)
-    assert empty.count() == 0 and "change" in empty.columns
-
-
-def test_change_capture_fallback_on_uncaptured_commits(spark, tmp_path):
-    """Deferred upserts (and any commit from a capture-off writer) are
-    uncaptured: auto mode falls back to the snapshot diff with equal
-    results; use_capture=True refuses loudly."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b")]))
-    t.upsert_deferred(_mk(spark, [(1, "a2"), (3, "c")]))
-    t.upsert(_mk(spark, [(2, "b2")]))
-    with pytest.raises(ValueError, match="uncaptured commit"):
-        t.changes(0, t.version(), use_capture=True)
-    auto = _feed_rows(t.changes(0, t.version()))
-    diff = _feed_rows(t.changes(0, t.version(), use_capture=False))
-    assert auto == diff
-    # the sub-interval consisting only of captured commits still serves
-    assert _feed_rows(t.changes(1, 2, use_capture=True)) == _feed_rows(
-        t.changes(1, 2, use_capture=False)
-    )
-
-
-def test_change_capture_vacuum_retention_and_fallback(spark, tmp_path):
-    """vacuum reclaims change units outside the retention window (and
-    orphans); a feed whose interval lost its capture falls back to the
-    snapshot diff, whose truncation check governs — never a raw
-    missing-file error, never a wrong answer."""
-    import os as _os
-
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b"), (3, "c")]))   # v0
-    t.upsert(_mk(spark, [(1, "a1")]))                      # v1
-    t.upsert(_mk(spark, [(2, "b1")]))                      # v2
-    t.upsert(_mk(spark, [(3, "c1")]))                      # v3
-    # orphan change dir (crashed commit simulation)
-    _os.makedirs(str(tmp_path / "t" / "_changes" / "c99-deadbeef"))
-    deleted = t.vacuum(retain_versions=1)
-    ch = set(_os.listdir(str(tmp_path / "t" / "_changes")))
-    # capture for versions > horizon (= latest-1 = 2) survives: c3 only
-    # (unit names carry a writer-unique uuid suffix — ADVICE r7: racing
-    # writers must never scribble over each other's change rows)
-    assert {d.split("-")[0] for d in ch} == {"c3"}, ch
-    assert all("-" in d for d in ch), ch
-    assert any(d.startswith("_changes/") for d in deleted)
-    # inside retention: still capture-served
-    assert _feed_rows(t.changes(2, 3, use_capture=True)) == _feed_rows(
-        t.changes(2, 3, use_capture=False)
-    )
-    # older cursor: capture gone → fallback to diff; the diff path's
-    # own retention guard decides (truncated here, since v1's units
-    # were rewritten and vacuumed)
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        FeedTruncatedError,
-    )
-
-    with pytest.raises((FeedTruncatedError, ValueError)):
-        t.changes(1, 3, use_capture=True)  # refuses: unit vacuumed
-    with pytest.raises(FeedTruncatedError):
-        t.changes(0, 3)  # auto: fallback diff raises typed truncation
 
 
 def test_schema_frame_unions_across_commits(spark, tmp_path):
@@ -1368,18 +1269,14 @@ def test_vacuum_min_age_grace_protects_inflight_readers(spark, tmp_path):
     concurrent read, a unit is reclaimed only once it has been
     horizon-dead that long — an in-flight reader whose plan passed the
     check always finishes. Grace zero keeps immediate reclaim."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=4,
-        change_capture=True,
-    )
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=4)
     t.create(_mk(spark, [(i, f"v{i}") for i in range(8)]))
     t.upsert(_mk(spark, [(i, f"w{i}") for i in range(8)]))  # kills v0 units
     # in-flight reader: plan built, truncation check passed
-    feed = t.changes(0, 1, use_capture=False)
-    # graced vacuum: the just-dead v0 units (and v1's capture) survive
+    feed = t.changes(0, 1)
+    # graced vacuum: the just-dead v0 units survive
     deleted = t.vacuum(retain_versions=0, min_age_seconds=3600)
     assert not any(d.startswith("data/") for d in deleted), deleted
-    assert not any(d.startswith("_changes/") for d in deleted), deleted
     # the in-flight read completes — never a raw missing-file error
     assert feed.count() == 8
     # orphan dirs get the same shield (an in-flight commit's data dir)
@@ -1393,68 +1290,47 @@ def test_vacuum_min_age_grace_protects_inflight_readers(spark, tmp_path):
     deleted = t.vacuum(retain_versions=0)
     assert any(d.startswith("data/c0") for d in deleted), deleted
     assert "data/c99" in deleted
-    assert any(d.startswith("_changes/") for d in deleted), deleted
 
 
-def test_change_capture_vacuum_fallback_is_observable(spark, tmp_path, caplog):
-    """A vacuumed capture unit silently degraded the feed's cost class
-    to the snapshot diff (correct but unobservable — VERDICT r7 #1b).
-    Now the degradation is surfaced twice: ``last_feed_info`` records
-    the serving tier and the fallback reason, and a WARNING is logged.
-    Scenario engineered so the DIFF stays fully computable after the
-    capture is reclaimed: key B lands in a bucket EMPTY at v0 (its
-    insert is captured as ``added_units``), is rewritten at v2 (killing
-    v1's unit once vacuumed), and the interval's only touched bucket
-    held nothing at the interval start — so the diff reads no vacuumed
-    unit while the capture tier provably lost v1's insert record."""
-    import logging as _logging
+def test_legacy_capture_log_reads_and_vacuums(spark, tmp_path):
+    """Tables written while LogTable still had a stored change-capture
+    tier carry a ``changes`` key in some log entries and change units
+    under ``_changes/``. Nothing reads either any more: such an entry
+    is served by the snapshot diff and prices exactly like the same
+    entry without the key, and vacuum reclaims the leftover dir as an
+    orphan under the same grace clock (the dir's own mtime) as orphan
+    commit dirs."""
+    import json as _json
 
-    from pyspark.sql import functions as F
-
-    # two keys hashing to different buckets (n_buckets=2)
-    by_bucket = {
-        r["b"]: r["id"]
-        for r in spark.range(50)
-        .select("id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("b"))
-        .collect()
+    root = tmp_path / "t"
+    t = LogTable(spark, str(root), key="id", n_buckets=2)
+    t.create(_mk(spark, [(1, "a"), (2, "b")]))                   # v0
+    t.upsert(_mk(spark, [(1, "a1"), (3, "c")]))                  # v1
+    before = t.feed_interval_stats(0, 1)
+    log_file = root / "_log" / f"{1:020d}.json"
+    entry = _json.loads(log_file.read_text())
+    entry["changes"] = {
+        "mode": "unit", "unit": "_changes/c1-deadbeef", "rows": 3,
     }
-    a_key, b_key = by_bucket[0], by_bucket[1]
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
+    log_file.write_text(_json.dumps(entry))
+    os.makedirs(root / "_changes" / "c1-deadbeef")
+    legacy = LogTable(spark, str(root), key="id", n_buckets=2)
+    assert legacy.feed_interval_stats(0, 1) == before
+    assert _feed_rows(legacy.changes(0, 1)) == [
+        ("insert", 3, "c"), ("update", 1, "a1"),
+    ]
+    assert legacy.last_feed_info["tier"] == "diff"
+    # a fresh leftover is inside the grace, like a fresh orphan dir;
+    # retain_versions=1 keeps v0 readable for the feed below
+    assert "_changes/c1-deadbeef" not in legacy.vacuum(
+        retain_versions=1, min_age_seconds=3600
     )
-    t.create(_mk(spark, [(a_key, "a0")]))   # v0: bucket(A) only
-    t.upsert(_mk(spark, [(b_key, "b0")]))   # v1: empty bucket → added_units
-    t.upsert(_mk(spark, [(b_key, "b1")]))   # v2: rewrites bucket(B)
-    # pre-vacuum the interval is capture-complete, and the info says so
-    assert _feed_rows(t.changes(1, 2)) == [("update", b_key, "b1")]
-    # interval (1,2] = one captured update of one key (pre+post = 2
-    # event rows) over a 2-row live table → ratio exactly 1.0
-    assert t.last_feed_info == {
-        "tier": "capture", "from": 1, "to": 2, "fallback_reason": None,
-        "interval_units": 1, "net_change_ratio": 1.0,
-        "forced_full_diff": False, "estimate_truncated": False,
-    }
-    # vacuum kills v1's data unit (v1's capture WAS that unit) — the
-    # current snapshot and v2's change unit survive untouched
-    t.vacuum(retain_versions=0)
-    with caplog.at_level(
-        _logging.WARNING,
-        logger="durable_functions_cosmosdb_etl_spark.sinks.logtable",
-    ):
-        got = _feed_rows(t.changes(0, 2))
-    # the diff is computable: the only touched bucket was EMPTY at v0,
-    # so no vacuumed unit is read — net feed = B inserted at its v2 value
-    assert got == [("insert", b_key, "b1")]
-    info = t.last_feed_info
-    assert info["tier"] == "diff" and "vacuumed" in info["fallback_reason"]
-    assert any(
-        "fell back to the snapshot diff" in r.message
-        for r in caplog.records
-    )
-    # required-capture mode refuses loudly on the same interval
-    with pytest.raises(ValueError, match="vacuumed"):
-        t.changes(0, 2, use_capture=True)
+    assert (root / "_changes" / "c1-deadbeef").is_dir()
+    assert legacy.vacuum(retain_versions=1) == ["_changes/c1-deadbeef"]
+    assert not (root / "_changes" / "c1-deadbeef").exists()
+    assert _feed_rows(legacy.changes(0, 1)) == [
+        ("insert", 3, "c"), ("update", 1, "a1"),
+    ]
 
 
 def test_failed_feed_leaves_no_phantom_last_feed_info(spark, tmp_path):
@@ -1462,8 +1338,7 @@ def test_failed_feed_leaves_no_phantom_last_feed_info(spark, tmp_path):
     {"tier": "diff", ...}`` BEFORE the retention guard, so a call that
     raised FeedTruncatedError left the hook claiming a successful diff
     serve of that interval (a phantom serve). Info is now recorded
-    only on the successful diff exits, mirroring the capture branch:
-    after a failed call the hook still shows the LAST successful
+    only on the successful exits: after a failed call the hook still shows the LAST successful
     serve."""
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
         FeedTruncatedError,
@@ -1487,147 +1362,56 @@ def test_failed_feed_leaves_no_phantom_last_feed_info(spark, tmp_path):
     assert t.last_feed_info == before, "phantom serve recorded on raise"
 
 
-def test_capture_version_parse_survives_decoy_path_segments(spark, tmp_path):
-    """Round-9 regression guard for the single-scan capture read: the
-    per-commit version is recovered from the unit path via a greedy
-    ``.*/_changes/c(\\d+)-`` / ``.*/data/c(\\d+)/`` match, pinned to
-    the LAST occurrence — so a user table path that itself contains a
-    decoy engine-shaped segment must not corrupt the version stamps
-    (a misparse would reorder events per key and net the feed wrong)."""
-    root = tmp_path / "_changes" / "c5-deadbeef" / "data" / "c7" / "t"
-    t = LogTable(
-        spark, str(root), key="id", n_buckets=2, change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b")]))          # v0
-    t.upsert(_mk(spark, [(1, "a1"), (3, "c")]))          # v1
-    t.upsert(_mk(spark, [(1, "a2"), (2, "b1")]))         # v2
-    t.delete_keys(spark.createDataFrame([(3,)], "id long"))  # v3
-    # capture serve must equal the diff serve on the multi-commit
-    # interval (version ORDER matters: key 1 nets to its v2 value)
-    got_cap = _feed_rows(t.changes(0, 3, use_capture=True))
-    got_diff = _feed_rows(t.changes(0, 3, use_capture=False))
-    assert got_cap == got_diff
-    assert ("update", 1, "a2") in got_cap
-
-    # the INSERT capture mode (added_units → data/c{v}/ paths) under
-    # the same decoy root: an upsert into an empty bucket is captured
-    # as its data units, whose version parses from .../data/c(\d+)/
+def test_feed_interval_stats_estimates_saturation(spark, tmp_path):
+    """The log-only estimate prices what the snapshot diff reads: every
+    touched bucket at BOTH interval ends, counted once per bucket,
+    against the live table at the interval's end. A diff that reads
+    the whole table prices at (lo + hi) / hi rows — 2.0 when the table
+    did not grow, which is the saturation gate's calibrated
+    threshold."""
     from pyspark.sql import functions as F
 
-    by_bucket = {
-        r["b"]: r["id"]
-        for r in spark.range(50)
+    rows = [(i, f"v{i}") for i in range(20)]
+    bucket = {
+        r.id: r.b
+        for r in spark.range(20)
         .select("id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("b"))
         .collect()
     }
-    t2 = LogTable(
-        spark, str(root.parent / "t2"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t2.create(_mk(spark, [(by_bucket[0], "a0")]))            # v0
-    t2.upsert(_mk(spark, [(by_bucket[1], "b0")]))            # v1: empty bucket
-    t2.upsert(_mk(spark, [(by_bucket[1], "b1")]))            # v2
-    assert _feed_rows(t2.changes(0, 2, use_capture=True)) == _feed_rows(
-        t2.changes(0, 2, use_capture=False)
-    ) == [("insert", by_bucket[1], "b1")]
-
-
-def test_capture_feed_plan_is_single_scan_per_unit_kind(spark, tmp_path):
-    """Round-9 plan-shape guard: the capture feed reads the WHOLE
-    interval in one multi-path parquet relation per unit kind — a
-    future edit reintroducing per-unit relations (one driver-side
-    footer pass + one union branch per commit, ~0.2 s/unit: 23.9 s at
-    a width-100 backlog) must fail here, not in a probe re-run."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(i, f"v{i}") for i in range(8)]))
-    for i in range(6):  # 6 update-mode capture commits
-        t.upsert(_mk(spark, [(i, f"w{i}")]))
-    feed = t.changes(0, 6, use_capture=True)
-    plan = feed._jdf.queryExecution().executedPlan().toString()
-    n_scans = plan.count("Scan parquet")
-    assert n_scans == 1, f"expected ONE parquet scan, got {n_scans}:\n{plan}"
-
-
-def test_capture_feed_fails_fast_on_version_parse_miss(spark, tmp_path):
-    """VERDICT r9 #1: a change-unit path that stops matching the
-    engine's ``_changes/c{v}-`` scheme used to yield a silent NULL
-    ``__v`` (regexp_extract returns "" → cast long → NULL), scrambling
-    the min_by/max_by event ordering into a wrong net diff. The parse
-    now raises executor-side with the offending file name the moment
-    any scanned row misses — scheme drift fails loudly. Staged by
-    renaming a committed change unit out from under the pattern and
-    patching its log entry to the new path (so the existence check
-    still passes and ONLY the version parse is broken)."""
-    import json as _json
-
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b")]))   # v0
-    t.upsert(_mk(spark, [(1, "a1")]))            # v1: change unit
-    log_file = os.path.join(str(tmp_path / "t"), "_log", f"{1:020d}.json")
-    with open(log_file) as f:
-        entry = _json.load(f)
-    rel = entry["changes"]["unit"]
-    assert rel.startswith("_changes/c1-")
-    doctored = rel.replace("_changes/c1-", "_changes/x1-")
-    os.rename(
-        os.path.join(str(tmp_path / "t"), rel),
-        os.path.join(str(tmp_path / "t"), doctored),
-    )
-    entry["changes"]["unit"] = doctored
-    with open(log_file, "w") as f:
-        _json.dump(entry, f)
-    feed = t.changes(0, 1, use_capture=True)  # plans fine; parse is lazy
-    with pytest.raises(
-        Exception, match="does not match the engine version pattern"
-    ):
-        feed.collect()
-
-
-def test_feed_interval_stats_estimates_saturation(spark, tmp_path):
-    """Round-10 saturation estimator (SCALE.md §2b wired in): the
-    log-only estimate prices an interval's change volume against the
-    live table. A captured full-update-churn commit contributes a
-    pre+post event PAIR per key, so N full-churn commits read ratio
-    ≈ 2N — the documented crossover convention (threshold 2.0 = one
-    full churn)."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    rows = [(i, f"v{i}") for i in range(20)]
+    in_b7 = sum(1 for b in bucket.values() if b == bucket[7])
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=2)
     t.create(_mk(spark, rows))                                   # v0
     # empty interval estimate: nothing changed
     est = t.feed_interval_stats(0, 0)
     assert est["interval_rows"] == 0 and est["net_change_ratio"] == 0.0
-    assert est["live_rows"] == 20
-    # two full-update-churn commits: every key rewritten each time
+    assert est["live_rows"] == 20 and est["live_units"] == 2
+    # two full-update-churn commits touch both buckets: the diff reads
+    # the whole table at both ends, however many commits churned it
     t.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))      # v1
     t.upsert(_mk(spark, [(i, f"x{i}") for i in range(20)]))      # v2
     est = t.feed_interval_stats(0, 2)
-    assert est["interval_units"] == 2
-    assert est["interval_rows"] == 80  # 2 commits × 20 keys × pre+post
-    assert est["live_rows"] == 20 and est["net_change_ratio"] == 4.0
-    # half-churn single commit sits below the one-full-churn bar
-    t.upsert(_mk(spark, [(i, f"y{i}") for i in range(10)]))      # v3
+    assert est == {
+        "interval_units": 4, "interval_rows": 40, "live_units": 2,
+        "live_rows": 20, "net_change_ratio": 2.0,
+    }
+    # one key touches one bucket: that bucket's rows at both ends
+    t.upsert(_mk(spark, [(7, "y7")]))                            # v3
     est = t.feed_interval_stats(2, 3)
-    assert est["interval_rows"] == 20 and est["net_change_ratio"] == 1.0
-    # a compact in the interval is no logical change: contributes zero
+    assert est["interval_units"] == 2
+    assert est["interval_rows"] == 2 * in_b7
+    assert est["net_change_ratio"] < 2.0
+    # a compact rewrites every live unit: a full diff at both ends
     t.compact()                                                  # v4
-    assert t.feed_interval_stats(3, 4)["interval_rows"] == 0
+    est = t.feed_interval_stats(3, 4)
+    assert est["interval_rows"] == 40 and est["net_change_ratio"] == 2.0
     # the feed itself surfaces the same signal on its telemetry hook
-    t.changes(0, 2, use_capture=True).collect()
-    info = t.last_feed_info
-    assert info["interval_units"] == 2 and info["net_change_ratio"] == 4.0
+    t.changes(0, 2).collect()
+    assert t.last_feed_info == {
+        "tier": "diff", "from": 0, "to": 2, "fallback_reason": None,
+        **t.feed_interval_stats(0, 2),
+    }
     # committed intervals are immutable: a repeat call prices the same
-    est1 = t.feed_interval_stats(0, 2)
-    est2 = t.feed_interval_stats(0, 2)
-    assert est1 == est2
+    assert t.feed_interval_stats(0, 2) == t.feed_interval_stats(0, 2)
 
     # inverted interval: the (from, to] contract is enforced, not an
     # all-zero estimate that would wave a backlog through the gate
@@ -1635,265 +1419,102 @@ def test_feed_interval_stats_estimates_saturation(spark, tmp_path):
     with pytest.raises(ValueError, match="inverted interval"):
         t.feed_interval_stats(2, 0)
 
-    # UNCAPTURED commits price at the diff tier's cost model: touched
-    # buckets counted ONCE however many commits touched them (code
-    # review r10 — N small commits into one bucket must not read as N
-    # full bucket rewrites), at the SUM of the bucket's live rows at
-    # BOTH interval ends (ADVICE r10 — the diff reads lo AND hi, so a
-    # delete-heavy backlog that empties its buckets still prices its
-    # from-side read).
+    # touched buckets are counted ONCE however many commits touched
+    # them (code review r10 — N small commits into one bucket must not
+    # read as N full bucket rewrites)
     t2 = LogTable(spark, str(tmp_path / "t2"), key="id", n_buckets=2)
     t2.create(_mk(spark, rows))                                  # v0
     for gen in ("a", "b", "c"):
         t2.upsert(_mk(spark, [(7, f"{gen}7")]))                  # v1-v3
     est = t2.feed_interval_stats(0, 3)
-    assert est["forced_full_diff"] is False
-    assert est["net_change_ratio"] <= 2.0  # one bucket, lo+hi, once
-    assert est["interval_rows"] < 40       # not 3 x rewritten bucket
-    # a capture-off COMPACT forces the diff tier to a FULL table diff
-    # (every live unit is rewritten = every bucket touched), so it
-    # prices at both sides of the whole table — NOT zero, which would
-    # let the most expensive serve class dodge the saturation gate
-    # (VERDICT r10 #2)
-    t2.compact()                                                 # v4
-    est = t2.feed_interval_stats(3, 4)
-    assert est["forced_full_diff"] is True
-    assert est["interval_rows"] == 2 * est["live_rows"]
-    assert est["net_change_ratio"] == 2.0
+    assert est["interval_rows"] == 2 * in_b7
     # delete-heavy churn: emptying a bucket still prices the from-side
     # read of everything the diff must scan to discover the deletes
+    # (ADVICE r10)
     t3 = LogTable(spark, str(tmp_path / "t3"), key="id", n_buckets=2)
     t3.create(_mk(spark, rows))                                  # v0
     t3.delete_keys(_mk(spark, rows).select("id"))                # v1
     est = t3.feed_interval_stats(0, 1)
     assert est["live_rows"] == 0
     assert est["interval_rows"] == 20, "from-side rows priced, not 0"
-
-
-def test_feed_interval_stats_cutoff_bounds_the_walk(spark, tmp_path):
-    """VERDICT r10 #5: with ``saturation_cutoff`` set, the estimate
-    stops walking the log the moment the gate comparison is proven —
-    the returned ratio is a LOWER bound ≥ cutoff, flagged
-    ``estimate_truncated`` — so a deep backlog prices in
-    O(commits-to-prove), not O(backlog), driver JSON. Without a cutoff
-    the full estimate is unchanged."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    rows = [(i, f"v{i}") for i in range(20)]
-    t.create(_mk(spark, rows))                                   # v0
-    for gen in "abcde":                                          # v1-v5
-        t.upsert(_mk(spark, [(i, f"{gen}{i}") for i in range(20)]))
-    full = t.feed_interval_stats(0, 5)
-    assert full["net_change_ratio"] == 10.0  # 5 churns × pre+post
-    assert full["estimate_truncated"] is False
-    bounded = t.feed_interval_stats(0, 5, saturation_cutoff=2.0)
-    assert bounded["estimate_truncated"] is True
-    assert bounded["net_change_ratio"] >= 2.0
-    assert bounded["net_change_ratio"] < full["net_change_ratio"]
-    assert bounded["live_rows"] == full["live_rows"] == 20
-    # a cutoff the interval never reaches returns the full estimate
-    wide = t.feed_interval_stats(0, 5, saturation_cutoff=1000.0)
-    assert wide["estimate_truncated"] is False
-    assert wide["net_change_ratio"] == full["net_change_ratio"]
-    # memo keys are per (from, to, cutoff): the three results coexist
-    assert t.feed_interval_stats(0, 5) == full
-    assert t.feed_interval_stats(0, 5, saturation_cutoff=2.0) == bounded
-    with pytest.raises(ValueError, match="saturation_cutoff"):
-        t.feed_interval_stats(0, 5, saturation_cutoff=0)
-    # a forced-full-diff detection counts toward the proof: on an
-    # UNCAPTURED backlog the compact guarantees a both-ends live-table
-    # read. Cutoff 1.9: high enough that the single touched bucket's
-    # lo+hi bound (≈ live_rows) cannot prove it first, so the proof
-    # demonstrably comes from the ffd term.
-    t2 = LogTable(spark, str(tmp_path / "t2"), key="id", n_buckets=2)
-    t2.create(_mk(spark, rows))                                  # v0
-    t2.upsert(_mk(spark, [(0, "z0")]))                           # v1
-    t2.compact()                                                 # v2
-    bounded = t2.feed_interval_stats(0, 2, saturation_cutoff=1.9)
-    assert bounded["forced_full_diff"] is True
-    assert bounded["estimate_truncated"] is True
-    assert bounded["net_change_ratio"] >= 1.9
+    # a table that grew prices a full diff under 2.0: (20 + 40) / 40
+    t4 = LogTable(spark, str(tmp_path / "t4"), key="id", n_buckets=2)
+    t4.create(_mk(spark, rows))                                  # v0
+    t4.upsert(_mk(spark, [(i, f"n{i}") for i in range(20, 40)]))  # v1
+    assert t4.feed_interval_stats(0, 1)["net_change_ratio"] == 1.5
 
 
 def test_feed_interval_stats_prices_certify_on_diff_tier(spark, tmp_path):
-    """Code-review r11: the diff tier's touched set replays
-    added+removed of EVERY entry — maintenance included — so on a
-    capture-off table an interval containing only a certify rewrite
-    prices the rewritten buckets at both interval ends, NOT ~0 (the
-    same blind-spot class VERDICT r10 #2 closed for compact). On a
-    capture-ON table the certify is capture-recorded as no logical
-    change and stays free."""
+    """Code-review r11: the diff's touched set replays added+removed of
+    EVERY entry — maintenance included — so an interval containing
+    only a certify rewrite prices the rewritten buckets at both
+    interval ends, NOT ~0 (the same blind-spot class VERDICT r10 #2
+    closed for compact)."""
     rows = [(i, f"v{i}") for i in range(20)]
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=2)
     t.create(_mk(spark, rows))                                   # v0
     t.append(_mk(spark, [(100, "dup")]))                         # v1 taints
     t.certify_unique()                                           # v2
     est = t.feed_interval_stats(1, 2)
-    assert est["forced_full_diff"] is False  # certify ≠ full rewrite
     assert est["interval_rows"] > 0, "certify's diff buckets priced"
     # and the price is the diff's own model: lo+hi rows of exactly the
     # certified (tainted) buckets — here the one bucket key 100 hashes
     # to, read at both ends
     assert est["net_change_ratio"] > 0.0
-    # capture-on: the same sequence is capture-served end to end, and
-    # the certify prices zero (mode "none" — no logical change)
-    tc = LogTable(
-        spark, str(tmp_path / "tc"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    tc.create(_mk(spark, rows))                                  # v0
-    tc.append(_mk(spark, [(100, "dup")]))                        # v1
-    tc.certify_unique()                                          # v2
-    # interval (1,2] holds only the captured certify: no logical
-    # change, zero price
-    est_c = tc.feed_interval_stats(1, 2)
-    assert est_c["interval_rows"] == 0
-    assert est_c["forced_full_diff"] is False
+    assert est["interval_rows"] < 2 * est["live_rows"]  # not a full diff
 
 
-def test_feed_interval_stats_prices_vacuum_holed_capture(spark, tmp_path):
-    """Code-review r11 closed the vacuum-holed variant of the compact
-    blind spot: an interval whose entries are all CAPTURED but whose
-    change unit was vacuumed falls to the diff tier at serve time
-    (_changes_from_capture's existence bail) — with a compact in the
-    interval that is a forced FULL diff, and the estimator must price
-    it so instead of the captured rows' near-zero. vacuum() also
-    clears the memo, so a pre-hole estimate cannot linger."""
+def test_estimate_walk_stops_once_every_bucket_is_touched(
+    spark, tmp_path, monkeypatch
+):
+    """The interval walk behind feed_interval_stats (and the serve and
+    truncation mirror) stops at the commit by which every bucket is
+    touched: past it the diff's read set — and so its price — cannot
+    grow. A deep full-churn backlog costs one parsed log entry, a
+    narrow one walks until its last bucket appears, and the estimate
+    stays exact."""
+    from pyspark.sql import functions as F
+
     rows = [(i, f"v{i}") for i in range(20)]
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, rows))                                   # v0
-    t.upsert(_mk(spark, [(0, "z0")]))                            # v1 captured
-    t.compact()                                                  # v2 captured
-    before = t.feed_interval_stats(0, 2)
-    assert before["forced_full_diff"] is False
-    assert before["interval_rows"] == 2  # one churned key, pre+post
-    deleted = t.vacuum(retain_versions=0)
-    assert any("_changes/" in d for d in deleted), (
-        "test setup: vacuum must reclaim the capture unit"
-    )
-    after = t.feed_interval_stats(0, 2)
-    assert after["forced_full_diff"] is True, (
-        "holed capture + compact = forced full diff, and the memo was "
-        "cleared so the pre-hole estimate did not linger"
-    )
-    assert after["interval_rows"] >= 2 * after["live_rows"]
-    assert after["net_change_ratio"] >= 2.0
-    # the NO-compact holed variant (code-review r11, second pass): the
-    # holed commit's own touched buckets price into the diff term —
-    # the serve reads them at both ends after its capture bail
-    t2 = LogTable(
-        spark, str(tmp_path / "t2"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t2.create(_mk(spark, rows))                                  # v0
-    t2.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))     # v1
-    deleted = t2.vacuum(retain_versions=0)
-    assert any("_changes/" in d for d in deleted), (
-        "test setup: vacuum must reclaim the capture unit"
-    )
-    holed = t2.feed_interval_stats(0, 1)
-    assert holed["forced_full_diff"] is False
-    # 40 capture event rows + both-ends read of the churned buckets
-    # (the whole table here)
-    assert holed["interval_rows"] >= 40 + 40, holed
-
-
-def test_cutoff_bails_on_capture_off_backlog(spark, tmp_path):
-    """Code-review r11: the early exit must also fire on a purely
-    UNCAPTURED no-compact backlog — interval_rows stays 0 there (the
-    diff term does all the pricing), so the proof runs on the hi-side
-    rows of buckets already proven into the diff term. Before the fix
-    the cutoff walk silently stayed O(backlog) for exactly the
-    capture-off deep-backlog case the gate exists to protect."""
-    rows = [(i, f"v{i}") for i in range(20)]
+    bucket = {
+        r.id: r.b
+        for r in spark.range(20)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("b"))
+        .collect()
+    }
+    b0 = [k for k, b in bucket.items() if b == 0]
+    b1 = [k for k, b in bucket.items() if b == 1]
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=2)
     t.create(_mk(spark, rows))                                   # v0
     for gen in "abcdefgh":                                       # v1-v8
         t.upsert(_mk(spark, [(i, f"{gen}{i}") for i in range(20)]))
-    bounded = t.feed_interval_stats(0, 8, saturation_cutoff=1.0)
-    assert bounded["estimate_truncated"] is True, (
-        "touched-bucket lo+hi rows prove the cutoff without a compact"
-    )
-    assert bounded["net_change_ratio"] >= 1.0
-    # the CALIBRATED threshold too: the lazily-loaded lo side lets the
-    # bound reach 2.0 × live (hi alone tops out at 1.0 × live, which
-    # would leave the capture-off case walking the whole backlog at
-    # exactly the production θ)
-    bounded2 = t.feed_interval_stats(0, 8, saturation_cutoff=2.0)
-    assert bounded2["estimate_truncated"] is True
-    assert bounded2["net_change_ratio"] >= 2.0
-    # gate agreement: the unbounded estimate crosses the same bars
-    full = t.feed_interval_stats(0, 8)
-    assert full["net_change_ratio"] >= 2.0
+    t.upsert(_mk(spark, [(b0[0], "n0")]))                        # v9
+    t.upsert(_mk(spark, [(b0[1], "n1")]))                        # v10
+    t.upsert(_mk(spark, [(b1[0], "n2")]))                        # v11
+    t.upsert(_mk(spark, [(b0[0], "n3")]))                        # v12
+    for v in (0, 8, 9, 10, 12):
+        t._live_units(as_of=v)  # warm the replay memo: count the walk only
+    parsed: list[int] = []
+    real = t._log_entries
 
+    def counted(after=-1, upto=None):
+        for e in real(after, upto):
+            parsed.append(e["version"])
+            yield e
 
-def test_mixed_interval_prices_captured_buckets_into_diff(
-    spark, tmp_path
-):
-    """Code-review r11 (second pass): on a MIXED diff-tier interval
-    (one uncaptured commit among captured ones), the serve's touched
-    set replays added+removed of EVERY entry — so the intact captured
-    commits' buckets are genuinely read at both interval ends and must
-    enter the diff term, not just their capture event rows. Before the
-    fix an interval whose captured commits touched most buckets
-    underpriced by nearly the whole diff cost."""
-    rows = [(i, f"v{i}") for i in range(20)]
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, rows))                                   # v0
-    # captured full churn: 40 capture event rows, touches BOTH buckets
-    t.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))      # v1
-    # one uncaptured commit drops the interval to the diff tier
-    t.upsert_deferred(_mk(spark, [(0, "z0")]))                   # v2
-    est = t.feed_interval_stats(0, 2)
-    assert est["forced_full_diff"] is False
-    # captured event rows (40) PLUS the diff's both-ends read of every
-    # touched bucket — including the captured commit's — not just the
-    # deferred commit's one bucket
-    assert est["interval_rows"] >= 40 + 40, est
-    # fully-captured control: the same churn without the uncaptured
-    # commit prices at event rows alone (capture tier, no diff term)
-    tc = LogTable(
-        spark, str(tmp_path / "tc"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    tc.create(_mk(spark, rows))                                  # v0
-    tc.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))     # v1
-    assert tc.feed_interval_stats(0, 1)["interval_rows"] == 40
-
-
-def test_complete_cutoff_walk_equals_uncut_estimate(spark, tmp_path):
-    """A cutoff walk that ran to completion IS the unbounded estimate;
-    a truncated one is a lower bound on it that already proves the
-    cutoff."""
-    rows = [(i, f"v{i}") for i in range(20)]
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, rows))                                   # v0
-    t.upsert(_mk(spark, [(0, "z0")]))                            # v1
-    est = t.feed_interval_stats(0, 1, saturation_cutoff=1000.0)
-    assert est["estimate_truncated"] is False
-    assert t.feed_interval_stats(0, 1) == est
-    # a TRUNCATED estimate is a lower bound, not the exact estimate
-    t.upsert(_mk(spark, [(i, f"w{i}") for i in range(20)]))      # v2
-    t2_bounded = t.feed_interval_stats(1, 2, saturation_cutoff=0.5)
-    assert t2_bounded["estimate_truncated"] is True
-    t2_exact = t.feed_interval_stats(1, 2)
-    assert t2_exact["estimate_truncated"] is False
-    assert (
-        0.5
-        <= t2_bounded["net_change_ratio"]
-        <= t2_exact["net_change_ratio"]
-    )
+    monkeypatch.setattr(t, "_log_entries", counted)
+    for lo, hi, walked, rows_read in (
+        (0, 8, [1], 40),                  # full churn: one entry
+        (8, 12, [9, 10, 11], 40),         # narrow: until bucket 1 shows
+        (9, 10, [10], 2 * len(b0)),       # never saturates: whole interval
+    ):
+        parsed.clear()
+        est = t.feed_interval_stats(lo, hi)
+        assert parsed == walked, (lo, hi, parsed)
+        assert est["interval_rows"] == rows_read, (lo, hi, est)
+        parsed.clear()
+        assert t.feed_truncation_missing(lo, hi) == []
+        assert parsed == walked, (lo, hi, parsed)
 
 
 def test_feed_truncation_missing_rejects_inverted_interval(
@@ -1910,89 +1531,34 @@ def test_feed_truncation_missing_rejects_inverted_interval(
         t.feed_truncation_missing(2, 0)
 
 
-def test_empty_feed_schema_read_truncation_is_typed(spark, tmp_path):
-    """A provably change-free CAPTURED interval whose both ends were
-    later vacuumed must fail with the typed FeedTruncatedError, not a
-    raw missing-file planning error (code-review r11, third pass): the
-    empty feed's schema read touches live units that no capture-unit or
-    touched-bucket guard ever stats. feed_truncation_missing must
-    agree with the serve on exactly which units are gone."""
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        FeedTruncatedError,
-    )
-
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a"), (2, "b")]))                   # v0
-    t.compact()                                                  # v1 "none"
-    t.delete_keys(spark.createDataFrame([(1,), (2,)], "id long"))  # v2
-    t.upsert(_mk(spark, [(3, "c")]))                             # v3
-    t.vacuum()  # reclaims every live@0 / live@1 unit
-    # (0, 1] contains only the captured no-logical-change compact: the
-    # serve is an EMPTY feed — but its schema must come from a live
-    # unit of one interval end, and both ends are fully vacuumed
-    missing = t.feed_truncation_missing(0, 1)
-    assert missing, "mirror must flag the vacuumed schema source"
-    with pytest.raises(FeedTruncatedError) as ei:
-        t.changes(0, 1)
-    assert ei.value.missing == missing
-
-
 def test_empty_feed_schema_read_survives_partial_vacuum(spark, tmp_path):
     """The empty feed's schema rep is picked among a commit's SURVIVING
     units (any unit of one commit carries that commit's write schema):
     vacuuming SOME of an interval end's units must not break — or
     un-determinize — the change-free serve."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    # two keys in DIFFERENT buckets (xxhash64 is fixed-seed, probe it)
     from pyspark.sql import functions as F
 
-    probed = spark.range(1, 32).select(
-        "id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("b")
+    # one key per bucket (xxhash64 is fixed-seed, probe it)
+    probed = spark.range(1, 64).select(
+        "id", F.pmod(F.xxhash64("id"), F.lit(3)).alias("b")
     ).collect()
-    k_a = next(r.id for r in probed if r.b == 0)
-    k_b = next(r.id for r in probed if r.b == 1)
-    t.create(_mk(spark, [(k_a, "a"), (k_b, "b")]))               # v0
-    t.compact()                                                  # v1 "none"
-    t.upsert(_mk(spark, [(k_a, "A")]))                           # v2
-    t.vacuum()  # reclaims v0's units + the compact's k_a-bucket unit
-    assert t.feed_truncation_missing(0, 1) == []
-    fed = t.changes(0, 1)
+    k = {b: next(r.id for r in probed if r.b == b) for b in range(3)}
+    root = tmp_path / "t"
+    t = LogTable(spark, str(root), key="id", n_buckets=3)
+    t.create(_mk(spark, [(k[0], "a"), (k[1], "b")]))             # v0
+    t.upsert(_mk(spark, [(k[2], "c")]))                          # v1
+    t.delete_keys(spark.createDataFrame([(k[2],)], "id long"))   # v2
+    t.upsert(_mk(spark, [(k[0], "A")]))                          # v3
+    t.vacuum()  # reclaims v0's bucket-0 unit (rewritten at v3) and v1's
+    assert not (root / "data" / "c0" / "__bucket=0").exists()
+    assert (root / "data" / "c0" / "__bucket=1").exists()
+    # (0, 2]: only k[2]'s bucket is touched and it holds no unit at
+    # either end, so the serve is an empty feed whose schema comes from
+    # commit c0 — through its surviving bucket-1 unit
+    assert t.feed_truncation_missing(0, 2) == []
+    fed = t.changes(0, 2)
     assert fed.count() == 0
     assert set(fed.columns) == {"change", "id", "val"}
-
-
-def test_zero_row_capture_commit_does_not_fake_serveability(
-    spark, tmp_path
-):
-    """A zero-row ``added_units`` commit (empty-batch upsert) carries
-    the capture mode tag but contributes NO event parts, so the serve
-    still builds an _empty_feed — the mirror must key "capture serves
-    data AND schema" on actual parts, not the tag, or it reports []
-    for an interval the serve raises on (code-review r11, fifth pass;
-    reproduced before the fix)."""
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        FeedTruncatedError,
-    )
-
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=2,
-        change_capture=True,
-    )
-    t.create(_mk(spark, [(1, "a")]))                             # v0
-    t.upsert(spark.createDataFrame([], "id long, val string"))   # v1: 0 rows
-    t.upsert(_mk(spark, [(1, "a2")]))                            # v2
-    t.vacuum()  # reclaims v0's unit (rewritten at v2)
-    missing = t.feed_truncation_missing(0, 1)
-    assert missing, "mirror must flag the vacuumed schema source"
-    with pytest.raises(FeedTruncatedError) as ei:
-        t.changes(0, 1)
-    assert ei.value.missing == missing
 
 
 def test_diff_empty_feed_truncation_is_typed(spark, tmp_path):
@@ -2041,12 +1607,9 @@ def test_reads_are_planned_from_the_log_without_jobs(
     Sized past Spark's 32-path parallel-listing threshold: 64 buckets,
     more than 32 live units, three live commits with a schema
     evolution between them. Covers snapshot (latest, time travel, all
-    pruned), both feed tiers, the empty feed, and the read side of the
-    eager mutators (upsert, delete_keys, compact)."""
-    t = LogTable(
-        spark, str(tmp_path / "t"), key="id", n_buckets=64,
-        change_capture=True,
-    )
+    pruned), the feed (including a compact-only interval), and the
+    read side of the eager mutators (upsert, delete_keys, compact)."""
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=64)
     t.create(
         spark.range(400, numPartitions=4).selectExpr(
             "id", "concat('v', id) as val"
@@ -2075,8 +1638,7 @@ def test_reads_are_planned_from_the_log_without_jobs(
         lambda: pruned.append(t.snapshot(where=[("id", "<", -1)]))
     ) == 0
     assert set(pruned[0].columns) == {"id", "val", "lang"}
-    assert jobs(lambda: t.changes(0, 1, use_capture=False)) == 0
-    assert jobs(lambda: t.changes(0, 1, use_capture=True)) == 0
+    assert jobs(lambda: t.changes(0, 1)) == 0
 
     # the read side of every eager mutator goes through _read_resolved
     counts: list[int] = []
@@ -2091,11 +1653,11 @@ def test_reads_are_planned_from_the_log_without_jobs(
     monkeypatch.setattr(t, "_read_resolved", counted)
     t.upsert(_mk(spark, [(3, "u")]))  # v3
     t.delete_keys(spark.createDataFrame([(4,)], "id long"))  # v4
-    t.compact()  # v5: captured, no logical change
+    t.compact()  # v5: layout only, no net change
     assert counts == [0, 0, 0]
     empty = []
     assert jobs(lambda: empty.append(t.changes(4, 5))) == 0
-    assert t.last_feed_info["tier"] == "capture"
+    assert t.last_feed_info["tier"] == "diff"
     assert empty[0].columns == ["change", "id", "val", "lang"]
     assert empty[0].count() == 0
     snap = {r["id"]: (r["val"], r["lang"]) for r in t.snapshot().collect()}
@@ -2156,4 +1718,4 @@ def test_type_conflict_between_live_commits_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="column 'val'"):
         t.snapshot()
     with pytest.raises(ValueError, match="column 'val'"):
-        t.changes(0, 1, use_capture=False)
+        t.changes(0, 1)

@@ -460,8 +460,7 @@ def test_changefeed_saturation_gate_matches_dict_model(
     """Saturation-gate property (round 10, VERDICT r9 #1): the
     rebootstrap_saturation gate must be invisible to the target's
     final state under ANY interleaving of eager/deferred upserts,
-    deletes, compactions, and checkpoints on a CAPTURE-ENABLED source
-    — whether the threshold is aggressive (0.25 fires the snapshot
+    deletes, compactions, and checkpoints — whether the threshold is aggressive (0.25 fires the snapshot
     reconcile on almost every drain, exercising the reconcile's
     delete-propagation under arbitrary op mixes) or the calibrated 2.0
     (fires only on genuinely churn-heavy sequences). The staged test
@@ -477,9 +476,7 @@ def test_changefeed_saturation_gate_matches_dict_model(
     )
 
     work = tempfile.mkdtemp(prefix="cf_gate_prop_")
-    a = LogTable(
-        spark, f"{work}/a", key="id", n_buckets=2, change_capture=True
-    )
+    a = LogTable(spark, f"{work}/a", key="id", n_buckets=2)
     b = LogTable(spark, f"{work}/b", key="id", n_buckets=2)
     cur = f"{work}/cursor.json"
     model = {0: "z"}
@@ -518,103 +515,27 @@ def test_changefeed_saturation_gate_matches_dict_model(
             b.snapshot()
 
 
-@given(st.lists(_LT_OP, min_size=1, max_size=5), st.integers(0, 100))
-@settings(max_examples=6, deadline=None)
-def test_change_capture_feed_matches_snapshot_diff(spark, ops, pick):
-    """CDC equivalence property (round 7): on a capture-enabled table
-    driven by random op sequences (eager + deferred + deletes +
-    compactions), the change feed served from stored capture equals
-    the snapshot-diff for random intervals — and auto mode (which
-    falls back wherever a deferred/uncaptured commit sits in the
-    interval) always equals the forced diff."""
-    import tempfile
-
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
-
-    path = tempfile.mkdtemp(prefix="lt_cdc_")
-    t = LogTable(spark, path, key="id", n_buckets=2, change_capture=True)
-    t.create(spark.createDataFrame([(0, "z")], "id long, val string"))
-    for kind, kvs in ops:
-        if kind in ("upsert", "deferred"):
-            df = spark.createDataFrame(kvs, "id long, val string")
-            (t.upsert if kind == "upsert" else t.upsert_deferred)(df)
-        elif kind == "delete":
-            t.delete_keys(
-                spark.createDataFrame(
-                    [(k,) for k, _ in kvs], "id long"
-                )
-            )
-        elif kind == "compact":
-            t.compact()
-        else:
-            t.checkpoint_log()
-    latest = t.version()
-
-    def rows(df):
-        return sorted(
-            tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
-        )
-
-    intervals = {(0, latest), (latest // 2, latest), (0, max(1, latest - 1))}
-    a = pick % latest if latest > 0 else 0
-    intervals.add((a, latest))
-    for lo, hi in intervals:
-        if lo >= hi:
-            continue
-        try:
-            diff = rows(t.changes(lo, hi, use_capture=False))
-        except ValueError:
-            # The diff tier raises "both versions are empty" only when
-            # no units exist at either end (no schema to serve). The
-            # capture tier may KNOW the schema from its change units
-            # and serve an empty feed instead — both mean "net nothing
-            # changed"; either outcome is within contract.
-            try:
-                assert t.changes(lo, hi).count() == 0, (lo, hi)
-            except ValueError:
-                pass
-            continue
-        auto = rows(t.changes(lo, hi))
-        assert auto == diff, (lo, hi)
-
-
 @given(
     st.lists(_LT_OP, min_size=1, max_size=5),
-    st.booleans(),
-    st.sampled_from([0.25, 1.0, 2.0]),
     st.integers(0, 100),
     st.integers(0, 100),
 )
-@settings(max_examples=6, deadline=None)
-def test_feed_stats_cutoff_estimate_is_sound(
-    spark, ops, capture, theta, pick_lo, pick_hi
-):
-    """Cutoff-estimate soundness property (round 11, hardening the
-    VERDICT r10 #5 early-exit): for ANY op interleaving, capture
-    setting, threshold, and interval, the ``saturation_cutoff``-bounded
-    ``feed_interval_stats`` walk must be indistinguishable FROM THE
-    GATE'S POINT OF VIEW from the unbounded walk it short-circuits:
-
-    - not truncated → the bounded result is bit-identical to the
-      unbounded one (the walk ran to the end, same arithmetic);
-    - truncated → its ``net_change_ratio`` is a lower bound that
-      already proves the comparison (``>= theta``), never exceeds the
-      unbounded ratio, and a latched ``forced_full_diff`` can only
-      stay true in the full walk (both flags are monotone);
-    - either way the gate DECISION (ratio >= theta) matches what the
-      unbounded estimate would have decided — the early exit can make
-      the estimate cheaper, never change where the drain goes.
-
-    The staged test (test_logtable.py cutoff test) pins the cost; this
-    pins the decision equivalence the staged points can't sweep."""
+@settings(max_examples=8, deadline=None)
+def test_feed_estimate_matches_full_walk(spark, ops, pick_lo, pick_hi):
+    """Exactness of the early-exit interval walk: for ANY op
+    interleaving and interval, ``feed_interval_stats`` equals the diff's
+    price computed the long way — lo + hi live units and rows of every
+    bucket any commit in the interval touched, from the full
+    ``history()`` with no early exit. The walk may stop once every
+    bucket is touched only because the touched set, and so the price,
+    cannot grow past that point; this pins that it never stops
+    sooner."""
     import tempfile
 
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
 
-    path = tempfile.mkdtemp(prefix="lt_cutoff_")
-    t = LogTable(
-        spark, path, key="id", n_buckets=2, change_capture=capture
-    )
+    path = tempfile.mkdtemp(prefix="lt_estimate_")
+    t = LogTable(spark, path, key="id", n_buckets=2)
     t.create(spark.createDataFrame([(0, "z")], "id long, val string"))
     for kind, kvs in ops:
         if kind in ("upsert", "deferred"):
@@ -629,120 +550,43 @@ def test_feed_stats_cutoff_estimate_is_sound(
         else:
             t.checkpoint_log()
     latest = t.version()
+    history = t.history()
     lo = pick_lo % (latest + 1)
     hi = lo + pick_hi % (latest - lo + 1)
-    intervals = {(lo, hi), (0, latest), (latest // 2, latest)}
-    for a, b in intervals:
-        full = t.feed_interval_stats(a, b)
-        bounded = t.feed_interval_stats(a, b, saturation_cutoff=theta)
-        if not bounded["estimate_truncated"]:
-            unbounded_view = dict(full)
-            assert bounded == unbounded_view, (a, b)
-        else:
-            assert bounded["net_change_ratio"] >= theta, (a, b)
-            assert (
-                bounded["net_change_ratio"]
-                <= full["net_change_ratio"]
-            ), (a, b)
-            if bounded["forced_full_diff"]:
-                assert full["forced_full_diff"], (a, b)
-        assert (bounded["net_change_ratio"] >= theta) == (
-            full["net_change_ratio"] >= theta
-        ), (a, b)
+    for a, b in {(lo, hi), (0, latest), (latest // 2, latest)}:
+        touched = {
+            u["bucket"]
+            for e in history
+            if a < e["version"] <= b
+            for u in e["added"] + e["removed"]
+        }
+        ends = [t._live_units(as_of=a), t._live_units(as_of=b)]
+        read = [
+            u
+            for live in ends
+            for u in live.values()
+            if u["bucket"] in touched
+        ]
+        live_rows = sum(u.get("rows") or 0 for u in ends[1].values())
+        interval_rows = sum(u.get("rows") or 0 for u in read)
+        assert t.feed_interval_stats(a, b) == {
+            "interval_units": len(read),
+            "interval_rows": interval_rows,
+            "live_units": len(ends[1]),
+            "live_rows": live_rows,
+            "net_change_ratio": interval_rows / max(live_rows, 1),
+        }, (a, b)
 
 
 @given(
     st.lists(_LT_OP, min_size=2, max_size=5),
-    st.integers(0, 2),
-    st.integers(0, 3),
-    st.integers(0, 100),
-)
-@settings(max_examples=4, deadline=None)
-def test_change_capture_vacuum_interleaved_fallback(
-    spark, ops, retain, vac_at, pick
-):
-    """Vacuum interleaved into a captured op stream (VERDICT r7 #1b):
-    for every interval, auto mode either serves capture or OBSERVABLY
-    falls back to the diff — ``last_feed_info`` records the tier, and a
-    diff-tier serve on a capture-on table always carries a recorded
-    fallback reason. Results still equal the forced diff wherever the
-    diff is computable; a diff the vacuum made uncomputable raises the
-    typed FeedTruncatedError at PLAN time — never a raw missing-file
-    error at execution, never a silent degradation."""
-    import tempfile
-
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        FeedTruncatedError,
-        LogTable,
-    )
-
-    path = tempfile.mkdtemp(prefix="lt_cdc_vac_")
-    t = LogTable(spark, path, key="id", n_buckets=2, change_capture=True)
-    t.create(spark.createDataFrame([(0, "z")], "id long, val string"))
-    for i, (kind, kvs) in enumerate(ops):
-        if kind in ("upsert", "deferred"):
-            df = spark.createDataFrame(kvs, "id long, val string")
-            (t.upsert if kind == "upsert" else t.upsert_deferred)(df)
-        elif kind == "delete":
-            t.delete_keys(
-                spark.createDataFrame([(k,) for k, _ in kvs], "id long")
-            )
-        elif kind == "compact":
-            t.compact()
-        else:
-            t.checkpoint_log()
-        if i == min(vac_at, len(ops) - 1):
-            t.vacuum(retain_versions=retain)
-    latest = t.version()
-    intervals = {(0, latest), (latest // 2, latest)}
-    intervals.add((pick % latest if latest > 0 else 0, latest))
-    # also exercise interval ENDS the vacuum may have reclaimed — a
-    # latest-anchored interval can never hit the empty-feed schema
-    # read's truncation path (code-review r11, third pass)
-    if latest >= 2:
-        intervals.add((0, latest // 2))
-    for lo, hi in intervals:
-        if lo >= hi:
-            continue
-        try:
-            diff = rows_of(t.changes(lo, hi, use_capture=False))
-        except FeedTruncatedError:
-            # diff uncomputable: auto must surface the same typed error
-            # (or serve from a still-complete capture — also fine)
-            try:
-                t.changes(lo, hi).collect()
-                assert t.last_feed_info["tier"] == "capture", (lo, hi)
-            except FeedTruncatedError:
-                pass
-            continue
-        except ValueError:
-            continue  # both versions empty — covered by the base property
-        auto_df = t.changes(lo, hi)
-        info = t.last_feed_info
-        assert info["from"] == lo and info["to"] == hi
-        if info["tier"] == "diff":
-            # capture-on table served by the diff ⇒ the degradation
-            # was recorded, never silent
-            assert info["fallback_reason"], (lo, hi)
-        assert rows_of(auto_df) == diff, (lo, hi, info)
-
-
-def rows_of(df):
-    return sorted(
-        tuple(r[c] for c in sorted(df.columns)) for r in df.collect()
-    )
-
-
-@given(
-    st.lists(_LT_OP, min_size=2, max_size=5),
-    st.booleans(),
     st.integers(0, 2),
     st.integers(0, 3),
     st.integers(0, 100),
 )
 @settings(max_examples=4, deadline=None)
 def test_feed_truncation_missing_mirrors_the_serve(
-    spark, ops, capture, retain, vac_at, pick
+    spark, ops, retain, vac_at, pick
 ):
     """Driver-side truncation mirror property (round 11, hardening the
     ADVICE r10 observability fix): ``feed_truncation_missing`` exists
@@ -750,12 +594,12 @@ def test_feed_truncation_missing_mirrors_the_serve(
     — whether the interval it is about to reconcile over would have
     raised FeedTruncatedError. That is only trustworthy if the mirror
     agrees with the serve itself on every interval, op interleaving,
-    capture setting, and vacuum placement:
+    and vacuum placement:
 
-    - mirror says [] → the auto serve must NOT raise
+    - mirror says [] → the serve must NOT raise
       FeedTruncatedError (it may serve rows, an empty feed, or the
       empty-interval ValueError — all mean "serveable");
-    - mirror says non-empty → the auto serve must raise the typed
+    - mirror says non-empty → the serve must raise the typed
       FeedTruncatedError, and the unit names the mirror reports must
       all be genuinely absent from disk.
 
@@ -770,9 +614,7 @@ def test_feed_truncation_missing_mirrors_the_serve(
     )
 
     path = tempfile.mkdtemp(prefix="lt_trunc_mirror_")
-    t = LogTable(
-        spark, path, key="id", n_buckets=2, change_capture=capture
-    )
+    t = LogTable(spark, path, key="id", n_buckets=2)
     t.create(spark.createDataFrame([(0, "z")], "id long, val string"))
     for i, (kind, kvs) in enumerate(ops):
         if kind in ("upsert", "deferred"):

@@ -1,16 +1,16 @@
 """Driver-side depth scaling of the feed cost machinery — no Spark.
 
-Reproduces the SCALE.md §2b depth numbers (previously one-off):
-synthesizes a captured full-churn commit log (every commit rewrites
-all buckets — the worst case for both the estimator walk and the
-live-map replay), with periodic log checkpoints like the drain's
-maintenance cadence writes, then times at each requested depth:
+Reproduces the SCALE.md §2b depth numbers: synthesizes a full-churn
+commit log (every commit rewrites all buckets — the worst case for the
+live-map replay, and the case where the interval walk stops after one
+entry), with periodic log checkpoints like the drain's maintenance
+cadence writes, then times at each requested depth:
 
-- ``estimate_full``: unbounded ``feed_interval_stats(0, depth-1)`` —
-  O(interval commits) driver JSON (~0.13 ms/commit measured).
-- ``estimate_cutoff``: the same estimate with ``saturation_cutoff``
-  set — the gate's call; on a full-churn backlog one commit proves
-  the calibrated θ=2.0, so this should be flat in depth.
+- ``estimate_sec``: ``feed_interval_stats`` on a fresh handle for three
+  intervals — ``from_0`` (the whole log), ``mid_log`` (a lagging cursor
+  to the head) and ``last_50``. The walk stops once every bucket is
+  touched, so on this log each is one parsed entry plus the two
+  checkpoint-bounded live-set replays.
 - ``lo_replay``: ``_live_units`` at a mid-log lagging cursor — the
   lo-side rollup / diff-serve read. Bounded by the newest checkpoint
   AT OR BELOW the cursor (code-review r11: consulting only the
@@ -27,12 +27,12 @@ maintenance cadence writes, then times at each requested depth:
   them keeps the once-per-change build priced at depth instead of
   hidden behind a median of memo hits.
 - ``loop_head_sec``: one drain loop head's LogTable reads on a fresh
-  handle — ``version()``, the gate's cutoff estimate, the serve's
-  uncut estimate, ``feed_truncation_missing`` and three
-  ``_live_units`` calls (lo, hi, latest) — for the last commit
-  (``interval_1``), the last 50 (``interval_50``) and the mid-log
-  cursor to the head (``mid_log``). This is the sequence the
-  listing and live-unit memos exist for.
+  handle — ``version()``, the gate's estimate, the serve's estimate,
+  ``feed_truncation_missing`` and three ``_live_units`` calls (lo, hi,
+  latest) — for the last commit (``interval_1``), the last 50
+  (``interval_50``) and the mid-log cursor to the head
+  (``mid_log``). This is the sequence the listing and live-unit memos
+  exist for.
 
 Timings are driver-side wall clock over synthetic JSON; run on a
 quiet machine for stable numbers. Usage:
@@ -40,15 +40,15 @@ quiet machine for stable numbers. Usage:
     python tools/feed_depth_probe.py [depth ...]   (default 1000 3000 10000)
     python tools/feed_depth_probe.py --light 100000
 
-``--light`` builds 1-bucket commits with no capture units and skips
-the two estimator timings — listing and replay costs depend on FILE
-COUNT and commits-since-checkpoint, not entry width, so the light
-build makes a ~100k-commit listing point affordable (a full-churn
-32-bucket build at that depth would write ~1 GB of JSON just to
-re-measure an estimator already shown flat under the cutoff).
+``--light`` builds 1-bucket commits and skips the estimate and loop-head
+timings — listing and replay costs depend on FILE COUNT and
+commits-since-checkpoint, not entry width, so the light build makes a
+~100k-commit listing point affordable (a full-churn 32-bucket build at
+that depth would write ~1 GB of JSON).
 
-Prints one JSON line per depth. Work dir is removed on exit unless
-SPARK_GRAFT_PROBE_KEEP=1 (repo probe hygiene convention, round 7).
+Prints one JSON line per depth. Works under ``$TMPDIR`` (default
+/tmp); the work dir is removed on exit unless SPARK_GRAFT_PROBE_KEEP=1
+(repo probe hygiene convention, round 7).
 """
 
 from __future__ import annotations
@@ -57,6 +57,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(
@@ -70,14 +71,12 @@ from durable_functions_cosmosdb_etl_spark.sinks.logtable import (  # noqa: E402
 N_BUCKETS = 32
 ROWS_PER_BUCKET = 100
 CP_EVERY = 500
-THETA = 2.0
 
 
 def build_log(base: str, depth: int, light: bool = False) -> None:
     log_dir = os.path.join(base, "_log")
     os.makedirs(log_dir)
     os.makedirs(os.path.join(base, "data"))
-    os.makedirs(os.path.join(base, "_changes"))
     n_buckets = 1 if light else N_BUCKETS
     live: dict[int, dict] = {}
     for v in range(depth):
@@ -98,21 +97,6 @@ def build_log(base: str, depth: int, light: bool = False) -> None:
             "added": added,
             "removed": removed,
         }
-        if not light:
-            cap_unit = f"_changes/c{v}-deadbeef"
-            # the capture unit must EXIST: the estimator mirrors the
-            # serve's existence bail, so a missing unit would silently
-            # reprice the whole walk as the vacuum-holed diff path
-            # instead of the captured tier this probe documents
-            # (code-review r11, fourth pass caught exactly that)
-            with open(os.path.join(base, cap_unit), "w") as f:
-                f.write("")
-            # captured full churn: update pre+post per key
-            entry["changes"] = {
-                "mode": "unit",
-                "unit": cap_unit,
-                "rows": 2 * N_BUCKETS * ROWS_PER_BUCKET,
-            }
         with open(os.path.join(log_dir, f"{v:020d}.json"), "w") as f:
             json.dump(entry, f)
         if v and v % CP_EVERY == 0:
@@ -150,7 +134,7 @@ def main() -> None:
     ] or [1000, 3000, 10000]
     if any(d < 2 for d in depths):
         sys.exit("depths must be >= 2")
-    base_root = "/tmp/feed_depth_probe"
+    base_root = os.path.join(tempfile.gettempdir(), "feed_depth_probe")
     shutil.rmtree(base_root, ignore_errors=True)
     for depth in depths:
         base = os.path.join(base_root, f"d{depth}")
@@ -169,17 +153,23 @@ def main() -> None:
         }
 
         if not light:
-            t = handle(base)
-            t0 = time.perf_counter()
-            full = t.feed_interval_stats(0, hi)
-            out["estimate_full_sec"] = round(time.perf_counter() - t0, 4)
-
-            t = handle(base)
-            t0 = time.perf_counter()
-            cut = t.feed_interval_stats(0, hi, saturation_cutoff=THETA)
-            out["estimate_cutoff_sec"] = round(time.perf_counter() - t0, 4)
-            out["estimate_truncated"] = cut["estimate_truncated"]
-            out["ratio_full"] = round(full["net_change_ratio"], 3)
+            # median of 3, each on a fresh handle (cold memos)
+            out["estimate_sec"] = {
+                name: round(
+                    _median_of(
+                        lambda: handle(base).feed_interval_stats(lo, hi), 3
+                    ),
+                    4,
+                )
+                for name, lo in (
+                    ("from_0", 0),
+                    ("mid_log", cursor),
+                    ("last_50", max(hi - 50, 0)),
+                )
+            }
+            out["ratio_from_0"] = round(
+                handle(base).feed_interval_stats(0, hi)["net_change_ratio"], 3
+            )
 
         # listing-vs-parse split (VERDICT r11 #5): the raw cost of one
         # log-dir listing (what every _log_entries/version()/
@@ -221,8 +211,8 @@ def main() -> None:
             def _loop_head(lo: int) -> None:
                 t = handle(base)
                 t.version()
-                t.feed_interval_stats(lo, hi, saturation_cutoff=THETA)
-                t.feed_interval_stats(lo, hi)
+                t.feed_interval_stats(lo, hi)  # the gate's estimate
+                t.feed_interval_stats(lo, hi)  # the serve's estimate
                 t.feed_truncation_missing(lo, hi)
                 t._live_units(as_of=lo)
                 t._live_units(as_of=hi)

@@ -17,10 +17,11 @@ Axes measured:
     (transactional MERGE per batch)
 
 Prints one JSON line per configuration. Staging data is built once per
-run under /tmp/stream_probe and reused across configurations; the work
-dir is removed on exit unless SPARK_GRAFT_PROBE_KEEP=1.
+run under $TMPDIR/stream_probe (default /tmp) and reused across
+configurations; the work dir is removed on exit unless
+SPARK_GRAFT_PROBE_KEEP=1.
 
-Usage: python tools/stream_probe.py [--docs N] [--files K]
+Usage: python tools/stream_probe.py [--docs N] [--files K] [--gate-only]
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ import argparse
 import json
 import os
 import shutil
+import tempfile
 import time
 
 import sys
@@ -43,54 +45,91 @@ from durable_functions_cosmosdb_etl_spark.streaming.pipeline import (  # noqa: E
     run_incremental_transform,
 )
 
-WORK = "/tmp/stream_probe"
+WORK = os.path.join(tempfile.gettempdir(), "stream_probe")
 
 
-def _price_feed_reads(src_cap, lo: int, hi: int, docs: int) -> None:
-    """Read-side capture-vs-diff pricing (VERDICT r7 #1c): the SAME
-    captured interval served by each tier as a pure feed read (noop
-    sink — execution cost, nothing on the driver). Capture reads ~the
-    interval's changed rows from stored change units; the diff joins
-    the touched buckets of BOTH end snapshots — a uniform 1% mutation
-    touches every bucket, so the diff reads ~2x the table. This is the
-    number that justifies the capture tier: the gap widens linearly
-    with table-size/delta-size."""
-    def timed_read(use_capture: bool) -> float:
-        ts = []
-        for _ in range(4):  # first run warms the plan; median of rest
-            t = time.perf_counter()
-            src_cap.changes(lo, hi, use_capture=use_capture).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            ts.append(time.perf_counter() - t)
-        return sorted(ts[1:])[1]
+def _gate_vs_diff(spark, staging: str, docs: int, pairs: int = 5) -> None:
+    """The saturation gate against the forced full diff — the
+    measurement behind ``run_changefeed_transform(
+    rebootstrap_saturation=)``'s docstring (``changefeed_gate_vs_diff``
+    row). Each pair builds a fresh 64-bucket source from the staged
+    docs, bootstraps two eager-sink targets at v0, then commits the
+    backlog: one ``upsert_deferred`` of ~1% of the docs (at least 60)
+    plus a ``compact``, so the diff reads the whole table at both
+    ends. It then times one drain with ``rebootstrap_saturation=2.0``
+    and one without, in alternating order, on fresh source handles.
+    Both drains apply the ``etl_changefeed`` benchmark's silver
+    transform (``name_upper``), and the two final states must hash
+    equal (xor of row hashes)."""
+    from pyspark.sql import functions as F
 
-    # Price the saturation gate's per-loop-head estimate (round 10,
-    # VERDICT r9 #1): the log-only arithmetic the consumer pays BEFORE
-    # choosing incremental-vs-rebootstrap must be noise next to either
-    # serving tier, or the gate would cost what it saves. Estimates
-    # are not memoized, so every call is cold.
-    t = time.perf_counter()
-    est = src_cap.feed_interval_stats(lo, hi)
-    est_sec = time.perf_counter() - t
-    cap_read = timed_read(True)
-    diff_read = timed_read(False)
-    n = src_cap.changes(lo, hi, use_capture=True).count()
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
+        LogTable,
+    )
+    from durable_functions_cosmosdb_etl_spark.streaming.changefeed import (
+        run_changefeed_transform,
+    )
+
+    def name_upper(df):
+        return df.withColumn("name_upper", F.upper(F.col("name")))
+
+    def state(path: str):
+        df = LogTable(spark, path, key="id").snapshot()
+        return df.select(
+            F.bit_xor(F.xxhash64(*sorted(df.columns)))
+        ).first()[0]
+
+    changed = max(60, docs // 100)
+    base = f"{WORK}/gate"
+    src_dir = f"{base}/src"
+    secs: dict[str, list[float]] = {"gated": [], "diff": []}
+    for pair in range(pairs):
+        shutil.rmtree(base, ignore_errors=True)
+        src = LogTable(spark, src_dir, key="id")
+        src.create(spark.read.parquet(staging))                    # v0
+        for mode in secs:
+            run_changefeed_transform(
+                spark, src, LogTable(spark, f"{base}/{mode}", key="id"),
+                f"{base}/{mode}.cursor", transform=name_upper,
+            )
+        src.upsert_deferred(
+            src.snapshot()
+            .limit(changed)
+            .withColumn("desc", F.concat(F.col("desc"), F.lit(" (edited)")))
+        )                                                          # v1
+        src.compact()                                              # v2
+        order = ("gated", "diff") if pair % 2 == 0 else ("diff", "gated")
+        for mode in order:
+            t0 = time.perf_counter()
+            st = run_changefeed_transform(
+                spark,
+                LogTable(spark, src_dir, key="id"),
+                LogTable(spark, f"{base}/{mode}", key="id"),
+                f"{base}/{mode}.cursor",
+                transform=name_upper,
+                rebootstrap_saturation=2.0 if mode == "gated" else None,
+            )
+            secs[mode].append(time.perf_counter() - t0)
+            assert st["saturation_rebootstraps"] == (mode == "gated")
+        assert state(f"{base}/gated") == state(f"{base}/diff")
+
+    def median(xs: list[float]) -> float:
+        return sorted(xs)[len(xs) // 2]
+
     print(
         json.dumps(
             {
-                "config": "changefeed_feed_read_capture_vs_diff",
+                "config": "changefeed_gate_vs_diff",
                 "docs": docs,
-                "interval": [lo, hi],
-                "width": hi - lo,
-                "interval_rows": n,
-                "capture_read_sec": round(cap_read, 3),
-                "diff_read_sec": round(diff_read, 3),
-                "diff_over_capture": (
-                    round(diff_read / cap_read, 2) if cap_read else None
+                "changed": changed,
+                "pairs": pairs,
+                "gated_sec": [round(x, 3) for x in secs["gated"]],
+                "diff_sec": [round(x, 3) for x in secs["diff"]],
+                "gated_median_sec": round(median(secs["gated"]), 3),
+                "diff_median_sec": round(median(secs["diff"]), 3),
+                "gate_won": sum(
+                    g < d for g, d in zip(secs["gated"], secs["diff"])
                 ),
-                "gate_estimate_sec": round(est_sec, 4),
-                "net_change_ratio": round(est["net_change_ratio"], 3),
             }
         ),
         flush=True,
@@ -102,23 +141,10 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=100_000)
     ap.add_argument("--files", type=int, default=16)
     ap.add_argument(
-        "--cdc-reads-only",
+        "--gate-only",
         action="store_true",
-        help="skip the streaming-sink + drain configs; build a capture "
-        "table with a 1%% mutation and price ONLY the feed reads "
-        "(capture vs diff) — the cheap way to probe large tables",
-    )
-    ap.add_argument(
-        "--backlog",
-        type=int,
-        default=0,
-        help="with --cdc-reads-only: commit N separate 1%%-mutation "
-        "upserts (rotating key slices), then price capture-vs-diff "
-        "feed reads across interval WIDTHS up to N — a consumer that "
-        "wakes after N commits reads N capture units in one feed, so "
-        "the capture tier's per-unit overhead grows with the backlog "
-        "while the diff's 2x-table cost stays flat; this locates the "
-        "crossover (VERDICT r8 #7)",
+        help="skip the streaming-sink + drain configs and run only the "
+        "saturation gate vs forced full diff pairs",
     )
     args = ap.parse_args()
 
@@ -131,65 +157,8 @@ def main() -> None:
             spark, count=args.docs, deterministic_ids=True
         ).repartition(args.files).write.mode("overwrite").parquet(staging)
 
-    if args.cdc_reads_only:
-        from pyspark.sql import functions as F  # noqa: E402
-
-        from durable_functions_cosmosdb_etl_spark.sinks.logtable import (  # noqa: E402
-            LogTable,
-        )
-
-        src_cap_dir = f"{WORK}/src_capture_ro_{args.docs}"
-        shutil.rmtree(src_cap_dir, ignore_errors=True)
-        src_cap = LogTable(
-            spark, src_cap_dir, key="id", change_capture=True
-        )
-        src_cap.create(spark.read.parquet(staging))
-        if args.backlog:
-            # N commits of ~1% each, rotating hash slices of the key
-            # space (consecutive commits touch DIFFERENT keys — churn,
-            # not a single hot row re-written N times). Uniform slices
-            # touch every bucket, the diff tier's documented worst
-            # case and the honest comparison: the diff pays ~2x the
-            # table for ANY width, capture pays per changed row plus a
-            # per-unit open cost that grows with the backlog width.
-            snap = src_cap.snapshot()
-            t_build = time.perf_counter()
-            for i in range(args.backlog):
-                # pmod, not abs(hash) % 100 (ADVICE r9): Spark's
-                # abs(Integer.MIN_VALUE) overflows and stays negative,
-                # so an INT_MIN-hashed row would fall in no slice —
-                # same idiom as LogTable._bucketed's pmod(xxhash64).
-                slice_i = snap.filter(
-                    F.pmod(F.hash(F.col("id")), F.lit(100)) == i % 100
-                ).withColumn("pr", F.lit(f"m{i}"))
-                src_cap.upsert(slice_i)
-            build_sec = round(time.perf_counter() - t_build, 3)
-            print(
-                json.dumps(
-                    {
-                        "config": "changefeed_backlog_build",
-                        "docs": args.docs,
-                        "commits": args.backlog,
-                        "build_wall_sec": build_sec,
-                    }
-                ),
-                flush=True,
-            )
-            hi = args.backlog  # latest version (create was v0)
-            # Always include the FULL backlog as the deepest width —
-            # it is the exact interval a consumer waking N commits
-            # behind pays, and the point the help text promises
-            # (code-review r9: a backlog off the hardcoded ladder
-            # previously never priced its own depth).
-            widths = [
-                w for w in (1, 5, 10, 25, 50, 100, 200) if w < args.backlog
-            ] + [args.backlog]
-            for width in widths:
-                _price_feed_reads(src_cap, hi - width, hi, args.docs)
-        else:
-            sample = src_cap.snapshot().limit(max(1, args.docs // 100))
-            src_cap.upsert(sample.withColumn("pr", F.lit("mutated")))
-            _price_feed_reads(src_cap, 0, 1, args.docs)
+    if args.gate_only:
+        _gate_vs_diff(spark, staging, args.docs)
         return
 
     configs = [
@@ -333,46 +302,7 @@ def main() -> None:
         flush=True,
     )
 
-    # --- CDC tier (round 7): same 1%-mutation drain with the source's
-    # stored change capture serving the feed — O(changed rows) instead
-    # of the O(touched buckets) snapshot-diff join. The capture row's
-    # write-side cost shows up in the mutation upsert (timed too).
-    src_cap_dir = f"{WORK}/src_capture"
-    dst_cap_dir = f"{WORK}/out_changefeed_capture"
-    cur_cap = f"{WORK}/capture_cursor.json"
-    for d in (src_cap_dir, dst_cap_dir):
-        shutil.rmtree(d, ignore_errors=True)
-    if os.path.exists(cur_cap):
-        os.remove(cur_cap)
-    src_cap = LogTable(spark, src_cap_dir, key="id", change_capture=True)
-    src_cap.create(src.snapshot())
-    dst_cap = LogTable(spark, dst_cap_dir, key="id")
-    run_changefeed_transform(spark, src_cap, dst_cap, cur_cap, transform=hop1)
-    sample = src_cap.snapshot().limit(max(1, args.docs // 100))
-    t4 = time.perf_counter()
-    src_cap.upsert(sample.withColumn("processed", F.lit(True)))
-    dt_upsert = time.perf_counter() - t4
-    t5 = time.perf_counter()
-    st5 = run_changefeed_transform(
-        spark, src_cap, dst_cap, cur_cap, transform=hop1
-    )
-    dt5 = time.perf_counter() - t5
-    print(
-        json.dumps(
-            {
-                "config": "changefeed_incremental_capture_on",
-                "docs": args.docs,
-                "incremental_rows": st5["rows_upserted"],
-                "mutation_upsert_wall_sec": round(dt_upsert, 3),
-                "incremental_wall_sec": round(dt5, 3),
-            }
-        ),
-        flush=True,
-    )
-    # read-side pricing over the interval the drain just consumed
-    _price_feed_reads(
-        src_cap, st5["from_version"], st5["to_version"], args.docs
-    )
+    _gate_vs_diff(spark, staging, args.docs)
 
 
 if __name__ == "__main__":
