@@ -14,9 +14,10 @@ operators/lease.py):
   own ``data/c{version}/`` directory, hash-bucketed by key
   (``__bucket=k`` subdirs); nothing is ever modified in place. Each
   bucket unit is ONE parquet file (the write repartitions on the
-  bucket), so a commit's write parallelism is bounded by the buckets it
-  touches — size ``n_buckets`` for the parallelism a full rewrite
-  (``compact``) needs.
+  bucket into ``min(n_buckets, defaultParallelism)`` tasks), so a
+  commit's write parallelism is bounded by the buckets it touches —
+  size ``n_buckets`` for the parallelism a full rewrite (``compact``)
+  needs.
 - ``_log/{version:020d}.json`` records, per commit, the (dir, bucket)
   units added and the units logically removed. The LIVE file set at
   version V is replay(log ≤ V) — so a MERGE never reads what it is
@@ -509,8 +510,7 @@ class LogTable:
         self.last_feed_info: dict | None = None
         # Per-version live-unit maps (code-review r11, third pass): a
         # diff-tier serve replays lo/hi for its own read AFTER its
-        # telemetry estimate already replayed them, and the gated
-        # drain's truncation mirror replays them again — a committed
+        # telemetry estimate already replayed them — a committed
         # version's live map is IMMUTABLE (the log is append-only and
         # never vacuumed; data-file deletion doesn't change the map),
         # so one replay per version per handle suffices. Measured with
@@ -704,15 +704,14 @@ class LogTable:
         checkpoints are superseded but never deleted, so a replay AT an
         old version (a lagging feed cursor's lo-side rollup, time
         travel) can still start from the newest checkpoint at or before
-        it. Consulting only the newest checkpoint overall made exactly
-        the deep-backlog case the saturation gate targets — cursor
-        far behind a producer whose maintenance kept checkpointing —
-        degrade to a full O(history) replay (code-review r11, third
-        pass). The version is parsed from the zero-padded filename, so
-        out-of-range checkpoints are never opened. Names whose version
-        segment is not all digits (a manual ``_checkpoint.bak.json``)
-        are ignored, not a ValueError inside every replay (ADVICE
-        r11)."""
+        it. Consulting only the newest checkpoint overall made the
+        deep-backlog case — a cursor far behind a producer whose
+        maintenance kept checkpointing — degrade to a full O(history)
+        replay (code-review r11, third pass). The version is parsed
+        from the zero-padded filename, so out-of-range checkpoints are
+        never opened. Names whose version segment is not all digits (a
+        manual ``_checkpoint.bak.json``) are ignored, not a ValueError
+        inside every replay (ADVICE r11)."""
         listing = self._list_log()
         idx = (
             bisect.bisect_right(listing.cp_versions, as_of)
@@ -902,10 +901,20 @@ class LogTable:
         task, so every unit is ONE parquet file. Without it each write
         task puts a file into every bucket it holds rows for (tasks ×
         buckets files per commit), and every later read of the unit
-        pays a file open and footer read per file."""
+        pays a file open and footer read per file.
+
+        The partition count is explicit, ``min(n_buckets,
+        defaultParallelism)``: AQE coalesces an unnumbered repartition's
+        small shuffle into ONE partition, so one task wrote a commit's
+        bucket files one after another (1.41 s of one-task stage time
+        per ``etl_changefeed`` cycle on 4 vCPUs, SCALE.md §2b). AQE
+        leaves a numbered repartition alone, and hashing still maps
+        each bucket to exactly one task."""
         rel = f"{_DATA_DIR}/c{v}"
         out = os.path.join(self.path, rel)
-        bucketed.repartition(F.col("__bucket")).write.mode(
+        sc = self.spark.sparkContext
+        n_tasks = min(self.n_buckets, sc.defaultParallelism)
+        bucketed.repartition(n_tasks, F.col("__bucket")).write.mode(
             "overwrite"
         ).partitionBy("__bucket").parquet(out)
         added = []
@@ -1536,9 +1545,7 @@ class LogTable:
         that still EXIST (:meth:`_schema_reps`), a side whose schema is
         unrecoverable falls to the next, and when no side can serve it
         the failure is the typed :class:`FeedTruncatedError`, not a raw
-        missing-file planning error (code-review r11, third pass;
-        :meth:`feed_truncation_missing` mirrors this rule so the gated
-        consumer's retention-lag alert agrees with the serve). Raises
+        missing-file planning error (code-review r11, third pass). Raises
         the documented "both versions are empty" ``ValueError`` when
         every side is empty — the one case with no schema to serve,
         which feed consumers treat as an empty feed, never as
@@ -1563,31 +1570,11 @@ class LogTable:
             raise FeedTruncatedError(*truncated)
         raise ValueError("both versions are empty")
 
-    def _empty_feed_missing(
-        self, *sides: tuple[int, dict[str, dict]]
-    ) -> list[str]:
-        """Vacuumed units :meth:`_empty_feed` would trip over — empty
-        when some side can supply the schema, or when every side is
-        empty (that raises the documented empty-feed ``ValueError``,
-        not truncation). The driver-side mirror of ``_empty_feed``'s
-        side walk, built on the same :meth:`_schema_reps` rule so the
-        two cannot drift on what counts as recoverable."""
-        truncated: list[str] | None = None
-        for _, units in sides:
-            if not units:
-                continue
-            _, missing = self._schema_reps(units)
-            if not missing:
-                return []
-            if truncated is None:
-                truncated = missing
-        return truncated or []
-
     def _interval(self, from_version: int, to_version: int | None) -> int:
         """``to_version`` resolved (None = latest) after checking that
         ``(from, to]`` names committed versions in order. An inverted
-        interval would otherwise price as all-zero (waving a backlog
-        through the saturation gate) or read as serveable."""
+        interval would otherwise price as all-zero or read as
+        serveable."""
         latest = self.version()
         to_version = latest if to_version is None else to_version
         for v in (from_version, to_version):
@@ -1666,42 +1653,87 @@ class LogTable:
             "net_change_ratio": interval_rows / max(live_rows, 1),
         }
 
-    def feed_truncation_missing(
-        self, from_version: int, to_version: int
-    ) -> list[str]:
-        """Vacuumed units a ``changes(from, to)`` call would trip over —
-        empty when the interval is serveable. Mirrors the serve's own
-        guards WITHOUT planning the feed: the diff's retention guard
-        (touched-bucket data units at both interval ends), plus the
-        empty feed's schema reps (:meth:`_empty_feed_missing`) when no
-        touched bucket holds units at either end — the serve's
-        old-None/new-None exit. Driver ``stat`` calls only, no Spark
-        job.
+    def post_images(
+        self, from_version: int, to_version: int | None = None
+    ) -> DataFrame | None:
+        """Insert/update feed of ``(from, to]`` served from the delta
+        units its deferred upserts logged: the latest row of every key
+        those commits wrote, as ``(change="upsert", …row…)``. None when
+        the interval is not of that kind; the caller then serves it
+        with :meth:`changes`.
 
-        Used by the saturation-gated changefeed consumer (ADVICE r10):
-        a snapshot reconcile reads only the CURRENT version, so it
-        succeeds over an interval the feed could not have served —
-        correct, but it would silently swallow the retention-lag alert
-        ``on_truncated="error"`` exists to raise. This check keeps the
-        lag observable without giving up the cheaper recovery.
+        The contract is the reference's change feed (EtlProcess.cs:
+        183-187, SURVEY.md §1.1): inserted or updated documents, the
+        latest version of each, no deletes. It is NOT :meth:`changes`'
+        NET diff: inserts and updates are not told apart, and a key
+        rewritten with the values it already held is upserted again,
+        which is idempotent in a consumer's state.
+
+        Only an interval whose commits are all ``upsert_delta`` or
+        ``compact`` is served. A deferred upsert only adds delta units,
+        so the keys it wrote are the keys it changed; a compact changes
+        layout, never content, and removes delta units from the live
+        set but not from disk (``checkpoint_log`` commits no version).
+        Any other commit can change or delete keys it does not add
+        rows for, so the interval returns None — as does one that names
+        no delta unit, or whose delta units or ``to``-side schema were
+        vacuumed: the diff then serves it or raises
+        :class:`FeedTruncatedError`, exactly as before.
+
+        The read is the delta units alone, O(rows the interval staged)
+        rather than O(table), planned from the log with no Spark job.
+        Its schema is the table's at ``to`` merged with the deltas', so
+        the frame carries the diff's columns, and a column a delta
+        lacks reads NULL as on the diff's resolved new side. Each
+        commit is deduped on write, so rows collapse to the highest
+        ``__gen`` per key only when the interval holds more than one
+        deferred upsert.
+
+        Records ``last_feed_info`` with tier ``"post_image"`` and the
+        diff's keys: the delta units and rows read as
+        ``interval_units``/``interval_rows``, the table at ``to`` as
+        ``live_units``/``live_rows``.
         """
         to_version = self._interval(from_version, to_version)
-        touched = self._touched_buckets(from_version, to_version)
-        lo = self._live_units(as_of=from_version)
+        deltas: dict[str, dict] = {}
+        n_commits = 0
+        for e in self._log_entries(after=from_version, upto=to_version):
+            if e.get("op") == "compact":
+                continue
+            if e.get("op") != "upsert_delta":
+                return None
+            n_commits += 1
+            deltas.update((u["unit"], u) for u in e["added"])
+        if not deltas or self.missing_units(deltas):
+            return None
         hi = self._live_units(as_of=to_version)
-        gone = sorted(
-            set(self.missing_units(lo, touched))
-            | set(self.missing_units(hi, touched))
-        )
+        reps, gone = self._schema_reps(hi)
         if gone:
-            return gone
-        if not any(
-            e["bucket"] in touched for e in lo.values()
-        ) and not any(e["bucket"] in touched for e in hi.values()):
-            return self._empty_feed_missing(
-                (to_version, hi), (from_version, lo)
+            return None
+        reps.update(self._schema_reps(deltas)[0])
+        df = self._read_units(deltas, None, self._reps_schema(reps))
+        if n_commits > 1:
+            w = Window.partitionBy(self.key).orderBy(F.col("__gen").desc())
+            df = (
+                df.withColumn("__rn", F.row_number().over(w))
+                .filter(F.col("__rn") == 1)
+                .drop("__rn")
             )
-        return []
+        df = df.drop("__b", "__gen")
+        interval_rows = sum(u.get("rows") or 0 for u in deltas.values())
+        live_rows = sum(u.get("rows") or 0 for u in hi.values())
+        self.last_feed_info = {
+            "tier": "post_image",
+            "from": from_version,
+            "to": to_version,
+            "fallback_reason": None,
+            "interval_units": len(deltas),
+            "interval_rows": interval_rows,
+            "live_units": len(hi),
+            "live_rows": live_rows,
+            "net_change_ratio": interval_rows / max(live_rows, 1),
+        }
+        return df.select(F.lit("upsert").alias("change"), *df.columns)
 
     def changes(
         self, from_version: int, to_version: int | None = None
@@ -1727,12 +1759,15 @@ class LogTable:
         an interval containing one reads the whole table at both ends —
         run feeds and compaction on separate cadences.
 
+        A consumer that needs only inserted and updated rows can first
+        try :meth:`post_images`, which serves a deferred-upsert interval
+        from its delta units alone.
+
         Observability: every successful call records ``{"tier":
         "diff", "from", "to", "fallback_reason": None}`` plus the
         interval's price from :meth:`feed_interval_stats` in
-        ``self.last_feed_info``, so an operator can see how close a
-        feed runs to the re-bootstrap threshold without a second
-        estimate call.
+        ``self.last_feed_info``, so an operator can see what the feed
+        read without a second estimate call.
         """
         to_version = self._interval(from_version, to_version)
         est = self.feed_interval_stats(from_version, to_version)
@@ -1832,11 +1867,11 @@ class LogTable:
         """Physically delete data no snapshot within ``retain_versions``
         of latest can reference: units removed at or before the horizon,
         plus orphan commit dirs (losers of a commit race / crashes
-        between data write and log commit) and leftover ``_changes/``
-        dirs. Must not run concurrently with a writer (an in-flight
-        commit's data dir looks like an orphan until its log entry
-        lands) — same single-writer
-        discipline as the mutating ops, enforced by the caller's lease;
+        between data write and log commit), leftover ``_changes/``
+        dirs, and stray files in either. Must not run concurrently with
+        a writer (an in-flight commit's data dir looks like an orphan
+        until its log entry lands) — same single-writer discipline as
+        the mutating ops, enforced by the caller's lease;
         a nonzero ``min_age_seconds`` also protects in-flight commits
         mechanically (a freshly-written dir is younger than the grace).
 
@@ -1935,7 +1970,8 @@ class LogTable:
         # _changes/ dir — change units of the stored-capture tier older
         # versions of this module wrote, which nothing reads any more.
         # Grace clock = the dir's own mtime (also shields an IN-FLIGHT
-        # commit whose log entry hasn't landed yet).
+        # commit whose log entry hasn't landed yet). A stray plain file
+        # there is swept on the same clock.
         for sub in (_DATA_DIR, "_changes"):
             root = os.path.join(self.path, sub)
             if not os.path.isdir(root):
@@ -1945,7 +1981,10 @@ class LogTable:
                 full = os.path.join(root, d)
                 if rel in logged_dirs or too_young(os.path.getmtime(full)):
                     continue
-                shutil.rmtree(full)
+                if os.path.isdir(full):
+                    shutil.rmtree(full)
+                else:
+                    os.remove(full)
                 deleted.append(rel)
         # Stale commit tmps: a writer that died between writing its tmp
         # and linking it leaves NNN.json.<pid>.tmp — invisible to

@@ -3,16 +3,16 @@ the engine itself produces.
 
 This closes the reference's EP2 loop (change feed → transform → upsert,
 /root/reference/EtlProcess.cs:183-206) over the engine's OWN storage
-tier: ``LogTable.changes()`` is the producer half (the Cosmos change
-feed analog), and :func:`run_changefeed_transform` is the consumer half
-(the CosmosDBTrigger + upsert analog) — so a medallion chain
-(raw LogTable → transform → derived LogTable → …) runs end-to-end with
-the same effectively-once contract as the file-source pipeline in
-``streaming/pipeline.py``.
+tier: ``LogTable.post_images()`` / ``changes()`` is the producer half
+(the Cosmos change feed analog), and :func:`run_changefeed_transform`
+is the consumer half (the CosmosDBTrigger + upsert analog) — so a
+medallion chain (raw LogTable → transform → derived LogTable → …) runs
+end-to-end with the same effectively-once contract as the file-source
+pipeline in ``streaming/pipeline.py``.
 
 | reference (EtlProcess.cs)            | here                           |
 |--------------------------------------|--------------------------------|
-| CosmosDBTrigger change feed (:183)   | LogTable.changes(cur, upto)    |
+| CosmosDBTrigger change feed (:183)   | post_images, else changes()    |
 | lease container continuation (:184)  | cursor file (commit version)   |
 | lease container serialization (:185) | lease_path (O3 lease guard)    |
 | MaxItemsPerInvocation=10 (:186)      | max_versions_per_batch         |
@@ -38,24 +38,31 @@ Exactly-once (state-level) argument, same shape as the streaming sinks'
 1. The cursor is persisted (atomic tmp+rename+fsync, like a streaming
    checkpoint offset file) only AFTER the batch's target commits land.
 2. A crash anywhere therefore replays a suffix of version intervals.
-3. Replay converges: ``changes(cur, upto)`` over committed versions is
-   deterministic, the caller's transform must be deterministic and
-   key-preserving (documented contract), and upsert/delete_keys are
-   idempotent in STATE — re-applying the same rows yields the same
-   stored table (possibly through extra no-op-in-state versions on the
-   target, never duplicate or lost rows).
+3. Replay converges: the feed of ``(cur, upto]`` over committed
+   versions is deterministic in state (either tier upserts each key's
+   row at ``upto``; the post-image tier may add keys rewritten with
+   unchanged values, a no-op), the caller's transform must be
+   deterministic and key-preserving (documented contract), and
+   upsert/delete_keys are idempotent in STATE — re-applying the same
+   rows yields the same stored table (possibly through extra
+   no-op-in-state versions on the target, never duplicate or lost
+   rows).
 
-At 100 TB: each batch reads only the buckets its version interval
-touched (``changes()``'s log-driven pruning), the upsert rewrites only
-the buckets the transformed keys hash into, and the cursor/log
-operations are O(commits) driver metadata — nothing scales with table
-size except the actually-changed data.
+At 100 TB: an interval of deferred upserts (the ingest tier's writer,
+with its compactions) is served by ``LogTable.post_images`` from the
+delta units those commits logged — the rows the interval staged, latest
+per key, whatever the table's size. Any other interval takes
+``changes()``'s snapshot diff, which reads the buckets the interval
+touched at both ends; uniformly spread keys touch every bucket, so that
+path costs the table. The upsert rewrites only the buckets the
+transformed keys hash into, and the cursor/log operations are
+O(commits) driver metadata. Measured with ``tools/stream_probe.py
+--feed-only`` (``changefeed_post_image_vs_diff``, SCALE.md §2b).
 """
 
 from __future__ import annotations
 
 import json
-import logging
 import os
 from collections.abc import Callable
 from datetime import datetime
@@ -71,8 +78,6 @@ from ..operators.lease import (
 )
 from ..sinks.logtable import FeedTruncatedError, LogTable
 from ..sinks.writers import audit_run
-
-_LOG = logging.getLogger(__name__)
 
 
 class LeaseLostError(RuntimeError):
@@ -178,7 +183,6 @@ def run_changefeed_transform(
     lease_path: str | None = None,
     lease_timeout_min: int = DEFAULT_TIMEOUT_MIN,
     audit_dir: str | None = None,
-    rebootstrap_saturation: float | None = None,
 ) -> dict:
     """Drain the source table's change feed into the target table
     (availableNow-style: consume up to the source version observed at
@@ -253,51 +257,11 @@ def run_changefeed_transform(
       (:98-102 returns before any audit; the lease state file itself
       records the live holder).
 
-    - ``rebootstrap_saturation``: SCALE.md §2b's operational rule,
-      wired in (VERDICT r9 #1). When set, each drain loop head prices
-      the WHOLE remaining backlog ``(cursor, latest]`` with the
-      source's log-only :meth:`~..sinks.logtable.LogTable.
-      feed_interval_stats` estimate of what the snapshot diff reads;
-      a ``net_change_ratio`` at or above this threshold means serving
-      the feed reads about as much as re-deriving the target from the
-      CURRENT snapshot, so the drain takes the snapshot-reconcile path
-      (the same final-state-identical routine as truncation recovery,
-      jumping ``upto`` to latest past any batch cap) instead.
-      Calibration: a full diff reads every bucket at both ends and
-      prices at (lo + hi) / hi rows, so ``2.0`` fires only when the
-      whole table is read and did not grow over the backlog. The
-      ``etl_changefeed`` benchmark's cycles insert rows, so the gate
-      would not fire there even if it were turned on. Measured with
-      ``tools/stream_probe.py --gate-only`` (``changefeed_gate_vs_diff``:
-      a 64-bucket source whose backlog is one ``upsert_deferred`` plus
-      a ``compact``, so the diff reads the whole table; eager target;
-      local[4] on 4 vCPUs; 5 alternating pairs per round, equal final
-      states), the gate does not beat that diff: 5,000 docs with 60
-      changed drain in 2.73 s gated vs 2.74 s through the diff
-      (medians, gate won 3 of 5), and 50,000 docs with 500 changed in
-      3.46 s vs 3.20 s and 3.19 s vs 2.94 s over two rounds (won 0 and
-      1 of 5). Both paths rewrite the whole target; the gate trades
-      the diff's two-snapshot join for one snapshot read plus an
-      anti-join for stale keys. The estimate is one log walk per loop
-      head, no Spark job. ``None`` (default) disables the gate. The
-      choice is recorded: ``stats["saturation_rebootstraps"]`` counts
-      gated batches and ``stats["last_feed_info"]`` records tier
-      ``"snapshot_rebootstrap"`` with the triggering estimate. The
-      gate composes with ``on_truncated="error"``: a backlog the
-      estimate flags as saturated reconciles without the feed ever
-      being requested, even if it is also vacuum-truncated — setting
-      the threshold is itself an explicit opt-in to snapshot
-      reconciliation (the truncation is still reported, see
-      ``fallback_reason``). A truncated backlog the estimate does NOT
-      flag still surfaces per ``on_truncated``.
-
     Returns ``{"batches", "rows_upserted", "rows_deleted",
     "from_version", "to_version", "lease_skipped", "rebootstrapped",
-    "saturation_rebootstraps", "last_feed_info"}`` —
-    ``last_feed_info`` is the drain's telemetry for its final batch
-    (tier, interval and the source's ``feed_interval_stats`` price —
-    VERDICT r9 #5), so the saturation signal is visible in the drain
-    stats and audit row even when the gate is off.
+    "last_feed_info"}`` — ``last_feed_info`` is the drain's telemetry
+    for its final batch (tier, interval and what the serve read —
+    VERDICT r9 #5), visible in the drain stats and audit row.
     """
     if sink not in ("upsert", "deferred"):
         raise ValueError(f"unknown sink mode: {sink!r}")
@@ -312,8 +276,6 @@ def run_changefeed_transform(
         raise ValueError(
             f"source key {source.key!r} != target key {target.key!r}"
         )
-    if rebootstrap_saturation is not None and rebootstrap_saturation <= 0:
-        raise ValueError("rebootstrap_saturation must be > 0")
     stats = {
         "batches": 0,
         "rows_upserted": 0,
@@ -322,7 +284,6 @@ def run_changefeed_transform(
         "to_version": read_cursor(cursor_path),
         "lease_skipped": False,
         "rebootstrapped": False,
-        "saturation_rebootstraps": 0,
         "last_feed_info": None,
     }
     start = datetime.now()
@@ -348,7 +309,6 @@ def run_changefeed_transform(
                 max_versions_per_batch, sink, maintenance_every,
                 compact_min_delta, after_apply, on_truncated,
                 certify_transform, stats, renew=renew,
-                rebootstrap_saturation=rebootstrap_saturation,
             )
         except Exception as exc:  # compensation path, EtlProcess.cs:79-85
             _audit(False, exc)
@@ -407,7 +367,6 @@ def _drain(
     certify_transform,
     stats,
     renew=None,
-    rebootstrap_saturation=None,
 ) -> dict:
     key = source.key
     n_batches = 0
@@ -427,23 +386,9 @@ def _drain(
             if max_versions_per_batch is not None
             else latest
         )
-        # Saturation gate (VERDICT r9 #1 / SCALE.md §2b): price the
-        # WHOLE remaining backlog — not just this batch's capped slice,
-        # since the decision is "catch up incrementally vs re-derive
-        # once" — from the log alone; a backlog whose diff would read
-        # ~the whole table at both ends is reconciled from one read of
-        # the current snapshot instead. Bootstrap (cur < 0) is already
-        # a snapshot read and skips the estimate.
-        saturated = None
-        if rebootstrap_saturation is not None and cur >= 0:
-            est = source.feed_interval_stats(cur, latest)
-            if est["net_change_ratio"] >= rebootstrap_saturation:
-                saturated = est
         feed = None
         truncated: FeedTruncatedError | None = None
-        if saturated is not None:
-            pass  # reconcile below; no feed attempt for this interval
-        elif cur < 0:
+        if cur < 0:
             # Bootstrap batch: the feed "from the beginning" is the
             # whole snapshot as inserts (Delta CDF's startingVersion=0
             # convention). snapshot() raises when nothing is live at
@@ -468,12 +413,18 @@ def _drain(
                     raise
         else:
             try:
-                feed = source.changes(cur, upto)
-                # Saturation telemetry passthrough (VERDICT r9 #5): the
-                # drain's stats/audit row carry the source's interval
-                # price for the final batch, so an operator sees how
-                # close the feed runs to the re-bootstrap threshold
-                # without querying the source handle.
+                # Post-image tier first: an interval of deferred upserts
+                # (and compactions) is served from the rows it staged,
+                # O(changed rows); any other interval takes the diff.
+                # The drain only upserts and deletes by key, so the
+                # latest row per written key is all it needs.
+                feed = source.post_images(cur, upto)
+                if feed is None:
+                    feed = source.changes(cur, upto)
+                # Telemetry passthrough (VERDICT r9 #5): the drain's
+                # stats/audit row carry the source's tier and interval
+                # price for the final batch without querying the source
+                # handle.
                 info = getattr(source, "last_feed_info", None)
                 if info:
                     stats["last_feed_info"] = dict(info)
@@ -493,46 +444,7 @@ def _drain(
                     "empty", cur, upto, None,
                     source.feed_interval_stats(cur, upto),
                 )
-        if saturated is not None:
-            # Same final-state-identical routine as truncation
-            # recovery: target := transform(snapshot(latest)) including
-            # deletes, cursor jumps past any batch cap (one reconcile
-            # beats N snapshot-priced batches).
-            #
-            # Retention-lag observability (ADVICE r10): the reconcile
-            # reads only the CURRENT snapshot, so it silently covers an
-            # interval the feed itself could not have served — under
-            # on_truncated="error" that would have raised, and the
-            # retention-misconfiguration alert the error mode exists
-            # for would vanish. Check the feed's own truncation guards
-            # (driver stat calls, no Spark job) and keep the lag
-            # visible in the log and the audit row's fallback_reason.
-            vacuumed = source.feed_truncation_missing(cur, latest)
-            sat_reason = None
-            if vacuumed:
-                sat_reason = (
-                    f"saturated interval ({cur}, {latest}] is also "
-                    f"truncated ({len(vacuumed)} vacuumed units, e.g. "
-                    f"{vacuumed[0]}): reconciled from snapshot — check "
-                    "retention vs consumer lag"
-                )
-                _LOG.warning("changefeed drain at %s: %s", cursor_path,
-                             sat_reason)
-            upto = latest
-            n_ups, n_dels = _reconcile_snapshot(
-                source, target, transform, certify_transform, sink,
-                key, latest, renew=renew,
-            )
-            stats["rows_upserted"] += n_ups
-            stats["rows_deleted"] += n_dels
-            stats["rebootstrapped"] = True
-            stats["saturation_rebootstraps"] += 1
-            stats["last_feed_info"] = _feed_info(
-                "snapshot_rebootstrap", cur, latest, sat_reason, saturated
-            )
-            n_batches += 1
-            stats["batches"] = n_batches
-        elif truncated is not None:
+        if truncated is not None:
             if on_truncated != "rebootstrap":
                 raise truncated
             # Reconcile at the CURRENT version: the missed interval is
@@ -546,10 +458,10 @@ def _drain(
             stats["rows_upserted"] += n_ups
             stats["rows_deleted"] += n_dels
             stats["rebootstrapped"] = True
-            # Same telemetry shape as the saturation branch — including
-            # the interval estimate keys every other path carries (the
-            # estimate is log-only, so it works on the truncated
-            # interval the feed itself could not serve). cur < 0 = a
+            # Same telemetry shape as every other path, including the
+            # interval estimate keys (the estimate is log-only, so it
+            # works on the truncated interval the feed itself could not
+            # serve). cur < 0 = a
             # truncated capped BOOTSTRAP: there is no interval to price
             # (version -1 does not exist), so the keys read None.
             est = source.feed_interval_stats(max(cur, 0), latest)
@@ -575,8 +487,10 @@ def _drain(
                     .agg(F.count(F.lit(1)).alias("n"))
                     .collect()
                 }
-                n_ups = counts.get("insert", 0) + counts.get("update", 0)
+                # insert/update rows from the diff, "upsert" rows from
+                # the post-image tier (which holds no deletes)
                 n_dels = counts.get("delete", 0)
+                n_ups = sum(counts.values()) - n_dels
                 if n_ups:
                     ups = feed.filter(
                         F.col("change") != "delete"
@@ -614,7 +528,7 @@ def _drain(
         # produce (full-snapshot upsert + bulk deletes), exactly when
         # compaction is most needed.
         if (
-            (saturated is not None or truncated is not None or feed is not None)
+            (truncated is not None or feed is not None)
             and maintenance_every
             and n_batches % maintenance_every == 0
             and target.version() >= 0

@@ -654,172 +654,104 @@ def test_changefeed_audit_rows(spark, tmp_path):
     assert info["batches"] == 1 and info["rows_upserted"] == 1
 
 
-def test_saturation_gate_rebootstraps_instead_of_draining_backlog(
-    spark, tmp_path
-):
-    """VERDICT r9 #1 / SCALE.md §2b wired in: a consumer waking behind
-    a backlog whose diff reads the whole source table at both ends — a
-    deferred upsert plus a compact, the shape stream_probe.py's
-    changefeed_gate_vs_diff row measures — re-derives the target from
-    the CURRENT snapshot
-    instead, gated by the log-only feed_interval_stats estimate,
-    recorded in the drain stats, and FINAL-STATE-IDENTICAL to the
-    ungated incremental drain."""
-    src = _mk(spark, tmp_path, "src")
-    rows = [(i, f"v{i}") for i in range(40)]
-    src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
-    gated = _mk(spark, tmp_path, "gated")
-    control = _mk(spark, tmp_path, "control")
-    cur_g = str(tmp_path / "cur_g.json")
-    cur_c = str(tmp_path / "cur_c.json")
-    # both consumers catch up at v0 (bootstrap = snapshot, gate idle)
-    s0 = run_changefeed_transform(
-        spark, src, gated, cur_g, transform=upcase,
-        rebootstrap_saturation=2.0,
-    )
-    run_changefeed_transform(spark, src, control, cur_c, transform=upcase)
-    assert s0["saturation_rebootstraps"] == 0
-    # saturated backlog: a deferred upsert, a delete the reconcile must
-    # propagate, then a compact — the diff reads the whole table at
-    # both ends, priced (40 + 39) / 39 rows
-    src.upsert_deferred(
-        spark.createDataFrame(
-            [(i, f"w{i}") for i in range(5)], "id long, val string"
-        )
-    )                                                                # v1
-    src.delete_keys(spark.createDataFrame([(0,)], "id long"))        # v2
-    src.compact()                                                    # v3
-    stats = run_changefeed_transform(
-        spark, src, gated, cur_g, transform=upcase,
-        rebootstrap_saturation=2.0,
-        max_versions_per_batch=1,  # the gate jumps past the cap
-    )
-    assert stats["saturation_rebootstraps"] == 1
-    assert stats["rebootstrapped"] is True
-    assert stats["batches"] == 1, "one reconcile, not N capped batches"
-    assert stats["last_feed_info"] == {
-        "tier": "snapshot_rebootstrap", "from": 0, "to": 3,
-        "fallback_reason": None, **src.feed_interval_stats(0, 3),
-    }
-    assert stats["last_feed_info"]["net_change_ratio"] >= 2.0
-    assert read_cursor(cur_g) == src.version()
-    # identical final state to the ungated incremental control drain
-    sc = run_changefeed_transform(
-        spark, src, control, cur_c, transform=upcase,
-    )
-    assert sc["saturation_rebootstraps"] == 0  # gate off by default
-    assert _rows(gated.snapshot(), "id", "val") == _rows(
-        control.snapshot(), "id", "val"
-    )
-    assert (0, "V0") not in _rows(gated.snapshot(), "id", "val")
-    # an UNsaturated interval keeps the incremental feed path
-    src.upsert(spark.createDataFrame([(1, "z1")], "id long, val string"))
-    stats = run_changefeed_transform(
-        spark, src, gated, cur_g, transform=upcase,
-        rebootstrap_saturation=2.0,
-    )
-    assert stats["saturation_rebootstraps"] == 0
-    assert stats["last_feed_info"]["tier"] == "diff"
-    assert stats["rows_upserted"] == 1
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "id long, val string")
 
 
-def test_saturation_gate_fires_on_uncaptured_compact_backlog(
-    spark, tmp_path
-):
-    """VERDICT r10 #2: a compact in the backlog forces the diff to a
-    FULL table diff — the one serve class where the snapshot reconcile
-    wins by the most — and round 10's estimator priced it at ~0, so the
-    gate could never fire on it. Now the interval prices at both sides
-    of the whole table, the gated drain reconciles, and the final state
-    matches the ungated incremental control."""
+def test_deferred_interval_is_served_from_post_images(spark, tmp_path):
+    """A drain interval of deferred upserts and a compact is served
+    from the delta units those commits logged: the latest row of each
+    written key, tier "post_image", every written key counted — a key
+    rewritten with its stored value included, which is a no-op on the
+    target."""
     src = _mk(spark, tmp_path, "src")
-    rows = [(i, f"v{i}") for i in range(40)]
-    src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
-    gated = _mk(spark, tmp_path, "gated")
-    control = _mk(spark, tmp_path, "control")
-    cur_g = str(tmp_path / "cur_g.json")
-    cur_c = str(tmp_path / "cur_c.json")
-    for c, t in ((cur_g, gated), (cur_c, control)):
-        run_changefeed_transform(spark, src, t, c, transform=upcase)
-    # backlog: a partial update, a delete, then a compact.
-    # lo = 40 rows, hi = 39 → priced 79/39 ≈ 2.03 ≥ 2.0.
-    src.upsert(
-        spark.createDataFrame(
-            [(i, f"w{i}") for i in range(5)], "id long, val string"
-        )
-    )                                                                # v1
-    src.delete_keys(spark.createDataFrame([(0,)], "id long"))        # v2
+    tgt = _mk(spark, tmp_path, "tgt")
+    cur = str(tmp_path / "cursor.json")
+    src.create(_kv(spark, [(i, f"v{i}") for i in range(20)]))        # v0
+    run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
+    src.upsert_deferred(_kv(spark, [(1, "a"), (30, "n")]))           # v1
+    src.upsert_deferred(_kv(spark, [(1, "b"), (2, "v2")]))           # v2
     src.compact()                                                    # v3
-    est = src.feed_interval_stats(0, 3)
-    assert est["interval_rows"] == 40 + 39
-    assert est["net_change_ratio"] >= 2.0
-    stats = run_changefeed_transform(
-        spark, src, gated, cur_g, transform=upcase,
-        rebootstrap_saturation=2.0,
-    )
-    assert stats["saturation_rebootstraps"] == 1
+    deltas = [
+        u for e in src.history()[1:3] for u in e["added"]
+    ]
+    stats = run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
     info = stats["last_feed_info"]
-    assert info["tier"] == "snapshot_rebootstrap"
-    assert info["net_change_ratio"] == est["net_change_ratio"]
-    assert info["fallback_reason"] is None  # nothing vacuumed here
-    # ungated control pays the full diff but lands on the same state
-    run_changefeed_transform(spark, src, control, cur_c, transform=upcase)
-    assert _rows(gated.snapshot(), "id", "val") == _rows(
-        control.snapshot(), "id", "val"
-    )
-    assert (0, "V0") not in _rows(gated.snapshot(), "id", "val")
+    assert info == {
+        "tier": "post_image", "from": 0, "to": 3, "fallback_reason": None,
+        "interval_units": len(deltas), "interval_rows": 4,
+        "live_units": info["live_units"], "live_rows": 21,
+        "net_change_ratio": 4 / 21,
+    }
+    assert stats["rows_upserted"] == 3 and stats["rows_deleted"] == 0
+    want = {i: f"V{i}" for i in range(20)} | {1: "B", 30: "N"}
+    assert _rows(tgt.snapshot(), "id", "val") == sorted(want.items())
 
 
-def test_saturated_reconcile_surfaces_truncation(spark, tmp_path, caplog):
-    """ADVICE r10: a backlog that is both saturated AND vacuum-truncated
-    reconciles fine from the current snapshot — but under the default
-    ``on_truncated="error"`` that silently swallows the
-    retention-misconfiguration alert the error mode exists for. The
-    gated drain now checks the feed's truncation guards (driver stat
-    calls only) and keeps the lag visible: a WARNING plus a
-    fallback_reason in the stats/audit row."""
-    import logging as _logging
-
+def test_interval_with_another_commit_kind_takes_the_diff(spark, tmp_path):
+    """An eager upsert, delete_keys, merge or append can change keys it
+    writes no delta row for, so an interval holding one is served by
+    the snapshot diff, with the same result on the target."""
     src = _mk(spark, tmp_path, "src")
-    rows = [(i, f"v{i}") for i in range(40)]
-    src.create(spark.createDataFrame(rows, "id long, val string"))   # v0
-    gated = _mk(spark, tmp_path, "gated")
-    cur_g = str(tmp_path / "cur_g.json")
-    run_changefeed_transform(spark, src, gated, cur_g, transform=upcase)
-    # saturated backlog (3 full churns: the diff reads the whole table
-    # at both ends, ratio 2.0)…
-    for gen in ("w", "x", "y"):
-        src.upsert(
-            spark.createDataFrame(
-                [(i, f"{gen}{i}") for i in range(40)], "id long, val string"
-            )
-        )                                                            # v1-v3
-    # …whose pre-churn data units vacuum reclaims
-    src.vacuum(retain_versions=0)
-    assert src.feed_truncation_missing(0, 3)
-    # the ungated feed would RAISE (error mode) — the alert exists
+    tgt = _mk(spark, tmp_path, "tgt")
+    cur = str(tmp_path / "cursor.json")
+    src.create(_kv(spark, [(i, f"v{i}") for i in range(10)]))
+    run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
+    steps = [
+        lambda: src.upsert(_kv(spark, [(3, "e")])),
+        lambda: src.delete_keys(spark.createDataFrame([(4,)], "id long")),
+        lambda: src.merge(_kv(spark, [(5, "m"), (40, "i")])),
+        lambda: (src.compact(), src.append(_kv(spark, [(50, "p")]))),
+    ]
+    for i, step in enumerate(steps):
+        lo = src.version()
+        src.upsert_deferred(_kv(spark, [(i, f"d{i}")]))
+        step()
+        assert src.post_images(lo, src.version()) is None
+        assert src.post_images(lo, lo + 1) is not None
+        stats = run_changefeed_transform(
+            spark, src, tgt, cur, transform=upcase
+        )
+        assert stats["last_feed_info"]["tier"] == "diff", i
+        assert _rows(tgt.snapshot(), "id", "val") == _rows(
+            upcase(src.snapshot()), "id", "val"
+        )
+
+
+def test_vacuumed_delta_interval_falls_back_like_the_diff(spark, tmp_path):
+    """A deferred interval whose delta units were vacuumed is not served
+    from post-images; the drain sees exactly what changes() does — here
+    the typed FeedTruncatedError, and the snapshot reconcile under
+    on_truncated="rebootstrap"."""
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
         FeedTruncatedError,
     )
 
+    src = _mk(spark, tmp_path, "src")
+    tgt = _mk(spark, tmp_path, "tgt")
+    cur = str(tmp_path / "cursor.json")
+    src.create(_kv(spark, [(i, f"v{i}") for i in range(10)]))        # v0
+    run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
+    src.upsert_deferred(_kv(spark, [(1, "a"), (11, "n")]))           # v1
+    src.compact()                                                    # v2
+    src.vacuum(retain_versions=0)
+    assert all(
+        not (tmp_path / "src" / u["unit"]).exists()
+        for u in src.history()[1]["added"]
+    )
+    assert src.post_images(0, 2) is None
     with pytest.raises(FeedTruncatedError):
-        src.changes(0, 3)
-    with caplog.at_level(
-        _logging.WARNING,
-        logger="durable_functions_cosmosdb_etl_spark.streaming.changefeed",
-    ):
-        stats = run_changefeed_transform(
-            spark, src, gated, cur_g, transform=upcase,
-            rebootstrap_saturation=2.0,
-        )
-    assert stats["saturation_rebootstraps"] == 1
-    reason = stats["last_feed_info"]["fallback_reason"]
-    assert reason and "truncated" in reason and "vacuumed" in reason
-    assert any("truncated" in r.getMessage() for r in caplog.records)
-    # final state is the reconciled snapshot — correctness unaffected
-    assert _rows(gated.snapshot(), "id", "val") == [
-        (i, f"Y{i}".upper()) for i in range(40)
-    ]
+        src.changes(0, 2)
+    with pytest.raises(FeedTruncatedError):
+        run_changefeed_transform(spark, src, tgt, cur, transform=upcase)
+    stats = run_changefeed_transform(
+        spark, src, tgt, cur, transform=upcase, on_truncated="rebootstrap"
+    )
+    assert stats["rebootstrapped"] is True
+    assert stats["last_feed_info"]["tier"] == "snapshot_rebootstrap"
+    assert _rows(tgt.snapshot(), "id", "val") == _rows(
+        upcase(src.snapshot()), "id", "val"
+    )
 
 
 def test_empty_final_interval_stamps_feed_info(spark, tmp_path):

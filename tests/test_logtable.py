@@ -1467,8 +1467,8 @@ def test_feed_interval_stats_prices_certify_on_diff_tier(spark, tmp_path):
 def test_estimate_walk_stops_once_every_bucket_is_touched(
     spark, tmp_path, monkeypatch
 ):
-    """The interval walk behind feed_interval_stats (and the serve and
-    truncation mirror) stops at the commit by which every bucket is
+    """The interval walk behind feed_interval_stats (and the diff
+    serve) stops at the commit by which every bucket is
     touched: past it the diff's read set — and so its price — cannot
     grow. A deep full-churn backlog costs one parsed log entry, a
     narrow one walks until its last bucket appears, and the estimate
@@ -1512,23 +1512,19 @@ def test_estimate_walk_stops_once_every_bucket_is_touched(
         est = t.feed_interval_stats(lo, hi)
         assert parsed == walked, (lo, hi, parsed)
         assert est["interval_rows"] == rows_read, (lo, hi, est)
-        parsed.clear()
-        assert t.feed_truncation_missing(lo, hi) == []
-        assert parsed == walked, (lo, hi, parsed)
 
 
-def test_feed_truncation_missing_rejects_inverted_interval(
-    spark, tmp_path
-):
-    """Code-review r11: the mirror gets the same (from, to] contract
-    guard as feed_interval_stats — an inverted interval must raise,
-    not silently read "serveable" ([])."""
+def test_feed_reads_reject_inverted_interval(spark, tmp_path):
+    """Both feed tiers share feed_interval_stats' (from, to] contract
+    guard: an inverted interval raises rather than reading as an empty
+    or unservable feed."""
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=2)
     t.create(_mk(spark, [(1, "x")]))                             # v0
-    t.upsert(_mk(spark, [(1, "y")]))                             # v1
-    t.upsert(_mk(spark, [(1, "z")]))                             # v2
-    with pytest.raises(ValueError, match="inverted interval"):
-        t.feed_truncation_missing(2, 0)
+    t.upsert_deferred(_mk(spark, [(1, "y")]))                    # v1
+    t.upsert_deferred(_mk(spark, [(1, "z")]))                    # v2
+    for read in (t.post_images, t.changes):
+        with pytest.raises(ValueError, match="inverted interval"):
+            read(2, 0)
 
 
 def test_empty_feed_schema_read_survives_partial_vacuum(spark, tmp_path):
@@ -1555,7 +1551,6 @@ def test_empty_feed_schema_read_survives_partial_vacuum(spark, tmp_path):
     # (0, 2]: only k[2]'s bucket is touched and it holds no unit at
     # either end, so the serve is an empty feed whose schema comes from
     # commit c0 — through its surviving bucket-1 unit
-    assert t.feed_truncation_missing(0, 2) == []
     fed = t.changes(0, 2)
     assert fed.count() == 0
     assert set(fed.columns) == {"change", "id", "val"}
@@ -1566,7 +1561,7 @@ def test_diff_empty_feed_truncation_is_typed(spark, tmp_path):
     touched buckets hold no units at either end serves an empty feed,
     and the touched-bucket retention guard never stats the schema
     source — with both ends' only unit vacuumed, the serve must raise
-    the typed error and the mirror must agree."""
+    the typed error naming that unit."""
     from pyspark.sql import functions as F
 
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
@@ -1587,11 +1582,9 @@ def test_diff_empty_feed_truncation_is_typed(spark, tmp_path):
     # (0, 2]: touched = {k_b's bucket} only — and neither live@0 nor
     # live@2 holds a unit there (v1 added it, v2 removed it), so the
     # serve is an empty feed sourced from the vacuumed bucket-a unit
-    missing = t.feed_truncation_missing(0, 2)
-    assert missing, "mirror must flag the vacuumed schema source"
     with pytest.raises(FeedTruncatedError) as ei:
         t.changes(0, 2)
-    assert ei.value.missing == missing
+    assert ei.value.missing == ["data/c0/__bucket=0"]
 
 
 def _next_job(spark) -> int:
@@ -1607,8 +1600,9 @@ def test_reads_are_planned_from_the_log_without_jobs(
     Sized past Spark's 32-path parallel-listing threshold: 64 buckets,
     more than 32 live units, three live commits with a schema
     evolution between them. Covers snapshot (latest, time travel, all
-    pruned), the feed (including a compact-only interval), and the
-    read side of the eager mutators (upsert, delete_keys, compact)."""
+    pruned), both feed tiers (including a compact-only diff interval),
+    and the read side of the eager mutators (upsert, delete_keys,
+    compact)."""
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=64)
     t.create(
         spark.range(400, numPartitions=4).selectExpr(
@@ -1639,6 +1633,10 @@ def test_reads_are_planned_from_the_log_without_jobs(
     ) == 0
     assert set(pruned[0].columns) == {"id", "val", "lang"}
     assert jobs(lambda: t.changes(0, 1)) == 0
+    images = []
+    assert jobs(lambda: images.append(t.post_images(1, 2))) == 0
+    assert t.last_feed_info["tier"] == "post_image"
+    assert images[0].columns == ["change", "id", "val", "lang"]
 
     # the read side of every eager mutator goes through _read_resolved
     counts: list[int] = []
@@ -1706,6 +1704,67 @@ def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
             ]
             assert len(files) == 1, (op, u["unit"], files)
     assert t.snapshot().count() == 430
+
+
+def _stage_tasks(spark, group: str) -> list[int]:
+    """Task count of every stage the jobs of ``group`` ran, in stage
+    order, from the status store."""
+    tracker = spark.sparkContext.statusTracker()
+    stages = sorted(
+        s
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return [i.numTasks for i in infos if i is not None]
+
+
+def test_commit_write_stage_runs_one_task_per_core(spark, tmp_path):
+    """The write stage of a commit that touches several buckets runs
+    min(n_buckets, defaultParallelism) tasks. An unnumbered
+    repartition on the bucket let AQE coalesce the small shuffle into
+    one task that wrote every bucket file in turn."""
+    par = spark.sparkContext.defaultParallelism
+    if par < 2:
+        pytest.skip("one task is the right count on a one-core session")
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=64)
+    sc = spark.sparkContext
+    for i, write in enumerate(
+        (
+            lambda: t.create(_mk(spark, [(k, "v") for k in range(200)])),
+            lambda: t.upsert_deferred(
+                _mk(spark, [(k, "w") for k in range(50)])
+            ),
+            lambda: t.upsert(_mk(spark, [(k, "x") for k in range(0, 200, 7)])),
+            t.compact,
+        )
+    ):
+        sc.setJobGroup(f"write-stage-{i}", "LogTable commit")
+        try:
+            write()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(t.history()[-1]["added"]) >= 2
+        assert _stage_tasks(spark, f"write-stage-{i}")[-1] == min(64, par)
+
+
+def test_vacuum_removes_a_stray_file(spark, tmp_path):
+    """A plain file under data/ is an orphan like an unlogged commit
+    dir: vacuum removes it on the same grace clock instead of failing
+    on it before the stale-tmp sweep runs."""
+    root = tmp_path / "t"
+    t = LogTable(spark, str(root), key="id", n_buckets=2)
+    t.create(_mk(spark, [(1, "a"), (2, "b")]))
+    (root / "data" / "stray.txt").write_text("x")
+    tmp = root / "_log" / "00000000000000000009.json.123.tmp"
+    tmp.write_text("{}")
+    assert t.vacuum(min_age_seconds=3600) == []
+    assert (root / "data" / "stray.txt").exists()
+    deleted = t.vacuum()
+    assert "data/stray.txt" in deleted
+    assert not (root / "data" / "stray.txt").exists()
+    assert not tmp.exists()
+    assert _rows(t.snapshot()) == [(1, "a"), (2, "b")]
 
 
 def test_type_conflict_between_live_commits_raises(spark, tmp_path):

@@ -177,14 +177,15 @@ def test_jaccard_collapse_equivalence_random(spark, picks, seed):
     assert ea == ca
 
 
+_LT_KVS = st.lists(
+    st.tuples(st.integers(0, 6), st.text(alphabet="xy", min_size=1, max_size=2)),
+    min_size=1,
+    max_size=3,
+    unique_by=lambda kv: kv[0],
+)
 _LT_OP = st.tuples(
     st.sampled_from(["upsert", "deferred", "delete", "compact", "checkpoint"]),
-    st.lists(
-        st.tuples(st.integers(0, 6), st.text(alphabet="xy", min_size=1, max_size=2)),
-        min_size=1,
-        max_size=3,
-        unique_by=lambda kv: kv[0],
-    ),
+    _LT_KVS,
 )
 
 
@@ -449,73 +450,6 @@ def test_changefeed_vacuum_truncation_rebootstrap_matches_model(
 
 
 @given(
-    st.lists(_LT_OP, min_size=1, max_size=4),
-    st.integers(1, 3),
-    st.sampled_from([0.25, 2.0]),
-)
-@settings(max_examples=4, deadline=None)
-def test_changefeed_saturation_gate_matches_dict_model(
-    spark, ops, cap, threshold
-):
-    """Saturation-gate property (round 10, VERDICT r9 #1): the
-    rebootstrap_saturation gate must be invisible to the target's
-    final state under ANY interleaving of eager/deferred upserts,
-    deletes, compactions, and checkpoints — whether the threshold is aggressive (0.25 fires the snapshot
-    reconcile on almost every drain, exercising the reconcile's
-    delete-propagation under arbitrary op mixes) or the calibrated 2.0
-    (fires only on genuinely churn-heavy sequences). The staged test
-    in test_changefeed.py pins the cost telemetry; this pins the
-    semantics the gate is never allowed to change."""
-    import tempfile
-
-    import pytest as _pytest
-
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
-    from durable_functions_cosmosdb_etl_spark.streaming.changefeed import (
-        run_changefeed_transform,
-    )
-
-    work = tempfile.mkdtemp(prefix="cf_gate_prop_")
-    a = LogTable(spark, f"{work}/a", key="id", n_buckets=2)
-    b = LogTable(spark, f"{work}/b", key="id", n_buckets=2)
-    cur = f"{work}/cursor.json"
-    model = {0: "z"}
-    a.create(spark.createDataFrame([(0, "z")], "id long, val string"))
-    fired = 0
-    for i, (kind, kvs) in enumerate(ops):
-        if kind in ("upsert", "deferred"):
-            df = spark.createDataFrame(kvs, "id long, val string")
-            (a.upsert if kind == "upsert" else a.upsert_deferred)(df)
-            model.update(dict(kvs))
-        elif kind == "delete":
-            ks = [k for k, _ in kvs]
-            a.delete_keys(spark.createDataFrame([(k,) for k in ks], "id long"))
-            for k in ks:
-                model.pop(k, None)
-        elif kind == "compact":
-            a.compact()
-        else:
-            a.checkpoint_log()
-        if i % 2 == 1:
-            st_ = run_changefeed_transform(
-                spark, a, b, cur, max_versions_per_batch=cap,
-                rebootstrap_saturation=threshold,
-            )
-            fired += st_["saturation_rebootstraps"]
-    st_ = run_changefeed_transform(
-        spark, a, b, cur, max_versions_per_batch=cap,
-        rebootstrap_saturation=threshold,
-    )
-    fired += st_["saturation_rebootstraps"]
-    if model:
-        got = {r["id"]: r["val"] for r in b.snapshot().collect()}
-        assert got == model, f"gate fired {fired}x"
-    else:
-        with _pytest.raises(ValueError, match="no data"):
-            b.snapshot()
-
-
-@given(
     st.lists(_LT_OP, min_size=1, max_size=5),
     st.integers(0, 100),
     st.integers(0, 100),
@@ -578,88 +512,73 @@ def test_feed_estimate_matches_full_walk(spark, ops, pick_lo, pick_hi):
         }, (a, b)
 
 
+_DEFERRED_OP = st.tuples(
+    st.sampled_from(["deferred", "deferred", "compact", "checkpoint"]),
+    _LT_KVS,
+)
+
+
 @given(
-    st.lists(_LT_OP, min_size=2, max_size=5),
-    st.integers(0, 2),
-    st.integers(0, 3),
+    st.lists(_DEFERRED_OP, min_size=1, max_size=5),
+    st.integers(0, 100),
     st.integers(0, 100),
 )
-@settings(max_examples=4, deadline=None)
-def test_feed_truncation_missing_mirrors_the_serve(
-    spark, ops, retain, vac_at, pick
+@settings(max_examples=6, deadline=None)
+def test_post_images_match_snapshot_and_cover_the_diff(
+    spark, ops, pick_lo, pick_hi
 ):
-    """Driver-side truncation mirror property (round 11, hardening the
-    ADVICE r10 observability fix): ``feed_truncation_missing`` exists
-    so the saturation-gated consumer can see — WITHOUT planning a feed
-    — whether the interval it is about to reconcile over would have
-    raised FeedTruncatedError. That is only trustworthy if the mirror
-    agrees with the serve itself on every interval, op interleaving,
-    and vacuum placement:
-
-    - mirror says [] → the serve must NOT raise
-      FeedTruncatedError (it may serve rows, an empty feed, or the
-      empty-interval ValueError — all mean "serveable");
-    - mirror says non-empty → the serve must raise the typed
-      FeedTruncatedError, and the unit names the mirror reports must
-      all be genuinely absent from disk.
-
-    A drifted mirror would either silently swallow the retention-lag
-    alert (false []) or spam false alarms into the audit row (false
-    positives) — both directions are pinned here."""
+    """The post-image tier on random deferred-upsert / compact /
+    checkpoint sequences: for an interval holding a deferred upsert,
+    ``post_images(lo, hi)`` returns one row per key, its keys are
+    exactly the keys the interval's deferred upserts wrote, every row
+    equals ``snapshot(hi)``'s row for its key, and the key set holds
+    every insert/update key of ``changes(lo, hi)``. An interval with
+    no deferred upsert is left to the diff (None)."""
     import tempfile
 
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        FeedTruncatedError,
-        LogTable,
-    )
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
 
-    path = tempfile.mkdtemp(prefix="lt_trunc_mirror_")
+    path = tempfile.mkdtemp(prefix="lt_post_image_")
     t = LogTable(spark, path, key="id", n_buckets=2)
     t.create(spark.createDataFrame([(0, "z")], "id long, val string"))
-    for i, (kind, kvs) in enumerate(ops):
-        if kind in ("upsert", "deferred"):
-            df = spark.createDataFrame(kvs, "id long, val string")
-            (t.upsert if kind == "upsert" else t.upsert_deferred)(df)
-        elif kind == "delete":
-            t.delete_keys(
-                spark.createDataFrame([(k,) for k, _ in kvs], "id long")
+    written: dict[int, set[int]] = {}
+    for kind, kvs in ops:
+        if kind == "deferred":
+            t.upsert_deferred(
+                spark.createDataFrame(kvs, "id long, val string")
             )
+            written[t.version()] = {k for k, _ in kvs}
         elif kind == "compact":
             t.compact()
         else:
             t.checkpoint_log()
-        if i == min(vac_at, len(ops) - 1):
-            t.vacuum(retain_versions=retain)
     latest = t.version()
-    intervals = {(0, latest), (latest // 2, latest)}
-    intervals.add((pick % latest if latest > 0 else 0, latest))
-    # OLD-to intervals (code-review r11, third pass): an interval
-    # ending at latest can never expose the empty-feed schema-read
-    # truncation — live@latest is never vacuumed — which is exactly
-    # why two earlier passes over this property missed that hole.
-    # Exercise interval ENDS the vacuum may have reclaimed too.
-    if latest >= 2:
-        intervals.add((0, latest // 2))
-        a, b = pick % latest, (pick * 7 + 3) % latest
-        if a != b:
-            intervals.add((min(a, b), max(a, b)))
-    for lo, hi in intervals:
-        if lo >= hi:
+    lo = pick_lo % (latest + 1)
+    hi = lo + pick_hi % (latest - lo + 1)
+    for a, b in {(lo, hi), (0, latest)}:
+        keys = set().union(
+            *(ks for v, ks in written.items() if a < v <= b)
+        )
+        feed = t.post_images(a, b)
+        if not keys:
+            assert feed is None, (a, b)
             continue
-        missing = t.feed_truncation_missing(lo, hi)
-        try:
-            t.changes(lo, hi).count()
-            raised = False
-        except FeedTruncatedError:
-            raised = True
-        except ValueError:
-            raised = False  # empty-interval contract, not truncation
-        if raised:
-            assert missing, (lo, hi)
-        else:
-            assert missing == [], (lo, hi, missing)
-        for unit in missing:
-            assert not os.path.exists(os.path.join(path, unit)), unit
+        assert t.last_feed_info["tier"] == "post_image"
+        snap = t.snapshot(version=b)
+        assert feed.columns == ["change", *snap.columns]
+        rows = feed.collect()
+        assert {r["change"] for r in rows} == {"upsert"}
+        got = {r["id"]: r["val"] for r in rows}
+        assert len(got) == len(rows), "one row per key"
+        assert set(got) == keys, (a, b)
+        want = {r["id"]: r["val"] for r in snap.collect()}
+        assert got == {k: want[k] for k in keys}, (a, b)
+        net = {
+            r["id"]
+            for r in t.changes(a, b).collect()
+            if r["change"] != "delete"
+        }
+        assert net <= keys, (a, b)
 
 
 @given(

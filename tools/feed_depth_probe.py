@@ -27,9 +27,10 @@ cadence writes, then times at each requested depth:
   them keeps the once-per-change build priced at depth instead of
   hidden behind a median of memo hits.
 - ``loop_head_sec``: one drain loop head's LogTable reads on a fresh
-  handle — ``version()``, the gate's estimate, the serve's estimate,
-  ``feed_truncation_missing`` and three ``_live_units`` calls (lo, hi,
-  latest) — for the last commit (``interval_1``), the last 50
+  handle — ``version()``, the post-image tier's log walk (which
+  declines at the first eager commit of this log), the diff serve's
+  estimate and three ``_live_units`` calls (lo, hi, latest) — for the
+  last commit (``interval_1``), the last 50
   (``interval_50``) and the mid-log cursor to the head
   (``mid_log``). This is the sequence the listing and live-unit memos
   exist for.
@@ -211,9 +212,8 @@ def main() -> None:
             def _loop_head(lo: int) -> None:
                 t = handle(base)
                 t.version()
-                t.feed_interval_stats(lo, hi)  # the gate's estimate
+                assert t.post_images(lo, hi) is None
                 t.feed_interval_stats(lo, hi)  # the serve's estimate
-                t.feed_truncation_missing(lo, hi)
                 t._live_units(as_of=lo)
                 t._live_units(as_of=hi)
                 t._live_units()

@@ -15,13 +15,16 @@ Axes measured:
     trades against latency
   - sink tier: batch_dirs (zero write amplification) vs logtable
     (transactional MERGE per batch)
+  - change-feed tier: one deferred 1% mutation drained from its delta
+    units (post-image) vs through the snapshot diff (``--feed-only``
+    runs only these pairs)
 
 Prints one JSON line per configuration. Staging data is built once per
 run under $TMPDIR/stream_probe (default /tmp) and reused across
 configurations; the work dir is removed on exit unless
 SPARK_GRAFT_PROBE_KEEP=1.
 
-Usage: python tools/stream_probe.py [--docs N] [--files K] [--gate-only]
+Usage: python tools/stream_probe.py [--docs N] [--files K] [--feed-only]
 """
 
 from __future__ import annotations
@@ -48,19 +51,20 @@ from durable_functions_cosmosdb_etl_spark.streaming.pipeline import (  # noqa: E
 WORK = os.path.join(tempfile.gettempdir(), "stream_probe")
 
 
-def _gate_vs_diff(spark, staging: str, docs: int, pairs: int = 5) -> None:
-    """The saturation gate against the forced full diff — the
-    measurement behind ``run_changefeed_transform(
-    rebootstrap_saturation=)``'s docstring (``changefeed_gate_vs_diff``
-    row). Each pair builds a fresh 64-bucket source from the staged
-    docs, bootstraps two eager-sink targets at v0, then commits the
-    backlog: one ``upsert_deferred`` of ~1% of the docs (at least 60)
-    plus a ``compact``, so the diff reads the whole table at both
-    ends. It then times one drain with ``rebootstrap_saturation=2.0``
-    and one without, in alternating order, on fresh source handles.
-    Both drains apply the ``etl_changefeed`` benchmark's silver
-    transform (``name_upper``), and the two final states must hash
-    equal (xor of row hashes)."""
+def _post_image_vs_diff(
+    spark, staging: str, docs: int, pairs: int = 5
+) -> None:
+    """The drain's two feed tiers on one deferred interval
+    (``changefeed_post_image_vs_diff`` row, SCALE.md §2b). Each pair
+    builds a fresh 64-bucket source from the staged docs, bootstraps
+    two eager-sink targets at v0, then commits one ``upsert_deferred``
+    of 1% of the docs (at least 60), spread uniformly over the keys.
+    It times one drain per tier, in alternating order, on fresh source
+    handles: the default drain serves the interval from its delta units
+    (``post_images``); the other handle's ``post_images`` is stubbed to
+    decline, so its drain takes the snapshot diff. Both drains apply the
+    ``etl_changefeed`` benchmark's silver transform (``name_upper``),
+    and the two final states must hash equal (xor of row hashes)."""
     from pyspark.sql import functions as F
 
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
@@ -80,9 +84,9 @@ def _gate_vs_diff(spark, staging: str, docs: int, pairs: int = 5) -> None:
         ).first()[0]
 
     changed = max(60, docs // 100)
-    base = f"{WORK}/gate"
+    base = f"{WORK}/feed"
     src_dir = f"{base}/src"
-    secs: dict[str, list[float]] = {"gated": [], "diff": []}
+    secs: dict[str, list[float]] = {"post_image": [], "diff": []}
     for pair in range(pairs):
         shutil.rmtree(base, ignore_errors=True)
         src = LogTable(spark, src_dir, key="id")
@@ -94,24 +98,27 @@ def _gate_vs_diff(spark, staging: str, docs: int, pairs: int = 5) -> None:
             )
         src.upsert_deferred(
             src.snapshot()
+            .orderBy(F.xxhash64("id"))
             .limit(changed)
             .withColumn("desc", F.concat(F.col("desc"), F.lit(" (edited)")))
         )                                                          # v1
-        src.compact()                                              # v2
-        order = ("gated", "diff") if pair % 2 == 0 else ("diff", "gated")
+        order = secs if pair % 2 == 0 else reversed(list(secs))
         for mode in order:
+            handle = LogTable(spark, src_dir, key="id")
+            if mode == "diff":
+                handle.post_images = lambda *a, **k: None
             t0 = time.perf_counter()
             st = run_changefeed_transform(
                 spark,
-                LogTable(spark, src_dir, key="id"),
+                handle,
                 LogTable(spark, f"{base}/{mode}", key="id"),
                 f"{base}/{mode}.cursor",
                 transform=name_upper,
-                rebootstrap_saturation=2.0 if mode == "gated" else None,
             )
             secs[mode].append(time.perf_counter() - t0)
-            assert st["saturation_rebootstraps"] == (mode == "gated")
-        assert state(f"{base}/gated") == state(f"{base}/diff")
+            assert st["last_feed_info"]["tier"] == mode
+            assert st["rows_upserted"] == changed
+        assert state(f"{base}/post_image") == state(f"{base}/diff")
 
     def median(xs: list[float]) -> float:
         return sorted(xs)[len(xs) // 2]
@@ -119,16 +126,18 @@ def _gate_vs_diff(spark, staging: str, docs: int, pairs: int = 5) -> None:
     print(
         json.dumps(
             {
-                "config": "changefeed_gate_vs_diff",
+                "config": "changefeed_post_image_vs_diff",
                 "docs": docs,
                 "changed": changed,
                 "pairs": pairs,
-                "gated_sec": [round(x, 3) for x in secs["gated"]],
+                "post_image_sec": [round(x, 3) for x in secs["post_image"]],
                 "diff_sec": [round(x, 3) for x in secs["diff"]],
-                "gated_median_sec": round(median(secs["gated"]), 3),
+                "post_image_median_sec": round(
+                    median(secs["post_image"]), 3
+                ),
                 "diff_median_sec": round(median(secs["diff"]), 3),
-                "gate_won": sum(
-                    g < d for g, d in zip(secs["gated"], secs["diff"])
+                "post_image_won": sum(
+                    p < d for p, d in zip(secs["post_image"], secs["diff"])
                 ),
             }
         ),
@@ -141,10 +150,10 @@ def main() -> None:
     ap.add_argument("--docs", type=int, default=100_000)
     ap.add_argument("--files", type=int, default=16)
     ap.add_argument(
-        "--gate-only",
+        "--feed-only",
         action="store_true",
         help="skip the streaming-sink + drain configs and run only the "
-        "saturation gate vs forced full diff pairs",
+        "post-image vs snapshot-diff drain pairs",
     )
     args = ap.parse_args()
 
@@ -157,8 +166,8 @@ def main() -> None:
             spark, count=args.docs, deterministic_ids=True
         ).repartition(args.files).write.mode("overwrite").parquet(staging)
 
-    if args.gate_only:
-        _gate_vs_diff(spark, staging, args.docs)
+    if args.feed_only:
+        _post_image_vs_diff(spark, staging, args.docs)
         return
 
     configs = [
@@ -302,7 +311,7 @@ def main() -> None:
         flush=True,
     )
 
-    _gate_vs_diff(spark, staging, args.docs)
+    _post_image_vs_diff(spark, staging, args.docs)
 
 
 if __name__ == "__main__":
