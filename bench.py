@@ -2,7 +2,11 @@
 
 Prints ONE JSON line:
   {"metric": "total_headline_sec", "value": N, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1, "qualification": {...}}
+
+Each timed run is tagged with its vCPU-steal share; the qualification
+block says which runs were clean and whether the suite may become the
+QUALIFIED_BENCH.json anchor (the rule is below and in BASELINE.md).
 
 Execution cost is measured with the noop sink (full computation, no
 result materialization on the driver). One shared SparkSession across
@@ -14,6 +18,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -66,250 +71,32 @@ HEADLINE_EXT = [
 
 N_RUNS = 3  # median-of-3 so noise blips are distinguishable from regressions
 
-# --- Qualification rule (round 6, VERDICT r5 #4) -------------------------
-# This host shows loadavg 3-9 with zero local processes (noisy
-# neighbor), inflating queries ~25% with wide spreads. The bench
-# therefore QUALIFIES its own numbers instead of leaving comparability
-# to the reader:
-#   - a query whose relative spread (max-min)/median exceeds
-#     RESPREAD_THRESHOLD after the initial runs gets up to MAX_RETRIES
-#     extra timed runs (median/spread recomputed over all of them) —
-#     bounded retries squeeze transient blips out of the medians;
-#   - queries STILL over the threshold are listed in
-#     "unstable_queries": their round-over-round deltas are only
-#     meaningful if the spread intervals are disjoint (see BASELINE.md
-#     comparison convention);
-#   - the whole run carries "load_qualified": false when the PRE-run
-#     loadavg(1) exceeded LOAD_QUALIFIED_MAX *or* loadavg(5) exceeded
-#     LOAD_QUALIFIED_MAX_5MIN — a disqualified run can still show
-#     per-query agreement, but its absolute numbers must not be used
-#     to call a regression. The 5-minute term is the round-8 fix
-#     (VERDICT r7 #1): BASELINE.md's recorded lesson — reproduced by
-#     the round-7 judge (qualified at loadavg(1) 0.01, yet ~25%
-#     uniformly inflated with 15-min 4.91) — is that a quiet 1-minute
-#     average with an elevated recent history still means warm caches
-#     and CPU contention from a neighbor that JUST went quiet; the
-#     anchor must come from a window where both averages are low.
+# --- Qualification: one signal, one rule (BASELINE.md) --------------------
+# This host is a VM whose co-tenants deschedule its vCPUs in bursts that
+# dilate timed runs 1.2-4x while loadavg reads quiet. The guest kernel
+# counts that time in the steal field of /proc/stat, so every timed run
+# is bracketed by two /proc/stat reads and tagged with its steal share
+# d_steal / (d_steal + d_busy):
+#   - a run is CLEAN when its share is <= STEAL_SHARE_MAX. The line is
+#     empirical: a quiet VM reads < 0.02, while runs at 0.06-0.14 still
+#     measured 1.2-2x dilated (a busy co-tenant also costs cache and
+#     memory bandwidth, which the counter cannot see);
+#   - a query with fewer than CLEAN_TARGET clean runs gets up to
+#     MAX_EXTRA_RUNS same-session re-runs (under the measured
+#     burst-every-few-minutes pattern, 3 extras left about half the
+#     queries short);
+#   - a query is UNSTABLE when it still has fewer than CLEAN_TARGET clean
+#     runs or their relative spread exceeds RESPREAD_THRESHOLD. The
+#     spread clause catches what the counter cannot (bandwidth
+#     contention, plan nondeterminism). A run with no unstable query is
+#     anchor_eligible: it may replace QUALIFIED_BENCH.json.
+# Loadavg and a 2 s ambient steal rate are recorded as context, never
+# gated: on the recorded suites, the retired loadavg gates never changed
+# a verdict this rule reaches without them (BASELINE.md).
 RESPREAD_THRESHOLD = 0.35
-MAX_RETRIES = 2
-LOAD_QUALIFIED_MAX = 2.0
-LOAD_QUALIFIED_MAX_5MIN = 2.5
-
-# --- Anchor grade (round 9, VERDICT r8 #4) --------------------------------
-# The gate-v2 calibration runs (BASELINE.md) showed the 15-minute
-# average is the best single predictor of ambient inflation: 9.472 s
-# at load15 1.85 vs 11.053 s at load15 4.12, BOTH "qualified" under
-# the 1/5-minute gate. Promotion of a run to QUALIFIED_BENCH.json
-# (the cross-round anchor) was therefore manual discipline. This
-# stricter three-average grade makes it mechanical: a run is
-# anchor-ELIGIBLE only when all of pre-run loadavg(1/5/15) are low
-# AND the run itself came out clean (zero unstable, zero requalified
-# queries) — the round-9 anchor attempt showed loadavg alone is not
-# sufficient: a run that STARTED at 0.04/0.29/1.47 and ENDED at
-# 1.59/1.07/1.55 still had every query spike 2-4x intermittently
-# (hypervisor CPU steal is invisible to loadavg); the per-query
-# spread is the detector that actually catches it. The gate itself
-# is unchanged (convention stability): load_qualified still governs
-# regression calls; anchor_eligible only governs which runs may
-# become the anchor.
-ANCHOR_MAX_1MIN = 2.0
-ANCHOR_MAX_5MIN = 2.5
-ANCHOR_MAX_15MIN = 3.0
-
-# --- Pre-flight steal probe (round 12, VERDICT r11 #1) -------------------
-# The anchor rule detects interference only AFTER a full ~25-query x
-# 3-run suite (round 11 burned 11 attempts to land one clean anchor and
-# 7 more end-of-round attempts all steal-spiked). This ~5 s fixed
-# CPU-bound probe estimates the ambient multiplier BEFORE the timed
-# loops and aborts the run when it exceeds the rejection rule below —
-# a cheap pre-filter that SAVES attempts; it does not qualify runs
-# (the load_qualified gate and anchor_eligible rule are unchanged).
-#
-# Two signals from PREFLIGHT_PROCS parallel workers each running
-# PREFLIGHT_REPS reps of a fixed integer loop (parallel, because the
-# calibration runs showed a single-threaded probe under a full local
-# 32-core hog still gets its own core — ratio 1.04 — while 8 parallel
-# workers get measurably descheduled; and the bench itself is a
-# saturating local[32] workload, so parallel is the representative
-# shape):
-#   - steal ratio  wall / thread_time per rep: hypervisor steal and
-#     descheduling advance the wall clock while the thread clock stands
-#     still, so a pure CPU-bound loop's ratio reads the interference
-#     directly, with no calibration (quiet host: 1.00-1.04; a 32-proc
-#     hog next to the 8 workers reads ~1.25+; the round-9/11
-#     steal-spike afternoons inflated queries 2-4x). This is the signal
-#     loadavg CANNOT see.
-#   - absolute multiplier  median wall / PREFLIGHT_ANCHOR_SEC: a coarse
-#     backstop for slowdown modes that inflate wall and CPU together
-#     (frequency throttling, thermal caps) that the ratio is blind to.
-#     Calibration showed ±15% frequency drift between adjacent quiet
-#     probes, so its threshold is LOOSER than the ratio's — it only
-#     catches gross throttling, and the load gates still own the
-#     warm-history modes (calibration runs in BASELINE.md).
-# Reject when the ratio median OR the ratio p90 exceeds
-# PREFLIGHT_RATIO_MAX, or the absolute multiplier exceeds
-# PREFLIGHT_ABS_MAX. The p90 term is the one the calibration showed
-# actually discriminates: a 32-proc hog beside the 8 workers reads
-# ratio median 1.17 (under the 1.3 gate) but p90 2.0, against a quiet
-# p90 of <=1.04 — bursty descheduling, the same intermittent-spike
-# shape as the round-9/11 steal afternoons, lives in the tail, not the
-# median. One bounded retry after PREFLIGHT_RETRY_SLEEP_SEC so a
-# transient blip doesn't burn the attempt. SPARK_GRAFT_PREFLIGHT=0
-# skips the probe (recorded as "skipped" in the JSON stamp).
-PREFLIGHT_PROCS = 8
-PREFLIGHT_REPS = 10
-PREFLIGHT_LOOP_N = 3_000_000  # ~0.4 s/rep quiet -> ~4 s probe (parallel)
-PREFLIGHT_ANCHOR_SEC = 0.45  # quiet-window median rep wall (BASELINE.md)
-PREFLIGHT_RATIO_MAX = 1.3  # applies to BOTH the ratio median and p90
-PREFLIGHT_ABS_MAX = 1.5
-PREFLIGHT_RETRY_SLEEP_SEC = 30
-
-
-def _preflight_worker(args: tuple[int, int]) -> list[tuple[float, float]]:
-    """One worker: reps x fixed loop; [(wall_sec, thread_cpu_sec), ...]."""
-    reps, n = args
-    out = []
-    for _ in range(reps):
-        w0 = time.perf_counter()
-        c0 = time.thread_time()
-        x = 0
-        for i in range(n):
-            x = (x * 1103515245 + 12345 + i) & 0xFFFFFFFF
-        out.append((time.perf_counter() - w0, time.thread_time() - c0))
-    return out
-
-
-def _preflight_probe(
-    reps: int = PREFLIGHT_REPS, procs: int = PREFLIGHT_PROCS
-) -> dict:
-    """Run the probe once; return its measurement dict (no decision)."""
-    import multiprocessing as mp
-
-    with mp.Pool(procs) as pool:
-        per_worker = pool.map(
-            _preflight_worker, [(reps, PREFLIGHT_LOOP_N)] * procs
-        )
-    walls = [w for wk in per_worker for (w, _c) in wk]
-    ratios = [
-        w / c if c > 0 else float("inf")
-        for wk in per_worker
-        for (w, c) in wk
-    ]
-    med_wall = statistics.median(walls)
-    ratios_sorted = sorted(ratios)
-    return {
-        "median_rep_wall_sec": round(med_wall, 4),
-        "rep_wall_range": [round(min(walls), 4), round(max(walls), 4)],
-        "steal_ratio": round(statistics.median(ratios), 3),
-        "steal_ratio_p90": round(
-            ratios_sorted[int(0.9 * (len(ratios_sorted) - 1))], 3
-        ),
-        "abs_multiplier": round(med_wall / PREFLIGHT_ANCHOR_SEC, 3),
-        "anchor_sec": PREFLIGHT_ANCHOR_SEC,
-        "procs": procs,
-        "reps": reps,
-    }
-
-
-def _preflight_hot(m: dict) -> bool:
-    return (
-        m["steal_ratio"] > PREFLIGHT_RATIO_MAX
-        or m["steal_ratio_p90"] > PREFLIGHT_RATIO_MAX
-        or m["abs_multiplier"] > PREFLIGHT_ABS_MAX
-    )
-
-
-# --- In-suite burst attribution (round 13, VERDICT r12 #2) ----------------
-# The preflight's first live campaign proved pre-run sampling cannot
-# see burst steal: 7/7 cool preflights, 4-23 queries spiked mid-suite
-# (BASELINE.md rule 6), and the round-12 refresh campaign burned 30
-# attempts the same way. So the suite now MEASURES its own ambient
-# instead of inferring it from spread: a ~0.3 s steal-ratio sample
-# (same wall/thread-CPU loop as the preflight, BURST_PROCS workers on a
-# persistent pool forked BEFORE Spark startup) runs between every pair
-# of timed runs; each run is attributed the max of its two surrounding
-# samples. A run whose bracket exceeds BURST_RATIO_MAX is
-# KNOWN-contaminated — direct evidence, not spread inference. Queries
-# with fewer than BURST_CLEAN_TARGET clean samples get bounded
-# same-session re-runs (the amendment shape VERDICT r12 explicitly
-# blessed: re-run burst-tagged queries until each has 3 clean samples —
-# NOT per-query minima across runs). The sample is max-over-workers
-# (a burst stealing one of two cores must show) and max-over-bracket
-# (a burst can arrive during either neighbor window).
-#
-# Feeding the rules (BASELINE.md rule 7): the original spread-based
-# unstable_queries/anchor_eligible machinery is BYTE-UNCHANGED — rule 1
-# regression calls and v1 anchor promotion work exactly as before. The
-# burst evidence adds a SECOND promotion path, anchor_eligible_burst:
-# load gates pass AND every query has >= BURST_CLEAN_TARGET clean
-# samples AND the CLEAN samples' relative spread is within
-# RESPREAD_THRESHOLD. Promotion under v2 uses queries_clean /
-# value_clean (medians over clean samples only). SPARK_GRAFT_BURST=0
-# skips sampling (stamped "skipped"; v2 then never fires).
-#
-# Rule 7b — vCPU-steal attribution (round 13, second half). The spin
-# sampler's first live attempts measured CLEAN ambient (p90 1.04-1.07)
-# around runs that were provably 2-4x dilated — 15-19 spiked queries
-# per attempt. The mechanism: this host is a 32-vCPU VM (kernel
-# *-fc-*) and the "noisy neighbor" is CO-TENANT VMs on the
-# hypervisor, so interference only manifests when the GUEST is highly
-# parallel (32 busy Spark threads force the host to deschedule us);
-# 2 spinning sampler procs fit in the host's spare capacity and read
-# ~1.0. The kernel exposes exactly this as the steal field of
-# /proc/stat (jiffies a runnable vCPU was descheduled by the host) —
-# measured live: 0.0-1.6 steal core-sec per 2 s window while the
-# suite ran. So each timed run is additionally bracketed by a
-# /proc/stat read (~free), and its steal SHARE of machine activity,
-# d_steal / (d_steal + d_busy), directly measures hypervisor
-# descheduling during that run regardless of how many guest threads
-# the hog would have had to fight. A run is contaminated when EITHER
-# its spin bracket exceeds BURST_RATIO_MAX OR its steal share exceeds
-# STEAL_SHARE_MAX = 0.05. The threshold is EMPIRICAL, far below the
-# 1.3x-dilation spin line (share 0.05 ~ 1.05x if steal were the whole
-# story), because steal share UNDER-measures total interference — a
-# busy co-tenant also degrades cache/memory bandwidth, which the
-# steal counter cannot see. Two live measurements set the line: the
-# sf0.001 validation showed runs at share 0.06-0.14 dilated 1.2-2x,
-# and the first sf0.1 campaign attempt under an initial 0.1 line
-# still passed sub-0.1-share samples whose clean spread read
-# 0.4-1.2x (sub-line contamination ruining the clean view the rule
-# is meant to certify). Quiet baseline reads < 0.02, so 0.05 still
-# cleanly separates — and v2 promotion only matters in near-quiet
-# windows, where a strict line costs nothing. Residual contamination
-# below it remains the clean-spread clause's job. Both signals are
-# recorded per run in the JSON (`ambient` / `steal_share`);
-# `tagged_runs` reflects the OR.
-BURST_PROCS = 2
-BURST_LOOP_N = 2_000_000  # ~0.27 s/worker quiet -> one ~0.3 s sample
-BURST_RATIO_MAX = 1.3  # same line as the preflight ratio rule
-BURST_CLEAN_TARGET = N_RUNS
-# 5 extras (was 3): under the intermittent-burst pattern measured on
-# this host (a burst every few minutes), base-3 + 3 extras left ~half
-# the queries short of 3 clean samples in otherwise-promising windows;
-# the cap exists to bound suite length, not to starve the clean view.
-BURST_MAX_EXTRA_RUNS = 5
-STEAL_SHARE_MAX = 0.05  # rule 7b: d_steal/(d_steal+d_busy) per run
-
-
-def _burst_sample(pool, loop_n: int = BURST_LOOP_N) -> float:
-    """One between-runs ambient sample: max wall/thread-CPU steal ratio
-    across BURST_PROCS parallel workers (quiet: 1.00-1.05; a core-
-    stealing burst reads 1.3+ on at least one worker)."""
-    per = pool.map(_preflight_worker, [(1, loop_n)] * BURST_PROCS)
-    return round(
-        max(
-            (w / c if c > 0 else float("inf"))
-            for wk in per
-            for (w, c) in wk
-        ),
-        3,
-    )
-
-
-def _burst_hot(bracket: list[float]) -> bool:
-    """A timed run is contaminated when EITHER surrounding sample is
-    hot — the burst can arrive in the window before or after it."""
-    return max(bracket) > BURST_RATIO_MAX
+STEAL_SHARE_MAX = 0.05
+CLEAN_TARGET = N_RUNS
+MAX_EXTRA_RUNS = 5
 
 
 def _parse_cpu_jiffies(line: str) -> tuple[int, int]:
@@ -317,8 +104,7 @@ def _parse_cpu_jiffies(line: str) -> tuple[int, int]:
 
     busy counts guest-visible work (user+nice+system+irq+softirq);
     idle/iowait are excluded, steal is returned separately — it is
-    time a RUNNABLE vCPU spent descheduled by the hypervisor, the
-    rule-7b contamination signal."""
+    time a RUNNABLE vCPU spent descheduled by the hypervisor."""
     v = [int(x) for x in line.split()[1:]]
     busy = v[0] + v[1] + v[2] + v[5] + v[6]
     steal = v[7] if len(v) > 7 else 0
@@ -345,44 +131,27 @@ def _steal_share(c0: tuple[int, int], c1: tuple[int, int]) -> float:
     return round(ds / (ds + db), 4)
 
 
-def _run_hot(bracket: list[float], share: float) -> bool:
-    """Rule 7 OR rule 7b: spin-sampled steal ratio in either
-    surrounding window, or measured vCPU-steal share during the run
-    itself. share < 0 is the sampling-off sentinel (never hot)."""
-    return _burst_hot(bracket) or share > STEAL_SHARE_MAX
+def _clean_runs(runs: list[float], shares: list[float]) -> list[float]:
+    """The runs whose steal share is within STEAL_SHARE_MAX."""
+    return [dt for dt, s in zip(runs, shares) if s <= STEAL_SHARE_MAX]
 
 
-def _clean_runs(
-    runs: list[float],
-    brackets: list[list[float]],
-    shares: list[float] | None = None,
-) -> list[float]:
-    sh = shares if shares is not None else [0.0] * len(runs)
-    return [
-        dt
-        for dt, b, s in zip(runs, brackets, sh)
-        if not _run_hot(b, s)
-    ]
+def _rel_spread(ts: list[float]) -> float:
+    med = statistics.median(ts)
+    return (max(ts) - min(ts)) / med if med else 0.0
 
 
-def _anchor_eligible_burst(
+def _unstable_queries(
     clean: dict[str, list[float]], names: list[str]
-) -> bool:
-    """Amended anchor rule v2 (BASELINE.md rule 7): every query has at
-    least BURST_CLEAN_TARGET burst-clean samples AND those clean
-    samples' relative spread is within RESPREAD_THRESHOLD. Load gates
-    are the caller's job (identical to v1's three-average rule). The
-    spread clause over CLEAN samples is load-bearing: instability that
-    the samplers did NOT catch (sub-0.3 s bursts, genuine plan
-    nondeterminism) must still block promotion."""
-    for n in names:
-        ts = clean.get(n, [])
-        if len(ts) < BURST_CLEAN_TARGET:
-            return False
-        med = statistics.median(ts)
-        if med and (max(ts) - min(ts)) / med > RESPREAD_THRESHOLD:
-            return False
-    return True
+) -> list[str]:
+    """Queries short of CLEAN_TARGET clean runs, or whose clean runs
+    spread wider than RESPREAD_THRESHOLD; none means anchor_eligible."""
+    return [
+        n
+        for n in names
+        if len(clean.get(n, [])) < CLEAN_TARGET
+        or _rel_spread(clean[n]) > RESPREAD_THRESHOLD
+    ]
 
 
 def _ambient_steal_rate(sample_sec: float = 2.0) -> float:
@@ -396,6 +165,14 @@ def _ambient_steal_rate(sample_sec: float = 2.0) -> float:
     ds = _cpu_counters()[1] - s0
     dw = time.time() - t0
     return round(ds / 100.0 / dw, 3) if dw > 0 else 0.0
+
+
+def _scale_factor(sf_dir: str) -> float | None:
+    """The scale factor an `sf<number>` data dir names; None for any
+    other dir name (the JSON then records `sf: null`)."""
+    name = os.path.basename(sf_dir.rstrip("/"))
+    m = re.fullmatch(r"sf(\d+(?:\.\d*)?)", name)
+    return float(m.group(1)) if m else None
 
 
 # Scratch dirs whose presence is known to pollute bench numbers
@@ -437,18 +214,16 @@ def _machine_state() -> dict:
         "probe_dirs_cleaned": {
             d: round(s / 1e9, 2) for d, s in cleaned.items()
         },
-        # Host load BEFORE the run: this box has shown loadavg 3-6 with
-        # zero local processes (noisy neighbor), inflating every query
-        # ~25% with wide spreads. Compare rounds only when loads match.
+        # Host load BEFORE the run: context only, never gated (a quiet
+        # loadavg has sat beside 2-4x steal-dilated runs on this host).
         "loadavg": [
             round(x, 2) if x is not None else None
             for x in (load1, load5, load15)
         ],
-        # Ambient co-tenant steal BEFORE the run (rule 7b context):
-        # stolen core-seconds per wall-second over a 2 s idle sample.
-        # Genuinely quiet < 0.01; hot evening windows read 0.15-0.8.
-        # Recorded, never gated — the per-run steal_share attribution
-        # is the enforcement point.
+        # Ambient co-tenant steal BEFORE the run: stolen core-seconds
+        # per wall-second over a 2 s idle sample. Genuinely quiet
+        # < 0.01; hot evening windows read 0.15-0.8. Recorded, never
+        # gated — the per-run steal_share is the enforcement point.
         "ambient_steal_core_s": _ambient_steal_rate(),
     }
     if cleaned:
@@ -460,78 +235,10 @@ def _machine_state() -> dict:
         )
     return state
 
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
+    sf = _scale_factor(sf_dir)
     machine_state = _machine_state()
-
-    # Pre-flight steal probe (see the rule block above): measure the
-    # ambient multiplier BEFORE paying for Spark startup + the full
-    # suite; one bounded retry, then abort with a self-describing stamp.
-    preflight: dict | str
-    if os.environ.get("SPARK_GRAFT_PREFLIGHT", "1") in ("0", "off", "skip"):
-        preflight = "skipped"
-    else:
-        preflight = _preflight_probe()
-        if _preflight_hot(preflight):
-            print(
-                f"bench.py: preflight hot (steal_ratio="
-                f"{preflight['steal_ratio']} max {PREFLIGHT_RATIO_MAX}, "
-                f"abs_multiplier={preflight['abs_multiplier']} max "
-                f"{PREFLIGHT_ABS_MAX}); "
-                f"retrying once in {PREFLIGHT_RETRY_SLEEP_SEC}s...",
-                file=sys.stderr,
-            )
-            time.sleep(PREFLIGHT_RETRY_SLEEP_SEC)
-            preflight = _preflight_probe()
-        if _preflight_hot(preflight):
-            print(
-                json.dumps(
-                    {
-                        "metric": "total_headline_sec",
-                        "value": None,
-                        "unit": "sec",
-                        "queries": {},
-                        "sf": sf,
-                        "preflight_rejected": True,
-                        "preflight": preflight,
-                        "preflight_rule": [
-                            PREFLIGHT_RATIO_MAX,
-                            PREFLIGHT_ABS_MAX,
-                        ],
-                        "machine_state": machine_state,
-                    }
-                )
-            )
-            print(
-                "bench.py: ABORT — ambient interference above the "
-                f"preflight rule ({PREFLIGHT_RATIO_MAX}x steal ratio / "
-                f"{PREFLIGHT_ABS_MAX}x absolute) before the timed loops; "
-                "a run in this window would be steal-spiked anyway. "
-                "Re-run in a quieter window (or SPARK_GRAFT_PREFLIGHT=0 "
-                "to force).",
-                file=sys.stderr,
-            )
-            # Exit 2, not 0 (ADVICE r12): campaign automation keying on
-            # exit status (`bench.py && record`) must not count a
-            # rejected attempt as a completed run. The JSON stamp
-            # (value: null, preflight_rejected: true) stays the
-            # authoritative record; the status is the cheap signal.
-            sys.exit(2)
-
-    # Burst-sampler pool: forked BEFORE Spark startup so the workers
-    # never hold JVM/py4j state; they idle at zero CPU between samples.
-    burst_on = os.environ.get("SPARK_GRAFT_BURST", "1") not in (
-        "0",
-        "off",
-        "skip",
-    )
-    pool = None
-    if burst_on:
-        import multiprocessing as mp
-
-        pool = mp.Pool(BURST_PROCS)
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -559,11 +266,7 @@ def main() -> None:
     # otherwise dominate the sub-second queries. Per query we report the
     # MEDIAN of the timed runs ("queries"), with min/max in "spread".
     runs: dict[str, list[float]] = {n: [] for n in names}
-    # Per-run ambient brackets, aligned index-for-index with runs[name]:
-    # amb[name][i] = [sample_before, sample_after] steal ratios around
-    # runs[name][i]; steal_rec[name][i] = the run's own vCPU-steal
-    # share from /proc/stat (rule 7b) — -1.0 when sampling is off.
-    amb: dict[str, list[list[float]]] = {n: [] for n in names}
+    # steal_rec[name][i] = the vCPU-steal share of runs[name][i].
     steal_rec: dict[str, list[float]] = {n: [] for n in names}
 
     def timed_run(name: str) -> float:
@@ -571,106 +274,46 @@ def main() -> None:
         qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
         return round(time.perf_counter() - t0, 3)
 
-    def sampled_run(name: str, before: float | None = None) -> float:
-        """One timed run bracketed by ambient samples (rule 7) and
-        /proc/stat busy/steal counters (rule 7b); records into
-        runs+amb+steal_rec; returns the trailing spin sample (the next
-        run's leading one when runs are back-to-back)."""
-        b = before if before is not None else _burst_sample(pool)
+    def sampled_run(name: str) -> None:
         c0 = _cpu_counters()
         dt = timed_run(name)
         c1 = _cpu_counters()
-        a = _burst_sample(pool)
         runs[name].append(dt)
-        amb[name].append([b, a])
         steal_rec[name].append(_steal_share(c0, c1))
-        return a
 
-    last: float | None = None
     for measured in [False] + [True] * N_RUNS:
         for name in names:
-            if not measured:
+            if measured:
+                sampled_run(name)
+            else:
                 timed_run(name)
-            elif pool:
-                # back-to-back runs share the between sample: after(q_i)
-                # IS before(q_i+1), across pass boundaries too; only the
-                # first measured run (preceded by the whole warmup pass,
-                # not by a sample) takes a fresh leading sample
-                last = sampled_run(name, before=last)
-            else:
-                runs[name].append(timed_run(name))
-                amb[name].append([-1.0, -1.0])
-                steal_rec[name].append(-1.0)
 
-    # statistics.median (not sorted(ts)[len//2]): retry runs make the
-    # per-query lists even-length, and the upper-middle element would
-    # bias exactly the requalified queries' medians upward.
-    def rel_spread(ts: list[float]) -> float:
-        med = statistics.median(ts)
-        return (max(ts) - min(ts)) / med if med else 0.0
-
-    # Qualification: bounded re-runs for wide-spread queries, then name
-    # whatever stays unstable (see the rule block above).
-    requalified: list[str] = []
+    # Clean top-up: a query short of CLEAN_TARGET steal-clean runs gets
+    # bounded same-session re-runs. Every run stays in runs, so the
+    # all-runs medians keep their meaning beside the clean view.
+    rerun: list[str] = []
     for name in names:
-        tries = 0
-        while rel_spread(runs[name]) > RESPREAD_THRESHOLD and tries < MAX_RETRIES:
-            if pool:
-                sampled_run(name)
-            else:
-                runs[name].append(timed_run(name))
-                amb[name].append([-1.0, -1.0])
-                steal_rec[name].append(-1.0)
-            tries += 1
-        if tries:
-            requalified.append(name)
-    unstable = [n for n in names if rel_spread(runs[n]) > RESPREAD_THRESHOLD]
-
-    # Burst-clean top-up (round 13, VERDICT r12 #1/#2 — the blessed
-    # amendment shape): a query whose measured-clean sample count fell
-    # short gets bounded SAME-SESSION re-runs until it has
-    # BURST_CLEAN_TARGET clean samples. All runs stay in runs/amb (the
-    # all-runs medians keep their historical semantics; the clean view
-    # is additive), so nothing about rules 1-6 changes.
-    burst_rerun: list[str] = []
-    burst_unstable: list[str] = []
-    if pool:
-        for name in names:
-            extra = 0
-            while (
-                len(_clean_runs(runs[name], amb[name], steal_rec[name]))
-                < BURST_CLEAN_TARGET
-                and extra < BURST_MAX_EXTRA_RUNS
-            ):
-                sampled_run(name)
-                extra += 1
-            if extra:
-                burst_rerun.append(name)
-            if (
-                len(_clean_runs(runs[name], amb[name], steal_rec[name]))
-                < BURST_CLEAN_TARGET
-            ):
-                burst_unstable.append(name)
-        pool.close()
-        pool.join()
-    # With sampling off there IS no clean evidence: the whole clean
-    # view reads null rather than trivially mirroring the all-runs
-    # medians (which would look like 3-clean-samples promotion bait).
-    clean = {
-        n: (
-            _clean_runs(runs[n], amb[n], steal_rec[n])
-            if burst_on
-            else []
-        )
-        for n in names
-    }
+        extra = 0
+        while (
+            len(_clean_runs(runs[name], steal_rec[name])) < CLEAN_TARGET
+            and extra < MAX_EXTRA_RUNS
+        ):
+            sampled_run(name)
+            extra += 1
+        if extra:
+            rerun.append(name)
+    clean = {n: _clean_runs(runs[n], steal_rec[n]) for n in names}
+    unstable = _unstable_queries(clean, names)
+    # statistics.median (not sorted(ts)[len//2]): re-runs make the
+    # per-query lists even-length, and the upper-middle element would
+    # bias exactly the re-run queries' medians upward.
     timings_clean = {
         n: (round(statistics.median(ts), 3) if ts else None)
         for n, ts in clean.items()
     }
     value_clean = (
         round(sum(timings_clean[n] for n in HEADLINE), 3)
-        if burst_on and all(timings_clean[n] is not None for n in HEADLINE)
+        if all(timings_clean[n] is not None for n in HEADLINE)
         else None
     )
 
@@ -682,54 +325,10 @@ def main() -> None:
         loadavg_post = [round(x, 2) for x in os.getloadavg()]
     except OSError:  # pragma: no cover
         loadavg_post = [None, None, None]
-    # Gate on the PRE-run baseline only: post-run loadavg(1) is
-    # dominated by our own local[32] execution and would self-flag
-    # every run; it is recorded for context, not gated. BOTH the 1-
-    # and 5-minute pre-run averages must be low (gate v2, VERDICT r7
-    # #1): a quiet instant with an elevated recent history still
-    # inflates ~10-25%.
-    pre1, pre5, pre15 = machine_state["loadavg"]
-    load_qualified = (
-        pre1 is not None
-        and pre1 <= LOAD_QUALIFIED_MAX
-        and pre5 is not None
-        and pre5 <= LOAD_QUALIFIED_MAX_5MIN
-    )
-    # Anchor eligibility (see the rule block): all three pre-run
-    # averages low AND a clean run (no unstable/requalified queries —
-    # the spread detector catches steal-time interference loadavg
-    # can't see). Strictly implies load_qualified.
-    # All three ANCHOR_MAX_* are enforced EXPLICITLY (code-review r9):
-    # the 1/5-minute bounds coincide with the gate thresholds today,
-    # but relaxing LOAD_QUALIFIED_MAX (or tightening the anchor
-    # constants) must never let a run carry anchor_eligible: true
-    # while violating the anchor_rule the same JSON publishes.
-    anchor_loads_ok = (
-        load_qualified
-        and pre1 is not None
-        and pre1 <= ANCHOR_MAX_1MIN
-        and pre5 is not None
-        and pre5 <= ANCHOR_MAX_5MIN
-        and pre15 is not None
-        and pre15 <= ANCHOR_MAX_15MIN
-    )
-    anchor_eligible = anchor_loads_ok and not unstable and not requalified
-    # v2 (round 13, BASELINE.md rule 7): same load gates, but the
-    # clean-sample evidence replaces the zero-unstable/zero-requalified
-    # clause — a burst-tagged run is excluded by direct measurement
-    # rather than disqualifying the whole attempt.
-    anchor_eligible_burst = (
-        burst_on and anchor_loads_ok and _anchor_eligible_burst(clean, names)
-    )
-    if not load_qualified:
-        print(
-            f"bench.py: WARNING — load_qualified=false "
-            f"(loadavg pre={pre1}/{pre5} post={loadavg_post[0]}, "
-            f"thresholds {LOAD_QUALIFIED_MAX}/{LOAD_QUALIFIED_MAX_5MIN} "
-            f"for 1/5-minute); absolute numbers are NOT comparable "
-            f"across rounds, only per-query agreement.",
-            file=sys.stderr,
-        )
+    tagged = {
+        n: [i for i, s in enumerate(steal_rec[n]) if s > STEAL_SHARE_MAX]
+        for n in names
+    }
     print(
         json.dumps(
             {
@@ -745,62 +344,22 @@ def main() -> None:
                 "headline_set": HEADLINE,
                 "extended_set": HEADLINE_EXT,
                 "total_extended_sec": round(sum(timings.values()), 3),
-                # Clean view (round 13): medians over burst-clean
-                # samples only; null when a query has zero clean
-                # samples (or sampling is off). Promotion under the v2
-                # anchor rule uses these; the all-runs "queries"/
-                # "value" keep their historical semantics.
+                # Clean view: medians over steal-clean runs only; null
+                # when a query has zero clean runs. The all-runs
+                # "queries"/"value" keep their historical semantics.
                 "queries_clean": timings_clean,
                 "value_clean": value_clean,
                 "machine_state": machine_state,
                 "qualification": {
+                    "steal_share_max": STEAL_SHARE_MAX,
+                    "clean_target": CLEAN_TARGET,
                     "respread_threshold": RESPREAD_THRESHOLD,
-                    "requalified_queries": requalified,
+                    "timings_all": runs,
+                    "steal_share": steal_rec,
+                    "tagged_runs": {n: ix for n, ix in tagged.items() if ix},
+                    "rerun_queries": rerun,
                     "unstable_queries": unstable,
-                    "load_qualified": load_qualified,
-                    "anchor_eligible": anchor_eligible,
-                    "anchor_eligible_burst": anchor_eligible_burst,
-                    "burst": (
-                        {
-                            "ratio_max": BURST_RATIO_MAX,
-                            "steal_share_max": STEAL_SHARE_MAX,
-                            "clean_target": BURST_CLEAN_TARGET,
-                            "sample_procs": BURST_PROCS,
-                            "timings_all": runs,
-                            "ambient": amb,
-                            "steal_share": steal_rec,
-                            "tagged_runs": {
-                                n: [
-                                    i
-                                    for i, (b, s) in enumerate(
-                                        zip(amb[n], steal_rec[n])
-                                    )
-                                    if _run_hot(b, s)
-                                ]
-                                for n in names
-                                if any(
-                                    _run_hot(b, s)
-                                    for b, s in zip(
-                                        amb[n], steal_rec[n]
-                                    )
-                                )
-                            },
-                            "burst_rerun_queries": burst_rerun,
-                            "burst_unstable": burst_unstable,
-                        }
-                        if burst_on
-                        else "skipped"
-                    ),
-                    "anchor_rule": [
-                        ANCHOR_MAX_1MIN,
-                        ANCHOR_MAX_5MIN,
-                        ANCHOR_MAX_15MIN,
-                    ],
-                    "preflight": preflight,
-                    "preflight_rule": [
-                        PREFLIGHT_RATIO_MAX,
-                        PREFLIGHT_ABS_MAX,
-                    ],
+                    "anchor_eligible": not unstable,
                     "loadavg_post": loadavg_post,
                 },
             }
@@ -815,13 +374,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    if "--preflight-only" in sys.argv:
-        # Calibration mode: run just the probe and print its dict —
-        # used to measure discrimination across known-quiet/noisy
-        # windows (BASELINE.md) without paying for a suite run.
-        m = _preflight_probe()
-        m["hot"] = _preflight_hot(m)
-        m["loadavg"] = [round(x, 2) for x in os.getloadavg()]
-        print(json.dumps(m))
-    else:
-        main()
+    main()

@@ -503,8 +503,9 @@ class LogTable:
         self.key = key
         self.n_buckets = n_buckets
         self.protocol = protocol or PosixCommitProtocol()
-        # Feed-serving observability: the last successful changes()
-        # call's interval and price (None until a feed is read).
+        # Feed-serving observability: the last successful changes() or
+        # post_images() call's interval and price (None until a feed is
+        # read).
         # Driver-side per-table state, same single-threaded discipline
         # as the mutating ops.
         self.last_feed_info: dict | None = None

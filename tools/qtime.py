@@ -4,14 +4,20 @@ Usage: python tools/qtime.py [-n RUNS] <query> [query ...]
 
 The optimization loop's inner tool: time a hand-picked query subset,
 change one thing, re-time. Methodology matches bench.py (shared warm
-session, warmup pass, noop sink, perf_counter), plus bench.py's rule-7b
-/proc/stat bracket per run so contaminated samples are KNOWN (steal
-share > 0.05), not inferred: on this multi-tenant host co-tenant bursts
+session, warmup pass, noop sink, perf_counter) and so does the
+contamination signal: each run is bracketed by bench.py's /proc/stat
+reader and counts as clean when its steal share is within
+bench.STEAL_SHARE_MAX. On this multi-tenant host co-tenant bursts
 inflate runs 1.3-2.5x through quiet loadavg windows (BASELINE.md), so
-an A/B comparison is only meaningful over steal-clean samples. Prints
-one JSON line per query with all runs, their steal shares, and the
-clean median. NOT the cross-round artifact (that stays bench.py with
-its full qualification machinery).
+an A/B comparison is only meaningful over steal-clean runs. Prints one
+JSON line per query with all runs, their steal shares, and the clean
+median. A query's runs go back to back and no anchor rule applies:
+the cross-round artifact stays bench.py.
+
+For example, the IVF/semantic serving family with enough runs per
+query to settle a ~0.1 s question:
+
+    python tools/qtime.py -n 9 similarity_ivf_prod similarity_ivf dedup_semantic
 """
 
 from __future__ import annotations
@@ -57,11 +63,7 @@ def main() -> None:
             if i:
                 ts.append(round(dt, 3))
                 shares.append(bench._steal_share(c0, c1))
-        clean = [
-            t
-            for t, s in zip(ts, shares)
-            if s <= bench.STEAL_SHARE_MAX
-        ]
+        clean = bench._clean_runs(ts, shares)
         print(
             json.dumps(
                 {
