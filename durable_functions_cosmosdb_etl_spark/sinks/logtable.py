@@ -11,19 +11,21 @@ by the lease container, /root/reference/EtlProcess.cs:87-103 — here by
 operators/lease.py):
 
 - Data files are IMMUTABLE. Every commit writes fresh parquet under its
-  own ``data/c{version}/`` directory, hash-bucketed by key
-  (``__bucket=k`` subdirs); nothing is ever modified in place. Each
-  bucket unit is ONE parquet file (the write repartitions on the
-  bucket into ``min(n_buckets, defaultParallelism)`` tasks), so a
-  commit's write parallelism is bounded by the buckets it touches —
-  size ``n_buckets`` for the parallelism a full rewrite (``compact``)
-  needs.
-- ``_log/{version:020d}.json`` records, per commit, the (dir, bucket)
-  units added and the units logically removed. The LIVE file set at
-  version V is replay(log ≤ V) — so a MERGE never reads what it is
-  writing, concurrent readers keep a consistent snapshot (their pinned
-  file set still exists), and ``snapshot(version=...)`` is time travel
-  for free.
+  own ``data/c{version}/`` directory; nothing is ever modified in
+  place. Base writes (create, upsert, merge, delete, compact) are
+  hash-bucketed by key into ``__bucket=k`` subdirs, and each bucket
+  unit is ONE parquet file (the write repartitions on the bucket into
+  ``min(n_buckets, defaultParallelism)`` tasks), so a commit's write
+  parallelism is bounded by the buckets it touches — size
+  ``n_buckets`` for the parallelism a full rewrite (``compact``)
+  needs. A deferred upsert's commit dir is ONE delta unit covering a
+  bucket range, so its files follow the batch, not the buckets.
+- ``_log/{version:020d}.json`` records, per commit, the units added
+  (dir plus bucket, or bucket range) and the units logically removed.
+  The LIVE file set at version V is replay(log ≤ V) — so a MERGE
+  never reads what it is writing, concurrent readers keep a consistent
+  snapshot (their pinned file set still exists), and
+  ``snapshot(version=...)`` is time travel for free.
 - Commit = atomic claim of the next version file through a
   ``CommitProtocol``. The default ``PosixCommitProtocol`` writes the
   full entry to a tmp file, fsyncs it, and ``os.link``s it to the
@@ -54,7 +56,10 @@ Upsert cost model is unchanged from compact_upsert: an upsert touches
 only the buckets its keys hash into — it reads those units from the
 live set, anti-joins stored rows against update keys, and writes
 replacement units — O(|affected buckets|) of the table per commit, not
-O(history) and not O(table). Reads pay zero merge cost (exactly one
+O(history) and not O(table). A live delta unit meeting those buckets
+widens them to its whole range (it is only ever replaced whole), so an
+eager write after deferred ones costs up to the deltas' ranges until
+``compact`` folds them. Reads pay zero merge cost (exactly one
 row per key is stored); history costs only disk until ``vacuum``.
 
 At 100 TB: n_buckets sized so one bucket is a comfortable rewrite unit
@@ -188,23 +193,45 @@ def _commit_of(unit: str) -> str:
     return unit.split("/__bucket=")[0]
 
 
-def _bucket_rollup(
-    units: dict[str, dict],
-) -> tuple[dict[int, int], dict[int, int]]:
-    """Per-bucket (unit count, row count) rollup of a live-unit map.
-    The diff prices each touched bucket at BOTH interval ends, so
-    both sides need the identical aggregation — one helper keeps the
-    lo/hi pricing from silently drifting apart."""
-    n: dict[int, int] = {}
-    r: dict[int, int] = {}
+def _span(e: dict) -> tuple[int, int]:
+    """Bucket range ``(lo, hi)`` a unit covers: its one bucket for a
+    base unit, the ``bucket_range`` its footers' ``__b`` min/max gave
+    for a delta unit (see :meth:`LogTable.upsert_deferred`). A unit
+    holds rows of no bucket outside its range; it need not hold rows
+    of every bucket inside it."""
+    b = e.get("bucket")
+    if b is not None:
+        return b, b
+    lo, hi = e["bucket_range"]
+    return lo, hi
+
+
+def _buckets_of(e: dict) -> range:
+    lo, hi = _span(e)
+    return range(lo, hi + 1)
+
+
+def _covers(e: dict, buckets: set[int]) -> bool:
+    """True when the unit's range meets ``buckets``: a read of those
+    buckets scans the unit, and a rewrite of them must replace it."""
+    return not buckets.isdisjoint(_buckets_of(e))
+
+
+def _scan_price(units: dict[str, dict], buckets: set[int]) -> tuple[int, int]:
+    """(units, rows) a read of ``buckets`` scans in a live-unit map:
+    every unit whose range meets the set, whole. The diff reads both
+    interval ends this way, so one helper keeps the lo/hi pricing from
+    drifting apart, and from the read itself (:meth:`LogTable._read_units`
+    selects by the same :func:`_covers`)."""
+    n = r = 0
     for u in units.values():
-        b = u["bucket"]
-        n[b] = n.get(b, 0) + 1
-        r[b] = r.get(b, 0) + (u.get("rows") or 0)
+        if _covers(u, buckets):
+            n += 1
+            r += u.get("rows") or 0
     return n, r
 
 
-def _collect_unit_stats(unit_dir: str) -> dict:
+def _collect_unit_stats(unit_dir: str, n_buckets: int | None = None) -> dict:
     """Per-unit ``{rows, stats: {col: {min, max, nulls}}}`` harvested from
     the parquet FOOTERS of the files just written — a driver-side read of
     O(files-in-this-commit) metadata pages, no Spark job and no second
@@ -212,9 +239,15 @@ def _collect_unit_stats(unit_dir: str) -> dict:
     is Delta's add-file stats idea sourced the cheap way). Only
     top-level primitive leaves are kept; a column whose footer omits
     min/max (e.g. over-long strings) simply records nulls-only and is
-    never used to prune."""
+    never used to prune.
+
+    With ``n_buckets`` (a delta unit, whose files hold many buckets) the
+    entry also gets ``bucket_range``: the ``__b`` min/max over its row
+    groups, or every bucket when a row group omits them — a wider range
+    only makes reads scan and rewrites replace the unit more often."""
     rows = 0
     stats: dict[str, dict] = {}
+    b_lo = b_hi = None
     for name in sorted(os.listdir(unit_dir)):
         if not name.endswith(".parquet"):
             continue
@@ -225,9 +258,15 @@ def _collect_unit_stats(unit_dir: str) -> dict:
             for ci in range(g.num_columns):
                 col = g.column(ci)
                 path = col.path_in_schema
+                st = col.statistics
+                if path == "__b" and n_buckets is not None and g.num_rows:
+                    if st is None or not st.has_min_max:
+                        b_lo, b_hi = 0, n_buckets - 1
+                    else:
+                        b_lo = st.min if b_lo is None else min(b_lo, st.min)
+                        b_hi = st.max if b_hi is None else max(b_hi, st.max)
                 if "." in path or path.startswith("__"):
                     continue  # nested leaf / internal bucketing column
-                st = col.statistics
                 if st is None:
                     continue
                 s = stats.setdefault(
@@ -246,10 +285,13 @@ def _collect_unit_stats(unit_dir: str) -> dict:
                         continue
                     s["min"] = mn if s["min"] is None else min(s["min"], mn)
                     s["max"] = mx if s["max"] is None else max(s["max"], mx)
-    return {
+    out = {
         "rows": rows,
         "stats": {c: s for c, s in stats.items() if s["nulls"] >= 0},
     }
+    if b_lo is not None:
+        out["bucket_range"] = [b_lo, b_hi]
+    return out
 
 
 _PRUNE_OPS = {"==", "=", "<", "<=", ">", ">="}
@@ -472,11 +514,30 @@ def _raw_tainted(e: dict) -> bool:
 def _propagate_taint(added: list[dict], read_set: list[dict]) -> None:
     """Stamp ``raw`` onto new units whose bucket's read set contained a
     tainted unit (bucket-level precision: buckets never touched by raw
-    appends stay clean)."""
-    tainted_buckets = {e["bucket"] for e in read_set if _raw_tainted(e)}
+    appends stay clean; a tainted unit taints its whole range)."""
+    tainted_buckets = {
+        b for e in read_set if _raw_tainted(e) for b in _buckets_of(e)
+    }
     for u in added:
-        if u["bucket"] in tainted_buckets:
+        if _covers(u, tainted_buckets):
             u["raw"] = True
+
+
+def _close_over_units(
+    live: dict[str, dict], affected: set[int]
+) -> tuple[set[int], list[dict]]:
+    """The buckets an eager rewrite of ``affected`` must rewrite, and
+    the live units it replaces. A multi-bucket (delta) unit meeting the
+    set adds its whole range, until the set stops growing, so every
+    replaced unit lies inside the rewritten buckets and none is ever
+    replaced in part: its rows outside ``affected`` are rewritten into
+    their buckets' new base units rather than lost."""
+    while True:
+        replaced = [e for e in live.values() if _covers(e, affected)]
+        wider = set(affected).union(*map(_buckets_of, replaced))
+        if len(wider) == len(affected):
+            return wider, replaced
+        affected = wider
 
 
 class LogTable:
@@ -762,7 +823,7 @@ class LogTable:
 
     def _live_units(self, as_of: int | None = None) -> dict[str, dict]:
         """Replay the log: unit path (relative) → its full added entry
-        (bucket id + rows/stats), at a version.
+        (bucket id or bucket range + rows/stats), at a version.
 
         Starts from the newest log checkpoint at or before the target
         version when one exists (O(commits since checkpoint)) — an
@@ -892,17 +953,20 @@ class LogTable:
             "__bucket", F.col("__b")
         )
 
-    def _write_commit_dir(self, bucketed: DataFrame, v: int) -> list[dict]:
+    def _write_commit_dir(
+        self, bucketed: DataFrame, v: int, delta: bool = False
+    ) -> list[dict]:
         """Write one commit's data dir; return its ``added`` log entries,
-        one per bucket unit, each carrying the footer-harvested row count
-        and per-column min/max/null stats (see _collect_unit_stats) that
-        snapshot's data-skipping prunes on.
+        each carrying the footer-harvested row count and per-column
+        min/max/null stats (see _collect_unit_stats) that snapshot's
+        data-skipping prunes on.
 
-        The repartition on ``__bucket`` sends each bucket to one write
-        task, so every unit is ONE parquet file. Without it each write
-        task puts a file into every bucket it holds rows for (tasks ×
-        buckets files per commit), and every later read of the unit
-        pays a file open and footer read per file.
+        A base write logs one unit per bucket. The repartition on
+        ``__bucket`` sends each bucket to one write task, so every unit
+        is ONE parquet file. Without it each write task puts a file
+        into every bucket it holds rows for (tasks × buckets files per
+        commit), and every later read of the unit pays a file open and
+        footer read per file.
 
         The partition count is explicit, ``min(n_buckets,
         defaultParallelism)``: AQE coalesces an unnumbered repartition's
@@ -910,9 +974,22 @@ class LogTable:
         bucket files one after another (1.41 s of one-task stage time
         per ``etl_changefeed`` cycle on 4 vCPUs, SCALE.md §2b). AQE
         leaves a numbered repartition alone, and hashing still maps
-        each bucket to exactly one task."""
+        each bucket to exactly one task.
+
+        A ``delta`` write logs the whole dir as ONE unit covering its
+        rows' ``bucket_range``: one file per write task, no bucket
+        shuffle, no per-bucket dir. Without Hadoop's native library
+        the local filesystem forks ``chmod`` for every dir and file it
+        creates, 5-11 ms each, and an object store pays a PUT each,
+        so a 60-row batch spread over 36 buckets took 0.72-0.88 s to
+        commit as bucket units against 0.27-0.38 s as one (4 vCPUs,
+        SCALE.md §2b). None is logged for an empty batch."""
         rel = f"{_DATA_DIR}/c{v}"
         out = os.path.join(self.path, rel)
+        if delta:
+            bucketed.drop("__bucket").write.mode("overwrite").parquet(out)
+            entry = {"unit": rel, **_collect_unit_stats(out, self.n_buckets)}
+            return [entry] if entry["rows"] else []
         sc = self.spark.sparkContext
         n_tasks = min(self.n_buckets, sc.defaultParallelism)
         bucketed.repartition(n_tasks, F.col("__bucket")).write.mode(
@@ -939,19 +1016,25 @@ class LogTable:
         from the footers of one unit per commit (:meth:`_reps_schema`),
         so building the frame launches no Spark job. Units written
         before a schema evolution lack the newer columns and read NULL
-        there."""
+        there. A unit whose range reaches past ``buckets`` (a delta
+        unit) is read whole, so the scan then filters ``__b``."""
         sel = {
             u: e
             for u, e in units.items()
-            if buckets is None or e["bucket"] in buckets
+            if buckets is None or _covers(e, buckets)
         }
         if not sel:
             return None
         if schema is None:
             schema = self._reps_schema(self._schema_reps(sel)[0])
-        return self.spark.read.schema(schema).parquet(
+        df = self.spark.read.schema(schema).parquet(
             *[os.path.join(self.path, u) for u in sel]
         )
+        if buckets is not None and any(
+            not buckets.issuperset(_buckets_of(e)) for e in sel.values()
+        ):
+            df = df.filter(F.col("__b").isin(sorted(buckets)))
+        return df
 
     def _reps_schema(self, reps: dict[str, dict]) -> StructType:
         """Union read schema of a live set from its per-commit
@@ -988,7 +1071,7 @@ class LogTable:
         has_delta = any(
             e.get("delta")
             for e in units.values()
-            if buckets is None or e["bucket"] in buckets
+            if buckets is None or _covers(e, buckets)
         )
         if not has_delta:
             return df
@@ -1071,12 +1154,9 @@ class LogTable:
         v = base + 1
         # Affected buckets: driver-side but bounded by n_buckets (same
         # class of collect as compact_upsert's — a bucket list, not data).
-        affected = {
-            r["__b"] for r in up.select("__b").distinct().collect()
-        }
-        replaced = [
-            e for e in live.values() if e["bucket"] in affected
-        ]
+        affected, replaced = _close_over_units(
+            live, {r["__b"] for r in up.select("__b").distinct().collect()}
+        )
         current = self._read_resolved(live, affected)
         if current is not None:
             keep = current.join(
@@ -1099,18 +1179,29 @@ class LogTable:
     def upsert_deferred(
         self, updates: DataFrame, order_col: str | None = None
     ) -> int:
-        """Merge-on-READ upsert: append the batch as DELTA units instead
-        of rewriting the buckets it touches.
+        """Merge-on-READ upsert: append the batch as ONE delta unit
+        instead of rewriting the buckets it touches.
 
         The eager :meth:`upsert` pays O(affected buckets) of the stored
         table per commit — measured 2.9 s per micro-batch on the
         streaming probe when uniformly-spread keys touch every bucket
         (SCALE.md §2b), i.e. high-frequency small batches re-copy the
-        table over and over. This path writes ONLY the (deduped,
-        bucketed) batch, stamped with its commit version in a ``__gen``
-        data column, and logs the units with a ``delta`` marker; no
-        existing unit is read or removed, so the commit costs the same
-        as :meth:`append` regardless of table size. Readers resolve
+        table over and over. This path writes ONLY the deduped batch,
+        stamped with its commit version in a ``__gen`` data column, as
+        one unit of one parquet file per write task (no bucket shuffle,
+        no per-bucket dirs — see :meth:`_write_commit_dir`), and logs it
+        with a ``delta`` marker and the ``bucket_range`` its footers'
+        ``__b`` min/max span. No existing unit is read or removed, so
+        the commit costs O(batch) files and rows regardless of table
+        size or of how many buckets the batch's keys spread over.
+
+        A delta unit covers its whole range: a read of some buckets
+        scans it and filters ``__b``, and an eager mutation that
+        touches any bucket of the range rewrites the whole range
+        (:func:`_close_over_units`), so the unit is only ever replaced
+        whole. Uniformly spread keys give a near-full range, so an
+        eager write after deferred ones costs about the table until
+        ``compact`` folds the deltas away. Readers resolve
         lazily: :meth:`snapshot`/:meth:`changes` collapse base + delta
         rows to the highest generation per key (one key-partitioned
         window — see ``_resolve``), and every eager mutator reads
@@ -1123,8 +1214,9 @@ class LogTable:
         eager-merge or compact on the maintenance cadence.
 
         Stats-based data skipping stays sound: ``snapshot`` prunes a
-        unit only in buckets with no live delta (pruning any row of a
-        dirty bucket could change which row the window keeps).
+        unit only when its buckets meet no live delta's range (pruning
+        any row of a dirty bucket could change which row the window
+        keeps).
 
         Raises on tables carrying RAW-tainted units (see
         :func:`_raw_tainted`): raw :meth:`append` units make no
@@ -1148,7 +1240,7 @@ class LogTable:
         v = base + 1
         up = self._bucketed(updates, dedupe=True, order_col=order_col)
         up = up.withColumn("__gen", F.lit(v).cast("long"))
-        added = self._write_commit_dir(up, v)
+        added = self._write_commit_dir(up, v, delta=True)
         for u in added:
             u["delta"] = True
         return self._commit("upsert_delta", added, [], v)
@@ -1196,8 +1288,9 @@ class LogTable:
         src = self._bucketed(source, dedupe=True, order_col=order_col).drop(
             "__bucket"
         )
-        affected = {r["__b"] for r in src.select("__b").distinct().collect()}
-        replaced = [e for e in live.values() if e["bucket"] in affected]
+        affected, replaced = _close_over_units(
+            live, {r["__b"] for r in src.select("__b").distinct().collect()}
+        )
         current = self._read_resolved(live, affected)
         if current is None:
             if not insert_not_matched:
@@ -1270,10 +1363,9 @@ class LogTable:
         live = self._live_units(as_of=base if base >= 0 else None)
         v = base + 1
         k = self._bucketed(keys.select(self.key), dedupe=True, order_col=None)
-        affected = {r["__b"] for r in k.select("__b").distinct().collect()}
-        replaced = [
-            e for e in live.values() if e["bucket"] in affected
-        ]
+        affected, replaced = _close_over_units(
+            live, {r["__b"] for r in k.select("__b").distinct().collect()}
+        )
         current = self._read_resolved(live, affected)
         added: list[dict] = []
         if current is not None:
@@ -1322,10 +1414,15 @@ class LogTable:
         """
         base = self.version()
         live = self._live_units(as_of=base if base >= 0 else None)
-        tainted = {e["bucket"] for e in live.values() if _raw_tainted(e)}
+        tainted, replaced = _close_over_units(
+            live,
+            {
+                b for e in live.values() if _raw_tainted(e)
+                for b in _buckets_of(e)
+            },
+        )
         if not tainted:
             return None
-        replaced = [e for e in live.values() if e["bucket"] in tainted]
         cur = self._read_resolved(live, tainted)
         dup = (
             cur.groupBy(self.key)
@@ -1383,7 +1480,7 @@ class LogTable:
         return [
             u
             for u, e in units.items()
-            if (buckets is None or e["bucket"] in buckets)
+            if (buckets is None or _covers(e, buckets))
             and not os.path.exists(os.path.join(self.path, u))
         ]
 
@@ -1423,16 +1520,19 @@ class LogTable:
                 raise FeedTruncatedError(version, gone)
         pruned = live
         if where:
-            # Buckets holding a live delta unit are DIRTY: pruning any of
-            # their units could change which row the merge-on-read window
-            # keeps (a pruned stale base row would stop shadowing — or a
-            # pruned delta would un-shadow a stale base). Clean buckets
-            # prune on stats exactly as before.
-            dirty = {e["bucket"] for e in live.values() if e.get("delta")}
+            # Buckets a live delta unit's range covers are DIRTY: pruning
+            # any of their units could change which row the merge-on-read
+            # window keeps (a pruned stale base row would stop shadowing —
+            # or a pruned delta would un-shadow a stale base). Units
+            # meeting no dirty bucket prune on stats exactly as before.
+            dirty = {
+                b for e in live.values() if e.get("delta")
+                for b in _buckets_of(e)
+            }
             pruned = {
                 u: e
                 for u, e in live.items()
-                if e["bucket"] in dirty or not _stats_refute(e, where)
+                if _covers(e, dirty) or not _stats_refute(e, where)
             }
         # With ``where``, the schema is the whole live set's: pruning
         # must not drop a column that only pruned units carry, since
@@ -1590,17 +1690,18 @@ class LogTable:
 
     def _touched_buckets(self, from_version: int, to_version: int) -> set[int]:
         """Buckets that commits in ``(from, to]`` added or removed units
-        in — every mutation, maintenance included, logs the units it
-        rewrote, so a key outside these buckets cannot have changed and
-        this is the diff's read set. The walk stops once all
-        ``n_buckets`` are touched: the set cannot grow past that point,
+        in, each unit counting its whole range — every mutation,
+        maintenance included, logs the units it rewrote, so a key
+        outside these buckets cannot have changed and this is the
+        diff's read set. The walk stops once all ``n_buckets`` are
+        touched: the set cannot grow past that point,
         so neither can the diff's read or its price, and a deep backlog
         costs O(commits until every bucket is touched) of log JSON
         instead of O(backlog)."""
         touched: set[int] = set()
         for e in self._log_entries(after=from_version, upto=to_version):
             for u in e.get("added", []) + e.get("removed", []):
-                touched.add(u["bucket"])
+                touched.update(_buckets_of(u))
             if len(touched) >= self.n_buckets:
                 break
         return touched
@@ -1613,14 +1714,16 @@ class LogTable:
         alone — no Spark job, no data read.
 
         Returns ``{interval_units, interval_rows, live_units, live_rows,
-        net_change_ratio}``. The diff reads each touched bucket
-        (:meth:`_touched_buckets`) at BOTH interval ends, so
-        ``interval_units``/``interval_rows`` add the bucket's live units
-        and rows at ``from_version`` to those at ``to_version``, once
-        per bucket however many commits touched it; a delete-heavy
-        backlog that emptied its buckets still prices its from-side
-        read. ``net_change_ratio = interval_rows / max(live_rows, 1)``
-        with ``live_rows`` the table at ``to_version``. A diff that
+        net_change_ratio}``. The diff reads the touched buckets
+        (:meth:`_touched_buckets`) at BOTH interval ends, scanning every
+        live unit whose range meets them, whole (:func:`_scan_price`).
+        So ``interval_units``/``interval_rows`` add those units and
+        their rows at ``from_version`` to those at ``to_version``, once
+        per unit however many commits touched its buckets; a
+        delete-heavy backlog that emptied its buckets still prices its
+        from-side read. ``net_change_ratio = interval_rows /
+        max(live_rows, 1)`` with ``live_rows`` the table at
+        ``to_version``. A diff that
         reads the whole table — an interval holding a ``compact``
         (which rewrites every live unit), or one whose commits touched
         every bucket — prices at (lo + hi) / hi rows, which is 2.0 when
@@ -1633,23 +1736,18 @@ class LogTable:
         serve that follows reuses them.
         """
         to_version = self._interval(from_version, to_version)
-        hi_units, hi_rows = _bucket_rollup(
-            self._live_units(as_of=to_version)
-        )
-        lo_units, lo_rows = _bucket_rollup(
-            self._live_units(as_of=from_version)
-        )
+        hi = self._live_units(as_of=to_version)
         touched = self._touched_buckets(from_version, to_version)
-        live_rows = sum(hi_rows.values())
-        interval_rows = sum(
-            lo_rows.get(b, 0) + hi_rows.get(b, 0) for b in touched
+        lo_units, lo_rows = _scan_price(
+            self._live_units(as_of=from_version), touched
         )
+        hi_units, hi_rows = _scan_price(hi, touched)
+        live_rows = sum(u.get("rows") or 0 for u in hi.values())
+        interval_rows = lo_rows + hi_rows
         return {
-            "interval_units": sum(
-                lo_units.get(b, 0) + hi_units.get(b, 0) for b in touched
-            ),
+            "interval_units": lo_units + hi_units,
             "interval_rows": interval_rows,
-            "live_units": sum(hi_units.values()),
+            "live_units": len(hi),
             "live_rows": live_rows,
             "net_change_ratio": interval_rows / max(live_rows, 1),
         }
@@ -1692,8 +1790,8 @@ class LogTable:
 
         Records ``last_feed_info`` with tier ``"post_image"`` and the
         diff's keys: the delta units and rows read as
-        ``interval_units``/``interval_rows``, the table at ``to`` as
-        ``live_units``/``live_rows``.
+        ``interval_units``/``interval_rows`` (one unit per deferred
+        commit), the table at ``to`` as ``live_units``/``live_rows``.
         """
         to_version = self._interval(from_version, to_version)
         deltas: dict[str, dict] = {}
@@ -1752,13 +1850,14 @@ class LogTable:
         the log makes the diff well-defined. It is served as a snapshot
         diff: full outer join of the two snapshots on the key
         RESTRICTED TO THE BUCKETS the intervening commits touched
-        (:meth:`_touched_buckets`) — every mutation rewrites whole
-        bucket units and logs them, so a key whose bucket appears in no
-        commit between the two versions cannot have changed. Cost
-        O(touched buckets × 2); both sides hash-bucket identically, so
-        the join co-locates. ``compact`` rewrites every live unit, so
-        an interval containing one reads the whole table at both ends —
-        run feeds and compaction on separate cadences.
+        (:meth:`_touched_buckets`) — every mutation logs the units it
+        adds and replaces, each covering its bucket range, so a key
+        whose bucket appears in no commit between the two versions
+        cannot have changed. Cost O(touched buckets × 2); both sides
+        hash-bucket identically, so the join co-locates. ``compact``
+        rewrites every live unit, so an interval containing one reads
+        the whole table at both ends — run feeds and compaction on
+        separate cadences.
 
         A consumer that needs only inserted and updated rows can first
         try :meth:`post_images`, which serves a deferred-upsert interval

@@ -17,7 +17,7 @@ pipeline in ``streaming/pipeline.py``.
 | lease container serialization (:185) | lease_path (O3 lease guard)    |
 | MaxItemsPerInvocation=10 (:186)      | max_versions_per_batch         |
 | per-invocation transform (:194-205)  | caller's transform(df)         |
-| upsert on /id (:188-206)             | target.upsert / upsert_deferred|
+| upsert on /id (:188-206)             | upsert_deferred / target.upsert|
 | continuation-token expiry            | FeedTruncatedError/on_truncated|
 
 Why a driver-side drain loop and not ``readStream``: the source of
@@ -54,10 +54,13 @@ delta units those commits logged — the rows the interval staged, latest
 per key, whatever the table's size. Any other interval takes
 ``changes()``'s snapshot diff, which reads the buckets the interval
 touched at both ends; uniformly spread keys touch every bucket, so that
-path costs the table. The upsert rewrites only the buckets the
-transformed keys hash into, and the cursor/log operations are
-O(commits) driver metadata. Measured with ``tools/stream_probe.py
---feed-only`` (``changefeed_post_image_vs_diff``, SCALE.md §2b).
+path costs the table. The default deferred sink appends the
+transformed batch as one delta unit, so the target commit is O(batch)
+too; compaction is paid when the deltas reach a quarter of the target.
+The cursor/log operations are O(commits) driver metadata. Measured
+with ``tools/stream_probe.py --feed-only``
+(``changefeed_post_image_vs_diff``) and the ``medallion_cycles`` row,
+SCALE.md §2b.
 """
 
 from __future__ import annotations
@@ -174,8 +177,8 @@ def run_changefeed_transform(
     cursor_path: str,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     max_versions_per_batch: int | None = None,
-    sink: str = "upsert",
-    maintenance_every: int | None = None,
+    sink: str = "deferred",
+    maintenance_every: int | None = 1,
     compact_min_delta: float = 0.25,
     after_apply: Callable[[int, int], None] | None = None,
     on_truncated: str = "error",
@@ -199,12 +202,19 @@ def run_changefeed_transform(
       half is CERTIFIED per batch by default (``certify_transform``)
       so a violation fails loudly instead of corrupting silently.
       ``None`` = identity (pure replication).
-    - ``sink="upsert"``: eager per-batch MERGE semantics on the target
-      (stored table always one-row-per-key, merge-free reads).
-      ``sink="deferred"``: ``upsert_deferred`` delta appends — commit
-      cost = batch size regardless of target size; pair with
-      ``maintenance_every`` exactly as in streaming/pipeline.py (the
-      recommended tier for write-heavy feeds, SCALE.md §2b).
+    - ``sink="deferred"`` (default): ``upsert_deferred`` appends each
+      batch as one delta unit — commit cost = batch size regardless of
+      target size or of how many buckets the batch's keys spread over.
+      With the default ``maintenance_every=1`` every batch ends with a
+      log checkpoint, plus a ``compact`` once the target's delta rows
+      reach ``compact_min_delta`` of its live rows, exactly as in
+      streaming/pipeline.py. A feed changing ~1% of the keys per batch
+      compacts every few dozen batches and writes a few files per
+      batch in between, where
+      the eager sink rewrote every bucket its spread keys hashed into
+      (SCALE.md §2b). ``sink="upsert"``: eager per-batch MERGE on the
+      target (stored table always one-row-per-key, merge-free reads);
+      pass ``maintenance_every=None`` to run no maintenance.
     - Deletes in the feed propagate as ``target.delete_keys`` on the
       same batch, after the upsert — within a batch the feed holds at
       most one change row per key, so the two commits never touch the

@@ -9,6 +9,8 @@ effectively-once (no dup / no loss) contract.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -330,7 +332,10 @@ def test_changefeed_transform_contract_certified(spark, tmp_path):
     """A transform violating the deterministic key-preserving 1:1
     contract fails LOUDLY before any target commit (VERDICT r6 #4) —
     previously it converged silently wrong. All three violation shapes:
-    dropping rows, duplicating keys, rewriting key values."""
+    dropping rows, duplicating keys, rewriting key values — on the
+    bootstrap batch (a create) and on an incremental batch, which the
+    default deferred sink would append as a delta unit: the target's
+    version and data dirs stay as they were and the cursor unmoved."""
     from durable_functions_cosmosdb_etl_spark.streaming.changefeed import (
         TransformContractError,
     )
@@ -361,6 +366,27 @@ def test_changefeed_transform_contract_certified(spark, tmp_path):
     # a conforming transform passes certification and converges
     stats = run_changefeed_transform(spark, a, b, cur, transform=upcase)
     assert stats["rows_upserted"] == 3
+    a.upsert_deferred(
+        spark.createDataFrame(
+            [(1, "x2"), (2, "y2"), (3, "z2")], "id long, val string"
+        )
+    )
+    bv, cv = b.version(), read_cursor(cur)
+    data_dirs = sorted(os.listdir(tmp_path / "b" / "data"))
+    for pat, bad in cases:
+        with pytest.raises(TransformContractError, match=pat):
+            run_changefeed_transform(spark, a, b, cur, transform=bad)
+        assert b.version() == bv and read_cursor(cur) == cv
+        assert sorted(os.listdir(tmp_path / "b" / "data")) == data_dirs
+    run_changefeed_transform(spark, a, b, cur, transform=upcase)
+    # the delta rows are half of the table, past the 0.25 compaction
+    # gate, so the batch's maintenance folds them into base units
+    assert [e["op"] for e in b.history()] == [
+        "create", "upsert_delta", "compact"
+    ]
+    assert _rows(b.snapshot(), "id", "val") == [
+        (1, "X2"), (2, "Y2"), (3, "Z2")
+    ]
     # opt-out honored (audited transforms on latency-critical feeds)
     a.upsert(spark.createDataFrame([(4, "q")], "id long, val string"))
     c = _mk(spark, tmp_path, "c")

@@ -851,8 +851,10 @@ def test_upsert_deferred_commit_cost_is_batch_only(spark, tmp_path):
     assert entry["op"] == "upsert_delta"
     assert entry["removed"] == []
     assert all(u.get("delta") for u in entry["added"])
-    # the single-key batch wrote exactly one bucket unit
+    # the single-key batch wrote exactly one delta unit, one bucket wide
     assert len(entry["added"]) == 1
+    lo, hi = entry["added"][0]["bucket_range"]
+    assert lo == hi
 
 
 def test_eager_mutators_read_through_deltas(spark, tmp_path):
@@ -867,6 +869,94 @@ def test_eager_mutators_read_through_deltas(spark, tmp_path):
     assert _rows(t.snapshot()) == [(2, "b2"), (3, "c")]
     t.merge(_mk(spark, [(3, "c9"), (6, "f")]))
     assert _rows(t.snapshot()) == [(2, "b2"), (3, "c9"), (6, "f")]
+
+
+def test_eager_mutations_replace_multi_bucket_deltas_whole(spark, tmp_path):
+    """A delta unit spans a bucket range, so an eager mutation of ONE
+    bucket that meets it must rewrite the whole range: the unit is
+    replaced whole, never in part. Replacing only the bucket the
+    mutation hit would drop the delta's rows in its other buckets and
+    let their shadowed base rows resurface; keeping the delta live
+    would let its rows shadow the mutation. Every read of the mixed
+    table — latest, filtered, feed intervals across the deltas and the
+    eager writes, time travel — equals a twin that only ever wrote
+    eagerly, and vacuum keeps a delta unit that is still live."""
+    from pyspark.sql import functions as F
+
+    bucket_of = {
+        r.id: r.b
+        for r in spark.range(200)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(8)).alias("b"))
+        .collect()
+    }
+    mixed = LogTable(spark, str(tmp_path / "m"), key="id", n_buckets=8)
+    twin = LogTable(spark, str(tmp_path / "e"), key="id", n_buckets=8)
+
+    def both(mixed_op, twin_op=None):
+        mixed_op(mixed)
+        (twin_op or mixed_op)(twin)
+
+    def deferred(rows):
+        both(
+            lambda t: t.upsert_deferred(_mk(spark, rows)),
+            lambda t: t.upsert(_mk(spark, rows)),
+        )
+
+    both(lambda t: t.create(_mk(spark, [(i, f"v{i}") for i in range(80)])))
+    deferred([(i, f"d{i}") for i in range(0, 120, 3)])             # v1
+    deferred([(i, f"e{i}") for i in range(0, 120, 5)])             # v2
+    spread = [u for u in mixed._live_units().values() if u.get("delta")]
+    assert len(spread) == 2
+    assert all(u["bucket_range"][0] < u["bucket_range"][1] for u in spread)
+    # three eager writes, each to keys of key 0's bucket only, keys the
+    # deltas wrote
+    b0 = bucket_of[0]
+    k = [
+        i for i in range(120)
+        if bucket_of[i] == b0 and (i % 3 == 0 or i % 5 == 0)
+    ]
+    both(lambda t: t.upsert(_mk(spark, [(k[0], "U")])))             # v3
+    assert not any(u.get("delta") for u in mixed._live_units().values())
+    removed = {u["unit"] for u in mixed.history()[-1]["removed"]}
+    assert {u["unit"] for u in spread} <= removed
+    fresh = next(i for i in range(120, 200) if bucket_of[i] == b0)
+    both(lambda t: t.merge(_mk(spark, [(k[1], "M"), (fresh, "new")])))  # v4
+    both(lambda t: t.delete_keys(                                   # v5
+        spark.createDataFrame([(k[2],)], "id long")
+    ))
+    # a delta two buckets wide, then an eager write outside its range
+    lo_b = 5 if b0 not in (5, 6) else 2
+    narrow = [
+        next(i for i in range(80) if bucket_of[i] == b)
+        for b in (lo_b, lo_b + 1)
+    ]
+    deferred([(i, f"n{i}") for i in narrow])                        # v6
+    other = next(i for i in range(80) if bucket_of[i] not in (lo_b, lo_b + 1))
+    both(lambda t: t.upsert(_mk(spark, [(other, "O")])))            # v7
+    live_delta = [u for u in mixed._live_units().values() if u.get("delta")]
+    assert [u["bucket_range"] for u in live_delta] == [[lo_b, lo_b + 1]]
+
+    def same(read):
+        def rows(t):
+            return sorted(
+                (sorted(r.asDict().items()) for r in read(t).collect()),
+                key=repr,
+            )
+
+        assert rows(mixed) == rows(twin)
+
+    latest = mixed.version()
+    assert latest == twin.version() == 7
+    same(lambda t: t.snapshot())
+    same(lambda t: t.snapshot(where=[("id", "<", 40)]))
+    same(lambda t: t.snapshot(where=[("val", "==", "U")]))
+    for lo, hi in ((0, 2), (1, 3), (2, 5), (0, latest), (5, 7), (6, 7)):
+        same(lambda t: t.changes(lo, hi))
+    for v in range(latest + 1):
+        same(lambda t: t.snapshot(v))
+    mixed.vacuum()
+    assert os.path.isdir(os.path.join(mixed.path, live_delta[0]["unit"]))
+    same(lambda t: t.snapshot())
 
 
 def test_compact_folds_deltas_into_base(spark, tmp_path):
@@ -1667,11 +1757,14 @@ def test_reads_are_planned_from_the_log_without_jobs(
 def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
     """Each logged bucket unit is exactly one parquet file, whatever
     the commit kind, even when the input arrives in several partitions
-    whose rows spread over every bucket."""
+    whose rows spread over every bucket. A deferred upsert logs one
+    delta unit, its commit dir, holding at most one file per write
+    task however many buckets its rows span."""
     from pyspark.sql import functions as F
 
     root = tmp_path / "t"
     t = LogTable(spark, str(root), key="id", n_buckets=8)
+    sc = spark.sparkContext
 
     def src(lo: int, hi: int):
         return spark.range(lo, hi, numPartitions=4).selectExpr(
@@ -1691,8 +1784,12 @@ def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
         ("append", lambda: t.append(src(1000, 1100))),
         ("certify", t.certify_unique),
     ]
-    for op, run in ops:
-        run()
+    for i, (op, run) in enumerate(ops):
+        sc.setJobGroup(f"one-file-{i}", "LogTable commit")
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
         entry = t.history()[-1]
         assert entry["op"] == op
         assert entry["added"], op
@@ -1702,7 +1799,15 @@ def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
                 for f in os.listdir(root / u["unit"])
                 if f.endswith(".parquet")
             ]
-            assert len(files) == 1, (op, u["unit"], files)
+            if op == "upsert_delta":
+                assert entry["added"] == [u]
+                assert u["unit"] == f"data/c{entry['version']}"
+                lo, hi = u["bucket_range"]
+                assert 0 <= lo < hi <= 7
+                tasks = _stage_tasks(spark, f"one-file-{i}")[-1]
+                assert 1 <= len(files) <= tasks, (u["unit"], files, tasks)
+            else:
+                assert len(files) == 1, (op, u["unit"], files)
     assert t.snapshot().count() == 430
 
 
@@ -1720,10 +1825,13 @@ def _stage_tasks(spark, group: str) -> list[int]:
 
 
 def test_commit_write_stage_runs_one_task_per_core(spark, tmp_path):
-    """The write stage of a commit that touches several buckets runs
-    min(n_buckets, defaultParallelism) tasks. An unnumbered
+    """The write stage of a base commit that touches several buckets
+    runs min(n_buckets, defaultParallelism) tasks. An unnumbered
     repartition on the bucket let AQE coalesce the small shuffle into
-    one task that wrote every bucket file in turn."""
+    one task that wrote every bucket file in turn. A deferred upsert
+    has no bucket shuffle at all: its 50-row batch is written by the
+    stage that dedupes it, which AQE coalesces to one task, as one
+    delta unit."""
     par = spark.sparkContext.defaultParallelism
     if par < 2:
         pytest.skip("one task is the right count on a one-core session")
@@ -1744,8 +1852,13 @@ def test_commit_write_stage_runs_one_task_per_core(spark, tmp_path):
             write()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        tasks = _stage_tasks(spark, f"write-stage-{i}")
+        if t.history()[-1]["op"] == "upsert_delta":
+            assert len(t.history()[-1]["added"]) == 1
+            assert tasks[-1] == 1, tasks
+            continue
         assert len(t.history()[-1]["added"]) >= 2
-        assert _stage_tasks(spark, f"write-stage-{i}")[-1] == min(64, par)
+        assert tasks[-1] == min(64, par)
 
 
 def test_vacuum_removes_a_stray_file(spark, tmp_path):

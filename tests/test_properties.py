@@ -458,9 +458,10 @@ def test_changefeed_vacuum_truncation_rebootstrap_matches_model(
 def test_feed_estimate_matches_full_walk(spark, ops, pick_lo, pick_hi):
     """Exactness of the early-exit interval walk: for ANY op
     interleaving and interval, ``feed_interval_stats`` equals the diff's
-    price computed the long way — lo + hi live units and rows of every
-    bucket any commit in the interval touched, from the full
-    ``history()`` with no early exit. The walk may stop once every
+    price computed the long way — the lo + hi live units, and their
+    rows, whose bucket range meets the buckets any commit in the
+    interval touched (a delta unit covers its whole range), from the
+    full ``history()`` with no early exit. The walk may stop once every
     bucket is touched only because the touched set, and so the price,
     cannot grow past that point; this pins that it never stops
     sooner."""
@@ -483,23 +484,31 @@ def test_feed_estimate_matches_full_walk(spark, ops, pick_lo, pick_hi):
             t.compact()
         else:
             t.checkpoint_log()
+    def span(u) -> set[int]:
+        if "bucket" in u:
+            return {u["bucket"]}
+        first, last = u["bucket_range"]
+        return set(range(first, last + 1))
+
     latest = t.version()
     history = t.history()
     lo = pick_lo % (latest + 1)
     hi = lo + pick_hi % (latest - lo + 1)
     for a, b in {(lo, hi), (0, latest), (latest // 2, latest)}:
-        touched = {
-            u["bucket"]
-            for e in history
-            if a < e["version"] <= b
-            for u in e["added"] + e["removed"]
-        }
+        touched = set().union(
+            *(
+                span(u)
+                for e in history
+                if a < e["version"] <= b
+                for u in e["added"] + e["removed"]
+            )
+        )
         ends = [t._live_units(as_of=a), t._live_units(as_of=b)]
         read = [
             u
             for live in ends
             for u in live.values()
-            if u["bucket"] in touched
+            if span(u) & touched
         ]
         live_rows = sum(u.get("rows") or 0 for u in ends[1].values())
         interval_rows = sum(u.get("rows") or 0 for u in read)

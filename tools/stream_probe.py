@@ -18,6 +18,9 @@ Axes measured:
   - change-feed tier: one deferred 1% mutation drained from its delta
     units (post-image) vs through the snapshot diff (``--feed-only``
     runs only these pairs)
+  - the drain's sink: 30 bronze→silver cycles on the old eager default
+    vs the deferred default with its gated compaction
+    (``medallion_cycles``)
 
 Prints one JSON line per configuration. Staging data is built once per
 run under $TMPDIR/stream_probe (default /tmp) and reused across
@@ -84,6 +87,9 @@ def _post_image_vs_diff(
         ).first()[0]
 
     changed = max(60, docs // 100)
+    # the targets stay on the eager sink, so the row compares the feed
+    # tiers alone and keeps its recorded numbers comparable
+    eager = {"sink": "upsert", "maintenance_every": None}
     base = f"{WORK}/feed"
     src_dir = f"{base}/src"
     secs: dict[str, list[float]] = {"post_image": [], "diff": []}
@@ -95,6 +101,7 @@ def _post_image_vs_diff(
             run_changefeed_transform(
                 spark, src, LogTable(spark, f"{base}/{mode}", key="id"),
                 f"{base}/{mode}.cursor", transform=name_upper,
+                **eager,
             )
         src.upsert_deferred(
             src.snapshot()
@@ -114,6 +121,7 @@ def _post_image_vs_diff(
                 LogTable(spark, f"{base}/{mode}", key="id"),
                 f"{base}/{mode}.cursor",
                 transform=name_upper,
+                **eager,
             )
             secs[mode].append(time.perf_counter() - t0)
             assert st["last_feed_info"]["tier"] == mode
@@ -143,6 +151,139 @@ def _post_image_vs_diff(
         ),
         flush=True,
     )
+
+
+def _medallion_cycles(spark, docs: int, cycles: int = 30) -> None:
+    """Bronze→silver cycles on the drain's old and new sink defaults
+    (``medallion_cycles`` row, SCALE.md §2b). Each default gets its own
+    chain over one shared staging dir: a ``docs``-row backlog file,
+    then one file per cycle updating 1% of the backlog keys and adding
+    0.2% new ones (the ``etl_changefeed`` benchmark's cycle, scaled
+    with ``docs``). A cycle is the bronze ingest (deferred, delta-gated
+    maintenance every batch at 2%, as the benchmark runs it) plus the
+    silver drain (``name_upper`` transform): ``sink="upsert"`` with no
+    maintenance, the old default, against the defaults
+    (``sink="deferred"``, maintenance every batch, compaction at 25%
+    delta rows). The two chains alternate which runs first. The
+    per-cycle means and maxima include every silver compaction the
+    gate fires. ``*_silver_paths_per_cycle`` counts the dirs and files
+    (checksum files included) silver gained per cycle: each is one
+    create call on the store. The two silvers' content columns must
+    hash equal at the end."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
+        LogTable,
+    )
+    from durable_functions_cosmosdb_etl_spark.streaming.changefeed import (
+        run_changefeed_transform,
+    )
+
+    def name_upper(df):
+        return df.withColumn("name_upper", F.upper(F.col("name")))
+
+    def state(t: LogTable):
+        # content columns only: the bronze transform also stamps its
+        # run's time and batch, which differ between the two chains
+        return t.snapshot().select(
+            F.bit_xor(F.xxhash64(
+                "id", "source_date", "description", "done", "name", "pr",
+                "update_location", "name_upper",
+            ))
+        ).first()[0]
+
+    base = f"{WORK}/medallion"
+    staging = f"{base}/staging"
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(staging)
+    backlog = generate_sample_items(
+        spark, count=docs, deterministic_ids=True
+    ).toArrow()
+    pq.write_table(backlog, f"{staging}/b.parquet")
+    rng = np.random.default_rng(0)
+    sinks = {
+        "old": {"sink": "upsert", "maintenance_every": None},
+        "new": {},
+    }
+    tables = {
+        mode: {
+            tier: LogTable(spark, f"{base}/{mode}/{tier}", key="id")
+            for tier in ("bronze", "silver")
+        }
+        for mode in sinks
+    }
+
+    def cycle(mode: str) -> float:
+        d = f"{base}/{mode}"
+        t0 = time.perf_counter()
+        run_incremental_transform(
+            spark, staging, f"{d}/bronze", f"{d}/ckpt",
+            sink="logtable_deferred", maintenance_every=1,
+            compact_min_delta=0.02,
+        )
+        run_changefeed_transform(
+            spark,
+            tables[mode]["bronze"],
+            tables[mode]["silver"],
+            f"{d}/cursor.json",
+            transform=name_upper,
+            **sinks[mode],
+        )
+        return time.perf_counter() - t0
+
+    def paths(mode: str) -> int:
+        return sum(
+            len(dirs) + len(files)
+            for _d, dirs, files in os.walk(f"{base}/{mode}/silver")
+        )
+
+    for mode in sinks:
+        cycle(mode)  # bootstrap, untimed
+    paths0 = {mode: paths(mode) for mode in sinks}
+    secs: dict[str, list[float]] = {mode: [] for mode in sinks}
+    for c in range(cycles):
+        ups = backlog.take(
+            rng.choice(docs, max(1, docs // 100), replace=False)
+        )
+        ups = ups.set_column(
+            ups.schema.get_field_index("desc"),
+            "desc",
+            pc.binary_join_element_wise(ups["desc"], f" (c{c})", ""),
+        )
+        new = backlog.take(
+            rng.choice(docs, max(1, docs // 500), replace=False)
+        )
+        new = new.set_column(
+            new.schema.get_field_index("id"),
+            "id",
+            pc.binary_join_element_wise(new["id"], f"-n{c}", ""),
+        )
+        pq.write_table(
+            pa.concat_tables(
+                [ups.cast(backlog.schema), new.cast(backlog.schema)]
+            ),
+            f"{staging}/m{c:04d}.parquet",
+        )
+        order = list(sinks) if c % 2 == 0 else list(reversed(sinks))
+        for mode in order:
+            secs[mode].append(cycle(mode))
+    assert state(tables["old"]["silver"]) == state(tables["new"]["silver"])
+    row = {"config": "medallion_cycles", "docs": docs, "cycles": cycles}
+    for mode, xs in secs.items():
+        row[f"{mode}_mean_cycle_sec"] = round(sum(xs) / len(xs), 3)
+        row[f"{mode}_max_cycle_sec"] = round(max(xs), 3)
+        row[f"{mode}_silver_compactions"] = sum(
+            e["op"] == "compact" for e in tables[mode]["silver"].history()
+        )
+        row[f"{mode}_silver_paths_per_cycle"] = round(
+            (paths(mode) - paths0[mode]) / cycles, 1
+        )
+    row["new_won"] = sum(n < o for n, o in zip(secs["new"], secs["old"]))
+    print(json.dumps(row), flush=True)
 
 
 def main() -> None:
@@ -311,6 +452,7 @@ def main() -> None:
         flush=True,
     )
 
+    _medallion_cycles(spark, args.docs)
     _post_image_vs_diff(spark, staging, args.docs)
 
 
