@@ -9,10 +9,11 @@ checkpoints own incremental progress), but we keep the run-audit table
 (operator O4) for parity and observability.
 
 ``run_batch_etl`` wires: generate/extract (O5/O12) → surrogate keys +
-partitioned load (O6) → batch transform (O9) → upsert sink (O11) →
-audit (O4), with the reference's error semantics (O14): failure releases
-with the exception message and re-raises (:79-85); "no items" records a
-success with an explanatory message (:66-69).
+partitioned load (O6) → batch transform (O9) → upsert sink (O11, a
+LogTable keyed on ``id`` at ``{work_dir}/transformed``) → audit (O4),
+with the reference's error semantics (O14): failure releases with the
+exception message and re-raises (:79-85); "no items" records a success
+with an explanatory message (:66-69).
 """
 
 from __future__ import annotations
@@ -25,7 +26,8 @@ from pyspark.sql import functions as F
 
 from .operators.load import assign_surrogate_keys, save_documents
 from .operators.transform import transform_items
-from .sinks.writers import audit_run, upsert_batch
+from .sinks.logtable import LogTable
+from .sinks.writers import audit_run
 from .sources.generator import generate_sample_items
 
 
@@ -124,12 +126,14 @@ def run_batch_etl(
             batch_id=batch,
             clock=clock,
         )
-        # Sink version is monotonic epoch-micros (deterministic under an
-        # injected clock), NOT the uuid lineage id: latest_view resolves
-        # last-writer-wins by numeric version order, and a uuid would
-        # leave it to the string-fallback ordering — lexicographic, not
-        # temporal.
-        upsert_batch(out, transformed, int(start.timestamp() * 1_000_000))
+        # The run's upsert is one LogTable commit: last writer wins in
+        # commit order, so two runs over the same ids leave one row per
+        # key, and the table is change-feedable like the reference's
+        # container. Same write and maintenance rule as the streaming
+        # ingest's defaults (deferred upsert, maintain every batch).
+        sink = LogTable(spark, transformed, key="id")
+        sink.upsert_deferred(out)
+        sink.maintain()
         audit_run(
             spark, audit, start, clock or datetime.now(), True,
             # message analog of EtlProcess.cs:71 + the :177 count log

@@ -1,11 +1,14 @@
 """Log-structured MERGE table: parquet data files + a JSON commit log.
 
-The missing piece of the plain-parquet upsert sinks (see writers.py):
-``compact_upsert`` rewrites bucket partitions in place, so it must
-sever lineage with a localCheckpoint (it reads the very files it
-overwrites), offers no reader isolation during the rewrite, and keeps
-no history. This module is the transaction-log answer — the same idea
-as Delta/Iceberg, reduced to what a single-writer ETL pipeline needs
+The engine's one upsert-table format: the reference's ``transformed``
+container with upsert on ``/id`` (EtlProcess.cs:188-206), written by
+the batch ETL (``etl.run_batch_etl``), the streaming ingest
+(``streaming/pipeline.py``) and the change-feed drain
+(``streaming/changefeed.py``). Plain parquet has no MERGE: rewriting
+bucket partitions in place reads the very files it overwrites, offers
+no reader isolation during the rewrite, and keeps no history. This
+module is the transaction-log answer — the same idea as Delta/Iceberg,
+reduced to what a single-writer ETL pipeline needs
 (the reference's writer IS single: one orchestration at a time, guarded
 by the lease container, /root/reference/EtlProcess.cs:87-103 — here by
 operators/lease.py):
@@ -52,11 +55,11 @@ replay, the read schema from one parquet footer per live commit, and
 (on local masters, see session.get_spark) the unit dirs are listed on
 the driver — building a snapshot or feed launches no Spark job.
 
-Upsert cost model is unchanged from compact_upsert: an upsert touches
-only the buckets its keys hash into — it reads those units from the
-live set, anti-joins stored rows against update keys, and writes
-replacement units — O(|affected buckets|) of the table per commit, not
-O(history) and not O(table). A live delta unit meeting those buckets
+Upsert cost model: an eager upsert touches only the buckets its keys
+hash into — it reads those units from the live set, anti-joins stored
+rows against update keys, and writes replacement units —
+O(|affected buckets|) of the table per commit, not O(history) and not
+O(table). A live delta unit meeting those buckets
 widens them to its whole range (it is only ever replaced whole), so an
 eager write after deferred ones costs up to the deltas' ranges until
 ``compact`` folds them. Reads pay zero merge cost (exactly one
@@ -66,8 +69,9 @@ At 100 TB: n_buckets sized so one bucket is a comfortable rewrite unit
 (thousands of buckets); the log stays tiny (one small JSON per commit);
 ``compact()`` bounds live-file fragmentation; ``checkpoint_log()``
 (a Delta ``_last_checkpoint`` analog) bounds replay to
-O(commits since checkpoint) — run it from the same maintenance cadence
-as compact/vacuum.
+O(commits since checkpoint); ``maintain()`` is the one rule the
+writers' maintenance cadence runs (delta-gated compact, then
+checkpoint).
 """
 
 from __future__ import annotations
@@ -396,7 +400,8 @@ class CommitProtocol:
     atomic on S3 since 2024) or an external claim coordinator
     (DynamoDB-lock style, as Delta Lake on S3 does); such a protocol
     implements this same one-method interface and is passed to
-    :class:`LogTable` at construction.
+    :class:`LogTable` at construction (``tests/_condput.py`` emulates a
+    conditional put on a local directory).
     """
 
     def claim(self, tmp: str, final: str) -> bool:
@@ -419,69 +424,6 @@ class PosixCommitProtocol(CommitProtocol):
         except FileExistsError:
             return False
         return True
-
-
-class ConditionalPutCommitProtocol(CommitProtocol):
-    """Claim via an object-store-style conditional put
-    (S3 ``PUT If-None-Match: *``), emulated faithfully on a directory so
-    the full LogTable test matrix can exercise the non-POSIX seam
-    without a cloud dependency.
-
-    The store model: (1) the client uploads the payload to a
-    store-private staging object (the network transfer), then (2) the
-    store applies one atomic create-iff-absent — internally serialized,
-    and either the complete object appears under ``final`` or nothing
-    does. The emulation maps (2) to a critical section under an
-    advisory ``flock`` on a per-log lock file (the store's internal
-    serialization; auto-released on process death, so a crashed writer
-    can never wedge the table) with ``os.replace`` as the atomic
-    publish. GET-never-sees-partial holds because the only write to
-    ``final`` is the atomic rename of a fully-written staging file.
-
-    ``before_put`` (tests only): callable injected between upload and
-    the store's atomic section — the widest race window a real client
-    has. A crash there leaves a ``*.tmp`` staging orphan (reclaimed by
-    ``vacuum``) and no claim, exactly like an aborted network PUT.
-    """
-
-    def __init__(self, before_put=None) -> None:
-        self.before_put = before_put
-
-    def claim(self, tmp: str, final: str) -> bool:
-        import fcntl
-
-        staged = f"{final}.put.{os.getpid()}.tmp"
-        # fsync the staged payload BEFORE the atomic publish: without
-        # it, a crash after the claim could leave a claimed version
-        # whose entry content is not yet durable — the POSIX protocol
-        # fsyncs the payload in _commit before os.link, and a real
-        # object store's PUT only acknowledges durable content.
-        with open(tmp, "rb") as src, open(staged, "wb") as dst:
-            shutil.copyfileobj(src, dst)
-            dst.flush()
-            os.fsync(dst.fileno())
-        if self.before_put is not None:
-            self.before_put()
-        lock_path = os.path.join(os.path.dirname(final), "_store.lock")
-        with open(lock_path, "w") as lk:
-            fcntl.flock(lk, fcntl.LOCK_EX)
-            try:
-                if os.path.exists(final):
-                    os.unlink(staged)
-                    return False
-                os.replace(staged, final)
-                # fsync the log DIRECTORY so the rename itself (the
-                # claim) survives a crash — rename durability needs a
-                # dir fsync on POSIX, matching the store model's
-                # "create-iff-absent is durable when acknowledged".
-                dfd = os.open(os.path.dirname(final), os.O_RDONLY)
-                try:
-                    os.fsync(dfd)
-                finally:
-                    os.close(dfd)
-                return True
-            finally:
-                fcntl.flock(lk, fcntl.LOCK_UN)
 
 
 def _unit(commit_dir: str, bucket: int) -> str:
@@ -548,7 +490,7 @@ class LogTable:
     committed version. The stored invariant after every upsert/delete
     is exactly one row per key (given it held before — ``create`` and
     ``upsert`` both enforce it on their own input; ``append`` is a raw
-    add that does NOT dedupe, mirroring the append sink in writers.py).
+    add that does NOT dedupe).
     """
 
     def __init__(
@@ -1152,12 +1094,18 @@ class LogTable:
     ) -> int:
         up = self._bucketed(updates, dedupe=True, order_col=order_col)
         v = base + 1
-        # Affected buckets: driver-side but bounded by n_buckets (same
-        # class of collect as compact_upsert's — a bucket list, not data).
-        affected, replaced = _close_over_units(
-            live, {r["__b"] for r in up.select("__b").distinct().collect()}
-        )
-        current = self._read_resolved(live, affected)
+        current, replaced = None, []
+        # With no live unit there is nothing to merge against, so the
+        # bucket collect is skipped: a first write runs the batch's plan
+        # once, and a streaming source's progress counts its rows once.
+        if live:
+            # Affected buckets: driver-side but bounded by n_buckets (a
+            # bucket list, not data).
+            affected, replaced = _close_over_units(
+                live,
+                {r["__b"] for r in up.select("__b").distinct().collect()},
+            )
+            current = self._read_resolved(live, affected)
         if current is not None:
             keep = current.join(
                 up.select(F.col(self.key)), self.key, "left_anti"
@@ -1227,9 +1175,16 @@ class LogTable:
         (older tables) are untrusted by the same rule. Run
         :meth:`certify_unique` to prove the invariant and clear the
         taint.
+
+        On a table with no version yet there is no stored table to
+        defer against: the batch is written as version 0 the way
+        :meth:`create` writes it (base units, op ``create``), so a
+        writer needs no create-or-upsert branch of its own.
         """
         base = self.version()
-        live = self._live_units(as_of=base if base >= 0 else None)
+        if base < 0:
+            return self._upsert_into({}, updates, "create", order_col, base)
+        live = self._live_units(as_of=base)
         if any(_raw_tainted(e) for e in live.values()):
             raise ValueError(
                 "upsert_deferred requires the one-row-per-key discipline; "
@@ -1398,6 +1353,28 @@ class LogTable:
             )
             / total
         )
+
+    def maintain(self, compact_min_delta: float = 0.25) -> None:
+        """One maintenance step, the rule every writer's cadence runs:
+        ``compact()`` when the merge-on-read debt
+        (:meth:`delta_fraction`) has reached ``compact_min_delta`` of
+        the live rows, then ``checkpoint_log()``. A no-op on a table
+        with no version (a drained interval can be all no-ops).
+
+        The checkpoint bounds log replay to O(commits since it); an
+        unbounded feed otherwise grows open cost linearly with age. The
+        delta-mass gate is what makes the cadence scale: compacting on
+        a fixed batch count re-pays the whole-table write amplification
+        the deferral saved once the table outgrows the batch (measured
+        at 1M docs, SCALE.md §2b), while a fraction trigger compacts
+        less often exactly as the table grows. ``compact_min_delta=0``
+        compacts unconditionally.
+        """
+        if self.version() < 0:
+            return
+        if self.delta_fraction() >= compact_min_delta:
+            self.compact()
+        self.checkpoint_log()
 
     def certify_unique(self) -> int | None:
         """Prove one-row-per-key on RAW-tainted buckets and clear the

@@ -1,23 +1,10 @@
-"""Sinks: append, key-idempotent upsert, and the run-audit table.
+"""Run-audit sink: one ``OrchestrationRun`` row per run.
 
-Reference operators O11 (upsert to ``transformed`` keyed on ``/id``,
-/root/reference/EtlProcess.cs:188-206) and O4 (append an
-``OrchestrationRun`` audit row, EtlProcess.cs:120-130).
-
-Upsert strategy: plain parquet has no MERGE, so the upsert sink keeps
-one subdirectory per micro-batch and resolves last-writer-wins by
-(key, batch_id) at read time via ``latest_view``. With Delta/Iceberg in
-production the same call becomes a real ``MERGE INTO`` — the interface
-is the seam, mirroring how the reference gets idempotency from Cosmos
-upsert-on-partition-key. Re-delivered batches overwrite their own
-subdirectory (idempotent by construction), which is exactly the
-effectively-once contract the reference approximates (SURVEY.md §3 EP2).
-
-For real MERGE semantics with a transaction log — snapshot isolation,
-time travel, atomic versioned commits, vacuum — see
-``sinks/logtable.py`` (LogTable), which supersedes ``compact_upsert``
-whenever history or reader isolation matters; compact_upsert remains
-the log-free single-directory variant.
+Reference operator O4 (append an ``OrchestrationRun`` audit row,
+EtlProcess.cs:120-130). The upsert sink (operator O11, the
+``transformed`` container with upsert on ``/id``, EtlProcess.cs:
+188-206) is ``sinks/logtable.py``'s :class:`LogTable`, the engine's
+one upsert-table format.
 """
 
 from __future__ import annotations
@@ -26,139 +13,10 @@ import os
 import uuid
 from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 # The Spark-side audit schema lives in ..schemas.ORCHESTRATION_RUN_SCHEMA;
 # audit_run writes the matching arrow schema directly (see its docstring).
-
-
-def append(df: DataFrame, path: str) -> None:
-    df.write.mode("append").parquet(path)
-
-
-def upsert_batch(df: DataFrame, table_dir: str, batch_id: int | str) -> None:
-    """Idempotent per-batch write: batch re-delivery overwrites itself.
-
-    ``foreachBatch`` hands the same batch_id on retry; overwrite-by-batch
-    makes the sink idempotent (exactly-once end state) without a
-    transaction log.
-    """
-    out = os.path.join(table_dir, f"batch_id={batch_id}")
-    df.write.mode("overwrite").parquet(out)
-
-
-def latest_view(
-    spark: SparkSession, table_dir: str, key: str = "id", version_col: str = "batch_id"
-) -> DataFrame:
-    """Resolve upserts: latest batch wins per key.
-
-    One shuffle on the key — the same cost a MERGE pays. At scale the
-    window runs per key-partition; no global sort.
-    """
-    df = spark.read.option("basePath", table_dir).parquet(table_dir)
-    # Numeric versions order numerically; non-integral versions (e.g. a
-    # uuid batch id) would all try_cast to NULL, so the raw string is the
-    # deterministic fallback ordering — a plain cast would silently make
-    # row_number pick an arbitrary row per key.
-    w = Window.partitionBy(key).orderBy(
-        F.col(version_col).try_cast("long").desc_nulls_last(),
-        F.col(version_col).desc(),
-    )
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
-def compact_upsert(
-    spark: SparkSession,
-    table_dir: str,
-    updates: DataFrame,
-    key: str = "id",
-    n_buckets: int = 64,
-    order_col: str | None = None,
-) -> None:
-    """MERGE-semantics upsert without a transaction log: key-hash-
-    bucketed rewrite (the reference's true upsert-on-id sink,
-    EtlProcess.cs:188-206, at table scale).
-
-    Layout: the table is partitioned by ``__bucket = xxhash64(key) mod
-    n_buckets``. An upsert computes the buckets its keys land in, reads
-    ONLY those buckets (partition-pruned scan), anti-joins the stored
-    rows against the update keys (updates win), and rewrites just those
-    partitions via dynamic partition overwrite. Unlike the
-    per-batch-overwrite + latest-wins-view pair (``upsert_batch`` /
-    ``latest_view``), reads pay nothing: the stored table always holds
-    exactly one row per key — no per-key window over the batch history.
-
-    Scale: cost per upsert is O(|affected buckets|) of the table, not
-    O(history); size n_buckets so a bucket ≈ a comfortable rewrite unit
-    (at 100 TB, thousands of buckets; here 64). Re-delivered batches
-    rewrite the same buckets to the same state — idempotent. Cross-
-    bucket atomicity is the transaction log's job (Delta/Iceberg MERGE
-    INTO is the drop-in production seam); parquet-level the unit of
-    atomicity is one partition directory.
-
-    Duplicate keys WITHIN one updates batch are resolved before the
-    merge — ``order_col`` keeps the row with the highest value (version
-    semantics); without it an arbitrary row per key survives — so the
-    stored invariant of exactly one row per key holds regardless of
-    input. The merged result is materialized (``localCheckpoint``)
-    BEFORE the overwrite: the merge plan reads the same partitions the
-    write replaces, and without severing that lineage the overwrite
-    would either fail ("cannot overwrite a path that is also being read
-    from") or, worse, recompute from half-rewritten buckets mid-write.
-    """
-    from pyspark.errors import AnalysisException
-
-    if order_col is not None:
-        w = Window.partitionBy(key).orderBy(F.col(order_col).desc())
-        updates = (
-            updates.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
-    else:
-        updates = updates.dropDuplicates([key])
-    bucket = F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).alias("__bucket")
-    up = updates.select("*", bucket)
-    # Affected-bucket list is driver-side but bounded by n_buckets —
-    # the one acceptable collect (same class as a lease/audit row).
-    affected = [
-        r["__bucket"] for r in up.select("__bucket").distinct().collect()
-    ]
-    merged = up
-    try:
-        current = (
-            spark.read.option("basePath", table_dir)
-            .parquet(table_dir)
-            .filter(F.col("__bucket").isin(affected))
-        )
-        keep = current.join(updates.select(key), key, "left_anti")
-        merged = keep.unionByName(up)
-    except AnalysisException as e:
-        # First write: table doesn't exist yet. Anything else propagates.
-        if "PATH_NOT_FOUND" not in str(e) and "Path does not exist" not in str(e):
-            raise
-    # Sever lineage from the files about to be overwritten. Local
-    # checkpoint is bounded by the affected buckets' size (the rewrite
-    # unit); with a transaction-log format the reader/writer isolation
-    # makes this unnecessary.
-    merged = merged.localCheckpoint(eager=True)
-    merged.write.mode("overwrite").option(
-        "partitionOverwriteMode", "dynamic"
-    ).partitionBy("__bucket").parquet(table_dir)
-
-
-def read_compacted(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Read a compact_upsert table (drops the bucketing column)."""
-    return (
-        spark.read.option("basePath", table_dir)
-        .parquet(table_dir)
-        .drop("__bucket")
-    )
 
 
 def audit_run(

@@ -82,6 +82,9 @@ from ..operators.lease import (
 from ..sinks.logtable import FeedTruncatedError, LogTable
 from ..sinks.writers import audit_run
 
+# The values run_changefeed_transform's ``sink=`` accepts.
+SINK_MODES = ("upsert", "deferred")
+
 
 class LeaseLostError(RuntimeError):
     """The drain's lease heartbeat failed mid-drain: another process
@@ -205,16 +208,18 @@ def run_changefeed_transform(
     - ``sink="deferred"`` (default): ``upsert_deferred`` appends each
       batch as one delta unit — commit cost = batch size regardless of
       target size or of how many buckets the batch's keys spread over.
-      With the default ``maintenance_every=1`` every batch ends with a
-      log checkpoint, plus a ``compact`` once the target's delta rows
-      reach ``compact_min_delta`` of its live rows, exactly as in
-      streaming/pipeline.py. A feed changing ~1% of the keys per batch
-      compacts every few dozen batches and writes a few files per
-      batch in between, where
+      With the default ``maintenance_every=1`` every batch ends with
+      :meth:`~..sinks.logtable.LogTable.maintain`: a log checkpoint,
+      plus a ``compact`` once the target's delta rows reach
+      ``compact_min_delta`` of its live rows. A feed changing ~1% of
+      the keys per batch compacts every few dozen batches and writes a
+      few files per batch in between, where
       the eager sink rewrote every bucket its spread keys hashed into
       (SCALE.md §2b). ``sink="upsert"``: eager per-batch MERGE on the
       target (stored table always one-row-per-key, merge-free reads);
-      pass ``maintenance_every=None`` to run no maintenance.
+      pass ``maintenance_every=None`` to run no maintenance. Either
+      sink writes a target with no version yet as version 0 of base
+      units, like ``create``.
     - Deletes in the feed propagate as ``target.delete_keys`` on the
       same batch, after the upsert — within a batch the feed holds at
       most one change row per key, so the two commits never touch the
@@ -273,7 +278,7 @@ def run_changefeed_transform(
     for its final batch (tier, interval and what the serve read —
     VERDICT r9 #5), visible in the drain stats and audit row.
     """
-    if sink not in ("upsert", "deferred"):
+    if sink not in SINK_MODES:
         raise ValueError(f"unknown sink mode: {sink!r}")
     if on_truncated not in ("error", "rebootstrap"):
         raise ValueError(f"unknown on_truncated mode: {on_truncated!r}")
@@ -514,9 +519,7 @@ def _drain(
                     try:
                         if certify:
                             _certify_batch(out, ups, key, n_ups)
-                        if target.version() < 0:
-                            target.create(out)
-                        elif sink == "deferred":
+                        if sink == "deferred":
                             target.upsert_deferred(out)
                         else:
                             target.upsert(out)
@@ -541,13 +544,8 @@ def _drain(
             (truncated is not None or feed is not None)
             and maintenance_every
             and n_batches % maintenance_every == 0
-            and target.version() >= 0
-            # guard: a drained interval can be all no-ops (e.g. a
-            # compact-only window), leaving the target still empty
         ):
-            if target.delta_fraction() >= compact_min_delta:
-                target.compact()
-            target.checkpoint_log()
+            target.maintain(compact_min_delta)
         if after_apply is not None:
             after_apply(upto, target.version())
         write_cursor(
@@ -637,9 +635,6 @@ def _reconcile_snapshot(
         else:
             n_out = out.count()
         _renew_or_die(renew)
-        if target.version() < 0:
-            target.create(out)
-            return n_out, 0
         if sink == "deferred":
             target.upsert_deferred(out)
         else:

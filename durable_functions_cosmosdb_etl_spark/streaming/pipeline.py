@@ -1,7 +1,7 @@
 """Incremental transform pipeline — Structured Streaming analog of EP2.
 
-The reference's change-feed consumer (/root/reference/EtlProcess.cs:
-183-209) maps 1:1 onto a file-source micro-batch stream:
+The reference's change-feed consumer (EtlProcess.cs:183-209) maps 1:1
+onto a file-source micro-batch stream:
 
 | reference                          | here                               |
 |------------------------------------|------------------------------------|
@@ -10,12 +10,15 @@ The reference's change-feed consumer (/root/reference/EtlProcess.cs:
 | transformsLease container (:184)   | checkpointLocation                 |
 | per-invocation batchGuid (:194)    | foreachBatch's batch_id            |
 | 100 ms/doc throttle (:204)         | trigger pacing (declarative)       |
-| upsert on /id → effectively-once   | idempotent per-batch overwrite     |
+| upsert on /id → effectively-once   | LogTable upsert keyed on ``id``    |
 
 Exactly-once end state: foreachBatch may re-deliver a batch after
-failure, but ``upsert_batch`` writes to a batch-keyed subdirectory with
-overwrite, so re-delivery replaces rather than duplicates — strictly
-stronger than the reference's at-least-once upsert.
+failure, and the sink is an idempotent upsert into a
+:class:`~..sinks.logtable.LogTable` — a replayable source plus an
+idempotent, transactional sink (Structured Streaming, SIGMOD 2018).
+Re-delivery re-merges identical rows by key, so it converges to the
+same table state instead of duplicating — strictly stronger than the
+reference's at-least-once upsert.
 """
 
 from __future__ import annotations
@@ -26,9 +29,12 @@ from pyspark.sql import SparkSession
 
 from ..operators.transform import transform_items
 from ..schemas import SAMPLE_ITEM_SCHEMA
-from ..sinks.writers import upsert_batch
+from ..sinks.logtable import LogTable
 from ..sources.containers import Container
 from ..sources.stream import read_staging_stream
+
+# The values run_incremental_transform's ``sink=`` accepts.
+SINK_MODES = ("logtable", "logtable_deferred")
 
 
 def run_incremental_transform(
@@ -40,14 +46,16 @@ def run_incremental_transform(
     clock: datetime | None = None,
     available_now: bool | None = None,
     processing_time: str | None = None,
-    sink: str = "batch_dirs",
-    maintenance_every: int | None = None,
+    sink: str = "logtable_deferred",
+    maintenance_every: int | None = 1,
     compact_min_delta: float = 0.25,
 ):
-    """Consume staged SampleItem files incrementally; transform; upsert.
+    """Consume staged SampleItem files incrementally; transform; upsert
+    into a :class:`~..sinks.logtable.LogTable` at ``out_dir`` keyed on
+    ``id``.
 
     Trigger modes (operator O1, the reference's scheduled trigger,
-    /root/reference/EtlProcess.cs:23 TimerTrigger ``0 */2 * * * *``):
+    EtlProcess.cs:23 TimerTrigger ``0 */2 * * * *``):
 
     - ``available_now=True`` (the default when no ``processing_time`` is
       given): drain the backlog in capped micro-batches, then stop — the
@@ -63,43 +71,29 @@ def run_incremental_transform(
     - neither: run continuously as fast as batches complete.
 
     Sink modes (operator O11, the upsert-on-/id sink,
-    /root/reference/EtlProcess.cs:188-206):
+    EtlProcess.cs:188-206). Either way the first batch onto an empty
+    table writes version 0 as base units, like ``create``:
 
-    - ``sink="batch_dirs"`` (default): batch-keyed overwrite dirs +
-      ``latest_view`` read-time resolution — zero write amplification,
-      read pays the per-key window.
-    - ``sink="logtable"``: transactional MERGE into a
-      :class:`~..sinks.logtable.LogTable` keyed on ``id`` — the stored
-      table always holds one row per key, readers get snapshot
-      isolation and time travel across micro-batches. Batch redelivery
-      re-merges identical content: idempotent in state (a no-op
-      version), matching the batch_dirs contract.
-    - ``sink="logtable_deferred"``: merge-on-READ ingest —
-      ``upsert_deferred`` appends each batch as delta units (commit
+    - ``sink="logtable_deferred"`` (default): merge-on-READ ingest —
+      ``upsert_deferred`` appends each batch as one delta unit (commit
       cost = the batch, regardless of table size; the eager MERGE's
       per-batch bucket rewrite was the measured streaming bottleneck,
-      SCALE.md §2b — measured 2.5× over eager at full key spread),
-      readers resolve latest-per-key lazily, and ``compact()`` folds
-      deltas back. **This is the recommended sink for write-heavy
-      feeds** (high-frequency batches against a large stored table);
-      use eager ``logtable`` only when every reader must see a
-      merge-free base table at all times.
+      SCALE.md §2b), readers resolve latest-per-key lazily, and
+      maintenance folds deltas back.
+    - ``sink="logtable"``: eager MERGE — the stored table always holds
+      one row per key, so every reader sees a merge-free base table.
 
-    ``maintenance_every=N`` (logtable sinks only): every N micro-batches
-    the processor runs maintenance — ``checkpoint_log()`` always
-    (bounds log replay to O(commits since checkpoint); an unbounded
-    feed otherwise grows open cost linearly with age), and
-    ``compact()`` only when the standing merge-on-read debt
-    (``delta_fraction()``, driver arithmetic over logged footer stats)
-    has reached ``compact_min_delta`` of the live rows. The
-    delta-mass gate is what makes the cadence scale: compacting on a
-    fixed batch count re-pays the whole-table write amplification the
-    deferral saved once the table outgrows the batch (measured at 1M
-    docs, SCALE.md §2b), while a fraction trigger compacts less often
-    exactly as the table grows. ``compact_min_delta=0`` restores
-    unconditional compaction. A separate maintenance job calling
-    compact/checkpoint_log/vacuum under the writer lease is the
-    off-hot-path equivalent.
+    Both give readers snapshot isolation and time travel across
+    micro-batches, and a re-delivered batch re-merges identical content:
+    idempotent in state.
+
+    ``maintenance_every=N`` (default 1): every N micro-batches the
+    processor runs :meth:`~..sinks.logtable.LogTable.maintain` —
+    ``compact()`` once the merge-on-read debt reaches
+    ``compact_min_delta`` of the live rows, then ``checkpoint_log()``.
+    ``None`` or 0 turns it off; a separate maintenance job calling
+    ``maintain``/``vacuum`` under the writer lease is the off-hot-path
+    equivalent.
     """
     if available_now is None:
         available_now = processing_time is None
@@ -108,7 +102,7 @@ def run_incremental_transform(
             "available_now=True and processing_time are mutually "
             "exclusive trigger modes"
         )
-    if sink not in ("batch_dirs", "logtable", "logtable_deferred"):
+    if sink not in SINK_MODES:
         raise ValueError(f"unknown sink mode: {sink!r}")
     if isinstance(staging_dir, Container):
         # Connector path: cosmos.oltp.changeFeed (EtlProcess.cs:183-189)
@@ -119,30 +113,18 @@ def run_incremental_transform(
             spark, staging_dir, SAMPLE_ITEM_SCHEMA, max_files_per_trigger
         )
 
-    table = None
-    if sink in ("logtable", "logtable_deferred"):
-        from ..sinks.logtable import LogTable
-
-        table = LogTable(spark, out_dir, key="id")
-
+    table = LogTable(spark, out_dir, key="id")
     n_batches = [0]
 
     def process(batch_df, batch_id: int) -> None:
         out = transform_items(batch_df, batch_id=str(batch_id), clock=clock)
-        if table is not None:
-            if table.version() < 0:
-                table.create(out)
-            elif sink == "logtable_deferred":
-                table.upsert_deferred(out)
-            else:
-                table.upsert(out)
-            n_batches[0] += 1
-            if maintenance_every and n_batches[0] % maintenance_every == 0:
-                if table.delta_fraction() >= compact_min_delta:
-                    table.compact()
-                table.checkpoint_log()
+        if sink == "logtable_deferred":
+            table.upsert_deferred(out)
         else:
-            upsert_batch(out, out_dir, batch_id)
+            table.upsert(out)
+        n_batches[0] += 1
+        if maintenance_every and n_batches[0] % maintenance_every == 0:
+            table.maintain(compact_min_delta)
 
     writer = stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint_dir

@@ -23,9 +23,9 @@ def main() -> None:
     sys.path.insert(
         0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     )
+    from _condput import ConditionalPutCommitProtocol
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
         ConcurrentCommitError,
-        ConditionalPutCommitProtocol,
         LogTable,
         PosixCommitProtocol,
     )

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from durable_functions_cosmosdb_etl_spark.etl import run_batch_etl
 from durable_functions_cosmosdb_etl_spark.operators.transform import transform_items
 from durable_functions_cosmosdb_etl_spark.schemas import SAMPLE_ITEM_SCHEMA
+from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
 from durable_functions_cosmosdb_etl_spark.sources.generator import (
     generate_sample_items,
 )
@@ -91,6 +92,21 @@ def test_batch_etl_end_to_end(spark, tmp_path):
     assert len(audit) == 1
     assert audit[0].succeeded is True
     assert "extracted and saved" in audit[0].additional_info
+    # the upsert sink is a LogTable keyed on id (EtlProcess.cs:188-206)
+    sink = LogTable(spark, f"{work}/transformed", key="id")
+    assert sink.snapshot().count() == 30
+    # a later run over the same deterministic ids (the ids hash the
+    # minute-stamped names, so the clock moves within the minute)
+    # upserts, not appends: one row per key, and the later run's rows
+    # won
+    run_batch_etl(
+        spark, work, count=30, clock=CLOCK + timedelta(seconds=30),
+        batch_id="b-43", deterministic=True,
+    )
+    snap = sink.snapshot()
+    assert snap.count() == 30
+    assert snap.select("id").distinct().count() == 30
+    assert {r.transform_batch for r in snap.collect()} == {"b-43"}
 
 
 def test_batch_etl_failure_audits_and_reraises(spark, tmp_path):
@@ -366,42 +382,6 @@ def test_lease_release_verifies_start_time(tmp_path):
     # firing 2's own release clears it
     release_lease(path, "etl", now=t0 + timedelta(minutes=8), start_time=h2.start_time)
     assert not os.path.exists(lock)
-
-
-def test_compact_upsert_replay_and_dup_keys(spark, tmp_path):
-    """create -> upsert -> re-upsert (replay) keeps exactly one row per
-    key; duplicate keys inside one batch resolve by order_col; the
-    merge's self-read of the table it overwrites is severed (no
-    cannot-overwrite error, no data loss in rewritten buckets)."""
-    from durable_functions_cosmosdb_etl_spark.sinks.writers import (
-        compact_upsert,
-        read_compacted,
-    )
-
-    table = str(tmp_path / "compacted")
-    base = spark.createDataFrame(
-        [(i, f"v0-{i}", 0) for i in range(50)], "id long, val string, ver int"
-    )
-    compact_upsert(spark, table, base, key="id")
-    assert read_compacted(spark, table).count() == 50
-
-    # update 10 keys + insert 5 new, with an in-batch duplicate for key 3
-    upd = spark.createDataFrame(
-        [(i, f"v1-{i}", 1) for i in range(10)]
-        + [(3, "v2-3", 2)]
-        + [(i, f"v1-{i}", 1) for i in range(50, 55)],
-        "id long, val string, ver int",
-    )
-    compact_upsert(spark, table, upd, key="id", order_col="ver")
-    got = {r.id: r.val for r in read_compacted(spark, table).collect()}
-    assert len(got) == 55
-    assert got[3] == "v2-3"  # highest ver wins inside the batch
-    assert got[5] == "v1-5" and got[20] == "v0-20" and got[52] == "v1-52"
-
-    # replay the same batch: identical end state (idempotent)
-    compact_upsert(spark, table, upd, key="id", order_col="ver")
-    again = {r.id: r.val for r in read_compacted(spark, table).collect()}
-    assert again == got
 
 
 def test_full_reference_story_e2e(spark, tmp_path):

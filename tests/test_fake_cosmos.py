@@ -124,7 +124,7 @@ def test_change_feed_item_count_hint_throttles_batches(fakes, tmp_path):
     drain three single-file writes one at a time."""
     from datetime import datetime
 
-    from durable_functions_cosmosdb_etl_spark.sinks.writers import latest_view
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
     from durable_functions_cosmosdb_etl_spark.sources.generator import (
         generate_sample_items,
     )
@@ -149,8 +149,8 @@ def test_change_feed_item_count_hint_throttles_batches(fakes, tmp_path):
             spark, staging, out, str(tmp_path / "ckpt"),
             max_files_per_trigger=1, clock=clock,
         )
-        assert latest_view(spark, out).count() == expected
-    result = latest_view(spark, out)
+        assert LogTable(spark, out, key="id").snapshot().count() == expected
+    result = LogTable(spark, out, key="id").snapshot()
     assert result.select("transform_batch").distinct().count() == 3
 
 
@@ -202,7 +202,7 @@ def test_etl_pipeline_over_cosmos_change_feed(fakes, tmp_path):
     code path selecting the connector purely via the Container value."""
     from datetime import datetime
 
-    from durable_functions_cosmosdb_etl_spark.sinks.writers import latest_view
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
     from durable_functions_cosmosdb_etl_spark.sources.generator import (
         generate_sample_items,
     )
@@ -224,13 +224,13 @@ def test_etl_pipeline_over_cosmos_change_feed(fakes, tmp_path):
     run_incremental_transform(
         spark, staging, out, ckpt, max_files_per_trigger=None, clock=clock
     )
-    assert latest_view(spark, out).count() == 12
+    assert LogTable(spark, out, key="id").snapshot().count() == 12
 
     # no new documents → checkpoint prevents reprocessing
     run_incremental_transform(
         spark, staging, out, ckpt, max_files_per_trigger=None, clock=clock
     )
-    assert latest_view(spark, out).count() == 12
+    assert LogTable(spark, out, key="id").snapshot().count() == 12
 
     # delta arrives in the container → only it flows through
     staging.write(
@@ -241,4 +241,4 @@ def test_etl_pipeline_over_cosmos_change_feed(fakes, tmp_path):
     run_incremental_transform(
         spark, staging, out, ckpt, max_files_per_trigger=None, clock=clock
     )
-    assert latest_view(spark, out).count() == 17
+    assert LogTable(spark, out, key="id").snapshot().count() == 17

@@ -76,16 +76,32 @@ def test_snapshot_isolation_across_upsert(spark, tmp_path):
     assert _rows(t.snapshot()) == [(i, "CHANGED") for i in range(20)]
 
 
-def test_upsert_batch_dup_keys_order_col(spark, tmp_path):
-    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=8)
-    t.create(spark.createDataFrame([(1, "a", 0)], "id long, val string, ver long"))
+def test_upsert_dup_keys_order_col(spark, tmp_path):
+    """Duplicate keys inside one batch resolve by ``order_col`` on both
+    upsert paths. Onto a table with no version, ``upsert_deferred``
+    writes version 0 the way ``create`` does: op ``create``, base units,
+    no merge-on-read debt."""
     up = spark.createDataFrame(
         [(1, "low", 1), (1, "high", 9), (2, "x", 5)],
         "id long, val string, ver long",
     )
-    t.upsert(up, order_col="ver")
-    got = {r["id"]: r["val"] for r in t.snapshot().collect()}
-    assert got == {1: "high", 2: "x"}
+    for op in ("upsert", "upsert_deferred"):
+        t = LogTable(spark, str(tmp_path / op), key="id", n_buckets=8)
+        t.create(
+            spark.createDataFrame([(1, "a", 0)], "id long, val string, ver long")
+        )
+        getattr(t, op)(up, order_col="ver")
+        got = {r["id"]: r["val"] for r in t.snapshot().collect()}
+        assert got == {1: "high", 2: "x"}, op
+    t = LogTable(spark, str(tmp_path / "empty"), key="id", n_buckets=8)
+    assert t.upsert_deferred(up, order_col="ver") == 0
+    (entry,) = t.history()
+    assert entry["op"] == "create" and entry["added"]
+    assert all("bucket" in u and not u.get("delta") for u in entry["added"])
+    assert t.delta_fraction() == 0
+    assert {r["id"]: r["val"] for r in t.snapshot().collect()} == {
+        1: "high", 2: "x"
+    }
 
 
 def test_upsert_replay_idempotent_state(spark, tmp_path):
@@ -1088,8 +1104,8 @@ def test_untagged_units_are_untrusted(spark, tmp_path):
 
 
 def _protocols():
+    from _condput import ConditionalPutCommitProtocol
     from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        ConditionalPutCommitProtocol,
         PosixCommitProtocol,
     )
 
@@ -1132,9 +1148,7 @@ def test_conditional_put_race_loser_aborts_cleanly(spark, tmp_path):
     object lands between our upload and the store's atomic section. Our
     put must lose (If-None-Match), the rival's content must survive
     intact, and our staging object is a vacuumable orphan."""
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        ConditionalPutCommitProtocol,
-    )
+    from _condput import ConditionalPutCommitProtocol
 
     p = str(tmp_path / "t")
     rogue = os.path.join(p, "_log", f"{1:020d}.json")
@@ -1172,9 +1186,7 @@ def test_conditional_put_crash_mid_upload_leaves_no_claim(spark, tmp_path):
     leaves a staging orphan and NO version claim — a fresh writer
     proceeds at the same version (no wedge; flock dies with the
     process) and vacuum reclaims the staging object."""
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
-        ConditionalPutCommitProtocol,
-    )
+    from _condput import ConditionalPutCommitProtocol
 
     class Die(RuntimeError):
         pass

@@ -14,7 +14,7 @@ from datetime import datetime, timedelta
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from durable_functions_cosmosdb_etl_spark.sinks.writers import latest_view
+from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
 from durable_functions_cosmosdb_etl_spark.sources.generator import (
     generate_sample_items,
 )
@@ -46,6 +46,11 @@ def _stage_files(
         ).coalesce(1).write.mode("append").parquet(staging)
 
 
+def _snapshot(spark, out: str):
+    """The ingest's upsert sink: a LogTable keyed on id."""
+    return LogTable(spark, out, key="id").snapshot()
+
+
 def test_incremental_transform_micro_batches(spark, tmp_path):
     staging = str(tmp_path / "staging")
     out = str(tmp_path / "out")
@@ -54,7 +59,7 @@ def test_incremental_transform_micro_batches(spark, tmp_path):
 
     run_incremental_transform(spark, staging, out, ckpt, max_files_per_trigger=1,
                               clock=CLOCK)
-    result = latest_view(spark, out)
+    result = _snapshot(spark, out)
     assert result.count() == 30
     # one lineage id per micro-batch (EtlProcess.cs:194,256): 3 files ×
     # maxFilesPerTrigger=1 → 3 distinct transform_batch values
@@ -107,8 +112,6 @@ def test_incremental_transform_logtable_sink(spark, tmp_path):
     LogTable — stored table holds exactly one row per id, versions
     advance per micro-batch, and redelivery (checkpoint loss) converges
     to the same state."""
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
-
     staging = str(tmp_path / "staging")
     out = str(tmp_path / "out")
     _stage_files(spark, staging, n_files=2, rows_per=6)
@@ -138,8 +141,6 @@ def test_incremental_transform_deferred_with_maintenance(spark, tmp_path):
     log. End state: correct latest-per-key content, no live delta
     units, a log checkpoint present."""
     import os as _os
-
-    from durable_functions_cosmosdb_etl_spark.sinks.logtable import LogTable
 
     staging = str(tmp_path / "staging")
     out = str(tmp_path / "out")
@@ -171,28 +172,29 @@ def test_checkpoint_resume_no_reprocessing(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     _stage_files(spark, staging, n_files=2, rows_per=5)
     run_incremental_transform(spark, staging, out, ckpt, clock=CLOCK)
-    assert latest_view(spark, out).count() == 10
+    assert _snapshot(spark, out).count() == 10
     # resume with no new files: nothing reprocessed
     run_incremental_transform(spark, staging, out, ckpt, clock=CLOCK)
-    assert latest_view(spark, out).count() == 10
+    assert _snapshot(spark, out).count() == 10
     # new file arrives: only it is processed
     _stage_files(spark, staging, n_files=1, rows_per=7, prefix="g")
     run_incremental_transform(spark, staging, out, ckpt, clock=CLOCK)
-    assert latest_view(spark, out).count() == 17
+    assert _snapshot(spark, out).count() == 17
 
 
 def test_redelivery_is_idempotent(spark, tmp_path):
-    """Losing the checkpoint re-delivers everything; batch-keyed
-    overwrite converges to the same end state (effectively-once)."""
+    """Losing the checkpoint re-delivers everything; the LogTable upsert
+    by id converges to the same end state (effectively-once)."""
     staging = str(tmp_path / "staging")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     _stage_files(spark, staging, n_files=2, rows_per=8)
     run_incremental_transform(spark, staging, out, ckpt, clock=CLOCK)
-    before = latest_view(spark, out).count()
+    before = sorted(_snapshot(spark, out).collect())
+    assert len(before) == 16
     shutil.rmtree(ckpt)  # simulate lost consumer lease → full re-delivery
     run_incremental_transform(spark, staging, out, ckpt, clock=CLOCK)
-    assert latest_view(spark, out).count() == before
+    assert sorted(_snapshot(spark, out).collect()) == before
 
 
 def test_watermark_drops_late_events(spark, tmp_path):
@@ -612,11 +614,11 @@ def test_processing_time_trigger_cadence(spark, tmp_path):
     )
     try:
         q.processAllAvailable()
-        assert latest_view(spark, out).count() == 6
+        assert _snapshot(spark, out).count() == 6
         # second cadence tick sees a file staged AFTER the query started
         _stage_files(spark, staging, n_files=1, rows_per=4, prefix="late")
         q.processAllAvailable()
-        assert latest_view(spark, out).count() == 10
+        assert _snapshot(spark, out).count() == 10
         assert q.isActive
     finally:
         q.stop()

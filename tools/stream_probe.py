@@ -13,8 +13,9 @@ Axes measured:
   - micro-batch granularity (maxFilesPerTrigger 1 vs all-at-once) —
     the per-micro-batch fixed cost is the quantity the trigger cap
     trades against latency
-  - sink tier: batch_dirs (zero write amplification) vs logtable
-    (transactional MERGE per batch)
+  - sink tier: eager logtable (transactional MERGE per batch) vs
+    logtable_deferred (one delta unit per batch), without and with the
+    in-loop maintenance cadence
   - change-feed tier: one deferred 1% mutation drained from its delta
     units (post-image) vs through the snapshot diff (``--feed-only``
     runs only these pairs)
@@ -313,8 +314,6 @@ def main() -> None:
 
     configs = [
         # (label, max_files_per_trigger, sink, maintenance_every)
-        ("batch_dirs_1file", 1, "batch_dirs", None),
-        ("batch_dirs_all", None, "batch_dirs", None),
         ("logtable_1file", 1, "logtable", None),
         ("logtable_all", None, "logtable", None),
         ("logtable_deferred_1file", 1, "logtable_deferred", None),
