@@ -18,6 +18,7 @@ with an explanatory message (:66-69).
 
 from __future__ import annotations
 
+import os
 import uuid
 from datetime import datetime
 
@@ -29,6 +30,18 @@ from .operators.transform import transform_items
 from .sinks.logtable import LogTable
 from .sinks.writers import audit_run
 from .sources.generator import generate_sample_items
+
+
+def _staged_files(staging: str) -> set[str]:
+    """Paths of the parquet files under the staging dir (empty when it
+    does not exist yet). An append writes uniquely named files, so the
+    set difference around a write is exactly what it staged."""
+    return {
+        os.path.join(d, n)
+        for d, _dirs, names in os.walk(staging)
+        for n in names
+        if n.endswith(".parquet")
+    }
 
 
 def scheduled_batch_run(
@@ -50,8 +63,6 @@ def scheduled_batch_run(
     ``forced_lease`` like OrchestrationRun.ForcedLease (:128). Returns
     True iff this firing actually ran.
     """
-    import os
-
     from .operators.lease import acquire_lease, release_lease
 
     # Container-on-first-use analog (CreateContainerIfNotExistsAsync,
@@ -118,11 +129,26 @@ def run_batch_etl(
 
         obs = Observation("load_metrics")
         keyed = keyed.observe(obs, F.count(F.lit(1)).alias("n_loaded"))
+        before = _staged_files(staging)
         save_documents(keyed, staging)
         n_loaded = obs.get.get("n_loaded", 0)
 
+        # Transform only the files this run staged, as the reference's
+        # change-feed Transform sees only new documents: re-reading the
+        # whole staging dir made every run cost the whole history and
+        # re-stamp older documents' ``transform_batch``. Re-reading them
+        # rather than transforming ``keyed`` keeps the staged surrogate
+        # keys (``F.uuid()`` would draw new ones on a second evaluation).
+        new = sorted(_staged_files(staging) - before)
+        if not new:
+            audit_run(
+                spark, audit, start, clock or datetime.now(), True,
+                "No documents extracted.",
+                forced_lease=forced_lease,
+            )
+            return spark.createDataFrame([], "id string")
         out = transform_items(
-            spark.read.option("basePath", staging).parquet(staging),
+            spark.read.option("basePath", staging).parquet(*new),
             batch_id=batch,
             clock=clock,
         )

@@ -33,7 +33,8 @@ def get_spark(
     - ``local[...]`` masters list input files on the driver. A read of
       more than ``parallelPartitionDiscovery.threshold`` (32) paths
       otherwise runs the listing as a Spark job, and every LogTable
-      read passes one path per live bucket unit (64+). In local mode
+      read passes one path per live unit (a base unit per write task
+      plus a delta unit per deferred commit). In local mode
       that job's tasks are threads of the same JVM statting the same
       disk, so it adds a job and its scheduling to every read and
       lists nothing faster. On a cluster the parallel listing spreads

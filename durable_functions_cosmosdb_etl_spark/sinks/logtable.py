@@ -15,16 +15,19 @@ operators/lease.py):
 
 - Data files are IMMUTABLE. Every commit writes fresh parquet under its
   own ``data/c{version}/`` directory; nothing is ever modified in
-  place. Base writes (create, upsert, merge, delete, compact) are
-  hash-bucketed by key into ``__bucket=k`` subdirs, and each bucket
-  unit is ONE parquet file (the write repartitions on the bucket into
-  ``min(n_buckets, defaultParallelism)`` tasks), so a commit's write
-  parallelism is bounded by the buckets it touches — size
-  ``n_buckets`` for the parallelism a full rewrite (``compact``)
-  needs. A deferred upsert's commit dir is ONE delta unit covering a
-  bucket range, so its files follow the batch, not the buckets.
+  place. Rows are hash-bucketed by key (the ``__b`` data column, one of
+  ``n_buckets``). A base write (create, upsert, merge, delete, certify,
+  compact, append) range-partitions its rows on ``__b`` and writes
+  one ``__part=i`` subdir of ONE parquet file per write task, logged
+  as one unit over the disjoint bucket range its footers span: at most
+  ``min(n_buckets, defaultParallelism)`` units per commit, and no more
+  than a partial rewrite replaces. A deferred upsert's commit dir is
+  ONE delta unit over its batch's bucket range, so its files follow
+  the batch, not the buckets. Logs written before ranged base units
+  hold one ``__bucket=k`` unit per bucket; they still read, rewrite
+  and vacuum.
 - ``_log/{version:020d}.json`` records, per commit, the units added
-  (dir plus bucket, or bucket range) and the units logically removed.
+  (dir plus bucket range) and the units logically removed.
   The LIVE file set at version V is replay(log ≤ V) — so a MERGE
   never reads what it is writing, concurrent readers keep a consistent
   snapshot (their pinned file set still exists), and
@@ -55,18 +58,21 @@ replay, the read schema from one parquet footer per live commit, and
 (on local masters, see session.get_spark) the unit dirs are listed on
 the driver — building a snapshot or feed launches no Spark job.
 
-Upsert cost model: an eager upsert touches only the buckets its keys
-hash into — it reads those units from the live set, anti-joins stored
-rows against update keys, and writes replacement units —
-O(|affected buckets|) of the table per commit, not O(history) and not
-O(table). A live delta unit meeting those buckets
-widens them to its whole range (it is only ever replaced whole), so an
-eager write after deferred ones costs up to the deltas' ranges until
-``compact`` folds them. Reads pay zero merge cost (exactly one
-row per key is stored); history costs only disk until ``vacuum``.
+Upsert cost model: an eager upsert touches only the units whose
+bucket ranges its keys hash into — it reads those units from the live
+set, anti-joins stored rows against update keys, and writes
+replacement units — O(|affected units|) of the table per commit, not
+O(history) and not O(table). Every unit is replaced whole, so a
+one-key upsert rewrites its unit's range (about 1/defaultParallelism
+of a compacted table), and a live delta unit meeting the keys widens
+the rewrite to its whole range until ``compact`` folds it. Reads pay
+zero merge cost (exactly one row per key is stored); history costs
+only disk until ``vacuum``.
 
-At 100 TB: n_buckets sized so one bucket is a comfortable rewrite unit
-(thousands of buckets); the log stays tiny (one small JSON per commit);
+At 100 TB: n_buckets at least the write parallelism (thousands), so a
+compacted table holds one unit per write task and an eager point write
+rewrites one unit, table/defaultParallelism of it; the log stays tiny
+(one small JSON per commit, listing O(parallelism) live units);
 ``compact()`` bounds live-file fragmentation; ``checkpoint_log()``
 (a Delta ``_last_checkpoint`` analog) bounds replay to
 O(commits since checkpoint); ``maintain()`` is the one rule the
@@ -193,16 +199,18 @@ def _union_schema(dirs: list[str]) -> StructType:
 
 
 def _commit_of(unit: str) -> str:
-    """Commit data dir of a relative unit path (``data/c{v}``)."""
-    return unit.split("/__bucket=")[0]
+    """Commit data dir of a relative unit path (``data/c{v}``): a delta
+    unit is its commit dir, a base unit one subdir of it (``__part=i``,
+    or ``__bucket=k`` in logs written before ranged base units)."""
+    return "/".join(unit.split("/", 2)[:2])
 
 
 def _span(e: dict) -> tuple[int, int]:
-    """Bucket range ``(lo, hi)`` a unit covers: its one bucket for a
-    base unit, the ``bucket_range`` its footers' ``__b`` min/max gave
-    for a delta unit (see :meth:`LogTable.upsert_deferred`). A unit
-    holds rows of no bucket outside its range; it need not hold rows
-    of every bucket inside it."""
+    """Bucket range ``(lo, hi)`` a unit covers: the ``bucket_range`` its
+    footers' ``__b`` min/max gave (see :meth:`LogTable._write_commit_dir`),
+    or the one ``bucket`` of a unit from a log written before ranged
+    base units. A unit holds rows of no bucket outside its range; it
+    need not hold rows of every bucket inside it."""
     b = e.get("bucket")
     if b is not None:
         return b, b
@@ -235,7 +243,7 @@ def _scan_price(units: dict[str, dict], buckets: set[int]) -> tuple[int, int]:
     return n, r
 
 
-def _collect_unit_stats(unit_dir: str, n_buckets: int | None = None) -> dict:
+def _collect_unit_stats(unit_dir: str, n_buckets: int) -> dict:
     """Per-unit ``{rows, stats: {col: {min, max, nulls}}}`` harvested from
     the parquet FOOTERS of the files just written — a driver-side read of
     O(files-in-this-commit) metadata pages, no Spark job and no second
@@ -245,10 +253,10 @@ def _collect_unit_stats(unit_dir: str, n_buckets: int | None = None) -> dict:
     min/max (e.g. over-long strings) simply records nulls-only and is
     never used to prune.
 
-    With ``n_buckets`` (a delta unit, whose files hold many buckets) the
-    entry also gets ``bucket_range``: the ``__b`` min/max over its row
-    groups, or every bucket when a row group omits them — a wider range
-    only makes reads scan and rewrites replace the unit more often."""
+    The entry also gets ``bucket_range``: the ``__b`` min/max over its
+    row groups, or every bucket when a row group omits them — a wider
+    range only makes reads scan and rewrites replace the unit more
+    often."""
     rows = 0
     stats: dict[str, dict] = {}
     b_lo = b_hi = None
@@ -263,7 +271,7 @@ def _collect_unit_stats(unit_dir: str, n_buckets: int | None = None) -> dict:
                 col = g.column(ci)
                 path = col.path_in_schema
                 st = col.statistics
-                if path == "__b" and n_buckets is not None and g.num_rows:
+                if path == "__b" and g.num_rows:
                     if st is None or not st.has_min_max:
                         b_lo, b_hi = 0, n_buckets - 1
                     else:
@@ -426,10 +434,6 @@ class PosixCommitProtocol(CommitProtocol):
         return True
 
 
-def _unit(commit_dir: str, bucket: int) -> str:
-    return f"{commit_dir}/__bucket={bucket}"
-
-
 # Ops whose output units are known to have gone through key-merging
 # logic. Anything else — raw ``append`` units, units written by older
 # versions of this module that stamped no op tag at all — may hold
@@ -469,11 +473,11 @@ def _close_over_units(
     live: dict[str, dict], affected: set[int]
 ) -> tuple[set[int], list[dict]]:
     """The buckets an eager rewrite of ``affected`` must rewrite, and
-    the live units it replaces. A multi-bucket (delta) unit meeting the
-    set adds its whole range, until the set stops growing, so every
-    replaced unit lies inside the rewritten buckets and none is ever
-    replaced in part: its rows outside ``affected`` are rewritten into
-    their buckets' new base units rather than lost."""
+    the live units it replaces. A unit meeting the set adds its whole
+    range, until the set stops growing, so every replaced unit lies
+    inside the rewritten buckets and none is ever replaced in part: its
+    rows outside ``affected`` are rewritten into the new base units
+    rather than lost."""
     while True:
         replaced = [e for e in live.values() if _covers(e, affected)]
         wider = set(affected).union(*map(_buckets_of, replaced))
@@ -888,64 +892,61 @@ class LogTable:
             else:
                 df = df.dropDuplicates([self.key])
         b = F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.n_buckets))
-        # __b rides along as a DATA column (the directory partition
-        # column __bucket is consumed by partitionBy and lost when leaf
-        # dirs are read directly without a basePath).
-        return df.withColumn("__b", b.cast("long")).withColumn(
-            "__bucket", F.col("__b")
-        )
+        return df.withColumn("__b", b.cast("long"))
 
     def _write_commit_dir(
-        self, bucketed: DataFrame, v: int, delta: bool = False
+        self,
+        bucketed: DataFrame,
+        v: int,
+        delta: bool = False,
+        replaces: int | None = None,
     ) -> list[dict]:
         """Write one commit's data dir; return its ``added`` log entries,
-        each carrying the footer-harvested row count and per-column
+        each carrying the footer-harvested row count, the
+        ``bucket_range`` its rows' ``__b`` span and per-column
         min/max/null stats (see _collect_unit_stats) that snapshot's
-        data-skipping prunes on.
+        data-skipping prunes on. None is logged for an empty write.
 
-        A base write logs one unit per bucket. The repartition on
-        ``__bucket`` sends each bucket to one write task, so every unit
-        is ONE parquet file. Without it each write task puts a file
-        into every bucket it holds rows for (tasks × buckets files per
-        commit), and every later read of the unit pays a file open and
-        footer read per file.
+        A base write range-partitions its rows on ``__b`` and writes one
+        ``__part=i`` subdir per write task, so every unit is ONE parquet
+        file over a bucket range no other unit of the commit meets.
+        Without Hadoop's native library the local filesystem forks
+        ``chmod`` for every dir and file it creates, 5-11 ms each, and
+        an object store pays a PUT each, so a 5,000-row, 64-bucket
+        ``compact()`` took 1.48-1.58 s as one dir and file per bucket
+        against 0.83-0.98 s as four ranges (4 vCPUs, SCALE.md §2b).
 
-        The partition count is explicit, ``min(n_buckets,
-        defaultParallelism)``: AQE coalesces an unnumbered repartition's
-        small shuffle into ONE partition, so one task wrote a commit's
-        bucket files one after another (1.41 s of one-task stage time
-        per ``etl_changefeed`` cycle on 4 vCPUs, SCALE.md §2b). AQE
-        leaves a numbered repartition alone, and hashing still maps
-        each bucket to exactly one task.
+        The task count is explicit: ``min(n_buckets,
+        defaultParallelism)``, capped for a partial rewrite at the
+        ``replaces`` units it replaces (at least one), since every
+        unit is later rewritten whole and splitting a point write's
+        unit would fragment the table back toward one unit per bucket.
+        AQE leaves a numbered repartition alone (an unnumbered one's
+        small shuffle coalesced into one task that wrote every file in
+        turn); the range bounds cost one sample job over the input.
 
-        A ``delta`` write logs the whole dir as ONE unit covering its
-        rows' ``bucket_range``: one file per write task, no bucket
-        shuffle, no per-bucket dir. Without Hadoop's native library
-        the local filesystem forks ``chmod`` for every dir and file it
-        creates, 5-11 ms each, and an object store pays a PUT each,
-        so a 60-row batch spread over 36 buckets took 0.72-0.88 s to
-        commit as bucket units against 0.27-0.38 s as one (4 vCPUs,
-        SCALE.md §2b). None is logged for an empty batch."""
+        A ``delta`` write logs the whole dir as ONE unit: one file per
+        write task, no shuffle, so its files follow the batch."""
         rel = f"{_DATA_DIR}/c{v}"
         out = os.path.join(self.path, rel)
         if delta:
-            bucketed.drop("__bucket").write.mode("overwrite").parquet(out)
+            bucketed.write.mode("overwrite").parquet(out)
             entry = {"unit": rel, **_collect_unit_stats(out, self.n_buckets)}
             return [entry] if entry["rows"] else []
-        sc = self.spark.sparkContext
-        n_tasks = min(self.n_buckets, sc.defaultParallelism)
-        bucketed.repartition(n_tasks, F.col("__bucket")).write.mode(
-            "overwrite"
-        ).partitionBy("__bucket").parquet(out)
-        added = []
-        for d in sorted(os.listdir(out)):
-            if not d.startswith("__bucket="):
-                continue
-            b = int(d.split("=", 1)[1])
-            entry = {"unit": _unit(rel, b), "bucket": b}
-            entry.update(_collect_unit_stats(os.path.join(out, d)))
-            added.append(entry)
-        return added
+        n_tasks = min(self.n_buckets, self.spark.sparkContext.defaultParallelism)
+        if replaces is not None:
+            n_tasks = min(n_tasks, max(replaces, 1))
+        bucketed.repartitionByRange(n_tasks, "__b").withColumn(
+            "__part", F.spark_partition_id()
+        ).write.mode("overwrite").partitionBy("__part").parquet(out)
+        return [
+            {
+                "unit": f"{rel}/{d}",
+                **_collect_unit_stats(os.path.join(out, d), self.n_buckets),
+            }
+            for d in sorted(os.listdir(out))
+            if d.startswith("__part=")
+        ]
 
     def _read_units(
         self,
@@ -1064,7 +1065,7 @@ class LogTable:
         return self._commit("append", added, [], v)
 
     def upsert(self, updates: DataFrame, order_col: str | None = None) -> int:
-        """MERGE: update-or-insert by key, touching only affected buckets.
+        """MERGE: update-or-insert by key, touching only affected units.
 
         Duplicate keys within one batch resolve BEFORE the merge
         (highest ``order_col`` wins; without it, an arbitrary row), so
@@ -1092,12 +1093,15 @@ class LogTable:
         order_col: str | None,
         base: int,
     ) -> int:
-        up = self._bucketed(updates, dedupe=True, order_col=order_col)
+        # The batch's plan is evaluated once, by the first action below
+        # (the bucket collect, else the write's range sample), and every
+        # later one reads that: re-running it per action re-read a
+        # streaming batch's source, which then counted its rows again.
+        up = self._bucketed(
+            updates, dedupe=True, order_col=order_col
+        ).localCheckpoint(eager=False)
         v = base + 1
         current, replaced = None, []
-        # With no live unit there is nothing to merge against, so the
-        # bucket collect is skipped: a first write runs the batch's plan
-        # once, and a streaming source's progress counts its rows once.
         if live:
             # Affected buckets: driver-side but bounded by n_buckets (a
             # bucket list, not data).
@@ -1115,12 +1119,12 @@ class LogTable:
             # (the replaced row version gets NULL — upsert is whole-row
             # replacement by key, not a partial column patch; callers
             # wanting patch semantics join old values in first).
-            merged = keep.unionByName(
-                up.drop("__bucket"), allowMissingColumns=True
-            ).withColumn("__bucket", F.col("__b"))
+            merged = keep.unionByName(up, allowMissingColumns=True)
         else:
             merged = up
-        added = self._write_commit_dir(merged, v)
+        added = self._write_commit_dir(
+            merged, v, replaces=len(replaced) if live else None
+        )
         _propagate_taint(added, replaced)
         return self._commit(op, added, replaced, v)
 
@@ -1240,9 +1244,10 @@ class LogTable:
         live = self._live_units(as_of=base if base >= 0 else None)
         v = base + 1
         key = self.key
-        src = self._bucketed(source, dedupe=True, order_col=order_col).drop(
-            "__bucket"
-        )
+        # evaluated once, as in _upsert_into
+        src = self._bucketed(
+            source, dedupe=True, order_col=order_col
+        ).localCheckpoint(eager=False)
         affected, replaced = _close_over_units(
             live, {r["__b"] for r in src.select("__b").distinct().collect()}
         )
@@ -1250,7 +1255,7 @@ class LogTable:
         if current is None:
             if not insert_not_matched:
                 return self._commit("merge", [], [], v)
-            merged = src.withColumn("__bucket", F.col("__b"))
+            merged = src
         else:
             t = current.alias("t")
             s = src.alias("s")
@@ -1295,29 +1300,30 @@ class LogTable:
                     .alias(c)
                 )
 
-            merged = (
-                joined.filter(keep)
-                .select(
-                    F.coalesce(F.col(f"t.{key}"), F.col(f"s.{key}")).alias(key),
-                    F.coalesce(F.col("t.__b"), F.col("s.__b")).alias("__b"),
-                    *[pick(c) for c in data_cols],
-                )
-                .withColumn("__bucket", F.col("__b"))
+            merged = joined.filter(keep).select(
+                F.coalesce(F.col(f"t.{key}"), F.col(f"s.{key}")).alias(key),
+                F.coalesce(F.col("t.__b"), F.col("s.__b")).alias("__b"),
+                *[pick(c) for c in data_cols],
             )
-        added = self._write_commit_dir(merged, v)
+        added = self._write_commit_dir(
+            merged, v, replaces=len(replaced) if live else None
+        )
         _propagate_taint(added, replaced)
         return self._commit("merge", added, replaced, v)
 
     def delete_keys(self, keys: DataFrame) -> int:
-        """Delete by key: rewrites affected buckets without the keys.
+        """Delete by key: rewrites the affected units without the keys.
 
-        A bucket whose rows are ALL deleted is logged as removed with no
-        replacement unit (parquet writes no empty partition dir).
+        When every row of the replaced units is deleted, they are logged
+        as removed with no replacement unit (parquet writes no empty
+        partition dir).
         """
         base = self.version()
         live = self._live_units(as_of=base if base >= 0 else None)
         v = base + 1
-        k = self._bucketed(keys.select(self.key), dedupe=True, order_col=None)
+        k = self._bucketed(
+            keys.select(self.key), dedupe=True, order_col=None
+        ).localCheckpoint(eager=False)  # evaluated once, as in _upsert_into
         affected, replaced = _close_over_units(
             live, {r["__b"] for r in k.select("__b").distinct().collect()}
         )
@@ -1326,8 +1332,10 @@ class LogTable:
         if current is not None:
             remaining = current.join(
                 k.select(F.col(self.key)), self.key, "left_anti"
-            ).withColumn("__bucket", F.col("__b"))
-            added = self._write_commit_dir(remaining, v)
+            )
+            added = self._write_commit_dir(
+                remaining, v, replaces=len(replaced)
+            )
         _propagate_taint(added, replaced)
         return self._commit("delete", added, replaced, v)
 
@@ -1415,9 +1423,7 @@ class LogTable:
                 "rewrite) before using upsert_deferred"
             )
         v = base + 1
-        added = self._write_commit_dir(
-            cur.withColumn("__bucket", F.col("__b")), v
-        )
+        added = self._write_commit_dir(cur, v, replaces=len(replaced))
         return self._commit("certify", added, replaced, v)
 
     def compact(self) -> int:
@@ -1429,9 +1435,7 @@ class LogTable:
         cur = self._read_resolved(live, None)
         added: list[dict] = []
         if cur is not None:
-            added = self._write_commit_dir(
-                cur.withColumn("__bucket", F.col("__b")), v
-            )
+            added = self._write_commit_dir(cur, v)
         # Compaction changes layout, never content: append-duplicate
         # rows survive it, so the taint does too.
         _propagate_taint(added, list(live.values()))
@@ -1553,12 +1557,12 @@ class LogTable:
         (:meth:`_reps_schema`) — no file scan, no Spark job. Exactness
         argument: every unit of one commit is written from a single
         DataFrame (``_write_commit_dir`` partitions one frame by
-        bucket), so all units of a commit share that commit's write
-        schema, and the union over one representative per commit
+        bucket range), so all units of a commit share that commit's
+        write schema, and the union over one representative per commit
         equals the union over all units. A single newest unit would
-        NOT be enough: upsert/delete rewrite only touched buckets, so
+        NOT be enough: upsert/delete rewrite only touched units, so
         the newest commit can carry a NARROWER schema than an older one
-        (e.g. a delete rewriting a pre-evolution bucket). Driver I/O is
+        (e.g. a delete rewriting a pre-evolution unit). Driver I/O is
         O(distinct live commits) footers — bounded by the compact
         cadence (1 after a compact). None when no unit is live."""
         if not units:
@@ -2014,9 +2018,7 @@ class LogTable:
                 continue
         entries = list(self._log_entries())
         logged_dirs = {
-            u["unit"].split("/__bucket=")[0]
-            for e in entries
-            for u in e.get("added", [])
+            _commit_of(u["unit"]) for e in entries for u in e.get("added", [])
         }
         # A unit becomes horizon-dead when version (removed_at + retain)
         # commits — that log file's mtime is the grace clock's zero.

@@ -109,6 +109,37 @@ def test_batch_etl_end_to_end(spark, tmp_path):
     assert {r.transform_batch for r in snap.collect()} == {"b-43"}
 
 
+def test_batch_etl_transforms_only_its_own_run(spark, tmp_path):
+    """A run transforms the documents it staged, not the whole staging
+    dir: two deterministic 30-doc runs two minutes apart (the ids hash
+    the minute-stamped names, so 60 distinct ids) leave 60 rows, and
+    the first run's 30 keep its ``transform_batch``. A run that stages
+    nothing upserts nothing and audits as one with no documents."""
+    work = str(tmp_path / "etl")
+    run_batch_etl(
+        spark, work, count=30, clock=CLOCK, batch_id="b-1", deterministic=True
+    )
+    out = run_batch_etl(
+        spark, work, count=30, clock=CLOCK + timedelta(minutes=2),
+        batch_id="b-2", deterministic=True,
+    )
+    assert out.count() == 30
+    sink = LogTable(spark, f"{work}/transformed", key="id")
+    snap = sink.snapshot().collect()
+    assert len(snap) == 60 and len({r.id for r in snap}) == 60
+    by_batch = {}
+    for r in snap:
+        by_batch[r.transform_batch] = by_batch.get(r.transform_batch, 0) + 1
+    assert by_batch == {"b-1": 30, "b-2": 30}
+    version = sink.version()
+    none = generate_sample_items(spark, count=5, clock=CLOCK).limit(0)
+    assert run_batch_etl(spark, work, source_df=none, clock=CLOCK).count() == 0
+    assert sink.version() == version
+    audit = spark.read.parquet(f"{work}/orchestration_runs").collect()
+    assert len(audit) == 3
+    assert any(a.additional_info == "No documents extracted." for a in audit)
+
+
 def test_batch_etl_failure_audits_and_reraises(spark, tmp_path):
     work = str(tmp_path / "etl_fail")
     bad = generate_sample_items(spark, count=5, clock=CLOCK).select(

@@ -15,6 +15,7 @@ import pytest
 from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
     ConcurrentCommitError,
     LogTable,
+    _commit_of,
 )
 
 
@@ -97,7 +98,10 @@ def test_upsert_dup_keys_order_col(spark, tmp_path):
     assert t.upsert_deferred(up, order_col="ver") == 0
     (entry,) = t.history()
     assert entry["op"] == "create" and entry["added"]
-    assert all("bucket" in u and not u.get("delta") for u in entry["added"])
+    assert all(
+        u["unit"].startswith("data/c0/__part=") and not u.get("delta")
+        for u in entry["added"]
+    )
     assert t.delta_fraction() == 0
     assert {r["id"]: r["val"] for r in t.snapshot().collect()} == {
         1: "high", 2: "x"
@@ -120,10 +124,15 @@ def test_only_affected_buckets_rewritten(spark, tmp_path):
     t.create(_mk(spark, [(i, f"v{i}") for i in range(200)]))
     v = t.upsert(_mk(spark, [(7, "CHANGED")]))
     entry = t.history()[v]
-    # one key → exactly one bucket added and one replaced
+    # one key → exactly the unit whose range holds its bucket is
+    # replaced, by one unit over the same range
     assert len(entry["added"]) == 1
     assert len(entry["removed"]) == 1
-    assert entry["added"][0]["bucket"] == entry["removed"][0]["bucket"]
+    assert (
+        entry["added"][0]["bucket_range"]
+        == entry["removed"][0]["bucket_range"]
+    )
+    assert len(t._live_units()) == len(t.history()[0]["added"])
 
 
 def test_delete_keys(spark, tmp_path):
@@ -159,9 +168,7 @@ def test_compact_preserves_content(spark, tmp_path):
     v = t.compact()
     assert _rows(t.snapshot()) == before
     # live set now points only at the compaction commit's units
-    live_dirs = {
-        u.split("/__bucket=")[0] for u in t._live_units()
-    }
+    live_dirs = {_commit_of(u) for u in t._live_units()}
     assert live_dirs == {f"data/c{v}"}
 
 
@@ -1322,37 +1329,42 @@ def _feed_rows(df):
 def test_schema_frame_unions_across_commits(spark, tmp_path):
     """Code-review r8 regression: the single-newest-unit schema read
     NARROWED the schema whenever the newest commit rewrote a
-    pre-evolution bucket (upsert/delete touch only their buckets, so
-    the newest unit can lack an evolved column). The schema frame now
+    pre-evolution unit (upsert/delete touch only their units, so the
+    newest unit can lack an evolved column). The schema frame now
     merges one unit per distinct live commit — exact, because every
     unit of a commit shares that commit's write schema — so an
-    all-pruned snapshot keeps the full union schema."""
+    all-pruned snapshot keeps the full union schema. Sized so the
+    create writes several ranged units: the evolution lands in the
+    first, the newest commit rewrites the last."""
     from pyspark.sql import functions as F
 
-    by_bucket: dict[int, list[int]] = {}
-    for r in (
-        spark.range(50)
-        .select("id", F.pmod(F.xxhash64("id"), F.lit(2)).alias("b"))
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a one-core session writes every commit as one unit")
+    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=64)
+    t.create(_mk(spark, [(i, f"v{i}") for i in range(400)]))  # v0
+    units = sorted(t.history()[0]["added"], key=lambda u: u["bucket_range"])
+    assert len(units) >= 2
+    first, last = units[0]["bucket_range"], units[-1]["bucket_range"]
+    bucket = {
+        r["id"]: r["b"]
+        for r in spark.range(400)
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(64)).alias("b"))
         .collect()
-    ):
-        by_bucket.setdefault(r["b"], []).append(r["id"])
-    a_key = by_bucket[0][0]
-    b1, b2 = by_bucket[1][:2]
-    t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=2)
-    t.create(_mk(spark, [(a_key, "a0"), (b1, "b1"), (b2, "b2")]))  # id,val
-    t.upsert(  # v1: evolution lands in bucket 0 only
+    }
+    a_key = next(k for k, b in bucket.items() if first[0] <= b <= first[1])
+    z_key = next(k for k, b in bucket.items() if last[0] <= b <= last[1])
+    t.upsert(  # v1: evolution lands in the first unit only
         spark.createDataFrame(
             [(a_key, "a1", 7)], "id long, val string, score long"
         )
     )
-    # v2: NEWEST commit rewrites bucket 1 with the PRE-evolution schema
-    t.delete_keys(spark.createDataFrame([(b1,)], "id long"))
+    # v2: NEWEST commit rewrites the last unit with the PRE-evolution
+    # schema
+    t.delete_keys(spark.createDataFrame([(z_key,)], "id long"))
     newest_unit_cols = {
         c
         for e in t.history()[-1]["added"]
-        for c in spark.read.parquet(
-            str(tmp_path / "t" / e["unit"].split("/__bucket=")[0])
-        ).columns
+        for c in spark.read.parquet(str(tmp_path / "t" / e["unit"])).columns
     }
     assert "score" not in newest_unit_cols  # the trap is real
     # all-pruned snapshot still carries the evolved column
@@ -1636,6 +1648,8 @@ def test_empty_feed_schema_read_survives_partial_vacuum(spark, tmp_path):
     un-determinize — the change-free serve."""
     from pyspark.sql import functions as F
 
+    if spark.sparkContext.defaultParallelism < 2:
+        pytest.skip("a one-core session writes every commit as one unit")
     # one key per bucket (xxhash64 is fixed-seed, probe it)
     probed = spark.range(1, 64).select(
         "id", F.pmod(F.xxhash64("id"), F.lit(3)).alias("b")
@@ -1648,8 +1662,10 @@ def test_empty_feed_schema_read_survives_partial_vacuum(spark, tmp_path):
     t.delete_keys(spark.createDataFrame([(k[2],)], "id long"))   # v2
     t.upsert(_mk(spark, [(k[0], "A")]))                          # v3
     t.vacuum()  # reclaims v0's bucket-0 unit (rewritten at v3) and v1's
-    assert not (root / "data" / "c0" / "__bucket=0").exists()
-    assert (root / "data" / "c0" / "__bucket=1").exists()
+    u0, u1 = sorted(t.history()[0]["added"], key=lambda u: u["bucket_range"])
+    assert u0["bucket_range"] == [0, 0] and u1["bucket_range"] == [1, 1]
+    assert not (root / u0["unit"]).exists()
+    assert (root / u1["unit"]).exists()
     # (0, 2]: only k[2]'s bucket is touched and it holds no unit at
     # either end, so the serve is an empty feed whose schema comes from
     # commit c0 — through its surviving bucket-1 unit
@@ -1686,7 +1702,7 @@ def test_diff_empty_feed_truncation_is_typed(spark, tmp_path):
     # serve is an empty feed sourced from the vacuumed bucket-a unit
     with pytest.raises(FeedTruncatedError) as ei:
         t.changes(0, 2)
-    assert ei.value.missing == ["data/c0/__bucket=0"]
+    assert ei.value.missing == [t.history()[0]["added"][0]["unit"]]
 
 
 def _next_job(spark) -> int:
@@ -1700,11 +1716,12 @@ def test_reads_are_planned_from_the_log_without_jobs(
     parquet footer per live commit (no schema-merge job) and local
     masters list the unit dirs on the driver (no parallel listing job).
     Sized past Spark's 32-path parallel-listing threshold: 64 buckets,
-    more than 32 live units, three live commits with a schema
-    evolution between them. Covers snapshot (latest, time travel, all
-    pruned), both feed tiers (including a compact-only diff interval),
-    and the read side of the eager mutators (upsert, delete_keys,
-    compact)."""
+    a schema evolution between the first two commits, then one-row
+    deferred upserts until more than 32 units are live (a base commit
+    writes at most one unit per core). Covers snapshot (latest, time
+    travel, all pruned), both feed tiers (including a compact-only
+    diff interval), and the read side of the eager mutators (upsert,
+    delete_keys, compact)."""
     t = LogTable(spark, str(tmp_path / "t"), key="id", n_buckets=64)
     t.create(
         spark.range(400, numPartitions=4).selectExpr(
@@ -1718,9 +1735,11 @@ def test_reads_are_planned_from_the_log_without_jobs(
         )
     )  # v1: adds `lang` in two buckets
     t.upsert_deferred(_mk(spark, [(2, "d")]))  # v2: a delta unit
+    for k in range(1000, 1031):
+        t.upsert_deferred(_mk(spark, [(k, "d")]))  # v3..v33
     live = t._live_units()
     assert len(live) > 32
-    assert len({u.split("/__bucket=")[0] for u in live}) == 3
+    assert len({_commit_of(u) for u in live}) >= 33
 
     def jobs(build) -> int:
         j0 = _next_job(spark)
@@ -1751,23 +1770,23 @@ def test_reads_are_planned_from_the_log_without_jobs(
         return df
 
     monkeypatch.setattr(t, "_read_resolved", counted)
-    t.upsert(_mk(spark, [(3, "u")]))  # v3
-    t.delete_keys(spark.createDataFrame([(4,)], "id long"))  # v4
-    t.compact()  # v5: layout only, no net change
+    t.upsert(_mk(spark, [(3, "u")]))
+    v_del = t.delete_keys(spark.createDataFrame([(4,)], "id long"))
+    v_cmp = t.compact()  # layout only, no net change
     assert counts == [0, 0, 0]
     empty = []
-    assert jobs(lambda: empty.append(t.changes(4, 5))) == 0
+    assert jobs(lambda: empty.append(t.changes(v_del, v_cmp))) == 0
     assert t.last_feed_info["tier"] == "diff"
     assert empty[0].columns == ["change", "id", "val", "lang"]
     assert empty[0].count() == 0
     snap = {r["id"]: (r["val"], r["lang"]) for r in t.snapshot().collect()}
-    assert len(snap) == 400 and 4 not in snap
+    assert len(snap) == 431 and 4 not in snap and snap[1030] == ("d", None)
     assert snap[1] == ("x", "en") and snap[2] == ("d", None)
     assert snap[3] == ("u", None) and snap[500] == ("y", "de")
 
 
 def test_every_commit_kind_writes_one_file_per_unit(spark, tmp_path):
-    """Each logged bucket unit is exactly one parquet file, whatever
+    """Each logged base unit is exactly one parquet file, whatever
     the commit kind, even when the input arrives in several partitions
     whose rows spread over every bucket. A deferred upsert logs one
     delta unit, its commit dir, holding at most one file per write
@@ -1838,7 +1857,8 @@ def _stage_tasks(spark, group: str) -> list[int]:
 
 def test_commit_write_stage_runs_one_task_per_core(spark, tmp_path):
     """The write stage of a base commit that touches several buckets
-    runs min(n_buckets, defaultParallelism) tasks. An unnumbered
+    runs min(n_buckets, defaultParallelism) tasks, or, for a partial
+    rewrite, no more than the units it replaces. An unnumbered
     repartition on the bucket let AQE coalesce the small shuffle into
     one task that wrote every bucket file in turn. A deferred upsert
     has no bucket shuffle at all: its 50-row batch is written by the
@@ -1865,12 +1885,15 @@ def test_commit_write_stage_runs_one_task_per_core(spark, tmp_path):
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         tasks = _stage_tasks(spark, f"write-stage-{i}")
-        if t.history()[-1]["op"] == "upsert_delta":
-            assert len(t.history()[-1]["added"]) == 1
+        entry = t.history()[-1]
+        if entry["op"] == "upsert_delta":
+            assert len(entry["added"]) == 1
             assert tasks[-1] == 1, tasks
             continue
-        assert len(t.history()[-1]["added"]) >= 2
-        assert tasks[-1] == min(64, par)
+        assert len(entry["added"]) >= 2
+        # a partial rewrite writes no more units than it replaces
+        cap = len(entry["removed"]) if entry["op"] == "upsert" else 64
+        assert tasks[-1] == min(64, par, cap)
 
 
 def test_vacuum_removes_a_stray_file(spark, tmp_path):
@@ -1903,3 +1926,173 @@ def test_type_conflict_between_live_commits_raises(spark, tmp_path):
         t.snapshot()
     with pytest.raises(ValueError, match="column 'val'"):
         t.changes(0, 1)
+
+
+def test_base_commits_write_one_ranged_unit_per_task(spark, tmp_path):
+    """A create and a compact of a 64-bucket table write at most
+    min(64, defaultParallelism) units, not one per bucket: each unit is
+    one parquet file whose logged ``bucket_range`` is its rows' ``__b``
+    min/max, the ranges are disjoint, and together the units hold every
+    row. A rewrite of one unit's range writes one unit."""
+    from pyspark.sql import functions as F
+
+    root = tmp_path / "t"
+    t = LogTable(spark, str(root), key="id", n_buckets=64)
+    cap = min(64, spark.sparkContext.defaultParallelism)
+    t.create(
+        spark.range(2000, numPartitions=4).selectExpr(
+            "id", "concat('v', id) as val"
+        )
+    )
+    t.upsert_deferred(spark.range(0, 2000, 37).selectExpr("id", "'d' as val"))
+    t.compact()
+    for entry in (t.history()[0], t.history()[-1]):
+        units = entry["added"]
+        assert 1 <= len(units) <= cap, entry["op"]
+        spans = sorted(u["bucket_range"] for u in units)
+        assert all(hi < lo for (_, hi), (lo, _) in zip(spans, spans[1:]))
+        assert sum(u["rows"] for u in units) == 2000
+        for u in units:
+            files = [
+                f
+                for f in os.listdir(root / u["unit"])
+                if f.endswith(".parquet")
+            ]
+            assert len(files) == 1, (entry["op"], u["unit"], files)
+            got = (
+                spark.read.parquet(str(root / u["unit"]))
+                .agg(F.min("__b"), F.max("__b"), F.count(F.lit(1)))
+                .first()
+            )
+            assert [got[0], got[1]] == u["bucket_range"]
+            assert got[2] == u["rows"]
+    n_live = len(t._live_units())
+    v = t.upsert(_mk(spark, [(7, "x")]))
+    entry = t.history()[v]
+    assert len(entry["added"]) == len(entry["removed"]) == 1
+    assert len(t._live_units()) == n_live
+    assert t.snapshot().count() == 2000
+
+
+def _bucket_of(spark, ids: list[int], n_buckets: int) -> dict[int, int]:
+    from pyspark.sql import functions as F
+
+    return {
+        r["id"]: r["b"]
+        for r in spark.createDataFrame([(i,) for i in ids], "id long")
+        .select("id", F.pmod(F.xxhash64("id"), F.lit(n_buckets)).alias("b"))
+        .collect()
+    }
+
+
+def _commit_bucket_units(t, rows, v, op, bucket, removed):
+    """Commit ``rows`` as version ``v`` in the layout logs held before
+    ranged base units: one ``__bucket=k`` dir of one file per bucket,
+    each logged as ``{"unit", "bucket", rows, stats}``."""
+    from pyspark.sql import functions as F
+
+    from durable_functions_cosmosdb_etl_spark.sinks.logtable import (
+        _collect_unit_stats,
+    )
+
+    out = os.path.join(t.path, f"data/c{v}")
+    t.spark.createDataFrame(
+        [(i, val, bucket[i]) for i, val in rows], "id long, val string, __b long"
+    ).withColumn("__bucket", F.col("__b")).repartition(
+        4, "__bucket"
+    ).write.partitionBy("__bucket").parquet(out)
+    added = []
+    for d in sorted(os.listdir(out)):
+        if d.startswith("__bucket="):
+            stats = _collect_unit_stats(os.path.join(out, d), t.n_buckets)
+            del stats["bucket_range"]
+            b = int(d.split("=", 1)[1])
+            added.append({"unit": f"data/c{v}/{d}", "bucket": b, **stats})
+    t._commit(op, added, removed, v)
+    return added
+
+
+def test_old_bucket_unit_log_reads_rewrites_and_vacuums(spark, tmp_path):
+    """A log of one-bucket units, as tables were written before ranged
+    base units, stays a working table: snapshots, eager upserts that
+    close over old and new units together, a deferred upsert, a compact
+    and feed intervals all equal an eager-only twin's, and ``vacuum``
+    deletes superseded units of both layouts while keeping every live
+    unit."""
+    n = 16
+    ids = list(range(300))
+    bucket = _bucket_of(spark, ids + list(range(1000, 1200)), n)
+    old = LogTable(spark, str(tmp_path / "old"), key="id", n_buckets=n)
+    twin = LogTable(spark, str(tmp_path / "twin"), key="id", n_buckets=n)
+    base = [(i, f"v{i}") for i in ids]
+    # v0: create; v1: an eager upsert of two keys, each rewriting its
+    # bucket
+    units0 = _commit_bucket_units(old, base, 0, "create", bucket, [])
+    assert len(units0) == n
+    twin.create(_mk(spark, base))
+    v1_keys = {3: "w3", 250: "w250"}
+    v1_buckets = {bucket[k] for k in v1_keys}
+    rewritten = [
+        (i, v1_keys.get(i, f"v{i}")) for i in ids if bucket[i] in v1_buckets
+    ]
+    _commit_bucket_units(
+        old, rewritten, 1, "upsert", bucket,
+        [u for u in units0 if u["bucket"] in v1_buckets],
+    )
+    twin.upsert(_mk(spark, list(v1_keys.items())))
+    # v2: a spread eager upsert replaces old units with ranged ones
+    spread = _mk(spark, [(i, f"s{i}") for i in range(0, 300, 23)])
+    for t in (old, twin):
+        t.upsert(spread)
+    ranged = old.history()[2]["added"]
+    assert ranged and all("bucket_range" in u for u in ranged)
+    # v3: a point upsert inside a ranged unit: its closure is that unit
+    # and every old unit left inside its range
+    lo, hi = ranged[0]["bucket_range"]
+    point = next(i for i in range(1000, 1200) if lo <= bucket[i] <= hi)
+    inside = {
+        u["unit"]
+        for u in old._live_units().values()
+        if "bucket" in u and lo <= u["bucket"] <= hi
+    }
+    for t in (old, twin):
+        t.upsert(_mk(spark, [(point, "p")]))
+    assert {u["unit"] for u in old.history()[3]["removed"]} == (
+        inside | {ranged[0]["unit"]}
+    )
+    # v4: deferred on the old log, eager on the twin
+    late = _mk(spark, [(i, f"d{i}") for i in range(5, 300, 31)])
+    old.upsert_deferred(late)
+    twin.upsert(late)
+
+    def feed(t, a, b):
+        return sorted(
+            (r["change"], r["id"], r["val"]) for r in t.changes(a, b).collect()
+        )
+
+    for v in range(5):
+        assert _rows(old.snapshot(v)) == _rows(twin.snapshot(v)), v
+    for a, b in ((0, 1), (1, 2), (2, 3), (3, 4), (0, 4)):
+        assert feed(old, a, b) == feed(twin, a, b), (a, b)
+    live = old._live_units()
+    assert any("bucket" in u for u in live.values())
+    assert any(u.get("delta") for u in live.values())
+    deleted = set(old.vacuum())
+    assert any("/__bucket=" in d for d in deleted)
+    assert ranged[0]["unit"] in deleted
+    assert all((tmp_path / "old" / u).exists() for u in live)
+    # v5: compact both; the deferred interval serves from its delta
+    for t in (old, twin):
+        t.compact()
+    assert feed(old, 4, 5) == feed(twin, 4, 5) == []
+    images = old.post_images(3, 5)
+    assert old.last_feed_info["tier"] == "post_image"
+    assert sorted((r["id"], r["val"]) for r in images.collect()) == sorted(
+        (i, v) for _c, i, v in feed(twin, 3, 4)
+    )
+    live = old._live_units()
+    old.vacuum()
+    assert all("bucket" not in u for u in live.values())
+    assert all((tmp_path / "old" / u).exists() for u in live)
+    assert not list((tmp_path / "old" / "data").rglob("__bucket=*"))
+    assert _rows(old.snapshot()) == _rows(twin.snapshot())

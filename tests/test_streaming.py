@@ -107,6 +107,38 @@ def test_batch_metrics_listener_captures_progress(spark, tmp_path):
     assert listener.flush(spark, str(tmp_path / "metrics")) == 0
 
 
+def test_eager_logtable_sink_reads_each_batch_once(spark, tmp_path):
+    """The eager sink evaluates a micro-batch once: the bucket collect,
+    the range-bound sample and the write of an upsert all read the same
+    evaluation, so the source's progress counts each staged row once
+    (two 5-row files read [5, 15] when the upsert re-ran the batch per
+    action)."""
+    import time as _time
+
+    from durable_functions_cosmosdb_etl_spark.streaming.metrics import (
+        BatchMetricsListener,
+    )
+
+    staging = str(tmp_path / "staging")
+    _stage_files(spark, staging, n_files=2, rows_per=5)
+    listener = BatchMetricsListener()
+    spark.streams.addListener(listener)
+    try:
+        run_incremental_transform(
+            spark, staging, str(tmp_path / "out"), str(tmp_path / "ckpt"),
+            clock=CLOCK, sink="logtable",
+        )
+        deadline = _time.time() + 30
+        while _time.time() < deadline and len(listener.snapshot()) < 2:
+            _time.sleep(0.5)
+    finally:
+        spark.streams.removeListener(listener)
+    listener.flush(spark, str(tmp_path / "metrics"))
+    got = spark.read.parquet(str(tmp_path / "metrics")).collect()
+    assert sorted(r["num_input_rows"] for r in got) == [5, 5]
+    assert _snapshot(spark, str(tmp_path / "out")).count() == 10
+
+
 def test_incremental_transform_logtable_sink(spark, tmp_path):
     """sink="logtable": the change-feed loop MERGEs into a transactional
     LogTable — stored table holds exactly one row per id, versions

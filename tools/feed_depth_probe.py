@@ -35,6 +35,11 @@ cadence writes, then times at each requested depth:
   (``mid_log``). This is the sequence the listing and live-unit memos
   exist for.
 
+The synthetic log is written in the layout logs held before ranged
+base units (one ``"bucket": b`` unit per bucket per commit), so the
+probe also exercises the read path such logs still take; the live
+set and interval walks price the same either way.
+
 Timings are driver-side wall clock over synthetic JSON; run on a
 quiet machine for stable numbers. Usage:
 
